@@ -159,17 +159,18 @@ def duck_connection(data_dir: str | None, work: str):
 def run_one(args, work: str) -> int:
     wl = WORKLOADS[args.workload]
     spec = load_spec()
-    n = args.cycles or (TRACE_CYCLES if args.trace
-                        else n_cycles(args.workload, args.seconds))
+    n = TRACE_CYCLES if args.trace else n_cycles(args.workload, args.seconds)
     cycles, warm, digest = op_stream(args.workload, args.seed, args.scale, n)
     print(f"workload {args.workload} seed {args.seed} op_digest {digest}")
-    excluded = 0.0                   # input generation and oracle time
+    # input generation and oracle time, wall and CPU, is not set-up
+    excluded = excluded_cpu = 0.0
 
-    t = time.perf_counter()
+    t, c = time.perf_counter(), process_cpu_s([os.getpid()])
     data_dir = datagen.ensure_data(os.path.join(ROOT, ".bench_data"),
                                    args.scale) if wl.NEEDS_DATA else None
     duck = duck_connection(data_dir, work)
     excluded += time.perf_counter() - t
+    excluded_cpu += process_cpu_s([os.getpid()]) - c
 
     from graphydb_spark import get_spark
     cpus = len(os.sched_getaffinity(0))
@@ -178,23 +179,31 @@ def run_one(args, work: str) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     layers = {"session.start_s": time.perf_counter() - t}
     try:
+        pids = [os.getpid(),
+                int(spark._jvm.java.lang.ProcessHandle.current().pid())]
         ctx = Ctx(spark=spark, data_dir=data_dir, work_dir=work, duck=duck)
         layers.update(wl.setup(ctx))
 
-        t = time.perf_counter()
+        t, c = time.perf_counter(), process_cpu_s(pids)
         expected = [[wl.expect(ctx, op) for op in ops] for ops in cycles]
         excluded += time.perf_counter() - t
+        excluded_cpu += process_cpu_s(pids) - c
         if args.corrupt_expected:
             expected[0][0] = ("deliberately corrupted expected result",)
 
         for op in warm:
             wl.run(ctx, op)
-        setup_s = time.perf_counter() - T_PROCESS - excluded
+        # set-up is reported as CPU seconds: on a shared host the wall
+        # time of the same set-up spreads by a third from run to run
+        setup_s = process_cpu_s(pids) - excluded_cpu
+        print(f"setup_wall_s {time.perf_counter() - T_PROCESS - excluded:.3f}"
+              f" s")
 
         if args.trace:
             result = traced_run(ctx, wl, spec, cycles, expected, layers)
         else:
-            result = untraced_run(ctx, wl, spec, cycles, expected, setup_s)
+            result = untraced_run(ctx, wl, spec, pids, cycles, expected,
+                                  setup_s)
     finally:
         stop_spark(spark)
         duck.close()
@@ -242,6 +251,16 @@ def _stat(path: str) -> tuple[str, int, int]:
     return head.split("(", 1)[1], int(f[19]), int(f[11]) + int(f[12])
 
 
+def process_cpu_s(pids) -> float:
+    """CPU seconds of ``pids`` since they started, all threads, with the
+    children they waited for (the launcher process of the JVM)."""
+    ticks = 0
+    for pid in pids:
+        with open(f"/proc/{pid}/stat") as fh:
+            ticks += sum(map(int, fh.read().rsplit(")", 1)[1].split()[11:15]))
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def cpu_snapshot(pids) -> tuple[int, dict]:
     """Clock ticks of ``pids`` so far, and of each JIT compiler thread."""
     total, compilers = 0, {}
@@ -265,12 +284,10 @@ def cpu_s_between(a, b) -> float:
     return (b[0] - a[0] - jit) / os.sysconf("SC_CLK_TCK")
 
 
-def untraced_run(ctx, wl, spec, cycles, expected, setup_s) -> dict:
+def untraced_run(ctx, wl, spec, pids, cycles, expected, setup_s) -> dict:
     """The timed loop; prints the wall-clock figures as report lines and
     returns the result with the metrics of ``BENCHMARK.json``."""
     ctx.samples = {}
-    pids = [os.getpid(),
-            int(ctx.spark._jvm.java.lang.ProcessHandle.current().pid())]
     c0 = cpu_snapshot(pids)
     records, wall = measure(ctx, wl, cycles, expected)
     cpu = cpu_s_between(c0, cpu_snapshot(pids))
@@ -296,7 +313,8 @@ def traced_run(ctx, wl, spec, cycles, expected, layers) -> dict:
     from tracing import Spans, SparkProbe
     ctx.samples = {}
     ctx.spans = Spans()
-    wl.spans(ctx.spans)
+    if hasattr(wl, "spans"):
+        wl.spans(ctx.spans)
     try:
         records, _ = measure(ctx, wl, cycles, expected,
                              probe=SparkProbe(ctx.spark))
@@ -347,8 +365,6 @@ def run_all(args) -> int:
         cmd = [sys.executable, os.path.abspath(__file__), "--workload", name,
                "--seed", str(args.seed), "--seconds", str(args.seconds),
                "--trace", str(args.trace), "--scale", str(args.scale)]
-        if args.cycles:
-            cmd += ["--cycles", str(args.cycles)]
         proc = subprocess.run(cmd, stdout=subprocess.PIPE, text=True,
                               timeout=900, check=False)
         sys.stdout.write(proc.stdout)
@@ -376,8 +392,6 @@ def parse_args(argv):
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--scale", type=float, default=0.01,
                     help="TPC-H scale factor of the generated tables")
-    ap.add_argument("--cycles", type=int, default=None,
-                    help="measure this many cycles instead (self-tests)")
     ap.add_argument("--corrupt-expected", action="store_true",
                     help="self-test: corrupt the first expected result")
     return ap.parse_args(argv)

@@ -30,7 +30,7 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
 def bench(*args: str) -> tuple[int, list[str]]:
     proc = subprocess.run(
         [sys.executable, os.path.join(BENCH, "run.py"), "--scale", "0.001",
-         "--seconds", "1", "--cycles", "1", *args],
+         "--seconds", "1", *args],
         cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
         text=True, timeout=600, check=False)
     return proc.returncode, proc.stdout.strip().splitlines()

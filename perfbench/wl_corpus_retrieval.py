@@ -2,8 +2,9 @@
 
 Set-up builds the persisted FTS, IVF and MinHash indexes
 (``persisted_index.build_*``) over the documents and embeddings tables.
-One cycle runs three BM25 probes (a near-universal hot term such as
-``a`` or ``spark``, a rare term, and three terms across the Zipf bands),
+One cycle runs three BM25 probes (a hot term -- every common word,
+``a`` and ``spark`` included, is in 77-80 % of the documents -- the rare
+word ``dup``, and two hot terms with the rare one),
 five MATCH expressions (AND, OR, NOT, phrase, prefix), one IVF probe and
 one hybrid BM25 + IVF reciprocal-rank fusion around seeded vectors, and
 one MinHash probe with a seeded batch of new near-duplicate documents.  Expected
@@ -33,14 +34,9 @@ TOP = 10
 FUSE_DEPTH = 20
 
 
-#: Zipf rank bands of the corpus vocabulary (rank 0 is the most frequent
-#: word): the near-universal hot terms, the rest of the head, the tail
-HOT, HEAD, TAIL = (0, 2), (2, len(datagen.HEAD_WORDS)), (
-    len(datagen.HEAD_WORDS), len(datagen.HEAD_WORDS) + 200)
-
-
-def _term(rng: random.Random, band: tuple[int, int]) -> str:
-    return datagen.vocabulary()[rng.randrange(*band)]
+def _term(rng: random.Random) -> str:
+    """A common word: every one is in 77-80 % of the documents."""
+    return rng.choice(datagen.WORDS)
 
 
 def _unit_vector(rng: random.Random) -> list[float]:
@@ -52,11 +48,9 @@ def _unit_vector(rng: random.Random) -> list[float]:
 def _match_op(rng: random.Random, form: str) -> dict:
     """One MATCH expression of ``form``: a two-word AND, OR, NOT or phrase,
     or a prefix."""
-    a, b = rng.sample(datagen.HEAD_WORDS[HEAD[0]:], 2)
+    a, b = rng.sample(datagen.WORDS, 2)
     if form == "or":
-        b = _term(rng, TAIL)
-    elif form == "not":
-        b = _term(rng, HOT)
+        b = datagen.DUP
     elif form == "prefix":
         a = a[:3]
     expr = {"and": f"{a} {b}", "or": f"{a} OR {b}", "not": f"{a} NOT {b}",
@@ -67,8 +61,8 @@ def _match_op(rng: random.Random, form: str) -> dict:
 def cycle(rng: random.Random, i: int, scale: float) -> list[dict]:
     """Every cycle has the same shapes -- a hot-term, a rare-term and a
     three-term BM25 probe, one MATCH of each form, an IVF probe, a hybrid
-    probe and a MinHash probe; the seed picks the words within each Zipf
-    band, the vectors and the edited documents."""
+    probe and a MinHash probe; the seed picks the common words, the
+    vectors and the edited documents."""
     n_docs = datagen.table_sizes(scale)["documents"]
     # new documents: edited copies of indexed (even-id) documents
     base = [2 * rng.randrange(n_docs // 2) for _ in range(12)]
@@ -78,15 +72,15 @@ def cycle(rng: random.Random, i: int, scale: float) -> list[dict]:
                         for b in base]}
     # one op of each kind first, so a warm-up prefix covers every kind
     return [
-        {"op": "bm25", "terms": [_term(rng, HOT)]},
+        {"op": "bm25", "terms": [_term(rng)]},
         _match_op(rng, "and"),
         {"op": "ivf", "vec": _unit_vector(rng)},
-        {"op": "hybrid", "terms": sorted({_term(rng, HEAD), _term(rng, TAIL)}),
+        {"op": "hybrid", "terms": [_term(rng), datagen.DUP],
          "vec": _unit_vector(rng)},
         minhash,
-        {"op": "bm25", "terms": [_term(rng, TAIL)]},
-        {"op": "bm25", "terms": sorted({_term(rng, HOT), _term(rng, HEAD),
-                                        _term(rng, TAIL)})},
+        {"op": "bm25", "terms": [datagen.DUP]},
+        {"op": "bm25", "terms": sorted(rng.sample(datagen.WORDS, 2)
+                                       + [datagen.DUP])},
         *(_match_op(rng, f) for f in ("or", "not", "phrase", "prefix")),
     ]
 
@@ -114,13 +108,6 @@ def setup(ctx) -> dict:
     return {"persisted_index.build_s": build_s}
 
 
-def spans(sp) -> None:
-    from graphydb_spark.operators import persisted_index
-    for name in ("probe_fts_table", "match_fts_table", "probe_ivf_table",
-                 "probe_minhash_index"):
-        sp.wrap(persisted_index, name, f"persisted_index.{name}")
-
-
 def _new_docs(ctx, op: dict) -> list[tuple[int, str]]:
     """The op's new documents, built from their base texts (before timing:
     by the oracle for timed ops, during set-up for warm-up ops)."""
@@ -131,7 +118,7 @@ def _new_docs(ctx, op: dict) -> list[tuple[int, str]]:
 
 
 def _edit_docs(ctx, op: dict) -> list[tuple[int, str]]:
-    vocab = datagen.vocabulary()
+    vocab = datagen.WORDS
     out = []
     for j, spec in enumerate(op["docs"]):
         text = ctx.duck.execute("SELECT text FROM documents WHERE doc_id = ?",

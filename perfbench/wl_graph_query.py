@@ -52,11 +52,6 @@ def setup(ctx) -> dict:
     return {"sources.tpch_graph.encode_s": time.perf_counter() - t}
 
 
-def spans(sp) -> None:
-    from graphydb_spark.graph import Graph
-    sp.wrap(Graph, "fetch", "graph.fetch")
-
-
 # ------------------------------------------------------------------ oracle
 def expect(ctx, op: dict):
     con, kind = ctx.duck, op["op"]
