@@ -321,8 +321,10 @@ def traced_run(ctx, wl, spec, cycles, expected, layers) -> dict:
     finally:
         ctx.spans.close()
     values = dict(layers)
+    kinds = getattr(wl, "SPARK_LAYER_OPS", None)
+    layer = [r for r in records if kinds is None or r["op"] in kinds]
     for k in SPARK_LAYER:
-        values[f"spark.{k}_per_op"] = mean([r["spark"][k] for r in records])
+        values[f"spark.{k}_per_op"] = mean([r["spark"][k] for r in layer])
     zero = [r["op"] for r in records if r["spark"]["jobs"] == 0]
     values["trace.zero_job_ops"] = len(zero)
     # the time tracing adds to the ops (job-group set-up and scheduler

@@ -38,6 +38,11 @@ COP = (["Customer", "Order", "Part"], ["Placed", "Contains"])
 PR_ITERS, LPA_ITERS, BFS_DEPTH, HOPS, CORE_K = 2, 1, 2, 2, 3
 DAMPING = 0.85
 ALGOS = ("cc", "pagerank", "ppr", "bfs", "k_hop", "lpa", "k_core")
+#: ops the spark.* layer metrics average over.  The editing session is
+#: left out: on its freshly merged frames adaptive query execution races
+#: between stages, and its job count varies by up to two from run to run
+#: of one seed; its write path is measured by the graph.* metrics.
+SPARK_LAYER_OPS = ALGOS + ("dedup",)
 #: per-layer metric ``graph_algos.<name>_ms`` -> the function it times
 ALGO_SPANS = {"cc": "connected_components", "pagerank": "pagerank",
               "ppr": "personalized_pagerank", "bfs": "bfs_distances",
