@@ -57,6 +57,26 @@ EDGE_SCHEMA = T.StructType([
     T.StructField("props", T.StringType(), True),
 ])
 
+UID_SCHEMA = T.StructType([T.StructField("uid", T.StringType(), False)])
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: T.StructType) -> DataFrame:
+    """A small driver-side frame built through Arrow.
+
+    ``spark.createDataFrame(list)`` plans a ``Scan ExistingRDD`` whose
+    every read runs tasks through Python workers; an Arrow table becomes
+    a ``LocalTableScan``: no Python worker, and an exact size the
+    planner can broadcast."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), schema)
+
+
 _GRAPH_SEQ = [0]
 
 
@@ -564,7 +584,8 @@ class Graph:
         # mutation drops the columns and joins fall back to uid strings —
         # a null nkey would silently drop rows from int-key joins
         df = df.drop("nkey", "skey", "ekey")
-        new = self.spark.createDataFrame(
+        new = local_frame(
+            self.spark,
             [tuple(r.get(f.name) for f in schema.fields) for r in rows], schema)
         side = "edge" if "startuid" in {f.name for f in schema.fields} \
             else "node"
@@ -593,7 +614,12 @@ class Graph:
             # schema (or the JSON path).
             new = self._conform(new, df)
         out = df.join(new.select("uid"), "uid", "left_anti").unionByName(new)
-        return out.localCheckpoint(eager=True)
+        # the anti-join broadcasts the exactly sized local frame, so the
+        # union would add that frame's partitions to the stored frame at
+        # every merge (more, smaller files per versioned write): fold
+        # them back into the stored frame's partition count
+        parts = df._jdf.queryExecution().toRdd().getNumPartitions()
+        return out.coalesce(max(1, parts)).localCheckpoint(eager=True)
 
     #: props keys that mirror system columns (always present in the JSON
     #: document, never worth a typed shadow — the system column IS the
@@ -713,7 +739,7 @@ class Graph:
         if not uids:
             return df
         self._epoch += 1
-        dels = self.spark.createDataFrame([(u,) for u in uids], "uid string")
+        dels = local_frame(self.spark, [(u,) for u in uids], UID_SCHEMA)
         return df.join(dels, "uid", "left_anti").localCheckpoint(eager=True)
 
     # ------------------------------------------------------------- lookups
@@ -1033,7 +1059,7 @@ class Graph:
         which stay distributed end to end.
         """
         self._flush()
-        frontier = self.spark.createDataFrame([(u,) for u in uids], "uid string")
+        frontier = local_frame(self.spark, [(u,) for u in uids], UID_SCHEMA)
         edges = self._edges_df
         if kind:
             edges = edges.filter(F.col("kind") == kind)
@@ -1446,8 +1472,7 @@ class Graph:
         out: dict = {}
         for i in range(0, len(uid_list), self._PROPS_FETCH_SLICE):
             sl = uid_list[i:i + self._PROPS_FETCH_SLICE]
-            keys = self.spark.createDataFrame([(u,) for u in sl],
-                                              "uid string")
+            keys = local_frame(self.spark, [(u,) for u in sl], UID_SCHEMA)
             for df in (self._edges_df, self._nodes_df):  # nodes overwrite
                 for r in (df.join(keys, "uid")
                           .select("uid", "props").collect()):
@@ -1755,8 +1780,8 @@ class Graph:
               direction: str = "out",
               edge_kinds: Optional[list[str]] = None) -> DataFrame:
         from .operators.graph_algos import k_hop
-        seeds = self.spark.createDataFrame([(u,) for u in seed_uids],
-                                           "uid string")
+        seeds = local_frame(self.spark, [(u,) for u in seed_uids],
+                            UID_SCHEMA)
         return k_hop(self._sub(self.edges_df, edge_kinds), seeds, k,
                      direction)
 
@@ -1764,8 +1789,8 @@ class Graph:
                       direction: str = "both",
                       edge_kinds: Optional[list[str]] = None) -> DataFrame:
         from .operators.graph_algos import bfs_distances
-        seeds = self.spark.createDataFrame([(u,) for u in seed_uids],
-                                           "uid string")
+        seeds = local_frame(self.spark, [(u,) for u in seed_uids],
+                            UID_SCHEMA)
         return bfs_distances(self._sub(self.edges_df, edge_kinds), seeds,
                              max_depth, direction)
 

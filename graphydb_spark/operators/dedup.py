@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph_algos import _components
 from .text import hash60, spread_small_scan as _spread_small_scan, tokens
 
 
@@ -150,33 +151,14 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
 
     This is the stage after candidate generation + verification in a
     dedup pipeline: transitive closure groups A~B~C into one cluster even
-    when A-C was never a candidate pair.  Min-label propagation on int64
-    ids: the pair list is materialized once, partitioned on the join key,
-    and every iteration shuffles only the (node, label) frame.  Converges
-    in O(cluster diameter) rounds — near-dup clusters are shallow.
+    when A-C was never a candidate pair.  It is
+    :func:`graph_algos.connected_components` over the pair list's ids
+    (min-label propagation from the changed ids only, halting when none
+    changes).  Converges in O(cluster diameter) rounds — near-dup
+    clusters are shallow.
     """
-    sym = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-           .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                     F.col(id_a).alias("dst")))
-           .distinct()
-           .repartition("dst")
-           .localCheckpoint(eager=True))
-    labels = (sym.select(F.col("src").alias("id"))
-              .distinct()
-              .select("id", F.col("id").alias("cluster")))
-    for _ in range(max_iter):
-        nbr = (sym.join(labels.withColumnRenamed("id", "dst"), "dst")
-               .select(F.col("src").alias("id"), "cluster"))
-        new = (labels.unionByName(nbr)
-               .groupBy("id").agg(F.min("cluster").alias("cluster"))
-               .localCheckpoint(eager=True))
-        changed = (new.alias("n").join(labels.alias("o"), "id")
-                   .where(F.col("n.cluster") != F.col("o.cluster"))
-                   .limit(1).count())
-        labels = new
-        if changed == 0:
-            break
-    return labels.select(F.col("id").alias("doc_id"), "cluster")
+    return _components("dedup_clusters", pairs, id_a, id_b, max_iter) \
+        .select(F.col("uid").alias("doc_id"), F.col("v").alias("cluster"))
 
 
 def resolve_duplicates(df: DataFrame, clusters: DataFrame, score_col,

@@ -3,13 +3,19 @@
 The reference has no batch analytics (its traversals are point queries);
 these are the scale-path extensions promised in SURVEY.md §7.3(e):
 degrees, connected components, PageRank, k-hop frontier expansion — all
-iterative DataFrame joins with lineage control (localCheckpoint every
-iteration), since GraphX is JVM-only and unavailable from PySpark.
+iterative DataFrame joins, since GraphX is JVM-only and unavailable from
+PySpark.
 
-Scale notes: every iteration is one shuffle on uid; pre-partitioning the
-edge list by ``startuid`` (``repartition(n, 'startuid')``) lets AQE reuse
-the exchange across iterations.  Components/PageRank converge in
-O(diameter) / O(iters) rounds.
+Connected components, dedup clusters, BFS / k-hop, SSSP, PageRank,
+personalized PageRank, label propagation and k-core run on one superstep
+loop, :func:`_supersteps` (vertex-centric, as in Pregelix): each
+algorithm materializes its inputs once and supplies only the per-round
+vertex program; the loop sends messages from the active frontier alone,
+counts the next frontier on the checkpointed state (one narrow job) and
+halts when it is empty, checkpoints the state with its statistics reset,
+and labels each superstep's Spark jobs ``"<algo> superstep <i>
+active=<n>"``.  Edge frames a loop joins every round keep a plain
+``localCheckpoint``, which preserves their hash partitioning.
 """
 
 from __future__ import annotations
@@ -41,12 +47,136 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
     against a CONSTANT frame only grow the estimate linearly per round
     — bare checkpoints are fine there.)
     """
-    d = df.localCheckpoint(eager=True)
+    return _reset_stats(df.localCheckpoint(eager=True))
+
+
+def _reset_stats(d: DataFrame) -> DataFrame:
     spark = d.sparkSession
     jdf = d._jdf
     new_jdf = spark._jsparkSession.internalCreateDataFrame(
         jdf.queryExecution().toRdd(), jdf.schema(), False)
     return DataFrame(new_jdf, spark)
+
+
+def _supersteps(algo: str, state: DataFrame, step, rounds: int):
+    """The superstep loop of the vertex-centric algorithms.
+
+    ``state`` is the vertex frame with a boolean ``_active`` column (the
+    frontier); ``step(state, frontier)`` builds the next state, with its
+    own ``_active`` column, from the current one and its active rows.
+    Each superstep's state is locally checkpointed with its statistics
+    reset (a step joins the state with its own derivative) and the next
+    frontier is counted on that checkpoint: the count is one narrow job,
+    and it is also the one that materializes the checkpoint.  The loop
+    halts when the frontier is empty or after ``rounds`` supersteps.  A
+    frontier whose counted rows fit the broadcast threshold is
+    broadcast, so the large side of its join never shuffles.
+
+    Returns ``(state without _active, n)``; ``n == 0`` means halted.
+    """
+    sc = state.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    state, n = _checkpoint_count(state)
+    try:
+        for i in range(1, rounds + 1):
+            if n == 0:
+                break
+            sc.setJobDescription(f"{algo} superstep {i} active={n}")
+            frontier = state.where("_active").drop("_active")
+            if _fits_broadcast(frontier, n):
+                frontier = F.broadcast(frontier)
+            state, n = _checkpoint_count(step(state, frontier))
+    finally:
+        sc.setJobDescription(caller)
+    return state.drop("_active"), n
+
+
+def _checkpoint_count(state: DataFrame) -> tuple[DataFrame, int]:
+    """Lazily checkpointed ``state`` and its number of active rows, in one
+    job: counting through the InternalRow RDD needs no exchange and no
+    final aggregate stage, and computing it fills the checkpoint."""
+    state = _reset_stats(state.localCheckpoint(eager=False))
+    n = state.where("_active")._jdf.queryExecution().toRdd().count()
+    return state, n
+
+
+def _fits_broadcast(df: DataFrame, rows: int) -> bool:
+    """The planner's own size rule (8 bytes + the default size of every
+    column per row) applied to an exact row count."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    return 0 <= rows * (8 + df._jdf.schema().defaultSize()) <= limit
+
+
+def _directed(edges_df: DataFrame, direction: str) -> DataFrame:
+    """(src, dst) along ``direction`` ∈ {'out', 'in', 'both'}; 'both' is
+    the union of the two (duplicates kept)."""
+    fwd = edges_df.select(F.col("startuid").alias("src"),
+                          F.col("enduid").alias("dst"))
+    rev = edges_df.select(F.col("enduid").alias("src"),
+                          F.col("startuid").alias("dst"))
+    return {"out": fwd, "in": rev}.get(direction, fwd.unionByName(rev))
+
+
+def _undirected(edges_df: DataFrame, a: str = "startuid",
+                b: str = "enduid") -> DataFrame:
+    """Distinct (src, dst) neighbour pairs, both directions."""
+    fwd = edges_df.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    return fwd.unionByName(fwd.select(F.col("dst").alias("src"),
+                                      F.col("src").alias("dst"))).distinct()
+
+
+def _min_label(algo: str, edges: DataFrame, state: DataFrame, rounds: int,
+               msg) -> DataFrame:
+    """Min-propagation over ``edges`` (src, dst[, w]) from ``state``
+    (uid, v), every vertex of ``state`` active: each superstep an active
+    vertex sends ``msg`` (a column over its edge row and its ``v``) to
+    its ``dst``, and every vertex keeps the minimum of its value and its
+    messages.  Round *i* equals the synchronous all-vertex round *i*: a
+    vertex whose value did not change already sent it.  The old value
+    rides the min-aggregation, so a changed vertex is flagged without a
+    join against the previous state.  Returns (uid, v)."""
+    vt = state.schema["v"].dataType
+
+    def step(state, frontier):
+        sent = (edges.join(frontier.withColumnRenamed("uid", "src"), "src")
+                .select(F.col("dst").alias("uid"), msg.cast(vt).alias("v"),
+                        F.lit(None).cast(vt).alias("_old")))
+        best = (state.select("uid", "v", F.col("v").alias("_old"))
+                .unionByName(sent)
+                .groupBy("uid").agg(F.min("v").alias("v"),
+                                    F.max("_old").alias("_old")))
+        return best.select("uid", "v", (F.col("_old").isNull()
+                                        | (F.col("v") < F.col("_old")))
+                           .alias("_active"))
+    return _supersteps(algo, state.withColumn("_active", F.lit(True)),
+                       step, rounds)[0]
+
+
+def _components(algo: str, edges_df: DataFrame, a: str, b: str,
+                max_iter: int, nodes_df: DataFrame | None = None) -> DataFrame:
+    """(uid, v) with v = the minimum id in the vertex's component of the
+    undirected graph of ``edges_df`` (a, b).  The vertices are
+    ``nodes_df``'s uids, or the edge endpoints when it is None.  The
+    symmetric edge frame is materialized once, hash-partitioned on the
+    join key."""
+    sym = _undirected(edges_df, a, b).repartition("src") \
+        .localCheckpoint(eager=False)
+    uids = (nodes_df if nodes_df is not None
+            else sym.select(F.col("src").alias("uid")).distinct())
+    return _min_label(algo, sym, uids.select("uid", F.col("uid").alias("v")),
+                      max_iter, F.col("v"))
+
+
+def _bfs(algo: str, edges_df: DataFrame, seed_uids_df: DataFrame,
+         max_depth: int, direction: str) -> DataFrame:
+    """(uid, dist) — BFS as min-propagation of dist + 1 from the seeds.
+    Seeds and edges are materialized once and not repartitioned: the
+    frontier is small and broadcasts."""
+    step = _directed(edges_df, direction).localCheckpoint(eager=False)
+    seeds = seed_uids_df.select("uid").distinct().withColumn("v", F.lit(0))
+    return (_min_label(algo, step, seeds, max_depth, F.col("v") + 1)
+            .withColumnRenamed("v", "dist"))
 
 
 def degrees(edges_df: DataFrame, direction: str = "both",
@@ -158,72 +288,22 @@ def connected_components(nodes_df: DataFrame, edges_df: DataFrame,
                          max_iter: int = 20) -> DataFrame:
     """(uid, component) where component = min uid string in the component.
 
-    Label propagation over the undirected edge set; each round is one
-    join + one min-aggregation.  Converges in graph-diameter rounds;
-    ``localCheckpoint`` caps lineage so 50-round runs stay planful.
+    Min-label propagation over the undirected edge set on the shared
+    superstep loop: only vertices whose label changed send it on, and the
+    loop halts when none did.  Converges in graph-diameter rounds.
     """
-    # symmetrized edge list materialized once, partitioned on the join
-    # key (dst) — iterations then only shuffle the label frame (see the
-    # same pattern in pagerank)
-    sym = (edges_df.select(F.col("startuid").alias("src"),
-                           F.col("enduid").alias("dst"))
-           .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                        F.col("startuid").alias("dst")))
-           .distinct()
-           .repartition("dst")
-           .localCheckpoint(eager=True))
-    labels = nodes_df.select(F.col("uid"), F.col("uid").alias("component"))
-    for _ in range(max_iter):
-        # neighbor labels + own label, take the min per node
-        nbr = (sym.join(labels.withColumnRenamed("uid", "dst"), "dst")
-                  .select(F.col("src").alias("uid"), "component"))
-        new = (labels.unionByName(nbr)
-                     .groupBy("uid").agg(F.min("component").alias("component"))
-                     .localCheckpoint(eager=True))
-        changed = (new.alias("n")
-                   .join(labels.alias("o"), "uid")
-                   .where(F.col("n.component") != F.col("o.component"))
-                   .limit(1).count())
-        labels = new
-        if changed == 0:
-            break
-    return labels
+    return (_components("connected_components", edges_df, "startuid",
+                        "enduid", max_iter, nodes_df)
+            .withColumnRenamed("v", "component"))
 
 
 def pagerank(nodes_df: DataFrame, edges_df: DataFrame, iters: int = 10,
              damping: float = 0.85) -> DataFrame:
     """(uid, rank) — standard power iteration with dangling-mass
     redistribution; ranks sum to ~N (GraphX convention)."""
-    n_total = nodes_df.count()
-    # Materialize the edge list ONCE, hash-partitioned on the join key.
-    # localCheckpoint preserves the partitioning, so every iteration's
-    # edges⋈ranks join reuses it and only the (node-sized) rank frame
-    # shuffles — without this the full edge table re-shuffles every
-    # round, which dominates at scale.
-    edges = (edges_df.select(F.col("startuid").alias("uid"),
-                             F.col("enduid").alias("dst"))
-             .repartition("uid")
-             .localCheckpoint(eager=True))
-    out_deg = edges.groupBy("uid").agg(F.count("*").alias("deg"))
-    ranks = nodes_df.select("uid").withColumn("rank", F.lit(1.0))
-    for _ in range(iters):
-        contrib_src = ranks.join(out_deg, "uid", "left")
-        dangling = (contrib_src.where(F.col("deg").isNull())
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
-                    .collect()[0]["d"])
-        contribs = (edges.join(contrib_src.where(F.col("deg").isNotNull()),
-                               "uid")
-                    .select(F.col("dst").alias("uid"),
-                            (F.col("rank") / F.col("deg")).alias("c")))
-        incoming = contribs.groupBy("uid").agg(F.sum("c").alias("inc"))
-        base = 1.0 - damping + damping * dangling / n_total
-        ranks = (nodes_df.select("uid")
-                 .join(incoming, "uid", "left")
-                 .select("uid",
-                         (F.lit(base) + F.lit(damping) *
-                          F.coalesce(F.col("inc"), F.lit(0.0))).alias("rank"))
-                 .localCheckpoint(eager=True))
-    return ranks
+    return _power_iteration(
+        "pagerank", nodes_df, edges_df, iters, damping, F.lit(1.0),
+        lambda dangling, n: 1.0 - damping + damping * dangling / n)
 
 
 def eigenvector_centrality(edges_undirected: DataFrame,
@@ -261,31 +341,9 @@ def eigenvector_centrality(edges_undirected: DataFrame,
 
 def k_hop(edges_df: DataFrame, seed_uids_df: DataFrame, k: int,
           direction: str = "out") -> DataFrame:
-    """All uids within k hops of the seed set (frontier expansion with a
-    visited anti-join — each hop shuffles only the frontier)."""
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                             F.col("startuid").alias("dst"))))
-    visited = seed_uids_df.select(F.col("uid")).distinct()
-    frontier = visited
-    for _ in range(k):
-        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
-                   .select(F.col("dst").alias("uid")).distinct()
-                   .join(visited, "uid", "left_anti")
-                   .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return visited
+    """All uids within k hops of the seed set (BFS frontier expansion;
+    see :func:`bfs_distances`)."""
+    return _bfs("k_hop", edges_df, seed_uids_df, k, direction).select("uid")
 
 
 def triangle_count(edges_df: DataFrame,
@@ -372,38 +430,13 @@ def triangle_count(edges_df: DataFrame,
 def bfs_distances(edges_df: DataFrame, seed_uids_df: DataFrame,
                   max_depth: int = 6, direction: str = "both") -> DataFrame:
     """(uid, dist) — minimum hop count from the seed set, up to
-    ``max_depth``.  Frontier expansion with a visited anti-join: each
-    round shuffles only the new frontier (never the full reach set), and
-    because BFS discovers every node at its minimum depth, the first
-    visit IS the distance — no min-aggregation over paths.
+    ``max_depth``.  Frontier expansion on the shared superstep loop:
+    each round only the vertices reached in the previous round send, so
+    the shuffled volume is the frontier and its messages, never the
+    full reach set.
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                             F.col("startuid").alias("dst"))))
-    step = step.repartition("src").localCheckpoint(eager=True)
-    visited = (seed_uids_df.select("uid").distinct()
-               .withColumn("dist", F.lit(0)))
-    frontier = visited.select("uid")
-    for d in range(1, max_depth + 1):
-        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
-                   .select(F.col("dst").alias("uid")).distinct()
-                   .join(visited.select("uid"), "uid", "left_anti")
-                   .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        visited = (visited
-                   .unionByName(nxt.withColumn("dist", F.lit(d)))
-                   .localCheckpoint(eager=True))
-        frontier = nxt
-    return visited
+    return _bfs("bfs_distances", edges_df, seed_uids_df, max_depth,
+                direction)
 
 
 def sssp(weighted_edges_df: DataFrame, seed_uids_df: DataFrame,
@@ -413,37 +446,20 @@ def sssp(weighted_edges_df: DataFrame, seed_uids_df: DataFrame,
     (Bellman-Ford: iteration *k* holds the exact ≤ *k*-hop minimum, so a
     hop-bounded DuckDB recursive-CTE twin can replay it).
 
-    Each round relaxes every edge once: one join of the edge list
-    against the (node-sized) distance frame + one min-aggregation.  The
-    edge list is materialized once, hash-partitioned on ``src``, so
-    iterations shuffle only distances — the same partitioning-reuse
-    pattern as pagerank/connected_components.  Early-exits when a round
+    Min-propagation of ``dist + w`` on the shared superstep loop: each
+    round relaxes only the edges leaving vertices whose distance
+    improved in the previous round, and the loop halts when a round
     improves nothing.  Negative weights are allowed (it is Bellman-Ford,
     not Dijkstra); without negative cycles the result converges in
     ≤ diameter rounds.
     """
     edges = (weighted_edges_df.select("src", "dst", "w")
-             .repartition("src").localCheckpoint(eager=True))
-    dist = (seed_uids_df.select("uid").distinct()
-            .withColumn("dist", F.lit(0).cast("long")))
-    fingerprint = None
-    for _ in range(max_hops):
-        relax = (edges.join(dist.withColumnRenamed("uid", "src"), "src")
-                 .select(F.col("dst").alias("uid"),
-                         (F.col("dist") + F.col("w")).cast("long")
-                         .alias("dist")))
-        new = (dist.unionByName(relax)
-               .groupBy("uid").agg(F.min("dist").alias("dist"))
-               .localCheckpoint(eager=True))
-        # convergence probe without a new-vs-old join: per-node distance
-        # is monotone non-increasing and the reached set only grows, so
-        # the (count, sum) pair is stationary iff nothing changed
-        fp = tuple(new.agg(F.count("*"), F.sum("dist")).first())
-        dist = new
-        if fp == fingerprint:
-            break
-        fingerprint = fp
-    return dist
+             .localCheckpoint(eager=False))
+    seeds = (seed_uids_df.select("uid").distinct()
+             .withColumn("v", F.lit(0).cast("long")))
+    return (_min_label("sssp", edges, seeds, max_hops,
+                       F.col("v") + F.col("w"))
+            .withColumnRenamed("v", "dist"))
 
 
 def label_propagation(nodes_df: DataFrame, edges_df: DataFrame,
@@ -455,37 +471,32 @@ def label_propagation(nodes_df: DataFrame, edges_df: DataFrame,
     synchronous rounds makes reruns bit-identical).  Isolated nodes keep
     their own uid as label.
 
-    Per round: one join (edge list is materialized once, partitioned on
-    the join key) + one (uid,label) count + one per-uid argmax window —
-    the label frame is node-sized, the edge frame never reshuffles.
-    Fixed iteration count (community detection, not a convergence
-    proof): ``iters`` ≈ the diameter of the communities sought.
+    Per round on the shared superstep loop: one join (edge list
+    materialized once, partitioned on the join key) + one (uid,label)
+    count + one per-uid argmax aggregate.  Every vertex sends its label
+    each round (the argmax needs the whole neighbourhood); the frontier
+    is the set of vertices whose label changed, and the loop stops early
+    once no label changes — later rounds would repeat it.  ``iters`` ≈
+    the diameter of the communities sought.
     """
-    from pyspark.sql import Window as W
+    sym = _undirected(edges_df).repartition("src") \
+        .localCheckpoint(eager=False)
 
-    sym = (edges_df.select(F.col("startuid").alias("src"),
-                           F.col("enduid").alias("dst"))
-           .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                        F.col("startuid").alias("dst")))
-           .distinct()
-           .repartition("src")
-           .localCheckpoint(eager=True))
-    labels = nodes_df.select("uid", F.col("uid").alias("label"))
-    w = W.partitionBy("uid").orderBy(F.col("n").desc(), F.col("label"))
-    for _ in range(iters):
-        nbr = (sym.join(labels.withColumnRenamed("uid", "src"), "src")
+    def step(state, frontier):
+        nbr = (sym.join(state.withColumnRenamed("uid", "src"), "src")
                .select(F.col("dst").alias("uid"), "label"))
+        # most frequent label, ties to the smallest: min of (-n, label)
         best = (nbr.groupBy("uid", "label").agg(F.count("*").alias("n"))
-                .withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .select("uid", F.col("label").alias("_new")))
-        labels = (nodes_df.select("uid")
-                  .join(best, "uid", "left")
-                  .select("uid",
-                          F.coalesce(F.col("_new"), F.col("uid"))
-                          .alias("label"))
-                  .localCheckpoint(eager=True))
-    return labels
+                .groupBy("uid")
+                .agg(F.min(F.struct(-F.col("n"), F.col("label")))
+                     .getField("label").alias("_new")))
+        new = F.coalesce(F.col("_new"), F.col("uid"))
+        return (state.join(best, "uid", "left")
+                .select("uid", new.alias("label"),
+                        (new != F.col("label")).alias("_active")))
+    state = nodes_df.select("uid", F.col("uid").alias("label"),
+                            F.lit(True).alias("_active"))
+    return _supersteps("label_propagation", state, step, iters)[0]
 
 
 def k_core(nodes_df: DataFrame, edges_df: DataFrame, k: int,
@@ -494,43 +505,51 @@ def k_core(nodes_df: DataFrame, edges_df: DataFrame, k: int,
     ≥ k neighbors *within the subgraph* — the standard peel loop
     (drop degree<k nodes, recompute, repeat to fixpoint).
 
-    Each round: one degree aggregation over the surviving edge set +
-    one semi-join to shrink it.  The surviving-edge frame shrinks
-    monotonically, so per-round cost falls; total rounds ≤ peel depth
+    On the shared superstep loop: the vertex state is each node's degree
+    among unpeeled neighbours; the frontier is the layer peeled in the
+    previous round, whose members send one decrement to each neighbour
+    (a join of the edge set with the small, broadcast layer), and the
+    loop halts when a round peels nothing.  Total rounds ≤ peel depth
     (≪ node count in practice).  Self-loops count once (a node is not
     its own neighbor twice); parallel edges count once per distinct
     neighbor (degree = distinct neighbors, the standard k-core
-    definition).
+    definition).  ``max_iter`` bounds the peel rounds, the check that
+    finds nothing left to peel included.
     """
-    sym = (edges_df.select(F.col("startuid").alias("a"),
-                           F.col("enduid").alias("b"))
-           .unionByName(edges_df.select(F.col("enduid").alias("a"),
-                                        F.col("startuid").alias("b")))
-           .where(F.col("a") != F.col("b"))
-           .distinct()
-           .localCheckpoint(eager=True))
-    converged = False
-    for _ in range(max_iter):
-        deg = sym.groupBy("a").agg(F.count("*").alias("d"))
-        keep = deg.where(F.col("d") >= k).select(F.col("a").alias("uid"))
-        nxt = (sym.join(keep.withColumnRenamed("uid", "a"), "a", "left_semi")
-               .join(keep.select(F.col("uid").alias("b")), "b", "left_semi")
-               .localCheckpoint(eager=True))
-        converged = nxt.count() == sym.count()
-        sym = nxt
-        if converged:
-            break
-    if not converged:
+    sym = (_undirected(edges_df).where(F.col("src") != F.col("dst"))
+           .localCheckpoint(eager=False))
+    deg = F.col("deg")
+
+    def step(state, frontier):
+        lost = (sym.join(frontier.select(F.col("uid").alias("src")), "src")
+                .groupBy(F.col("dst").alias("uid"))
+                .agg(F.count("*").alias("_lost")))
+        left = deg - F.coalesce(F.col("_lost"), F.lit(0))
+        return (state.join(lost, "uid", "left")
+                .select("uid", left.alias("deg"),
+                        ((left < k) & (deg >= k)).alias("_active")))
+    state = (sym.groupBy(F.col("src").alias("uid"))
+             .agg(F.count("*").alias("deg"))
+             .withColumn("_active", deg < k))
+    state, n = _supersteps("k_core", state, step, max_iter - 1)
+    core = state.where(deg >= k).select("uid")
+    if n:
         # peel depth can exceed max_iter (e.g. a pendant chain peels a
         # couple of nodes per round); returning silently would hand back
-        # a superset of the true k-core
+        # a superset of the true k-core.  The last peeled layer has not
+        # lowered its neighbours' degrees yet: keep the nodes that still
+        # have an unpeeled neighbour.
         import warnings
         warnings.warn(
             f"k_core: peel loop did not reach a fixpoint in {max_iter} "
             "rounds; result is a superset of the true k-core. "
             "Raise max_iter.", RuntimeWarning, stacklevel=2)
-    return (sym.select(F.col("a").alias("uid")).distinct()
-            .join(nodes_df.select("uid"), "uid", "left_semi"))
+        core = (sym.join(core.withColumnRenamed("uid", "src"), "src",
+                         "left_semi")
+                .join(core.withColumnRenamed("uid", "dst"), "dst",
+                      "left_semi")
+                .select(F.col("src").alias("uid")).distinct())
+    return core.join(nodes_df.select("uid"), "uid", "left_semi")
 
 
 def transitivity(edges_df: DataFrame, src_col: str = "startuid",
@@ -638,39 +657,56 @@ def personalized_pagerank(nodes_df: DataFrame, edges_df: DataFrame,
     to the seeds — the standard recommendation / related-entities
     primitive.  Dangling mass also returns to the seeds.
 
-    Same execution scheme as :func:`pagerank` (edge list materialized
-    once, node-sized rank frame shuffles per round); ranks sum to ~1.
+    Same execution scheme as :func:`pagerank`; only vertices holding
+    rank send it, so early rounds touch the seeds' neighbourhood only.
+    Ranks sum to ~1.
     """
     seeds = set(seed_uids)
-    n_seeds = len(seeds) or 1
+    share = F.when(F.col("uid").isin(list(seeds)),
+                   F.lit(1.0 / (len(seeds) or 1))).otherwise(F.lit(0.0))
+    return _power_iteration(
+        "personalized_pagerank", nodes_df, edges_df, iters, damping, share,
+        lambda dangling, n: (1.0 - damping) + damping * dangling)
+
+
+def _power_iteration(algo: str, nodes_df: DataFrame, edges_df: DataFrame,
+                     iters: int, damping: float, share, teleport) -> DataFrame:
+    """(uid, rank): ``rank' = share · teleport(dangling, n) + damping ·
+    Σ rank/deg`` over in-edges, starting from ``rank = share``.
+
+    The vertex frame (uid, out-degree, teleport share) is materialized
+    once, partitioned like the edge list, which is hash-partitioned on
+    the source: each round joins the edges with the active (rank > 0)
+    vertices and the vertex frame with the summed contributions, and the
+    dangling mass is read from the checkpointed ranks.
+    """
     edges = (edges_df.select(F.col("startuid").alias("uid"),
                              F.col("enduid").alias("dst"))
-             .repartition("uid")
-             .localCheckpoint(eager=True))
+             .repartition("uid").localCheckpoint(eager=False))
     out_deg = edges.groupBy("uid").agg(F.count("*").alias("deg"))
-    is_seed = F.col("uid").isin(list(seeds))
-    seed_share = F.when(is_seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-    ranks = nodes_df.select("uid").withColumn("rank", seed_share)
-    for _ in range(iters):
-        contrib_src = ranks.join(out_deg, "uid", "left")
-        dangling = (contrib_src.where(F.col("deg").isNull())
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("d"))
-                    .collect()[0]["d"])
-        contribs = (edges.join(contrib_src.where(F.col("deg").isNotNull()),
-                               "uid")
+    vertices = (nodes_df.select("uid").join(out_deg, "uid", "left")
+                .select("uid", F.coalesce("deg", F.lit(0)).alias("deg"),
+                        share.alias("share"))
+                .localCheckpoint(eager=False))
+
+    def step(state, frontier):
+        n, dangling = state.agg(
+            F.count("*"), F.coalesce(F.sum(F.when(F.col("deg") == 0,
+                                                  F.col("rank"))),
+                                     F.lit(0.0))).first()
+        incoming = (edges.join(frontier.where(F.col("deg") > 0), "uid")
                     .select(F.col("dst").alias("uid"),
-                            (F.col("rank") / F.col("deg")).alias("c")))
-        incoming = contribs.groupBy("uid").agg(F.sum("c").alias("inc"))
-        teleport = (1.0 - damping) + damping * dangling
-        ranks = (nodes_df.select("uid")
-                 .join(incoming, "uid", "left")
-                 .select("uid",
-                         (seed_share * F.lit(teleport)
-                          + F.lit(damping)
-                          * F.coalesce(F.col("inc"), F.lit(0.0)))
-                         .alias("rank"))
-                 .localCheckpoint(eager=True))
-    return ranks
+                            (F.col("rank") / F.col("deg")).alias("c"))
+                    .groupBy("uid").agg(F.sum("c").alias("inc")))
+        rank = (F.col("share") * F.lit(teleport(dangling, n))
+                + F.lit(damping) * F.coalesce(F.col("inc"), F.lit(0.0)))
+        return (vertices.join(incoming, "uid", "left")
+                .select("uid", "deg", "share", rank.alias("rank"))
+                .withColumn("_active", F.col("rank") > 0))
+    state = vertices.select("uid", "deg", "share",
+                            F.col("share").alias("rank"),
+                            (F.col("share") > 0).alias("_active"))
+    return _supersteps(algo, state, step, iters)[0].select("uid", "rank")
 
 
 def bfs_paths(edges_df: DataFrame, seed_uids_df: DataFrame,
@@ -685,18 +721,7 @@ def bfs_paths(edges_df: DataFrame, seed_uids_df: DataFrame,
     length (bounded by max_depth — at 100 TB keep max_depth small or
     carry only the predecessor and reconstruct on demand).
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(F.col("enduid").alias("src"),
-                                             F.col("startuid").alias("dst"))))
-    step = step.repartition("src").localCheckpoint(eager=True)
+    step = _directed(edges_df, direction).repartition("src").localCheckpoint(eager=True)
     visited = (seed_uids_df.select("uid").distinct()
                .withColumn("dist", F.lit(0))
                .withColumn("path", F.array(F.col("uid"))))
@@ -1085,19 +1110,7 @@ def closeness_centrality(edges_df: DataFrame, sources_df: DataFrame,
     once and checkpointed, so each expansion is a single co-located
     join at scale.
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(
-                    F.col("enduid").alias("src"),
-                    F.col("startuid").alias("dst"))))
-    step = step.distinct().repartition("src").localCheckpoint(eager=True)
+    step = _directed(edges_df, direction).distinct().repartition("src").localCheckpoint(eager=True)
     visited = (sources_df.select(F.col("uid").alias("source")).distinct()
                .select("source", F.col("source").alias("uid"),
                        F.lit(0).alias("dist")))
@@ -1228,19 +1241,7 @@ def betweenness_sampled(edges_df: DataFrame, sources_df: DataFrame,
     Rounds: max_depth forward + max_depth backward, each a keyed
     join + aggregation over frontier/layer-sized frames only.
     """
-    if direction == "out":
-        step = edges_df.select(F.col("startuid").alias("src"),
-                               F.col("enduid").alias("dst"))
-    elif direction == "in":
-        step = edges_df.select(F.col("enduid").alias("src"),
-                               F.col("startuid").alias("dst"))
-    else:
-        step = (edges_df.select(F.col("startuid").alias("src"),
-                                F.col("enduid").alias("dst"))
-                .unionByName(edges_df.select(
-                    F.col("enduid").alias("src"),
-                    F.col("startuid").alias("dst"))))
-    step = step.distinct().repartition("src").localCheckpoint(eager=True)
+    step = _directed(edges_df, direction).distinct().repartition("src").localCheckpoint(eager=True)
     cur = (sources_df.select(F.col("uid").alias("source")).distinct()
            .select("source", F.col("source").alias("uid"),
                    F.lit(0).alias("dist"),

@@ -2190,7 +2190,7 @@ def probe_fts_table(spark: SparkSession, path: str, terms: list[str],
                                                / F.lit(float(avgdl))))))
     # uid exchange pinned to the same probe-proportional width; the
     # per-uid addend SET is unchanged (sum over the same ≤|terms| rows),
-    # so values are identical.  Map-side partial aggregation loses
+    # so scores are equal up to floating-point summation order.  Map-side partial aggregation loses
     # nothing here: the rows arrive clustered by TOKEN, so same-uid
     # rows almost never share a partition for a pre-shuffle merge.
     return (scored.repartition(w, "uid")

@@ -314,9 +314,9 @@ class ESet(ItemSet):
         g = self._graph()
         if g is None or not len(self):
             return NSet()
-        from pyspark.sql import functions as F
+        from .graph import UID_SCHEMA, local_frame
         uids = sorted({it[col] for it in self})
-        keys = g.spark.createDataFrame([(u,) for u in uids], "uid string")
+        keys = local_frame(g.spark, [(u,) for u in uids], UID_SCHEMA)
         rows = g.nodes_df.join(keys, "uid", "left_semi").collect()
         by_uid = {r["uid"]: g._hydrate(r, edge=False) for r in rows}
         # preserve edge-set order of first appearance

@@ -416,7 +416,13 @@ def pruned_file_rows(path: str, version: int | None = None,
     if where:
         files = [f for f in files
                  if _may_match(stats.get(f, {}).get("cols", {}), where)]
-    rows = sum(int(stats.get(f, {}).get("rows", 0)) for f in files)
+    # a file the manifest has no stats for (an older writer, a
+    # hand-built manifest) counts as the mean of the files that have
+    # them: counting it as 0 rows would pin a probe's width to 1
+    known = [int(st["rows"]) for st in stats.values() if "rows" in st]
+    fallback = sum(known) // len(known) if known else 0
+    rows = sum(int(stats[f]["rows"]) if "rows" in stats.get(f, {})
+               else fallback for f in files)
     return len(files), rows
 
 

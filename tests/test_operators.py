@@ -2,6 +2,7 @@
 multimodal, graph algorithms) on tiny in-line fixtures."""
 
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -1662,3 +1663,183 @@ def test_maximal_matching_properties(spark):
     cover = set(used)
     for a, b in edges:
         assert a in cover or b in cover, f"edge ({a},{b}) uncovered"
+
+
+# ------------------------------------------------ superstep loop oracles
+def _multigraph():
+    """Seeded random multigraph: two components (a0..a13, b0..b7) with
+    parallel edges and self-loops, plus four isolated nodes."""
+    rng = random.Random(20261017)
+    comps = [[f"a{i}" for i in range(14)], [f"b{i}" for i in range(8)]]
+    edges = []
+    for c in comps:
+        for i in range(1, len(c)):          # a random spanning tree
+            edges.append((c[rng.randrange(i)], c[i]))
+        edges += [(rng.choice(c), rng.choice(c)) for _ in range(len(c))]
+        edges += [edges[-1], (c[0], c[0])]  # a parallel edge, a self-loop
+    nodes = sorted(u for c in comps for u in c) + ["z0", "z1", "z2", "z3"]
+    return nodes, edges
+
+
+@pytest.fixture(scope="module")
+def multigraph(spark):
+    nodes, edges = _multigraph()
+    return (nodes, edges,
+            spark.createDataFrame([(u,) for u in nodes], "uid string"),
+            spark.createDataFrame(edges, "startuid string, enduid string"))
+
+
+def _ranks_oracle(nodes, edges, iters, damping, seeds=None):
+    import numpy as np
+    idx = {u: i for i, u in enumerate(nodes)}
+    src = np.array([idx[a] for a, _ in edges])
+    dst = np.array([idx[b] for _, b in edges])
+    n = len(nodes)
+    deg = np.bincount(src, minlength=n).astype(float)
+    if seeds is None:
+        share, ranks = None, np.ones(n)
+    else:
+        share = np.zeros(n)
+        share[[idx[s] for s in seeds]] = 1.0 / len(seeds)
+        ranks = share.copy()
+    for _ in range(iters):
+        dangling = ranks[deg == 0].sum()
+        inc = np.bincount(dst, weights=ranks[src] / deg[src], minlength=n)
+        if share is None:
+            ranks = (1 - damping + damping * dangling / n) + damping * inc
+        else:
+            ranks = share * ((1 - damping) + damping * dangling) \
+                + damping * inc
+    return dict(zip(nodes, ranks.tolist()))
+
+
+def test_ported_algorithms_match_oracles(spark, multigraph):
+    """Every algorithm on the superstep loop against networkx / NumPy on
+    a multigraph with self-loops, parallel edges, isolated nodes and two
+    components."""
+    import networkx as nx
+    nodes, edges, nodes_df, edges_df = multigraph
+    und = nx.MultiGraph()
+    und.add_nodes_from(nodes)
+    und.add_edges_from(edges)
+    dig = nx.MultiDiGraph()
+    dig.add_nodes_from(nodes)
+    dig.add_edges_from(edges)
+
+    comp = {u: min(c) for c in nx.connected_components(und) for u in c}
+    got = {r["uid"]: r["component"] for r in
+           graph_algos.connected_components(nodes_df, edges_df).collect()}
+    assert got == comp
+
+    ids = {u: i for i, u in enumerate(nodes)}
+    pairs = spark.createDataFrame([(ids[a], ids[b]) for a, b in edges],
+                                  "id_a long, id_b long")
+    touched = {u for e in edges for u in e}
+    got = {r["doc_id"]: r["cluster"]
+           for r in dedup.dedup_clusters(pairs).collect()}
+    assert got == {ids[u]: ids[comp[u]] for u in touched}
+
+    for seeds in (None, ["a3", "b5"]):
+        want = _ranks_oracle(nodes, edges, 6, 0.85, seeds)
+        ranks = (graph_algos.pagerank(nodes_df, edges_df, iters=6)
+                 if seeds is None else graph_algos.personalized_pagerank(
+                     nodes_df, edges_df, seeds, iters=6))
+        got = {r["uid"]: r["rank"] for r in ranks.collect()}
+        assert got.keys() == want.keys()
+        assert all(abs(got[u] - want[u]) < 1e-9 for u in want)
+
+    seeds = ["a0", "b2"]
+    seeds_df = spark.createDataFrame([(s,) for s in seeds + seeds],
+                                     "uid string")
+    for depth in (0, 2, 20):
+        want = {}
+        for s in seeds:
+            for u, d in nx.single_source_shortest_path_length(
+                    und, s, cutoff=depth).items():
+                want[u] = min(d, want.get(u, d))
+        got = {r["uid"]: r["dist"] for r in graph_algos.bfs_distances(
+            edges_df, seeds_df, max_depth=depth).collect()}
+        assert got == want
+        reach = {u for s in seeds for u in
+                 nx.single_source_shortest_path_length(dig, s, cutoff=depth)}
+        assert {r["uid"] for r in graph_algos.k_hop(
+            edges_df, seeds_df, depth).collect()} == reach
+
+    rng = random.Random(5)
+    weighted = [(a, b, rng.randint(1, 9)) for a, b in edges]
+    wdig = nx.MultiDiGraph()
+    wdig.add_weighted_edges_from(weighted)
+    want = nx.multi_source_dijkstra_path_length(wdig, set(seeds))
+    got = {r["uid"]: r["dist"] for r in graph_algos.sssp(
+        spark.createDataFrame(weighted, "src string, dst string, w long"),
+        seeds_df, max_hops=len(nodes)).collect()}
+    assert got == want
+
+    simple = nx.Graph(und)
+    simple.remove_edges_from(nx.selfloop_edges(simple))
+    for k in (2, 3):
+        got = {r["uid"] for r in
+               graph_algos.k_core(nodes_df, edges_df, k).collect()}
+        assert got == set(nx.k_core(simple, k))
+    # cut off before the fixpoint: the nodes left with an edge after
+    # max_iter peel rounds (a warned superset of the core)
+    for max_iter in (1, 2):
+        g = simple.copy()
+        for _ in range(max_iter):
+            g.remove_nodes_from([u for u, d in g.degree() if d < 3])
+        with pytest.warns(RuntimeWarning, match="fixpoint"):
+            got = {r["uid"] for r in graph_algos.k_core(
+                nodes_df, edges_df, 3, max_iter=max_iter).collect()}
+        assert got == {u for u, d in g.degree() if d > 0}
+
+
+def test_label_propagation_matches_oracle(spark, multigraph):
+    """Synchronous LPA, most frequent neighbour label with ties to the
+    smallest, self-loops counting the node's own label once."""
+    from collections import Counter
+    nodes, edges, nodes_df, edges_df = multigraph
+    nbrs = {u: set() for u in nodes}
+    for a, b in edges:
+        nbrs[a].add(b)
+        nbrs[b].add(a)
+    for iters in (1, 3, 8):
+        lab = {u: u for u in nodes}
+        for _ in range(iters):
+            lab = {u: min(Counter(lab[v] for v in nbrs[u]).items(),
+                          key=lambda kv: (-kv[1], kv[0]))[0]
+                   if nbrs[u] else u for u in nodes}
+        got = {r["uid"]: r["label"] for r in graph_algos.label_propagation(
+            nodes_df, edges_df, iters=iters).collect()}
+        assert got == lab
+
+
+def test_superstep_jobs_are_labelled(spark):
+    """Each superstep's jobs carry "<algo> superstep <i> active=<n>", n
+    the frontier the halting check counted; the caller's description is
+    restored.  On a path, min-label CC's frontier shrinks by one per
+    round."""
+    import re
+    sc = spark.sparkContext
+    path = [f"p{i}" for i in range(6)]
+    nodes = spark.createDataFrame([(u,) for u in path], "uid string")
+    edges = spark.createDataFrame(list(zip(path, path[1:])),
+                                  "startuid string, enduid string")
+    sc.setJobGroup("superstep-labels", "caller")
+    try:
+        cc = graph_algos.connected_components(nodes, edges).collect()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert {r["component"] for r in cc} == {"p0"}
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    active = {}
+    for j in sc.statusTracker().getJobIdsForGroup("superstep-labels"):
+        d = store.job(j).description()
+        m = re.fullmatch(r"connected_components superstep (\d+) active=(\d+)",
+                         d.get() if d.isDefined() else "")
+        if m:
+            active[int(m[1])] = int(m[2])
+    assert [active[i] for i in sorted(active)] == [6, 5, 4, 3, 2, 1]

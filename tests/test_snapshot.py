@@ -272,6 +272,28 @@ def test_manifest_stats_skip_files(spark, table):
     assert part.count() == 10  # 5..9 + 100..104
 
 
+def test_pruned_file_rows_without_file_stats(spark, table):
+    # a manifest that lacks stats for a kept file: that file counts as
+    # the mean of the files that have stats, not as 0 rows
+    for lo in (0, 100, 200):
+        snap.commit_snapshot(
+            _df(spark, lo, lo + 10).coalesce(1), table)
+    path = snap._manifest_path(table, 3)
+    m = snap._read_manifest(table, 3)
+    middle = next(f for f, s in m["file_stats"].items()
+                  if s["cols"]["id"][0] == 100)
+    del m["file_stats"][middle]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    assert snap.pruned_file_rows(table, 3) == (3, 30)
+    # the stats-less file cannot be pruned; the other two are
+    assert snap.pruned_file_rows(table, 3, {"id": (100, 105)}) == (1, 10)
+    del m["file_stats"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    assert snap.pruned_file_rows(table, 3) == (3, 0)
+
+
 def test_incremental_read_returns_exact_delta(spark, table):
     snap.commit_snapshot(_df(spark, 0, 10), table)
     snap.commit_snapshot(_df(spark, 10, 13), table)

@@ -33,6 +33,23 @@ def test_write_open_roundtrip(spark, tmp_path):
     assert [n["name"] for n in res] == ["Bob"]
 
 
+def test_local_frame_is_a_local_table_scan(spark):
+    """Driver-side rows go through Arrow: the plan is a LocalTableScan
+    (no Python worker), and null props and doubles round-trip exactly."""
+    from graphydb_spark.graph import (NODE_SCHEMA, UID_SCHEMA,
+                                      local_frame)
+    uids = local_frame(spark, [(f"u{i}",) for i in range(300)], UID_SCHEMA)
+    assert "LocalTableScan" in explain_str(uids)
+    assert "ExistingRDD" not in explain_str(uids)
+    assert uids.count() == 300
+    rows = [("a", "K", 1.5, None, None),
+            ("b", None, 0.1 + 0.2, 1e300, '{"x": 1}'),
+            ("c", "K", -0.0, 5e-324, "")]
+    back = local_frame(spark, rows, NODE_SCHEMA).orderBy("uid").collect()
+    assert [tuple(r) for r in back] == rows
+    assert local_frame(spark, [], UID_SCHEMA).count() == 0
+
+
 def test_kind_filter_prunes_partitions(spark, tmp_path):
     """A typed link must reach the scan as a partition filter."""
     g = Graph(spark)
