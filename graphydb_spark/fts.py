@@ -5,7 +5,8 @@ The reference uses SQLite FTS5 virtual tables (``nodefts``/``edgefts``,
 predicate (graphydb.py:876-893).  Here the index is a *derived* DataFrame
 ``(uid, field, token)`` built with JVM-side built-ins (lower + regex split +
 posexplode — no Python UDF in the hot path), and a MATCH expression compiles
-to semi-join set algebra on uids.
+to one per-uid aggregate of match flags (plain terms) or to semi-join set
+algebra on uids (phrase/NEAR).
 
 Tokenizer parity: FTS5's default ``unicode61`` splits on non-alphanumeric
 codepoints and lowercases.  We mirror that with ``[^\\p{L}\\p{N}]+`` —
@@ -28,12 +29,15 @@ tests/test_graphdb.py:107-110 + graphydb.py:855):
 
 At scale the index is just another DataFrame: partition it by token for
 point lookups, or leave it co-partitioned with the base table for rebuilds;
-matches are semi-joins that AQE can broadcast when the term is selective.
+phrase/NEAR matches are semi-joins that AQE can broadcast when the term is
+selective.
 """
 
 from __future__ import annotations
 
+import operator
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -307,8 +311,15 @@ def _term_uids(index: DataFrame, field, term, prefix) -> DataFrame:
         if term and term[0] == NEAR_KIND:
             return _near_uids(index, field, term[1], term[2])
         return _phrase_uids(index, field, term)
-    cond = F.col("token").startswith(term) if prefix else F.col("token") == term
-    return index.where(cond & _field_cond(field)).select("uid").distinct()
+    return index.where(_item_cond(field, term, prefix)) \
+        .select("uid").distinct()
+
+
+def _item_cond(field, term: str, prefix: bool):
+    """Posting filter of one plain (term or prefix) item."""
+    tok = F.col("token")
+    return ((tok.startswith(term) if prefix else tok == term)
+            & _field_cond(field))
 
 
 def _phrase_uids(index: DataFrame, field, terms: tuple) -> DataFrame:
@@ -377,9 +388,48 @@ def _near_uids(index: DataFrame, field, items: tuple,
 
 
 def match_uids(index: DataFrame, query: str) -> DataFrame:
-    """Compile a MATCH expression to a DataFrame of matching uids."""
+    """Compile a MATCH expression to a DataFrame of matching uids.
+
+    A query of plain terms (term, prefix, field-qualified, AND/OR/NOT)
+    is ONE ``groupBy("uid")``: a ``bool_or`` flag per distinct item,
+    then a filter ORing the groups, each an AND of its flags and
+    negated flags — one aggregate however many terms.  When every
+    group has a positive item, only rows matching some item can make a
+    uid match, so the index is filtered to them before the aggregate;
+    a group of bare NOTs needs the whole index as its uid universe.
+    A query with a phrase or NEAR item compiles to per-term uid sets
+    joined as set algebra (semi-joins for AND, anti-joins for NOT,
+    union for OR), because positions must be matched across rows."""
+    groups = [g for _, g in parse_match(query)]
+    if not groups:
+        return index.select("uid").limit(0)
+    # a tuple term is a phrase or NEAR item, matched on positions
+    if any(isinstance(t[2], tuple) for g in groups for t in g):
+        return _match_by_joins(index, groups)
+    slot = {it: i for i, it in enumerate(
+        dict.fromkeys(t[1:] for g in groups for t in g))}
+    conds = [_item_cond(*item) for item in slot]
+    if all(any(not t[0] for t in g) for g in groups):
+        index = index.where(reduce(operator.or_, conds))
+    flags = index.groupBy("uid").agg(*(
+        F.coalesce(F.bool_or(c), F.lit(False)).alias(f"m{i}")
+        for i, c in enumerate(conds)))
+
+    def flag(t):
+        f = F.col(f"m{slot[t[1:]]}")
+        return ~f if t[0] else f
+
+    keep = reduce(operator.or_, (reduce(operator.and_, map(flag, g))
+                                 for g in groups))
+    return flags.where(keep).select("uid")
+
+
+def _match_by_joins(index: DataFrame, groups: list[list[tuple]]
+                    ) -> DataFrame:
+    """The set-algebra form of :func:`match_uids` for queries with a
+    positional (phrase/NEAR) item."""
     or_parts = []
-    for _, group in parse_match(query):
+    for group in groups:
         pos = [t for t in group if not t[0]]
         neg = [t for t in group if t[0]]
         if pos:
@@ -391,9 +441,4 @@ def match_uids(index: DataFrame, query: str) -> DataFrame:
         for t in neg:
             acc = acc.join(_term_uids(index, *t[1:]), "uid", "left_anti")
         or_parts.append(acc)
-    if not or_parts:
-        return index.select("uid").limit(0)
-    out = or_parts[0]
-    for p in or_parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct()
+    return reduce(DataFrame.unionByName, or_parts).distinct()

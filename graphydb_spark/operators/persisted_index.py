@@ -459,24 +459,29 @@ def _nearest_cells_batch(centroids: list[list[float]], Qm,
     return order[:, :nprobe].tolist()
 
 
+def _read_cells(spark: SparkSession, path: str, version: int | None,
+                cells) -> DataFrame:
+    """The rows of the IVF ``cells``: one manifest-pruned read whose
+    ``cluster`` predicate is the cells' point ranges, so every file is
+    scanned once however many of the cells it holds."""
+    return read_snapshot(spark, path, version=version,
+                         where={"cluster": [(c, c) for c in cells]})
+
+
 def probe_ivf_table(spark: SparkSession, path: str,
                     query_vec: list[float], k: int = 10,
                     nprobe: int = 2,
                     version: int | None = None) -> DataFrame:
     """Top-k by cosine among the ``nprobe`` nearest cells, reading only
-    manifest-pruned files.  Each cell is one pruned point-range read;
-    their union is the candidate set, re-ranked exactly."""
+    manifest-pruned files: the cells' rows are one pruned read
+    (:func:`_read_cells`), the candidate set, re-ranked exactly."""
     version = _pin_version(path, version)
     meta = snapshot_meta(path, version)
     if not meta or meta.get("kind") != "ivf":
         raise ValueError(f"{path!r} is not an IVF index table")
     cells = _nearest_cells(meta["centroids"], query_vec, nprobe)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    parts = [read_snapshot(spark, path, version=version,
-                           where={"cluster": (c, c)}) for c in cells]
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
+    cand = _read_cells(spark, path, version, cells)
     q = vec_lit(query_vec)
     return (cand.withColumn("cosine", cosine_expr(q, F.col(vec_col)))
                 .select(id_col, "cosine")
@@ -515,7 +520,7 @@ def probe_ivf_table_batch(spark: SparkSession, path: str,
     ``queries`` → (qid, vec_id, cosine, rn).
 
     The query batch rides in the task closure as ONE numpy matrix —
-    the index is read once as a union of manifest-pruned cell ranges,
+    the index is read once as the manifest-pruned cell ranges,
     and each candidate row crosses the Arrow boundary exactly once.
     (Materializing the |queries| × |candidates| pair join and scoring
     per pair moves pair-count × row-width bytes through Arrow or the
@@ -579,11 +584,7 @@ def _ivf_batch_chunk(spark: SparkSession, path: str, version: int,
             cell2q.setdefault(c, []).append(i)
     cells = sorted(cell2q)
 
-    parts = [read_snapshot(spark, path, version=version,
-                           where={"cluster": (c, c)}) for c in cells]
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
+    cand = _read_cells(spark, path, version, cells)
 
     id_type = cand.schema[id_col].dataType.simpleString()
     out_schema = (f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, "
@@ -644,17 +645,9 @@ def ivf_probe_files(path: str, query_vec: list[float], nprobe: int = 2,
     if not meta or "centroids" not in meta:
         raise ValueError(f"{path!r} is not an IVF index table")
     cells = _nearest_cells(meta["centroids"], query_vec, nprobe)
-    vs = snapshot_versions(path)
-    v = vs[-1] if version is None else version
-    m = _read_manifest(path, v)
-    stats = m.get("file_stats", {})
-    opened = set()
-    for c in cells:
-        for f in m["files"]:
-            if _may_match(stats.get(f, {}).get("cols", {}),
-                          {"cluster": (c, c)}):
-                opened.add(f)
-    return len(opened), len(m["files"])
+    where = {"cluster": [(c, c) for c in cells]}
+    return (pruned_file_rows(path, version, where)[0],
+            pruned_file_rows(path, version)[0])
 
 
 # ----------------------------------------------- distributed stage-1 probe
@@ -845,11 +838,7 @@ def _ivf_batch_distributed(spark: SparkSession, path: str, version: int,
                           cents, qvec_col, nprobe))))
     cells, nqs, nis = _dist_plan(qc, path, version, len(cents[0]))
 
-    parts = [read_snapshot(spark, path, version=version,
-                           where={"cluster": (c, c)}) for c in cells]
-    index = parts[0]
-    for p in parts[1:]:
-        index = index.unionByName(p)
+    index = _read_cells(spark, path, version, cells)
 
     qx, ix = _dist_salted(qc, index.select("cluster", id_col, vec_col),
                           qid_col, nqs, nis, id_col)
@@ -946,11 +935,7 @@ def _ivfpq_batch_distributed(spark: SparkSession, path: str,
     cells, nqs, nis = _dist_plan(qc, path, version,
                                  len(cents[0]), pair_cost=m)
 
-    parts = [read_snapshot(spark, path, version=version,
-                           where={"cluster": (c, c)}) for c in cells]
-    index = parts[0]
-    for p in parts[1:]:
-        index = index.unionByName(p)
+    index = _read_cells(spark, path, version, cells)
 
     qx, ix = _dist_salted(qc, index.select("cluster", id_col, "codes"),
                           qid_col, nqs, nis, id_col)
@@ -1009,12 +994,7 @@ def _ivfpq_batch_distributed(spark: SparkSession, path: str,
     # refine column on id, then the queries frame on qid — no
     # broadcast bound, no driver materialization
     cand = approx.select(qid_col, id_col)
-    raws = [read_snapshot(spark, path, version=version,
-                          where={"cluster": (c, c)})
-            .select(id_col, vec_col) for c in cells]
-    raw = raws[0]
-    for p in raws[1:]:
-        raw = raw.unionByName(p)
+    raw = _read_cells(spark, path, version, cells).select(id_col, vec_col)
     qside = queries.select(qid_col,
                            F.col(qvec_col).alias("__dist_qvec"))
     joined = raw.join(cand, id_col).join(qside, qid_col)
@@ -1280,13 +1260,9 @@ def probe_ivfpq_table(spark: SparkSession, path: str,
     # pushed to parquet, so it touches candidate row-groups only.
     ids = [r[0] for r in approx.select(id_col).collect()]
     vec_col = meta["vec_col"]
-    raws = [read_snapshot(spark, path, version=version,
-                          where={"cluster": (c, c)})
-            .where(F.col(id_col).isin(ids))
-            .select(id_col, vec_col) for c in cells]
-    raw = raws[0]
-    for p in raws[1:]:
-        raw = raw.unionByName(p)
+    raw = (_read_cells(spark, path, version, cells)
+           .where(F.col(id_col).isin(ids))
+           .select(id_col, vec_col))
     qlit = F.lit([float(x) for x in query_vec])
     l2 = F.aggregate(
         F.zip_with(F.col(vec_col), qlit,
@@ -1427,12 +1403,8 @@ def _ivfpq_batch_chunk(spark: SparkSession, path: str, version: int,
         for idx, i in enumerate(qi):
             tabs[(i, c)] = t[idx]
 
-    parts = [read_snapshot(spark, path, version=version,
-                           where={"cluster": (c, c)})
-             .select("cluster", id_col, "codes") for c in cells]
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
+    cand = _read_cells(spark, path, version, cells).select(
+        "cluster", id_col, "codes")
 
     id_type = cand.schema[id_col].dataType.simpleString()
     out_schema = (f"`{qid_col}` {qid_type}, `{id_col}` {id_type}, "
@@ -1489,12 +1461,7 @@ def _ivfpq_batch_chunk(spark: SparkSession, path: str, version: int,
     # pinned by test_ivfpq_rerank_shuffle_equals_broadcast.
     vec_col = meta["vec_col"]
     cand_pairs = approx.select(qid_col, id_col)
-    raws = [read_snapshot(spark, path, version=version,
-                          where={"cluster": (c, c)})
-            .select(id_col, vec_col) for c in cells]
-    raw = raws[0]
-    for p in raws[1:]:
-        raw = raw.unionByName(p)
+    raw = _read_cells(spark, path, version, cells).select(id_col, vec_col)
     if len(qids) * keep_n > MAX_RERANK_PAIRS:
         joined = raw.join(cand_pairs.hint("shuffle_hash"), id_col)
     else:
@@ -2117,15 +2084,45 @@ def _fts_params(path: str, version: int | None) -> dict:
     return meta
 
 
+#: posting rows per partition of a point probe's post-scan shuffle
+#: (:func:`_probe_width`): sized from the manifest's pruned row count,
+#: so a point probe gets one task locally and hundreds for a stopword
+#: probe of a 100 TB index.  The session shuffle width would give a
+#: point probe 25-32 near-empty tasks, which AQE's parallelismFirst
+#: floor never coalesces below defaultParallelism.
+PROBE_ROWS_PER_PARTITION = 500_000
+
+
+def _probe_width(spark: SparkSession, path: str, version: int | None,
+                 where: dict | None) -> int:
+    """Shuffle width for the rows a probe reads: the manifest's pruned
+    row count at :data:`PROBE_ROWS_PER_PARTITION` per partition,
+    capped at the session shuffle width.  Width 1 means the pruned scan
+    fits one partition and is coalesced instead of shuffled."""
+    rows = pruned_file_rows(path, version, where)[1]
+    return max(1, min(rows // PROBE_ROWS_PER_PARTITION + 1,
+                      int(spark.conf.get("spark.sql.shuffle.partitions"))))
+
+
 def probe_fts_table(spark: SparkSession, path: str, terms: list[str],
                     k1: float = 1.2, b: float = 0.75,
                     version: int | None = None) -> DataFrame:
     """BM25 scores ``(uid, score)`` for ``terms`` served FROM the
-    persisted index: one manifest-pruned point-range read per distinct
-    term (the token-sorted layout makes each a handful of files), tf
-    aggregated from the matched postings, df as a window over the
-    aggregated rows, N/avgdl from ``meta`` — nothing corpus-sized is
-    scanned or rebuilt, and the pruned files are read exactly ONCE.
+    persisted index: ONE manifest-pruned read whose token predicate is
+    the list of the terms' point ranges (the token-sorted layout makes
+    it a handful of files, each scanned once), tf aggregated from the
+    matched postings, df as a window over the aggregated rows, N/avgdl
+    from ``meta`` — nothing corpus-sized is scanned or rebuilt.
+
+    When the manifest says the pruned rows fit one partition
+    (:func:`_probe_width` is 1) the scan is coalesced to one task, so
+    the df window and the uid sum run in the scan's stage: one job, no
+    exchange.  A wider probe pins both exchanges (the df window keyed
+    on token, the score sum keyed on uid) to that width instead of the
+    session shuffle width — explicit repartitions are never
+    AQE-coalesced, and hash partitioning on the keys satisfies the
+    window's/agg's required distribution, so no further exchange is
+    planned.
 
     For SINGLE-field indexes this is value-identical to
     ``fts.bm25_scores(build_tf_index(docs), terms)``: tf/doc_len
@@ -2144,34 +2141,14 @@ def probe_fts_table(spark: SparkSession, path: str, terms: list[str],
         raise ValueError("probe_fts_table needs at least one term")
     n_docs = p["n_docs"]
     avgdl = (p["sum_doclen"] / n_docs) if n_docs else 1.0
-    parts = [read_snapshot(spark, path, version=version,
-                           where={"token": (t, t)}) for t in terms]
-    hits = parts[0]
-    for q in parts[1:]:
-        hits = hits.unionByName(q)
-    # Probe-proportional shuffle width (round 10, guide §2.2): the two
-    # exchanges below (the df window keyed on token, the score agg
-    # keyed on uid) otherwise inherit the session-global shuffle width
-    # — 25-32 tasks of <1 KB each on a point probe, and AQE's
-    # parallelismFirst floor never coalesces below defaultParallelism.
-    # The manifest already knows exactly how many posting rows the
-    # pruned files hold, so pin both exchanges to ~500k rows/partition
-    # of what the probe actually reads (tens of MB): 1 task locally,
-    # hundreds of tasks for a stopword probe of a 100 TB index.
-    # Explicit repartition is never AQE-coalesced, and any hash
-    # partitioning on the keys satisfies the window's/agg's required
-    # distribution, so the exchange COUNT is unchanged — only widths.
-    pruned_rows = sum(
-        pruned_file_rows(path, version, {"token": (t, t)})[1]
-        for t in terms)
-    w = max(1, min(pruned_rows // 500_000 + 1,
-                   int(spark.conf.get("spark.sql.shuffle.partitions"))))
+    where = {"token": [(t, t) for t in terms]}
+    w = _probe_width(spark, path, version, where)
     # ``head`` marks one posting per (uid, field, token) carrying the
     # precomputed tf/doc_len — scoring is a pure FILTER over the pruned
     # scan, no probe-side aggregation
-    tf = (hits.where("head").select("uid", "field", "token",
-                                    "tf", "doc_len")
-          .repartition(w, "token"))
+    tf = (read_snapshot(spark, path, version=version, where=where)
+          .where("head").select("uid", "field", "token", "tf", "doc_len"))
+    tf = tf.coalesce(1) if w == 1 else tf.repartition(w, "token")
     # df as a WINDOW over the head postings — one scan of the pruned
     # files instead of two (a groupBy + join-back re-reads them;
     # Spark has no automatic subtree reuse).  Single-field indexes have
@@ -2181,20 +2158,20 @@ def probe_fts_table(spark: SparkSession, path: str, terms: list[str],
     tw = W.partitionBy("token")
     df_col = (F.count("*").over(tw) if len(p["fields"]) == 1
               else F.size(F.collect_set("uid").over(tw)))
-    scored = (tf.withColumn("df", df_col)
-              .withColumn("idf", F.log(
-                  (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5) + 1.0))
-              .withColumn("w", F.col("idf") * (F.col("tf") * (k1 + 1)) /
-                          (F.col("tf") + k1 * (1 - b + b * F.col("doc_len")
-                                               / F.lit(float(avgdl))))))
-    # uid exchange pinned to the same probe-proportional width; the
-    # per-uid addend SET is unchanged (sum over the same ≤|terms| rows),
-    # so scores are equal up to floating-point summation order.  Map-side partial aggregation loses
-    # nothing here: the rows arrive clustered by TOKEN, so same-uid
-    # rows almost never share a partition for a pre-shuffle merge.
-    return (scored.repartition(w, "uid")
-            .groupBy("uid").agg(F.sum("w").alias("score")))
+    idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
+                / (F.col("df") + 0.5) + 1.0)
+    scored = tf.withColumn("df", df_col).select(
+        "uid", (idf * (F.col("tf") * (k1 + 1)) /
+                (F.col("tf") + k1 * (1 - b + b * F.col("doc_len")
+                                     / F.lit(float(avgdl))))).alias("w"))
+    # the per-uid addend SET is the same at any width (a sum over the
+    # same ≤|terms| rows), so scores are equal up to floating-point
+    # summation order.  Map-side partial aggregation loses nothing at
+    # w > 1: the rows arrive clustered by TOKEN, so same-uid rows
+    # almost never share a partition for a pre-shuffle merge.
+    if w > 1:
+        scored = scored.repartition(w, "uid")
+    return scored.groupBy("uid").agg(F.sum("w").alias("score"))
 
 
 def append_fts_table(spark: SparkSession, path: str, new_docs: DataFrame,
@@ -2236,10 +2213,16 @@ def match_fts_table(spark: SparkSession, path: str, query: str,
     token ranges the query's terms touch — FTS5's persistent-index
     behavior (graphydb.py:876-893), scaled out.
 
-    Prefix terms read the ``[t, t+\\uffff)`` token range (still pruned:
-    the range intersects few files in a token-sorted layout).  A group
-    with no positive term needs the uid universe and falls back to a
-    full index scan — the same cost the reference pays for a bare NOT.
+    The ranges are ONE read (a range list on ``token``), so every
+    posting is scanned once even where a prefix range covers an exact
+    one.  Prefix terms read the ``[t, t+\\uffff)`` token range (still
+    pruned: the range intersects few files in a token-sorted layout).
+    A group with no positive term needs the uid universe and falls back
+    to a full index scan — the same cost the reference pays for a bare
+    NOT.  When the rows read fit one partition (:func:`_probe_width`)
+    the scan is coalesced to one task, so a plain-term query — one
+    aggregate in :func:`fts.match_uids` — runs as one exchange-free
+    stage.
     """
     from ..fts import NEAR_KIND, match_uids, parse_match
 
@@ -2253,7 +2236,7 @@ def match_fts_table(spark: SparkSession, path: str, query: str,
             if term and term[0] == NEAR_KIND:
                 for toks, pfx in term[1]:
                     if pfx and len(toks) == 1:
-                        ranges.add((toks[0], toks[0] + "￿"))
+                        ranges.add((toks[0], toks[0] + "\uffff"))
                     else:
                         for t in toks:
                             ranges.add((t, t))
@@ -2261,7 +2244,7 @@ def match_fts_table(spark: SparkSession, path: str, query: str,
                 for t in term:
                     ranges.add((t, t))
         elif prefix:
-            ranges.add((term, term + "￿"))
+            ranges.add((term, term + "\uffff"))
         else:
             ranges.add((term, term))
 
@@ -2270,20 +2253,10 @@ def match_fts_table(spark: SparkSession, path: str, query: str,
             need_full = True
         for neg, _field, term, prefix in group:
             add(term, prefix)
-    if need_full or not ranges:
-        idx = read_snapshot(spark, path, version=version)
-    else:
-        parts = [read_snapshot(spark, path, version=version,
-                               where={"token": r}) for r in sorted(ranges)]
-        idx = parts[0]
-        for q in parts[1:]:
-            idx = idx.unionByName(q)
-        # a prefix range can cover an exact range's postings — the match
-        # compiler distincts per term, but phrase/NEAR position joins
-        # must see each posting once.  Exact-only ranges are disjoint
-        # (distinct tokens), so the dedup shuffle is prefix-only cost.
-        if len(ranges) > 1 and any(lo != hi for lo, hi in ranges):
-            idx = idx.dropDuplicates(["uid", "field", "token", "pos"])
+    where = None if need_full or not ranges else {"token": sorted(ranges)}
+    idx = read_snapshot(spark, path, version=version, where=where)
+    if _probe_width(spark, path, version, where) == 1:
+        idx = idx.coalesce(1)
     return match_uids(idx, query)
 
 
@@ -2321,15 +2294,9 @@ def fts_probe_files(path: str, term: str,
     """(files a term probe would open, files total) — data-skipping
     accounting, pure driver-side manifest math (no Spark job)."""
     _fts_params(path, version)
-    vs = snapshot_versions(path)
-    v = vs[-1] if version is None else version
-    m = _read_manifest(path, v)
-    stats = m.get("file_stats", {})
     t = term.lower()
-    opened = [f for f in m["files"]
-              if _may_match(stats.get(f, {}).get("cols", {}),
-                            {"token": (t, t)})]
-    return len(opened), len(m["files"])
+    return (pruned_file_rows(path, version, {"token": (t, t)})[0],
+            pruned_file_rows(path, version)[0])
 
 
 def append_minhash_index(spark: SparkSession, path: str,

@@ -28,6 +28,35 @@ def tokens(col) -> F.Column:
     return F.filter(F.split(F.lower(col), TOKEN_SPLIT), lambda t: t != "")
 
 
+#: optimized-logical-plan operators whose physical form needs an
+#: exchange (a join may need a broadcast job instead) — the
+#: ENSURE_REQUIREMENTS exchanges are added after ``sparkPlan()``, so
+#: the guard reads the logical plan, not the physical one
+_SHUFFLING = frozenset({
+    "Aggregate", "Window", "Join", "Deduplicate", "Distinct",
+    "GlobalLimit", "Tail", "Offset", "RepartitionByExpression",
+    "RebalancePartitions", "CoGroup", "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas", "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow"})
+
+
+def _shuffles(df: DataFrame) -> bool:
+    """True when ``df``'s optimized logical plan holds an operator that
+    shuffles: one in :data:`_SHUFFLING`, a ``repartition`` (not a
+    ``coalesce``) or a global sort."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if (name in _SHUFFLING
+                or (name == "Repartition" and node.shuffle())
+                or (name == "Sort" and getattr(node, "global")())):
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
 def spread_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin the rows across the cluster when the scan has fewer
     splits than cores (round 9, the ``_sig_rows`` 'agg'-shape pattern
@@ -41,17 +70,19 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     downstream is order-independent (decimal sums, min-struct winners,
     hash gates — every user in this package) may apply it.
 
-    Input contract: SCAN-SHAPED plans only (no Exchange below).  The
+    Input contract: SCAN-SHAPED plans only (no shuffle below).  The
     partition-count probe goes through ``df.rdd``, and with AQE on that
     materializes the final physical plan — for a shuffled input it would
     eagerly execute every upstream stage at DataFrame-construction time
-    and throw the work away (advice r9).  Guarded here: a plan that
-    already contains an exchange is left untouched (its parallelism is
-    the shuffle conf's, cluster-wide by construction), so the probe only
+    and throw the work away (advice r9).  Guarded here (:func:`_shuffles`):
+    a plan with an operator that shuffles — an explicit repartition, or
+    an aggregate, window, join, global sort or limit whose exchange the
+    planner adds later — is left untouched (its parallelism is the
+    shuffle conf's, cluster-wide by construction), so the probe only
     ever runs on pure scan pipelines where ``.rdd`` plans without
     executing."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if "Exchange" in df._jdf.queryExecution().sparkPlan().toString():
+    if _shuffles(df):
         return df
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
@@ -100,10 +131,10 @@ def spread_scan_by_bytes(df: DataFrame,
     never returns; a ×10 corpus gets real width exactly where the
     serialized token walk becomes the wall; a many-file corpus already
     has enough scan splits and is returned untouched.  Same
-    scan-shaped-input contract as spread_small_scan (the Exchange guard
+    scan-shaped-input contract as spread_small_scan (the shuffle guard
     protects shuffled inputs from the ``.rdd`` plan materialization)."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if "Exchange" in df._jdf.queryExecution().sparkPlan().toString():
+    if _shuffles(df):
         return df
     if df.rdd.getNumPartitions() >= par:
         return df

@@ -133,7 +133,7 @@ def q_hybrid_search(spark, sf_dir):
     """Hybrid retrieval with reciprocal-rank fusion, SERVED from the
     persisted index tables (the standing-pipeline shape): BM25 top-20
     for ['data','query'] via persisted_index.probe_fts_table — one
-    manifest-pruned token-range read per term + meta corpus stats, no
+    manifest-pruned read of the terms' token ranges + meta corpus stats, no
     per-query index rebuild — fused with the IVF top-20 around
     vec_id 0's embedding via probe_ivf_table (nprobe=2 of 8 cells, so
     only ~1/4 of the vector table's files are opened); rrf =

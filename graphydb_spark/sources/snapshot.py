@@ -41,10 +41,12 @@ as a NEW version, so it never disturbs concurrent readers.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import shutil
 import time
 import uuid
+from functools import reduce
 
 import pyarrow.parquet as pq
 
@@ -357,12 +359,18 @@ def read_snapshot(spark: SparkSession, path: str,
     needs: "shard set X was built from corpus version 41").
 
     ``where`` maps column → ``(lo, hi)`` inclusive bounds (either end
-    may be None).  Files whose manifest min/max cannot intersect are
-    dropped BEFORE Spark ever lists them — manifest-level data
-    skipping, the step above parquet row-group pruning: with sorted or
-    clustered writes a selective query opens a handful of files out of
-    millions.  The same predicate is also applied to the surviving
-    rows, so results are exact regardless of stats coverage."""
+    may be None), or → a LIST of such ranges read as a disjunction (a
+    row matches when any range holds it; columns are ANDed).  Files
+    whose manifest min/max cannot intersect are dropped BEFORE Spark
+    ever lists them — manifest-level data skipping, the step above
+    parquet row-group pruning: with sorted or clustered writes a
+    selective query opens a handful of files out of millions.  The same
+    predicate is also applied to the surviving rows, so results are
+    exact regardless of stats coverage; a point range ``lo == hi``
+    renders as equality (several as one ``isin``), so parquet receives
+    ``EqualTo``/``In`` pushdowns.  A range list reads each file once
+    however many ranges hit it — the one-scan form of a union of
+    per-range reads."""
     vs = snapshot_versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed snapshot at {path!r}")
@@ -382,20 +390,42 @@ def read_snapshot(spark: SparkSession, path: str,
     else:
         df = spark.read.schema(schema).parquet(
             *[os.path.join(path, f) for f in files])
-    if where:
-        from pyspark.sql import functions as F
-        for col, (lo, hi) in where.items():
-            if lo is not None:
-                df = df.where(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.where(F.col(col) <= F.lit(hi))
+    for col, ranges in (where or {}).items():
+        df = df.where(_ranges_cond(col, _ranges(ranges)))
     return df
+
+
+def _ranges(spec) -> list[tuple]:
+    """A ``where`` value as its list of ``(lo, hi)`` ranges."""
+    return spec if isinstance(spec, list) else [spec]
+
+
+def _ranges_cond(col: str, ranges: list[tuple]):
+    """Disjunction of inclusive ranges over ``col``: the point ranges
+    fold into one ``isin`` (parquet ``In``, or ``EqualTo`` once the
+    optimizer rewrites a one-value ``In``), the rest are ``>=``/``<=``
+    bounds; an empty list matches nothing."""
+    from pyspark.sql import functions as F
+    c = F.col(col)
+    points = sorted({lo for lo, hi in ranges
+                     if lo is not None and lo == hi})
+    conds = [c.isin(points)] if points else []
+    for lo, hi in ranges:
+        if lo is not None and lo == hi:
+            continue
+        bounds = [c >= F.lit(lo)] if lo is not None else []
+        if hi is not None:
+            bounds.append(c <= F.lit(hi))
+        conds.append(reduce(operator.and_, bounds) if bounds
+                     else F.lit(True))
+    return reduce(operator.or_, conds) if conds else F.lit(False)
 
 
 def pruned_file_rows(path: str, version: int | None = None,
                      where: dict | None = None) -> tuple[int, int]:
     """``(n_files, n_rows)`` that :func:`read_snapshot` with the same
-    ``where`` would open — from the manifest alone, zero file I/O.
+    ``where`` (ranges or range lists) would open — from the manifest
+    alone, zero file I/O; a file hit by several ranges counts once.
 
     Probe operators use this to size their post-scan shuffle widths
     data-proportionally (rows the probe actually reads, not the
@@ -428,13 +458,15 @@ def pruned_file_rows(path: str, version: int | None = None,
 
 def _may_match(col_stats: dict, where: dict) -> bool:
     """False only when the stats PROVE no row in the file satisfies
-    every bound; a column with no stats never prunes."""
-    for col, (lo, hi) in where.items():
+    the predicate: for some column, no range of its list can intersect
+    the file's [min, max].  A column with no stats never prunes."""
+    for col, spec in where.items():
         rng = col_stats.get(col)
         if rng is None:
             continue
         mn, mx = rng
-        if (hi is not None and mn > hi) or (lo is not None and mx < lo):
+        if not any((hi is None or mn <= hi) and (lo is None or mx >= lo)
+                   for lo, hi in _ranges(spec)):
             return False
     return True
 

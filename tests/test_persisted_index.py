@@ -794,9 +794,24 @@ def test_fts_match_grammar_from_persisted_index(spark, tmp_path):
     derived = build_index(docs.withColumnRenamed("doc_id", "uid"), ["text"])
     for q in ["alpha", "bet*", "alpha beta", "alpha OR zeta",
               "alpha NOT beta", '"alpha beta"', "alpha NEAR/1 gamma",
-              "NOT epsilon"]:
+              "NOT epsilon",
+              # a prefix range covering an exact one: each posting is
+              # still read once (the single range-list read)
+              "alp* alpha", '"alp* alpha"', "text: delta",
+              "nofield: alpha OR eta", "alpha OR beta NOT gamma",
+              '"alpha beta" OR zeta']:
         got = {r.uid for r in match_fts_table(spark, p, q).collect()}
         want = {r.uid for r in match_uids(derived, q).collect()}
+        assert got == want, f"MATCH {q!r}: {got} vs {want}"
+    # the in-memory compiler against hand-derived sets, both shapes
+    # (one aggregate for plain terms, joins for a phrase)
+    for q, want in [("alp* alpha", {1, 2, 3, 5}), ("text: delta", {1, 3}),
+                    ("nofield: alpha OR eta", {4}),
+                    ("alpha OR beta NOT gamma", {1, 2, 3, 5}),
+                    ("beta OR eta NOT alpha", {1, 2, 4, 5}),
+                    ('"alpha beta" OR zeta', {1, 2, 4}),
+                    ("NOT alpha OR zeta", {4})]:
+        got = {r.uid for r in match_uids(derived, q).collect()}
         assert got == want, f"MATCH {q!r}: {got} vs {want}"
 
 

@@ -1,8 +1,10 @@
 """Round-10 optimization guards.
 
-1. probe_fts_table pins its two exchanges (df window on token, score
-   agg on uid) to a probe-proportional width instead of the session
-   shuffle conf — a point probe must not pay 25-32 near-empty tasks.
+1. probe_fts_table sizes its plan from the manifest's pruned rows: a
+   probe that fits one partition has no exchange at all, a wider one
+   pins its two exchanges (df window on token, score agg on uid) to
+   that width instead of the session shuffle conf — a point probe must
+   not pay 25-32 near-empty tasks.
 2. quality_filter's token walk is compute-once: a ``where(keep)``
    consumer must NOT re-derive the split+lower walk once per rule
    inside a pushed-down filter (the measured 6× clone that serialized
@@ -10,14 +12,17 @@
    exchange rather than being pushed below it into the scan.
 3. spread_scan_by_bytes sizes from UNCOMPRESSED footer bytes: no-op on
    a bench-scale corpus, proportional width beyond it, untouched
-   shuffled inputs.
+   shuffled inputs; neither spread helper runs a job on a shuffled
+   (aggregate-shaped) input.
 """
 import pytest
 from pyspark.sql import functions as F
 
 from graphydb_spark.operators import persisted_index
 from graphydb_spark.operators.pipeline import quality_filter
-from graphydb_spark.operators.text import spread_scan_by_bytes
+from graphydb_spark.operators.text import (spread_scan_by_bytes,
+                                           spread_small_scan)
+from graphydb_spark.sources.snapshot import pruned_file_rows
 
 
 @pytest.fixture(scope="module")
@@ -30,23 +35,72 @@ def corpus(spark):
         rows, "doc_id long, text string, lang string, n_chars long")
 
 
-def test_fts_probe_exchanges_are_probe_width(spark, corpus, tmp_path):
+def _probe(spark, corpus, tmp_path):
     path = str(tmp_path / "fts")
     persisted_index.build_fts_table(corpus, path, ["text"],
                                     id_col="doc_id")
+    return path, persisted_index.probe_fts_table(spark, path,
+                                                 ["quick", "dog"])
+
+
+def test_fts_probe_fitting_one_partition_has_no_exchange(spark, corpus,
+                                                         tmp_path):
+    path, df = _probe(spark, corpus, tmp_path)
+    # the manifest says the pruned postings fit one partition, so the
+    # scan is coalesced and the df window and the uid sum run in its
+    # stage: no exchange of any kind, before or after AQE re-planning
+    before = df._jdf.queryExecution().executedPlan().toString()
+    assert len(df.collect()) > 0                  # the probe still scores
+    after = df._jdf.queryExecution().executedPlan().toString()
+    for plan in (before, after):
+        assert "Exchange" not in plan, plan
+        assert "ENSURE_REQUIREMENTS" not in plan, plan
+        assert "Coalesce 1" in plan, plan
+
+
+def test_fts_probe_exchanges_are_probe_width(spark, corpus, tmp_path,
+                                             monkeypatch):
+    path, narrow = _probe(spark, corpus, tmp_path)
+    rows = pruned_file_rows(path, None, {"token": [("dog", "dog"),
+                                                   ("quick", "quick")]})[1]
+    monkeypatch.setattr(persisted_index, "PROBE_ROWS_PER_PARTITION", 10)
+    w = min(rows // 10 + 1,
+            int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert w > 1, rows
     df = persisted_index.probe_fts_table(spark, path, ["quick", "dog"])
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # exactly two exchanges, both user-pinned (REPARTITION_BY_NUM is
-    # never AQE-coalesced and never the session conf width); a tiny
-    # probe gets width 1, which renders as SinglePartition.  The window
-    # and the agg must REUSE them: a conf-width ENSURE_REQUIREMENTS
-    # exchange appearing here means the pin was lost.
-    assert plan.count("REPARTITION_BY_NUM") == 2, plan
+    # exactly two exchanges, both user-pinned at width w
+    # (REPARTITION_BY_NUM is never AQE-coalesced and never the session
+    # conf width).  The window and the agg must REUSE them: a
+    # conf-width ENSURE_REQUIREMENTS exchange appearing here means the
+    # pin was lost.
     assert plan.count("Exchange") == 2, plan
+    assert plan.count(f", {w}), REPARTITION_BY_NUM") == 2, plan
     assert "ENSURE_REQUIREMENTS" not in plan, plan
-    assert plan.count("Exchange SinglePartition") == 2, plan
-    # values: the probe still scores
-    assert df.count() > 0
+    # the width changes the plan, not the scores
+    got = {r.uid: r.score for r in df.collect()}
+    want = {r.uid: r.score for r in narrow.collect()}
+    assert got.keys() == want.keys() and got
+    assert all(abs(got[u] - want[u]) <= 1e-12 * abs(want[u]) for u in got)
+
+
+def test_spread_helpers_run_no_job_on_aggregate_input(spark, corpus,
+                                                      tmp_path):
+    # the ENSURE_REQUIREMENTS exchange of an aggregate is planned after
+    # sparkPlan(), so only a logical-plan guard keeps the helpers'
+    # ``.rdd`` probe from running the aggregate at construction
+    sc = spark.sparkContext
+    corpus.write.parquet(str(tmp_path / "docs"))
+    agg = spark.read.parquet(str(tmp_path / "docs")).groupBy("lang").count()
+    for helper in (spread_small_scan, spread_scan_by_bytes):
+        group = f"spread-guard-{helper.__name__}"
+        sc.setJobGroup(group, group)
+        try:
+            out = helper(agg)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert out is agg
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], helper
 
 
 def test_quality_filter_token_walk_not_cloned_into_filter(spark, corpus):

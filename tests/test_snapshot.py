@@ -272,6 +272,48 @@ def test_manifest_stats_skip_files(spark, table):
     assert part.count() == 10  # 5..9 + 100..104
 
 
+def test_range_list_where_is_a_disjunction(spark, table):
+    for lo in (0, 100, 200):
+        snap.commit_snapshot(
+            _df(spark, lo, lo + 10).coalesce(1), table)
+    m = snap._read_manifest(table, 3)
+    cols = [m["file_stats"][f]["cols"] for f in m["files"]]
+    # a file is kept iff SOME range of the list can intersect it
+    ranges = [(3, 3), (205, 300)]
+    assert [snap._may_match(c, {"id": ranges}) for c in cols] == [
+        c["id"][0] in (0, 200) for c in cols]
+    assert not any(snap._may_match(c, {"id": [(50, 60), (150, 150)]})
+                   for c in cols)
+    assert not any(snap._may_match(c, {"id": []}) for c in cols)
+    # the tuple form is the one-range list
+    for rng in [(100, 105), (None, 5), (205, None), (900, 999)]:
+        assert [snap._may_match(c, {"id": rng}) for c in cols] == [
+            snap._may_match(c, {"id": [rng]}) for c in cols]
+        assert snap.pruned_file_rows(table, 3, {"id": rng}) == \
+            snap.pruned_file_rows(table, 3, {"id": [rng]})
+    # a file hit by several ranges is opened (and counted) once
+    both = [(1, 1), (4, 6), (208, 208)]
+    assert snap.pruned_file_rows(table, 3, {"id": both}) == (2, 20)
+    df = snap.read_snapshot(spark, table, where={"id": both})
+    assert len(df.inputFiles()) == 2
+    # rows are filtered by OR: each matching row once, in no order
+    assert sorted(r["id"] for r in df.collect()) == [1, 4, 5, 6, 208]
+    # points render as equality / In, so parquet gets them pushed down
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "In(id, [1,208])" in plan, plan
+    one = snap.read_snapshot(spark, table, where={"id": [(104, 104)]})
+    assert "EqualTo(id,104)" in \
+        one._jdf.queryExecution().executedPlan().toString()
+    assert [r["id"] for r in one.collect()] == [104]
+    # columns still AND: the list disjoins within ``id`` only
+    anded = snap.read_snapshot(
+        spark, table, where={"id": both, "val": (0, 10)})
+    assert sorted(r["id"] for r in anded.collect()) == [1, 4, 5]
+    # an empty list matches nothing, schema intact
+    none = snap.read_snapshot(spark, table, where={"id": []})
+    assert none.count() == 0 and none.schema.fieldNames() == ["id", "val"]
+
+
 def test_pruned_file_rows_without_file_stats(spark, table):
     # a manifest that lacks stats for a kept file: that file counts as
     # the mean of the files that have stats, not as 0 rows
