@@ -14,31 +14,39 @@ daily ingest only probes + appends.  This module is that standing form:
   can contain those cells — at 1M files and nprobe=2/k=1024, the scan
   opens ~0.2% of the table before Spark lists a single extra file.
 
-* **MinHash-LSH**: :func:`build_minhash_index` stores one row per doc
-  (signature + banded bucket hashes, parameters in ``meta``);
+* **MinHash-LSH**: :func:`build_minhash_index` stores one row per
+  (doc, band) — band, band hash, doc id and the full signature —
+  range-partitioned by band hash, parameters in ``meta``.
   :func:`probe_minhash_index` minhashes the incoming batch with the
-  SAME parameters and broadcast-joins it against the index — the
-  corpus-sized side never shuffles, the only moving bytes are the
-  batch's band rows.  :func:`append_minhash_index` adds a batch's
-  signatures with an exactly-once ``txn`` token, so a replayed ingest
-  job cannot double-insert.
+  SAME parameters; a small ASCII batch is signed on the driver and
+  served by ONE manifest-pruned read of the files that can hold its
+  band hashes, with no join (its band rows ride in the plan as a
+  literal map).  Other batches are broadcast-joined against the index
+  — the corpus-sized side never shuffles.  :func:`append_minhash_index`
+  adds a batch's band rows with an exactly-once ``txn`` token, so a
+  replayed ingest job cannot double-insert.
 
 Estimated Jaccard comes from signature component agreement (the
 unbiased MinHash estimator) — no document text lives in the index, so
-index bytes are ~n_hashes×32 per doc regardless of document size.
+index bytes are ~bands × (signature + 32) per doc regardless of
+document size (each band row repeats the signature beside its 32-hex
+band hash).
 """
 from __future__ import annotations
 
+import hashlib
+import json
+import re
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.snapshot import (commit_snapshot, pruned_file_rows,
-                                read_snapshot,
+                                read_snapshot, sql_ident, sql_literal,
                                 snapshot_meta, snapshot_versions,
                                 _may_match, _read_manifest)
-from .similarity import cosine_expr, ivf_index, vec_lit
+from .similarity import cosine_sql, ivf_index, vec_sql
 
 __all__ = ["build_ivf_table", "probe_ivf_table", "append_ivf_table",
            "probe_ivf_table_batch", "ivf_probe_files",
@@ -482,9 +490,10 @@ def probe_ivf_table(spark: SparkSession, path: str,
     cells = _nearest_cells(meta["centroids"], query_vec, nprobe)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     cand = _read_cells(spark, path, version, cells)
-    q = vec_lit(query_vec)
-    return (cand.withColumn("cosine", cosine_expr(q, F.col(vec_col)))
-                .select(id_col, "cosine")
+    # the cosine is one parsed expression: its py4j cost does not grow
+    # with the dimension or the expression tree
+    cos = cosine_sql(vec_sql(query_vec), sql_ident(vec_col))
+    return (cand.selectExpr(sql_ident(id_col), f"{cos} AS cosine")
                 .orderBy(F.col("cosine").desc(), F.col(id_col))
                 .limit(k))
 
@@ -1505,7 +1514,14 @@ _SLICES_PER_DIGEST = 32 // _SLICE_HEX
 def _sig_rows(docs: DataFrame, text_col: str, id_col: str,
               k: int, num_hashes: int, bands: int,
               scheme: str = "salted", shape: str = "agg") -> DataFrame:
-    """(doc_id, sig array<string>, bands array<struct<band,bh>>).
+    """Band rows ``(band int, bh string, doc_id, sig array<string>)``:
+    one row per (document, band), ``bh`` the md5 of the band's
+    ``|``-joined signature components, and the whole signature on
+    every row, so a band hit scores its pair without a join back.
+    :func:`_driver_sig_rows` computes the same rows on the driver for
+    small ASCII batches: a change to the tokenizer, shingling, either
+    scheme or the band hash must be made in both
+    (test_lsh_sig_shapes_agree pins the three derivations together).
 
     Same values as :func:`dedup.minhash_signature` (scheme='salted'),
     different physical shape: shingles EXPLODE to rows and each salt is
@@ -1613,40 +1629,135 @@ def _sig_rows(docs: DataFrame, text_col: str, id_col: str,
             F.lit(b).alias("band"),
             F.md5(F.concat_ws("|", *cols)).alias("bh")))
     return sig.select(
+        F.inline(F.array(*band_cols)),
         F.col(id_col).alias("doc_id"),
-        F.array(*[F.col(f"sig{i}") for i in range(num_hashes)]).alias("sig"),
-        F.array(*band_cols).alias("bands"))
+        F.array(*[F.col(f"sig{i}") for i in range(num_hashes)]).alias("sig"))
+
+
+#: files :func:`build_minhash_index` range-partitions the band rows
+#: into (the :func:`build_fts_table` default)
+MINHASH_INDEX_FILES = 8
+
+#: most batch rows and text characters :func:`probe_minhash_index`
+#: signs on the driver; a larger batch (or one with non-ASCII text) is
+#: signed by Spark.  Both caps come from a measured crossover of the
+#: two paths' driver+JVM CPU (CHANGES.md): the driver path pays ~1-1.6
+#: ms per row beyond its hashing, and hashes on one thread at ~0.8
+#: ('sliced') to ~2.1 ('salted') µs per character of text.
+DRIVER_SIGN_ROWS = 100
+DRIVER_SIGN_CHARS = 200_000
+
+_ASCII_SPLIT = re.compile(r"[^a-z0-9]+")
+
+
+def _driver_sig_rows(docs: list, k: int, num_hashes: int, bands: int,
+                     scheme: str) -> list[tuple]:
+    """:func:`_sig_rows` of ``(doc_id, text)`` pairs with ASCII text,
+    computed on the driver with ``hashlib`` — bit-identical rows.  On
+    ASCII, Python ``lower()`` plus a ``[^a-z0-9]+`` split is Spark's
+    ``lower`` plus the ``[^\\p{L}\\p{N}]+`` tokenizer; md5 hex digests,
+    their string minima and slices are engine-independent."""
+    def md5(s: str) -> str:
+        return hashlib.md5(s.encode()).hexdigest()
+
+    rows_per_band = num_hashes // bands
+    out = []
+    for doc_id, text in docs:
+        toks = [t for t in _ASCII_SPLIT.split((text or "").lower()) if t]
+        sh = [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+        if not sh:
+            continue
+        if scheme == "sliced":
+            digs = [[md5(f"{j}:{s}") for s in sh]
+                    for j in range(-(-num_hashes // _SLICES_PER_DIGEST))]
+            sig = []
+            for i in range(num_hashes):
+                at = (i % _SLICES_PER_DIGEST) * _SLICE_HEX
+                sig.append(min(d[at:at + _SLICE_HEX]
+                               for d in digs[i // _SLICES_PER_DIGEST]))
+        elif scheme == "salted":
+            sig = [min(md5(f"{i}:{s}") for s in sh)
+                   for i in range(num_hashes)]
+        else:
+            raise ValueError(f"unknown signing scheme {scheme!r}")
+        for b in range(bands):
+            band = sig[b * rows_per_band:(b + 1) * rows_per_band]
+            out.append((b, md5("|".join(band)), doc_id, sig))
+    return out
+
+
+def _driver_batch(docs: DataFrame, text_col: str,
+                  id_col: str) -> list | None:
+    """The batch's ``(id, text)`` rows when the driver may sign them:
+    at most :data:`DRIVER_SIGN_ROWS` rows and
+    :data:`DRIVER_SIGN_CHARS` characters, ASCII text, and distinct
+    non-null integral or string ids (they ride a JSON literal exactly).
+    None sends the batch to Spark.  The rows are read in one job of one
+    task, which stops at the row cap; a text over the character cap is
+    not shipped (its length alone rejects the batch)."""
+    if docs.schema[id_col].dataType.typeName() not in (
+            "byte", "short", "integer", "long", "string"):
+        return None
+    n = F.length(text_col)
+    rows = (docs.select(id_col,
+                        F.when(n <= DRIVER_SIGN_CHARS, F.col(text_col)), n)
+            .coalesce(1).limit(DRIVER_SIGN_ROWS + 1).collect())
+    ids = {r[0] for r in rows}
+    if (len(rows) > DRIVER_SIGN_ROWS or len(ids) < len(rows)
+            or None in ids
+            or sum(r[2] or 0 for r in rows) > DRIVER_SIGN_CHARS
+            or not all(r[1] is None or r[1].isascii() for r in rows)):
+        return None
+    return [(r[0], r[1]) for r in rows]
 
 
 def build_minhash_index(docs: DataFrame, path: str,
                         text_col: str = "text", id_col: str = "doc_id",
                         k: int = 3, num_hashes: int = 8,
                         bands: int = 4, scheme: str = "sliced") -> int:
-    """Publish the corpus's MinHash index as a snapshot table.  The
-    hash-space parameters INCLUDING the signing scheme live in ``meta``
-    so every later probe/append provably uses the same permutations —
-    mixing parameters silently yields zero matches, the classic
-    production LSH footgun (a 'sliced' probe against a 'salted' index
-    would share no band hashes).  The default scheme is ``'sliced'``
-    (2 md5/shingle cut into four 32-bit components — the production
-    signing path, ~4× cheaper than one md5 per component); indexes
-    built under ``'salted'`` keep working because every probe/append
-    reads the scheme from ``meta``, never from this default."""
+    """Publish the corpus's MinHash index as a snapshot table of
+    :func:`_sig_rows` band rows, range-partitioned BY BAND HASH into
+    :data:`MINHASH_INDEX_FILES` files and sorted within them (the layout
+    :func:`build_fts_table` gives tokens), so each file covers a narrow
+    ``bh`` interval and a probe's band hashes open only the files whose
+    manifest [min, max] can hold them.
+
+    The hash-space parameters INCLUDING the signing scheme live in
+    ``meta`` so every later probe/append provably uses the same
+    permutations — mixing parameters silently yields zero matches, the
+    classic production LSH footgun (a 'sliced' probe against a 'salted'
+    index would share no band hashes).  The default scheme is
+    ``'sliced'`` (2 md5/shingle cut into four 32-bit components — the
+    production signing path, ~4× cheaper than one md5 per component);
+    indexes built under ``'salted'`` keep working because every
+    probe/append reads the scheme from ``meta``, never from this
+    default."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     rows = _sig_rows(docs, text_col, id_col, k, num_hashes, bands,
                      scheme=scheme)
+    laid = (rows.repartitionByRange(MINHASH_INDEX_FILES, "bh")
+                .sortWithinPartitions("bh"))
     return commit_snapshot(
-        rows, path, mode="overwrite",
+        laid, path, mode="overwrite",
         meta={"kind": "minhash_lsh", "k": k, "num_hashes": num_hashes,
               "bands": bands, "text_col": text_col, "id_col": id_col,
               "scheme": scheme})
 
 
 def _index_params(path: str, version: int | None) -> dict:
+    """The index's ``meta``.  An index in the layout before band rows
+    (one row per document with a nested ``bands`` array) is refused:
+    there is one read path, and a rebuild gives it the new layout."""
     meta = snapshot_meta(path, version)
     if not meta or meta.get("kind") != "minhash_lsh":
         raise ValueError(f"{path!r} is not a MinHash-LSH index table")
+    schema = json.loads(
+        _read_manifest(path, _pin_version(path, version))["schema"])
+    if "bh" not in {f["name"] for f in schema["fields"]}:
+        raise ValueError(
+            f"{path!r} is a MinHash index in the old one-row-per-"
+            f"document layout; rebuild it with build_minhash_index")
     return meta
 
 
@@ -1658,36 +1769,81 @@ def probe_minhash_index(spark: SparkSession, path: str,
                         version: int | None = None) -> DataFrame:
     """Near-dup candidates of an incoming batch against the corpus:
     ``(index_id, new_id, est_jaccard)`` for every pair sharing an LSH
-    band with estimated Jaccard ≥ threshold.
+    band (same band, same band hash) with estimated Jaccard ≥
+    threshold.  The estimate is the fraction of agreeing signature
+    components (the unbiased MinHash estimator).
 
-    The batch side is broadcast (a daily ingest is megabytes of band
-    rows; the index is the corpus) — the index table streams through a
-    broadcast-hash join with NO shuffle and no driver collection.  The
-    estimate is the fraction of agreeing signature components
-    (``zip_with`` — pure codegen)."""
+    A batch of at most :data:`DRIVER_SIGN_ROWS` rows and
+    :data:`DRIVER_SIGN_CHARS` characters of ASCII text is read in one
+    job and signed on the driver
+    (:func:`_driver_sig_rows`).  The probe is then one manifest-pruned
+    read of the index files that can hold the batch's band hashes, and
+    no join: the batch's band rows ride in the plan as one literal map
+    ``"band:bh"`` → ``[(new_id, sig)]`` (a ``from_json`` over one string
+    literal, folded by the optimizer), each index row looks its band
+    up, and ``est_jaccard`` is an unrolled sum of component equalities.
+    When the pruned rows fit one partition the read is coalesced, so
+    the pair aggregate runs in the scan's stage.
+
+    Any other batch is signed by Spark (``'window'`` shape) and
+    broadcast-joined against the whole index by :func:`probe_pairs`
+    — the corpus-sized side never shuffles."""
     version = _pin_version(path, version)
     p = _index_params(path, version)
     text_col = text_col or p["text_col"]
     id_col = id_col or p["id_col"]
-    new_rows = _sig_rows(new_docs, text_col, id_col,
-                         p["k"], p["num_hashes"], p["bands"],
-                         scheme=p.get("scheme", "salted"),
-                         shape="window")
-    idx = read_snapshot(spark, path, version=version)
-    return probe_pairs(idx, new_rows, threshold)
+    scheme = p.get("scheme", "salted")
+    batch = _driver_batch(new_docs, text_col, id_col)
+    if batch is None:
+        new_rows = _sig_rows(new_docs, text_col, id_col,
+                             p["k"], p["num_hashes"], p["bands"],
+                             scheme=scheme, shape="window")
+        idx = read_snapshot(spark, path, version=version)
+        return probe_pairs(idx, new_rows, threshold)
+    by_key: dict = {}
+    hashes = set()
+    for band, bh, doc_id, sig in _driver_sig_rows(
+            batch, p["k"], p["num_hashes"], p["bands"], scheme):
+        by_key.setdefault(f"{band}:{bh}", []).append(
+            {"new_id": doc_id, "sig_n": sig})
+        hashes.add(bh)
+    where = {"bh": [(h, h) for h in sorted(hashes)]}
+    w = _probe_width(spark, path, version, where)
+    idx = read_snapshot(spark, path, version=version, where=where)
+    if w == 1:
+        idx = idx.coalesce(1)
+    id_type = new_docs.schema[id_col].dataType.simpleString()
+    band_map = F.from_json(
+        F.lit(json.dumps(by_key, separators=(",", ":"))),
+        f"map<string, array<struct<new_id: {id_type}, "
+        f"sig_n: array<string>>>>")
+    key = F.concat_ws(":", F.col("band").cast("string"), F.col("bh"))
+    agree = " + ".join(f"if(sig[{i}] = sig_n[{i}], 1, 0)"
+                       for i in range(p["num_hashes"]))
+    pairs = (idx.select(F.col("doc_id").alias("index_id"), "sig",
+                        F.inline(F.try_element_at(band_map, key)))
+             .selectExpr("index_id", "new_id",
+                         f"({agree}) / {p['num_hashes']} AS est_jaccard")
+             .where(F.col("est_jaccard") >= threshold))
+    if w > 1:
+        pairs = pairs.repartition(w, "index_id", "new_id")
+    return (pairs.groupBy("index_id", "new_id")
+            .agg(F.max("est_jaccard").alias("est_jaccard")))
 
 
 def probe_pairs(index_rows: DataFrame, new_rows: DataFrame,
                 threshold: float = 0.5) -> DataFrame:
-    """The probe join itself, over two ``_sig_rows``-shaped frames —
-    shared by :func:`probe_minhash_index` (persisted index side) and
-    in-memory callers (e.g. the oracle-checked catalog query)."""
-    idx_b = index_rows.select(F.col("doc_id").alias("index_id"),
-                              F.col("sig").alias("sig_i"),
-                              F.explode("bands").alias("bb"))
-    new_b = new_rows.select(F.col("doc_id").alias("new_id"),
-                            F.col("sig").alias("sig_n"),
-                            F.explode("bands").alias("bb"))
+    """The probe join over two :func:`_sig_rows` band-row frames: an
+    equi-join on the flat ``(band, bh)`` with the new side broadcast —
+    shared by :func:`probe_minhash_index` for batches Spark signs, the
+    streaming gate (index × batch and batch × batch) and in-memory
+    callers."""
+    idx_b = index_rows.select("band", "bh",
+                              F.col("doc_id").alias("index_id"),
+                              F.col("sig").alias("sig_i"))
+    new_b = new_rows.select("band", "bh",
+                            F.col("doc_id").alias("new_id"),
+                            F.col("sig").alias("sig_n"))
     est = (F.size(F.filter(F.zip_with("sig_i", "sig_n",
                                       lambda a, b: a == b),
                            lambda x: x))
@@ -1699,9 +1855,7 @@ def probe_pairs(index_rows: DataFrame, new_rows: DataFrame,
     # sf0.1 probe's join tail; the probe's floor is signing the batch).
     # est is a function of the pair, so max() over its collisions is
     # the single value.
-    return (idx_b.join(F.broadcast(new_b),
-                       (idx_b["bb.band"] == new_b["bb.band"])
-                       & (idx_b["bb.bh"] == new_b["bb.bh"]))
+    return (idx_b.join(F.broadcast(new_b), ["band", "bh"])
             .select("index_id", "new_id", est)
             .where(F.col("est_jaccard") >= threshold)
             .groupBy("index_id", "new_id")
@@ -2110,31 +2264,31 @@ def probe_fts_table(spark: SparkSession, path: str, terms: list[str],
     """BM25 scores ``(uid, score)`` for ``terms`` served FROM the
     persisted index: ONE manifest-pruned read whose token predicate is
     the list of the terms' point ranges (the token-sorted layout makes
-    it a handful of files, each scanned once), tf aggregated from the
-    matched postings, df as a window over the aggregated rows, N/avgdl
-    from ``meta`` — nothing corpus-sized is scanned or rebuilt.
+    it a handful of files, each scanned once), tf and doc_len
+    precomputed on the head postings, N/avgdl from ``meta`` — nothing
+    corpus-sized is scanned or rebuilt.
 
     When the manifest says the pruned rows fit one partition
     (:func:`_probe_width` is 1) the scan is coalesced to one task, so
-    the df window and the uid sum run in the scan's stage: one job, no
-    exchange.  A wider probe pins both exchanges (the df window keyed
-    on token, the score sum keyed on uid) to that width instead of the
-    session shuffle width — explicit repartitions are never
-    AQE-coalesced, and hash partitioning on the keys satisfies the
-    window's/agg's required distribution, so no further exchange is
-    planned.
+    df (a window keyed on token) and the uid sum run in the scan's
+    stage: one job, no exchange.  A wider probe takes df from a
+    per-token aggregate broadcast back to the postings, so a hot
+    term's postings never meet on one task, and pins the score sum's
+    exchange to that width instead of the session shuffle width (an
+    explicit repartition is never AQE-coalesced, and hash partitioning
+    on uid satisfies the aggregate, so no further exchange of the
+    postings is planned).
 
     For SINGLE-field indexes this is value-identical to
     ``fts.bm25_scores(build_tf_index(docs), terms)``: tf/doc_len
     aggregate to the same values the tf index stores, avgdl is the
     same exact integer-ratio double (doc lengths sum exactly in
-    doubles), and the idf/weight expressions are shared verbatim.
+    doubles), and the idf/weight expressions evaluate in the same
+    operation order.
     Multi-field indexes define avgdl as total tokens per doc ACROSS
     fields (the standard whole-document BM25 length) — bm25_scores'
     dropDuplicates picks one field's length nondeterministically
     there, so the persisted form is the better-defined one."""
-    from pyspark.sql import Window as W
-
     p = _fts_params(path, version)
     terms = sorted({t.lower() for t in terms})
     if not terms:
@@ -2145,30 +2299,46 @@ def probe_fts_table(spark: SparkSession, path: str, terms: list[str],
     w = _probe_width(spark, path, version, where)
     # ``head`` marks one posting per (uid, field, token) carrying the
     # precomputed tf/doc_len — scoring is a pure FILTER over the pruned
-    # scan, no probe-side aggregation
+    # scan, no probe-side aggregation.  The filter precedes the df
+    # count, which counts head rows.
     tf = (read_snapshot(spark, path, version=version, where=where)
           .where("head").select("uid", "field", "token", "tf", "doc_len"))
-    tf = tf.coalesce(1) if w == 1 else tf.repartition(w, "token")
-    # df as a WINDOW over the head postings — one scan of the pruned
-    # files instead of two (a groupBy + join-back re-reads them;
-    # Spark has no automatic subtree reuse).  Single-field indexes have
-    # one head row per (uid, token), so a plain count IS the
-    # distinct-uid count; multi-field indexes pay the exact
-    # collect_set form.
-    tw = W.partitionBy("token")
-    df_col = (F.count("*").over(tw) if len(p["fields"]) == 1
-              else F.size(F.collect_set("uid").over(tw)))
-    idf = F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                / (F.col("df") + 0.5) + 1.0)
-    scored = tf.withColumn("df", df_col).select(
-        "uid", (idf * (F.col("tf") * (k1 + 1)) /
-                (F.col("tf") + k1 * (1 - b + b * F.col("doc_len")
-                                     / F.lit(float(avgdl))))).alias("w"))
+    # Single-field indexes have one head row per (uid, token), so a
+    # plain count IS the distinct-uid count; multi-field indexes pay
+    # an exact distinct form.
+    single = len(p["fields"]) == 1
+    if w == 1:
+        # df as a WINDOW over the coalesced head postings: one scan of
+        # the pruned files, all in the scan's stage
+        over = "OVER (PARTITION BY token)"
+        df_sql = (f"count(1) {over}" if single
+                  else f"size(collect_set(uid) {over})")
+        tf = tf.coalesce(1).selectExpr("uid", "tf", "doc_len",
+                                       f"{df_sql} AS df")
+    else:
+        # A token window would put every posting of a hot term on one
+        # task.  The df count's partial counts shrink the rows to
+        # terms × scan splits before its exchange, and the counts
+        # broadcast back, so the posting rows move once: by uid, for
+        # the sum.  Multi-field rows first drop duplicate (token, uid)
+        # pairs on a width-w exchange keyed on both.
+        heads = tf if single else (tf.select("token", "uid")
+                                   .repartition(w, "token", "uid")
+                                   .distinct())
+        dfs = heads.groupBy("token").agg(F.count("*").alias("df"))
+        tf = tf.join(F.broadcast(dfs), "token").select(
+            "uid", "tf", "doc_len", "df")
+    # the BM25 weight as one parsed expression (constants rendered to
+    # round-trip exactly; the operation order of fts.bm25_scores)
+    n, k1p, k1s, b1, bs, dl = (sql_literal(float(x)) for x in (
+        n_docs, k1 + 1, k1, 1 - b, b, avgdl))
+    idf = f"ln(({n} - df + 0.5D) / (df + 0.5D) + 1.0D)"
+    weight = (f"{idf} * (tf * {k1p}) / "
+              f"(tf + {k1s} * ({b1} + {bs} * doc_len / {dl}))")
+    scored = tf.selectExpr("uid", f"{weight} AS w")
     # the per-uid addend SET is the same at any width (a sum over the
     # same ≤|terms| rows), so scores are equal up to floating-point
-    # summation order.  Map-side partial aggregation loses nothing at
-    # w > 1: the rows arrive clustered by TOKEN, so same-uid rows
-    # almost never share a partition for a pre-shuffle merge.
+    # summation order.
     if w > 1:
         scored = scored.repartition(w, "uid")
     return scored.groupBy("uid").agg(F.sum("w").alias("score"))

@@ -19,16 +19,38 @@ import random
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.snapshot import sql_literal
+
+
+def vec_sql(v: list[float]) -> str:
+    """SQL text of :func:`vec_lit`'s array."""
+    return "array(" + ", ".join(sql_literal(float(x)) for x in v) + ")"
+
 
 def vec_lit(v: list[float]) -> F.Column:
     """A query vector / plane as ONE array literal node.
 
-    ``F.array(*[F.lit(x) …])`` builds dim separate Literal expressions —
-    at dim 4096 (× bits planes) the codegen expression tree is enormous.
-    ``F.lit(list)`` is a single typed ArrayType Literal: constant size in
-    the plan regardless of dimensionality, same broadcast-by-value
-    semantics."""
-    return F.lit([float(x) for x in v])
+    PySpark's ``F.lit(list)`` is ``F.array(*[F.lit(x) …])``: dim
+    separate Literal expressions, each built by its own py4j round trip
+    (~260 of them for a 64-dim vector).  The vector is instead rendered
+    as SQL text and parsed by the JVM in one call; the optimizer folds
+    the all-literal ``array(...)`` into a single ``array<double>``
+    Literal, so the plan has constant size at any dimensionality."""
+    return F.expr(vec_sql(v))
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """SQL text of :func:`cosine_expr` over two array SQL expressions —
+    the same folds in the same operation order, so the value is
+    bit-identical, built by one parse instead of a py4j round trip per
+    expression node and lambda variable."""
+    def norm(c: str) -> str:
+        return (f"sqrt(aggregate({c}, 0.0D, (acc, v) -> "
+                f"acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))")
+    dot = (f"aggregate(zip_with({a}, {b}, (x, y) -> "
+           f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
+           f"(acc, v) -> acc + v)")
+    return f"{dot} / ({norm(a)} * {norm(b)})"
 
 
 def dot_expr(a: str | F.Column, b: str | F.Column) -> F.Column:
@@ -133,8 +155,11 @@ def lsh_bucket_col(vec_col: str, planes: list[list[float]]) -> F.Column:
     The plane matrix is ONE nested array literal folded with
     transform/aggregate (MSB-first: plane 0 is the highest bit), so the
     expression tree is O(1) in dim and bits — not dim x bits literal
-    nodes.  Python-side bucketing (ann_topk) mirrors the same fold."""
-    planes_lit = F.lit([[float(v) for v in p] for p in planes])
+    nodes — and, parsed from SQL text like :func:`vec_lit`, it costs
+    O(1) py4j calls to build.  Python-side bucketing (ann_topk) mirrors
+    the same fold."""
+    planes_lit = F.expr(
+        "array(" + ", ".join(vec_sql(p) for p in planes) + ")")
     bits_arr = F.transform(
         planes_lit,
         lambda p, _i: F.when(dot_expr(p, F.col(vec_col)) >= 0,

@@ -20,9 +20,10 @@ def q_lsh_probe(spark, sf_dir):
     index (the standing-pipeline shape, like hybrid_search): even
     doc_ids are indexed ONCE per session
     (persisted_index.build_minhash_index → snapshot table), each run
-    only signs the odd-doc_id batch and broadcast-joins its band rows
-    against the index — the corpus side is a parquet read of
-    signatures, never re-tokenized or shuffled.  Emits
+    only signs the odd-doc_id batch (on the driver when it is small and
+    ASCII) and reads the index files that can hold its band hashes —
+    the corpus side is a parquet read of signatures, never
+    re-tokenized or shuffled.  Emits
     (index_id, new_id, est_jaccard) for every pair sharing an LSH band
     (8 hashes, 4 bands of 2) whose signatures agree on ≥ 4 of 8
     components (est_jaccard ≥ 0.5, the unbiased MinHash estimator).

@@ -41,6 +41,7 @@ as a NEW version, so it never disturbs concurrent readers.
 from __future__ import annotations
 
 import json
+import math
 import operator
 import os
 import shutil
@@ -400,16 +401,52 @@ def _ranges(spec) -> list[tuple]:
     return spec if isinstance(spec, list) else [spec]
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(v) -> str | None:
+    """``v`` as Spark SQL literal text that parses back to the value
+    ``F.lit(v)`` makes — for a str, an int or a float; None for any
+    other type.  A float's ``repr`` is the shortest decimal that
+    round-trips and the ``D`` suffix keeps it a double (a bare ``0.5``
+    parses as a decimal); non-finite floats go through a string cast.
+    Building an expression from SQL text costs one py4j round trip
+    however many literals it holds."""
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return f"{v!r}D"
+        if v != v:
+            return "CAST('NaN' AS DOUBLE)"
+        return f"CAST('{v}inity' AS DOUBLE)"        # 'inf' / '-inf'
+    return None
+
+
 def _ranges_cond(col: str, ranges: list[tuple]):
     """Disjunction of inclusive ranges over ``col``: the point ranges
-    fold into one ``isin`` (parquet ``In``, or ``EqualTo`` once the
-    optimizer rewrites a one-value ``In``), the rest are ``>=``/``<=``
-    bounds; an empty list matches nothing."""
+    fold into one ``IN`` (parquet ``In``, or ``EqualTo`` once the
+    optimizer rewrites a one-value ``In``), parsed from SQL text when
+    every point renders as a literal (one py4j call for any number of
+    points); the rest are ``>=``/``<=`` bounds; an empty list matches
+    nothing."""
     from pyspark.sql import functions as F
     c = F.col(col)
     points = sorted({lo for lo, hi in ranges
                      if lo is not None and lo == hi})
-    conds = [c.isin(points)] if points else []
+    lits = [sql_literal(p) for p in points]
+    if None in lits:
+        conds = [c.isin(points)]
+    elif points:
+        conds = [F.expr(f"{sql_ident(col)} IN ({', '.join(lits)})")]
+    else:
+        conds = []
     for lo, hi in ranges:
         if lo is not None and lo == hi:
             continue
@@ -511,11 +548,9 @@ def read_snapshot_changes(spark: SparkSession, path: str,
 
 #: meta ``kind`` → the column whose per-file clustering the table's
 #: probes prune on; :func:`compact_snapshot` re-clusters by it so
-#: compaction never degrades manifest skipping.  ``minhash_lsh`` is
-#: deliberately absent — its probe broadcasts the batch and streams
-#: the whole signature table, so any layout serves.
+#: compaction never degrades manifest skipping.
 _CLUSTER_COL_BY_KIND = {"ivf": "cluster", "ivfpq": "cluster",
-                        "fts": "token"}
+                        "fts": "token", "minhash_lsh": "bh"}
 
 
 def compact_snapshot(spark: SparkSession, path: str,
@@ -542,10 +577,11 @@ def compact_snapshot(spark: SparkSession, path: str,
       no-ops, preserving the exactly-once contract;
     * the clustered layout is REBUILT, not coalesced away:
       ``cluster_by`` (default: inferred from ``meta['kind']`` —
-      IVF/IVF-PQ cells, FTS token ranges) range-partitions and sorts
-      the rewrite so per-file min/max stay narrow and manifest pruning
-      keeps skipping files.  Pass ``cluster_by=[]`` to force a plain
-      coalesce for tables with no pruning column.
+      IVF/IVF-PQ cells, FTS token ranges, MinHash band hashes)
+      range-partitions and sorts the rewrite so per-file min/max stay
+      narrow and manifest pruning keeps skipping files.  Pass
+      ``cluster_by=[]`` to force a plain coalesce for tables with no
+      pruning column.
 
     A concurrent commit between the head read and the manifest write
     raises :class:`CommitConflict` — compaction is maintenance; re-run

@@ -136,7 +136,8 @@ LIMIT 10
 """
 
 # MinHash index side (even doc_ids), banded — the analogue of
-# persisted_index.build_minhash_index's snapshot rows.  The 'sliced'
+# persisted_index.build_minhash_index's snapshot rows (which hold one
+# row per band instead of a band array).  The 'sliced'
 # signing scheme (2 md5/shingle, each digest cut into four 32-bit hex
 # slices) matches queries._LSH_PROBE_ORACLE verbatim.
 _LSH_SETUP = ["""

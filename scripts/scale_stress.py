@@ -1196,7 +1196,8 @@ def round9_entries(spark, corpus_docs=50_000, novel_per_batch=17_000,
             kept_n = snap.read_snapshot(spark, kept_t).count()
             assert kept_n == novel_per_batch * (b + 1), \
                 (kept_n, novel_per_batch * (b + 1))
-            idx_n = snap.read_snapshot(spark, mh_idx).count()
+            idx_n = (snap.read_snapshot(spark, mh_idx)
+                     .select("doc_id").distinct().count())
             assert idx_n == corpus_docs + kept_n, (idx_n, kept_n)
             fm = snap.snapshot_meta(fts_idx, None)
             assert fm["n_docs"] == corpus_docs + kept_n, fm["n_docs"]
@@ -1207,7 +1208,7 @@ def round9_entries(spark, corpus_docs=50_000, novel_per_batch=17_000,
         print(f"capstone_stream[{n_batches} x 20k vs {corpus_docs // 1000}k"
               f" corpus, dedup-gate + mh + fts appends]: {dt:.2f}s "
               f"({total_in / dt:,.0f} docs/s)  kept={kept_n:,} "
-              f"mh_rows={idx_n:,} fts_docs={fm['n_docs']:,} "
+              f"mh_docs={idx_n:,} fts_docs={fm['n_docs']:,} "
               f"needle_hits={needles}")
 
         # near-dup probe served from the grown index: an exact copy of
@@ -1427,7 +1428,8 @@ def round10_entries(spark, n_vecs=1_000_000, dim=16, k=64):
             q.awaitTermination(600)
             kept_n = snap.read_snapshot(spark, kept_t).count()
             assert kept_n == nov * (b + 1), (b, kept_n)
-            mh_n = snap.read_snapshot(spark, mh_idx).count()
+            mh_n = (snap.read_snapshot(spark, mh_idx)
+                    .select("doc_id").distinct().count())
             assert mh_n == corpus_docs + kept_n, (b, mh_n)
             ivf_n = snap.read_snapshot(spark, ivf_idx).count()
             assert ivf_n == corpus_docs + kept_n, (b, ivf_n)
@@ -1436,7 +1438,7 @@ def round10_entries(spark, n_vecs=1_000_000, dim=16, k=64):
               f"corpus; planted {mh_d} shingle + {sem_d} corpus-emb + "
               f"{kc_d} kept-emb dups/batch]: {dt:.2f}s "
               f"({total_in / dt:,.0f} docs/s)  kept={kept_n:,} "
-              f"mh_rows={mh_n:,} ivf_rows={ivf_n:,} (all exact)")
+              f"mh_docs={mh_n:,} ivf_rows={ivf_n:,} (all exact)")
         heads = tuple(snap.snapshot_versions(t)[-1]
                       for t in (kept_t, mh_idx, ivf_idx))
         q = PI.stream_dedup_ingest(
@@ -1571,7 +1573,8 @@ def round11_entries(spark, corpus_docs=1_000_000, dim=16, k=64,
             q.awaitTermination(1200)
             kept_n = snap.read_snapshot(spark, kept_t).count()
             assert kept_n == nov * (b + 1), (b, kept_n)
-            mh_n = snap.read_snapshot(spark, mh_idx).count()
+            mh_n = (snap.read_snapshot(spark, mh_idx)
+                    .select("doc_id").distinct().count())
             assert mh_n == corpus_docs + kept_n, (b, mh_n)
             ivf_n = snap.read_snapshot(spark, ivf_idx).count()
             assert ivf_n == corpus_docs + kept_n, (b, ivf_n)
@@ -1580,7 +1583,7 @@ def round11_entries(spark, corpus_docs=1_000_000, dim=16, k=64,
               f"corpus; planted {mh_d} shingle + {sem_d} corpus-emb + "
               f"{kc_d} kept-emb dups/batch]: {dt:.2f}s "
               f"({total_in / dt:,.0f} docs/s)  kept={kept_n:,} "
-              f"mh_rows={mh_n:,} ivf_rows={ivf_n:,} (all exact)")
+              f"mh_docs={mh_n:,} ivf_rows={ivf_n:,} (all exact)")
         heads = tuple(snap.snapshot_versions(t)[-1]
                       for t in (kept_t, mh_idx, ivf_idx))
         q = PI.stream_dedup_ingest(

@@ -54,6 +54,62 @@ def test_ivf_probe_all_cells_equals_brute_force(spark, tmp_path):
     assert all(abs(a.cosine - b.cosine) < 1e-6 for a, b in zip(got, want))
 
 
+def test_ivf_probe_cosine_bit_identical(spark, tmp_path):
+    """The IVF probe's cosine is one parsed SQL expression; it must equal
+    the cosine_expr fold (via cosine_topk) bit for bit, in the same
+    order, over every row."""
+    emb = _emb(spark)
+    p = str(tmp_path / "ivf")
+    build_ivf_table(emb, p, k=4, iters=2)
+    q = [1.0, -2.0, 0.5, 3.0]
+    got = probe_ivf_table(spark, p, q, k=60, nprobe=4).collect()
+    want = cosine_topk(emb, q, k=60).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_vec_lit_is_one_literal_in_few_py4j_calls(spark, monkeypatch):
+    """vec_lit is one array<double> Literal in the optimized plan, its
+    values round-trip exactly (non-finite and signed zero included),
+    and building it costs O(1) py4j calls at any dimension."""
+    import math
+
+    from graphydb_spark.operators.similarity import vec_lit
+    v = [((i * 37) % 11 - 5) / 3.0 for i in range(512)]
+    v[:6] = [math.inf, -math.inf, -0.0, 1e-300, 1.7976931348623157e308,
+             0.1]
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    try:
+        col = vec_lit(v)
+    finally:
+        monkeypatch.undo()
+    assert len(calls) <= 10, len(calls)
+    df = spark.range(1).select(col.alias("q"))
+    plan = df._jdf.queryExecution().optimizedPlan()
+    exprs = plan.expressions()
+    stack = [exprs.apply(i) for i in range(exprs.size())]
+    lits = []
+    while stack:
+        e = stack.pop()
+        if e.nodeName() == "Literal":
+            lits.append(e.dataType().simpleString())
+        ch = e.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    assert lits == ["array<double>"]
+    got = df.first().q
+    assert got == v
+    assert [math.copysign(1.0, x) for x in got] == [
+        math.copysign(1.0, x) for x in v]
+    nan = spark.range(1).select(vec_lit([math.nan]).alias("q")).first().q
+    assert math.isnan(nan[0])
+
+
 def test_ivf_narrow_probe_subset(spark, tmp_path):
     emb = _emb(spark)
     p = str(tmp_path / "ivf")
@@ -144,14 +200,23 @@ def test_lsh_params_validated(spark, tmp_path):
         probe_minhash_index(spark, p, docs)
 
 
-def test_lsh_probe_plan_broadcasts_batch(spark, tmp_path):
+def test_lsh_probe_plan_broadcasts_batch(spark, tmp_path, monkeypatch):
+    from graphydb_spark.operators import persisted_index
     docs = _docs(spark)
     p = str(tmp_path / "lsh")
     build_minhash_index(docs, p)
     batch = docs.limit(3)
     plan = probe_minhash_index(spark, p, batch)._jdf.queryExecution() \
         .executedPlan().toString()
-    # the index side must NOT shuffle: broadcast join, no sort-merge
+    # a small batch is signed on the driver and rides the plan as a
+    # literal: one pruned read, no join and no exchange at all
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan
+    # a batch over the cap is signed by Spark and broadcast; the index
+    # side must NOT shuffle
+    monkeypatch.setattr(persisted_index, "DRIVER_SIGN_ROWS", 2)
+    plan = probe_minhash_index(spark, p, batch)._jdf.queryExecution() \
+        .executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -230,27 +295,42 @@ def test_lsh_scheme_differential_sf01(spark, tmp_path):
     assert len(got["salted"]) >= 10
 
 
+_SIGN_EDGE_TEXTS = [
+    (900, "two words"), (901, ""), (902, "one"),
+    (903, "Tab\tand.punct SPLIT-matches tokenizer!!"),
+    (904, "!!! ... ???"), (905, None), (906, "a\tb\tc\td"),
+    (907, "MiXeD CaSe 42 snake_case x-y-z 42")]
+
+
 def test_lsh_sig_shapes_agree(spark):
     """The batch-sided 'window' signing shape (posexplode + lead — no
     interpreted zip_with walk) must produce byte-identical signature
-    rows to the corpus-sided 'agg' shape, for both schemes, including
-    docs shorter than one shingle (dropped by both)."""
-    from graphydb_spark.operators.persisted_index import _sig_rows
+    rows to the corpus-sided 'agg' shape and to the driver's hashlib
+    signer, for both schemes and two (k, hashes, bands) settings:
+    short, empty, punctuation-only and null texts are dropped by all
+    three, tabs, punctuation and case split alike."""
+    from graphydb_spark.operators.persisted_index import (
+        _driver_sig_rows, _sig_rows)
     docs = _docs(spark, n=30).unionByName(spark.createDataFrame(
-        [(900, "two words"), (901, ""), (902, "one"),
-         (903, "Tab\tand.punct SPLIT-matches tokenizer!!")],
-        "doc_id long, text string"))
-    for scheme in ("salted", "sliced"):
-        rows = {}
-        for shape in ("agg", "window"):
-            got = _sig_rows(docs, "text", "doc_id", 3, 8, 4,
-                            scheme=scheme, shape=shape).collect()
-            rows[shape] = sorted(
-                (r["doc_id"], tuple(r["sig"]),
-                 tuple((b["band"], b["bh"]) for b in r["bands"]))
-                for r in got)
-        assert rows["agg"] == rows["window"], scheme
-        assert {900, 901, 902} & {r[0] for r in rows["agg"]} == set()
+        _SIGN_EDGE_TEXTS, "doc_id long, text string"))
+    pairs = [(r.doc_id, r.text) for r in docs.collect()]
+    for k, num_hashes, bands in ((3, 8, 4), (2, 12, 3)):
+        for scheme in ("salted", "sliced"):
+            rows = {}
+            for shape in ("agg", "window"):
+                got = _sig_rows(docs, "text", "doc_id", k, num_hashes,
+                                bands, scheme=scheme, shape=shape).collect()
+                rows[shape] = sorted(
+                    (r["doc_id"], tuple(r["sig"]), r["band"], r["bh"])
+                    for r in got)
+            rows["driver"] = sorted(
+                (d, tuple(sig), b, bh) for b, bh, d, sig in
+                _driver_sig_rows(pairs, k, num_hashes, bands, scheme))
+            assert rows["agg"] == rows["window"] == rows["driver"], \
+                (k, scheme)
+            assert len(rows["agg"]) == (30 + (4 if k == 2 else 3)) * bands
+            assert {901, 902, 904, 905} & {r[0] for r in rows["agg"]} \
+                == set()
     with pytest.raises(ValueError, match="shape"):
         _sig_rows(docs, "text", "doc_id", 3, 8, 4, shape="bad")
 
@@ -269,6 +349,114 @@ def test_lsh_scheme_mismatch_is_loud(spark, tmp_path):
         (i, 1000 + i) for i in range(3)}
     with pytest.raises(ValueError, match="scheme"):
         build_minhash_index(docs, str(tmp_path / "bad"), scheme="nope")
+
+
+def test_lsh_driver_signed_probe_equals_spark_path(spark, tmp_path,
+                                                   monkeypatch):
+    """A driver-signed batch and the same batch signed by Spark (the
+    row or the character cap patched to 0) give the same pairs and
+    estimates, for both schemes."""
+    from graphydb_spark.operators import persisted_index
+    docs = _docs(spark)
+    batch = docs.limit(6).select(
+        (F.col("doc_id") + 1000).alias("doc_id"), "text").unionByName(
+        spark.createDataFrame(_SIGN_EDGE_TEXTS, "doc_id long, text string"))
+    for scheme in ("salted", "sliced"):
+        p = str(tmp_path / scheme)
+        build_minhash_index(docs, p, scheme=scheme)
+        small = sorted(probe_minhash_index(spark, p, batch,
+                                           threshold=0.3).collect())
+        for cap in ("DRIVER_SIGN_ROWS", "DRIVER_SIGN_CHARS"):
+            with monkeypatch.context() as m:
+                m.setattr(persisted_index, cap, 0)
+                spark_signed = probe_minhash_index(spark, p, batch,
+                                                   threshold=0.3)
+                assert "BroadcastHashJoin" in spark_signed._jdf \
+                    .queryExecution().executedPlan().toString()
+                assert sorted(spark_signed.collect()) == small, \
+                    (scheme, cap)
+        assert {(i, 1000 + i) for i in range(6)} <= {
+            (r.index_id, r.new_id) for r in small}
+
+
+def test_lsh_non_ascii_batch_falls_back(spark, tmp_path):
+    """Non-ASCII text is not signed on the driver (Python and Spark
+    lower-case and split differently outside ASCII): the batch takes
+    the Spark path, whose pairs equal probe_pairs over _sig_rows."""
+    from graphydb_spark.operators.persisted_index import (
+        _sig_rows, probe_pairs)
+    from graphydb_spark.sources.snapshot import read_snapshot
+    docs = _docs(spark)
+    p = str(tmp_path / "lsh")
+    build_minhash_index(docs, p)
+    batch = spark.createDataFrame(
+        [(2000, "the quick brown fox 1 jumps over dog 1 CAFÉ"),
+         (2001, "Ünïcödé straße the quick brown fox 2 jumps over")],
+        "doc_id long, text string")
+    got = probe_minhash_index(spark, p, batch, threshold=0.5)
+    assert "BroadcastHashJoin" in got._jdf.queryExecution() \
+        .executedPlan().toString()
+    want = probe_pairs(read_snapshot(spark, p),
+                       _sig_rows(batch, "text", "doc_id", 3, 8, 4,
+                                 scheme="sliced"), 0.5)
+    got_rows = sorted(got.collect())
+    assert got_rows and got_rows == sorted(want.collect())
+
+
+def test_lsh_probe_reads_only_its_band_files(spark, tmp_path):
+    """The index is range-partitioned by band hash, so a one-document
+    probe's 4 band hashes open at most 4 of the 8 files — also after
+    compaction, which re-clusters a MinHash index by band hash."""
+    from graphydb_spark.operators.persisted_index import _sig_rows
+    from graphydb_spark.sources.snapshot import (compact_snapshot,
+                                                 pruned_file_rows)
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} says w{i} and x{i * 7} then y{i * 13} z{i % 17}")
+         for i in range(200)], "doc_id long, text string")
+    p = str(tmp_path / "lsh")
+    build_minhash_index(docs, p)
+    assert pruned_file_rows(p)[0] == 8
+    one = docs.where("doc_id = 17").select(
+        (F.col("doc_id") + 10_000).alias("doc_id"), "text")
+    hashes = {r.bh for r in _sig_rows(one, "text", "doc_id", 3, 8, 4,
+                                      scheme="sliced").collect()}
+    assert len(hashes) == 4
+    where = {"bh": [(h, h) for h in hashes]}
+    for compacted in (False, True):
+        if compacted:
+            compact_snapshot(spark, p, target_files=8)
+        assert 1 <= pruned_file_rows(p, None, where)[0] <= 4
+        hits = probe_minhash_index(spark, p, one, threshold=0.99).collect()
+        assert [(r.index_id, r.new_id, r.est_jaccard) for r in hits] == [
+            (17, 10_017, 1.0)]
+
+
+def test_lsh_old_layout_index_asks_for_rebuild(spark, tmp_path):
+    """An index in the one-row-per-document layout (nested ``bands``)
+    is refused with a rebuild message by probes and appends."""
+    from graphydb_spark.operators.persisted_index import _index_params
+    p = str(tmp_path / "old")
+    old = spark.createDataFrame(
+        [(1, ["0"] * 8, [(b, "h") for b in range(4)])],
+        "doc_id long, sig array<string>, "
+        "bands array<struct<band:int,bh:string>>")
+    commit_snapshot(old, p, mode="overwrite", meta={
+        "kind": "minhash_lsh", "k": 3, "num_hashes": 8, "bands": 4,
+        "text_col": "text", "id_col": "doc_id", "scheme": "sliced"})
+    docs = _docs(spark, n=3)
+    with pytest.raises(ValueError, match="rebuild"):
+        probe_minhash_index(spark, p, docs)
+    with pytest.raises(ValueError, match="rebuild"):
+        append_minhash_index(spark, p, docs)
+    with pytest.raises(ValueError, match="rebuild"):
+        _index_params(p, None)
+
+
+def _indexed(spark, idx):
+    """(documents, rows) of a MinHash index table."""
+    from graphydb_spark.sources.snapshot import read_snapshot
+    rows = read_snapshot(spark, idx)
+    return rows.select("doc_id").distinct().count(), rows.count()
 
 
 def test_stream_dedup_ingest(spark, tmp_path):
@@ -301,8 +489,8 @@ def test_stream_dedup_ingest(spark, tmp_path):
     kept_ids = {r.doc_id for r in read_snapshot(spark, kept_t).collect()}
     # 100 dropped (index hit), 102 dropped (in-batch dup of 101)
     assert kept_ids == {101, 103}
-    n_idx = read_snapshot(spark, idx).count()
-    assert n_idx == 12  # 10 corpus + 2 kept
+    # 10 corpus + 2 kept documents, one index row per (document, band)
+    assert _indexed(spark, idx) == (12, 12 * 4)
 
     # second run: a new file repeating a doc KEPT last run -> index
     # (grown by run 1) catches it; genuinely new doc passes
@@ -316,7 +504,7 @@ def test_stream_dedup_ingest(spark, tmp_path):
     q.awaitTermination(120)
     kept_ids = {r.doc_id for r in read_snapshot(spark, kept_t).collect()}
     assert kept_ids == {101, 103, 201}
-    assert read_snapshot(spark, idx).count() == 13
+    assert _indexed(spark, idx) == (13, 13 * 4)
 
 
 def test_stream_dedup_ingest_semantic_gate(spark, tmp_path):
@@ -363,7 +551,7 @@ def test_stream_dedup_ingest_semantic_gate(spark, tmp_path):
     assert kept_ids == {101, 103}            # 100 dropped semantically
     ivf_ids = {r.vec_id for r in read_snapshot(spark, ivf).collect()}
     assert ivf_ids == set(range(10)) | {101, 103}   # survivors appended
-    assert read_snapshot(spark, idx).count() == 12  # 10 corpus + 2 kept
+    assert _indexed(spark, idx) == (12, 12 * 4)  # 10 corpus + 2 kept
 
     # batch 2: same embedding as KEPT doc 101 (appended last run) ->
     # the grown IVF index catches it; a genuinely new doc passes

@@ -2,9 +2,10 @@
 
 1. probe_fts_table sizes its plan from the manifest's pruned rows: a
    probe that fits one partition has no exchange at all, a wider one
-   pins its two exchanges (df window on token, score agg on uid) to
-   that width instead of the session shuffle conf — a point probe must
-   not pay 25-32 near-empty tasks.
+   pins the postings' exchange (score agg on uid) to that width instead
+   of the session shuffle conf — a point probe must not pay 25-32
+   near-empty tasks — and takes df from a broadcast per-token
+   aggregate, so a hot term's postings never meet on one task.
 2. quality_filter's token walk is compute-once: a ``where(keep)``
    consumer must NOT re-derive the split+lower walk once per rule
    inside a pushed-down filter (the measured 6× clone that serialized
@@ -69,19 +70,87 @@ def test_fts_probe_exchanges_are_probe_width(spark, corpus, tmp_path,
     assert w > 1, rows
     df = persisted_index.probe_fts_table(spark, path, ["quick", "dog"])
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # exactly two exchanges, both user-pinned at width w
-    # (REPARTITION_BY_NUM is never AQE-coalesced and never the session
-    # conf width).  The window and the agg must REUSE them: a
-    # conf-width ENSURE_REQUIREMENTS exchange appearing here means the
-    # pin was lost.
-    assert plan.count("Exchange") == 2, plan
-    assert plan.count(f", {w}), REPARTITION_BY_NUM") == 2, plan
-    assert "ENSURE_REQUIREMENTS" not in plan, plan
+    # the postings move through ONE exchange, the score sum's,
+    # user-pinned at width w (REPARTITION_BY_NUM is never AQE-coalesced
+    # and never the session conf width) and reused by the aggregate.
+    # df is a per-token aggregate broadcast back, not a token window
+    # (which funnels a hot term's postings onto one task): its partial
+    # counts are the only conf-width ENSURE_REQUIREMENTS exchange.
+    assert plan.count(f", {w}), REPARTITION_BY_NUM") == 1, plan
+    assert "hashpartitioning(uid" in plan, plan
+    assert plan.count("ENSURE_REQUIREMENTS") == 1, plan
+    assert "partial_count(1)" in plan, plan
+    assert plan.count("Exchange") == 3, plan    # + the BroadcastExchange
+    assert "BroadcastHashJoin" in plan and "Window" not in plan, plan
     # the width changes the plan, not the scores
     got = {r.uid: r.score for r in df.collect()}
     want = {r.uid: r.score for r in narrow.collect()}
     assert got.keys() == want.keys() and got
     assert all(abs(got[u] - want[u]) <= 1e-12 * abs(want[u]) for u in got)
+
+
+def _shuffle_rows_per_task(spark, group):
+    """Per stage of the jobs in ``group``: the shuffle records each task
+    read, from the status store."""
+    from py4j.protocol import Py4JJavaError
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    out = []
+    for j in sc.statusTracker().getJobIdsForGroup(group):
+        ids = str(store.job(j).stageIds().mkString(","))
+        for sid in (int(x) for x in ids.split(",") if x):
+            # the store keeps at most spark.ui.retainedStages stages, so
+            # late in a long session a listed stage can be gone (seen
+            # as NoSuchElementException); the caller asserts that the
+            # stage which read the postings is found
+            try:
+                st = store.lastStageAttempt(sid)
+            except Py4JJavaError:
+                continue
+            if str(st.status().toString()) == "SKIPPED":
+                continue
+            tasks = store.taskList(sid, st.attemptId(), 100_000)
+            out.append([tasks.apply(i).taskMetrics().get()
+                        .shuffleReadMetrics().recordsRead()
+                        for i in range(tasks.size())])
+    return out
+
+
+@pytest.mark.parametrize("fields,terms", [(["text"], ["hot", "w7"]),
+                                          (["text", "title"], ["hot"])])
+def test_fts_probe_hot_term_spreads_at_width(spark, tmp_path, monkeypatch,
+                                             fields, terms):
+    """A term holding half the postings must not land on one task when
+    the probe is wide: every task after an exchange holds at most twice
+    its share of that stage's rows, and the scores equal the width-1
+    plan's (two addends per uid sum exactly in either order).  The
+    multi-field index counts df as distinct uids."""
+    import math
+    docs = spark.createDataFrame(
+        [(i, f"hot w{i}", f"hot t{i}") for i in range(400)],
+        "doc_id long, text string, title string")
+    path = str(tmp_path / "fts")
+    persisted_index.build_fts_table(docs, path, fields, id_col="doc_id")
+    narrow = {r.uid: r.score for r in
+              persisted_index.probe_fts_table(spark, path, terms).collect()}
+    monkeypatch.setattr(persisted_index, "PROBE_ROWS_PER_PARTITION", 20)
+    sc = spark.sparkContext
+    group = "fts-hot-term-" + "-".join(fields)     # this case's jobs only
+    sc.setJobGroup(group, group)
+    try:
+        wide = {r.uid: r.score for r in
+                persisted_index.probe_fts_table(spark, path,
+                                                terms).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert wide == narrow and len(wide) == 400
+    stages = [t for t in _shuffle_rows_per_task(spark, group) if sum(t)]
+    assert any(sum(t) >= 400 for t in stages), stages
+    for rows in stages:
+        assert len(rows) > 1 or sum(rows) < 10, stages
+        assert max(rows) <= 2 * math.ceil(sum(rows) / len(rows)), stages
 
 
 def test_spread_helpers_run_no_job_on_aggregate_input(spark, corpus,
