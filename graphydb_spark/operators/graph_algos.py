@@ -6,28 +6,52 @@ degrees, connected components, PageRank, k-hop frontier expansion — all
 iterative DataFrame joins, since GraphX is JVM-only and unavailable from
 PySpark.
 
-Connected components, dedup clusters, BFS / k-hop, SSSP, PageRank,
-personalized PageRank, label propagation and k-core run on one superstep
-loop, :func:`_supersteps` (vertex-centric, as in Pregelix): each
-algorithm materializes its inputs once and supplies only the per-round
-vertex program; the loop sends messages from the active frontier alone,
-counts the next frontier on the checkpointed state (one narrow job) and
-halts when it is empty, checkpoints the state with its statistics reset,
-and labels each superstep's Spark jobs ``"<algo> superstep <i>
-active=<n>"``.  Edge frames a loop joins every round keep a plain
-``localCheckpoint``, which preserves their hash partitioning.
+Every iterative algorithm runs on one superstep loop, :func:`_supersteps`
+(vertex-centric, as in Pregelix), and supplies only its per-round vertex
+program; the loop sends messages from the active frontier alone,
+materializes the state with its statistics reset, counts the next
+frontier on it (one narrow job), halts when it is empty, and labels
+each superstep's jobs ``"<algo> superstep <i> active=<n>"``.
+
+- Min/max label propagation, :func:`_propagate`: connected components,
+  dedup clusters, BFS, k-hop, SSSP, :func:`bfs_paths`,
+  :func:`closeness_centrality`, :func:`dag_layers` and both inner loops
+  of :func:`strongly_connected_components`.
+- Frontier programs: PageRank, personalized PageRank, label
+  propagation, k-core, k-truss, SCC's outer rounds, betweenness' forward
+  phase, MIS, maximal matching and Borůvka (its rounds and its pointer
+  jumping).
+- Fixed rounds, :func:`_rounds`: eigenvector centrality, both HITS
+  variants, :func:`katz_walks` and :func:`random_walks`.
+
+Hand-rolled: betweenness' backward sweep, one pass per BFS layer
+deepest-first, each reading the layer below it.
+
+Lineage: every materialization goes through :func:`_materialize` or
+:func:`_checkpoint_count` (the loop's materialize-and-count), so the
+choice of how state is kept, and whether it survives a lost executor,
+lives in those two functions.
 """
 
 from __future__ import annotations
 
 import math
+import warnings
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """The module's one lineage cut: ``localCheckpoint``, which keeps hash
+    partitioning but is lost with its executor.  An eager cut runs its
+    job now; a lazy one fills on the first action that reads it."""
+    return df.localCheckpoint(eager=eager)
+
+
 def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
-    """localCheckpoint + DISCARD the origin plan's statistics.
+    """Materialize + DISCARD the origin plan's statistics.
 
     ``Dataset.localCheckpoint`` truncates lineage but copies the source
     plan's ``Statistics`` onto the new ``LogicalRDD``.  In an iterative
@@ -42,12 +66,12 @@ def checkpoint_reset_stats(df: DataFrame) -> DataFrame:
     stats (estimate falls back to the constant default), keeping every
     iteration O(1) planning cost.  No data is recomputed or moved.
 
-    Use this instead of bare ``localCheckpoint`` in any loop whose
+    Use this instead of bare :func:`_materialize` in any loop whose
     body joins a frame with a derivative of itself.  (Loops that join
     against a CONSTANT frame only grow the estimate linearly per round
-    — bare checkpoints are fine there.)
+    — bare materializations are fine there.)
     """
-    return _reset_stats(df.localCheckpoint(eager=True))
+    return _reset_stats(_materialize(df))
 
 
 def _reset_stats(d: DataFrame) -> DataFrame:
@@ -61,16 +85,17 @@ def _reset_stats(d: DataFrame) -> DataFrame:
 def _supersteps(algo: str, state: DataFrame, step, rounds: int):
     """The superstep loop of the vertex-centric algorithms.
 
-    ``state`` is the vertex frame with a boolean ``_active`` column (the
-    frontier); ``step(state, frontier)`` builds the next state, with its
-    own ``_active`` column, from the current one and its active rows.
-    Each superstep's state is locally checkpointed with its statistics
-    reset (a step joins the state with its own derivative) and the next
-    frontier is counted on that checkpoint: the count is one narrow job,
-    and it is also the one that materializes the checkpoint.  The loop
-    halts when the frontier is empty or after ``rounds`` supersteps.  A
-    frontier whose counted rows fit the broadcast threshold is
-    broadcast, so the large side of its join never shuffles.
+    ``state`` is the vertex (or edge) frame with a boolean ``_active``
+    column (the frontier); ``step(state, frontier)`` builds the next
+    state, with its own ``_active`` column, from the current one and its
+    active rows.
+    Each superstep's state is materialized with its statistics reset (a
+    step joins the state with its own derivative) and the next frontier
+    is counted on that materialization: the count is one narrow job, and
+    it is also the one that fills it.  The loop halts when the frontier
+    is empty or after ``rounds`` supersteps.  A frontier whose counted
+    rows fit the broadcast threshold is broadcast, so the large side of
+    its join never shuffles.
 
     Returns ``(state without _active, n)``; ``n == 0`` means halted.
     """
@@ -91,11 +116,21 @@ def _supersteps(algo: str, state: DataFrame, step, rounds: int):
     return state.drop("_active"), n
 
 
+def _rounds(algo: str, state: DataFrame, step, rounds: int) -> DataFrame:
+    """``rounds`` supersteps of a fixed-round loop (a power iteration):
+    every vertex stays active and ``step(state)`` builds the next state
+    from the whole current one."""
+    def superstep(state, frontier):
+        return step(state.drop("_active")).withColumn("_active", F.lit(True))
+    return _supersteps(algo, state.withColumn("_active", F.lit(True)),
+                       superstep, rounds)[0]
+
+
 def _checkpoint_count(state: DataFrame) -> tuple[DataFrame, int]:
-    """Lazily checkpointed ``state`` and its number of active rows, in one
+    """Lazily materialized ``state`` and its number of active rows, in one
     job: counting through the InternalRow RDD needs no exchange and no
-    final aggregate stage, and computing it fills the checkpoint."""
-    state = _reset_stats(state.localCheckpoint(eager=False))
+    final aggregate stage, and computing it fills the materialization."""
+    state = _reset_stats(_materialize(state, eager=False))
     n = state.where("_active")._jdf.queryExecution().toRdd().count()
     return state, n
 
@@ -108,13 +143,12 @@ def _fits_broadcast(df: DataFrame, rows: int) -> bool:
     return 0 <= rows * (8 + df._jdf.schema().defaultSize()) <= limit
 
 
-def _directed(edges_df: DataFrame, direction: str) -> DataFrame:
-    """(src, dst) along ``direction`` ∈ {'out', 'in', 'both'}; 'both' is
-    the union of the two (duplicates kept)."""
-    fwd = edges_df.select(F.col("startuid").alias("src"),
-                          F.col("enduid").alias("dst"))
-    rev = edges_df.select(F.col("enduid").alias("src"),
-                          F.col("startuid").alias("dst"))
+def _directed(edges_df: DataFrame, direction: str, a: str = "startuid",
+              b: str = "enduid") -> DataFrame:
+    """(src, dst) along ``direction`` ∈ {'out', 'in', 'both'} of the
+    edges (a, b); 'both' is the union of the two (duplicates kept)."""
+    fwd = edges_df.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    rev = edges_df.select(F.col(b).alias("src"), F.col(a).alias("dst"))
     return {"out": fwd, "in": rev}.get(direction, fwd.unionByName(rev))
 
 
@@ -126,31 +160,46 @@ def _undirected(edges_df: DataFrame, a: str = "startuid",
                                       F.col("src").alias("dst"))).distinct()
 
 
-def _min_label(algo: str, edges: DataFrame, state: DataFrame, rounds: int,
-               msg) -> DataFrame:
-    """Min-propagation over ``edges`` (src, dst[, w]) from ``state``
-    (uid, v), every vertex of ``state`` active: each superstep an active
-    vertex sends ``msg`` (a column over its edge row and its ``v``) to
-    its ``dst``, and every vertex keeps the minimum of its value and its
-    messages.  Round *i* equals the synchronous all-vertex round *i*: a
-    vertex whose value did not change already sent it.  The old value
-    rides the min-aggregation, so a changed vertex is flagged without a
-    join against the previous state.  Returns (uid, v)."""
+def _endpoints(edges: DataFrame) -> DataFrame:
+    """The distinct ``uid``s at either end of ``edges`` (src, dst)."""
+    return (edges.select(F.col("src").alias("uid"))
+            .unionByName(edges.select(F.col("dst").alias("uid")))
+            .distinct())
+
+
+def _propagate(algo: str, edges: DataFrame, state: DataFrame, rounds: int,
+               msg, agg) -> tuple[DataFrame, int]:
+    """Label propagation over ``edges`` (src, dst[, w]) from ``state``
+    (key…, v), every row of ``state`` active: each superstep an active
+    row sends ``msg`` (a column over its edge row and its state row) to
+    its ``dst``, and every row keeps ``agg`` — ``F.min`` or ``F.max`` —
+    of its value and its messages.  The key is every state column but
+    ``v``: ``uid``, which a message takes from its ``dst``, plus any
+    columns the message carries over from its sender (closeness keys on
+    ``(source, uid)``).  Round *i* equals the synchronous all-vertex
+    round *i*: a row whose value did not change already sent it.  The old
+    value rides the aggregation, so a changed row is flagged without a
+    join against the previous state.  Returns ``((key…, v), n)``; ``n``
+    rows were still active after ``rounds`` supersteps."""
     vt = state.schema["v"].dataType
+    key = [c for c in state.columns if c != "v"]
+    better = (F.col("v") < F.col("_old") if agg is F.min
+              else F.col("v") > F.col("_old"))
 
     def step(state, frontier):
         sent = (edges.join(frontier.withColumnRenamed("uid", "src"), "src")
-                .select(F.col("dst").alias("uid"), msg.cast(vt).alias("v"),
+                .select(*[F.col("dst").alias("uid") if c == "uid" else c
+                          for c in key],
+                        msg.cast(vt).alias("v"),
                         F.lit(None).cast(vt).alias("_old")))
-        best = (state.select("uid", "v", F.col("v").alias("_old"))
+        best = (state.select(*key, "v", F.col("v").alias("_old"))
                 .unionByName(sent)
-                .groupBy("uid").agg(F.min("v").alias("v"),
-                                    F.max("_old").alias("_old")))
-        return best.select("uid", "v", (F.col("_old").isNull()
-                                        | (F.col("v") < F.col("_old")))
+                .groupBy(*key).agg(agg("v").alias("v"),
+                                   F.max("_old").alias("_old")))
+        return best.select(*key, "v", (F.col("_old").isNull() | better)
                            .alias("_active"))
     return _supersteps(algo, state.withColumn("_active", F.lit(True)),
-                       step, rounds)[0]
+                       step, rounds)
 
 
 def _components(algo: str, edges_df: DataFrame, a: str, b: str,
@@ -160,12 +209,12 @@ def _components(algo: str, edges_df: DataFrame, a: str, b: str,
     ``nodes_df``'s uids, or the edge endpoints when it is None.  The
     symmetric edge frame is materialized once, hash-partitioned on the
     join key."""
-    sym = _undirected(edges_df, a, b).repartition("src") \
-        .localCheckpoint(eager=False)
+    sym = _materialize(_undirected(edges_df, a, b).repartition("src"),
+                       eager=False)
     uids = (nodes_df if nodes_df is not None
             else sym.select(F.col("src").alias("uid")).distinct())
-    return _min_label(algo, sym, uids.select("uid", F.col("uid").alias("v")),
-                      max_iter, F.col("v"))
+    return _propagate(algo, sym, uids.select("uid", F.col("uid").alias("v")),
+                      max_iter, F.col("v"), F.min)[0]
 
 
 def _bfs(algo: str, edges_df: DataFrame, seed_uids_df: DataFrame,
@@ -173,9 +222,10 @@ def _bfs(algo: str, edges_df: DataFrame, seed_uids_df: DataFrame,
     """(uid, dist) — BFS as min-propagation of dist + 1 from the seeds.
     Seeds and edges are materialized once and not repartitioned: the
     frontier is small and broadcasts."""
-    step = _directed(edges_df, direction).localCheckpoint(eager=False)
+    step = _materialize(_directed(edges_df, direction), eager=False)
     seeds = seed_uids_df.select("uid").distinct().withColumn("v", F.lit(0))
-    return (_min_label(algo, step, seeds, max_depth, F.col("v") + 1)
+    return (_propagate(algo, step, seeds, max_depth, F.col("v") + 1,
+                       F.min)[0]
             .withColumnRenamed("v", "dist"))
 
 
@@ -275,10 +325,8 @@ def _degrees_by_kind(edges_df: DataFrame, direction: str, node_kind: str,
     if not parts:
         raise ValueError(
             f"No declared edge kind touches node kind {node_kind!r}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    agg = out.groupBy("k").agg(F.sum("w").cast("long").alias("degree"))
+    agg = (reduce(DataFrame.unionByName, parts)
+           .groupBy("k").agg(F.sum("w").cast("long").alias("degree")))
     uid = (F.concat(F.lit(node_kind + ":"), F.col("k").cast("string"))
            if int_keys else F.col("k"))
     return agg.select(uid.alias("uid"), "degree")
@@ -314,26 +362,20 @@ def eigenvector_centrality(edges_undirected: DataFrame,
     global scalar (a driver sync point) at zero cost: doubles hold the
     growth (λ_max^iters ≲ 1e20 for λ_max ≤ 300, iters = 8) and the
     final ratio is scale-invariant.  Same partitioning-reuse shape as
-    pagerank: the edge list is hash-partitioned once; each round
-    shuffles only the node-sized score frame.
+    pagerank: the edge list is hash-partitioned once; each round is one
+    superstep and shuffles only the node-sized score frame.
 
     ``edges_undirected``: (startuid, enduid) — symmetrized internally.
     """
-    fwd = edges_undirected.select(F.col("startuid").alias("uid"),
-                                  F.col("enduid").alias("dst"))
-    edges = (fwd.unionByName(fwd.select(F.col("dst").alias("uid"),
-                                        F.col("uid").alias("dst")))
-             .distinct()
-             .repartition("uid")
-             .localCheckpoint(eager=True))
-    x = (edges.select("uid").distinct()
-         .withColumn("x", F.lit(1.0))
-         .localCheckpoint(eager=True))
-    for _ in range(iters):
-        x = (edges.join(x, "uid")
-             .groupBy(F.col("dst").alias("uid"))
-             .agg(F.sum("x").alias("x"))
-             .localCheckpoint(eager=True))
+    edges = _materialize(_undirected(edges_undirected).repartition("src"))
+
+    def step(x):
+        return (edges.join(x.withColumnRenamed("uid", "src"), "src")
+                .groupBy(F.col("dst").alias("uid"))
+                .agg(F.sum("x").alias("x")))
+    x = _rounds("eigenvector_centrality",
+                edges.select(F.col("src").alias("uid")).distinct()
+                .withColumn("x", F.lit(1.0)), step, iters)
     mx = x.agg(F.max("x").alias("mx"))
     return (x.crossJoin(F.broadcast(mx))
             .select("uid", (F.col("x") / F.col("mx")).alias("score")))
@@ -344,6 +386,62 @@ def k_hop(edges_df: DataFrame, seed_uids_df: DataFrame, k: int,
     """All uids within k hops of the seed set (BFS frontier expansion;
     see :func:`bfs_distances`)."""
     return _bfs("k_hop", edges_df, seed_uids_df, k, direction).select("uid")
+
+
+def _oriented(edges_df: DataFrame, src_col: str, dst_col: str,
+              broadcast_max_nodes: int):
+    """The degree-ranked orientation :func:`triangle_count` and
+    :func:`local_clustering` share → ``(n_part, deg, oriented, nb_u,
+    nb_v)``: the canonical edge set's degree table ``(v, deg)``, its
+    edges oriented low-rank → high-rank ``(src, dst)``, and the
+    out-adjacency ``nbrs`` keyed as ``u`` and as ``v`` (broadcast when
+    there are at most ``broadcast_max_nodes`` nodes).  ``n_part`` is the
+    explicit width of the pair stages."""
+    # Materialize the canonical and oriented edge lists ONCE — each is
+    # consumed by several downstream plans, and without this Spark
+    # recomputes the (potentially expensive) edge derivation per use.
+    # The dedup is an explicit-N repartition on the pair key followed by
+    # dropDuplicates over the same key: the dedup reuses the repartition
+    # exchange (no second shuffle), and the explicit numPartitions is
+    # exempt from AQE coalescing — AQE sizes reduce stages by bytes, and
+    # a 3.6M-pair stream at 16 B/row looks like "one partition" to it
+    # (measured: 8.7 s single-task dedup → 2.5 s this way at sf0.1).
+    n_part = edges_df.sparkSession.sparkContext.defaultParallelism * 2
+    und = (edges_df
+           .select(F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
+                   F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"))
+           .where(F.col("lo") != F.col("hi"))
+           .repartition(n_part, "lo", "hi")
+           .dropDuplicates(["lo", "hi"])
+           .transform(_materialize))
+    deg = (und.select(F.col("lo").alias("v"))
+           .unionByName(und.select(F.col("hi").alias("v")))
+           .groupBy("v").agg(F.count("*").alias("deg"))
+           .transform(_materialize))
+    # node-sized frames (degree table, adjacency map) broadcast when the
+    # node count is bounded; the count is free on the checkpointed frame.
+    n_nodes = deg.count()
+    small_nodes = n_nodes <= broadcast_max_nodes
+    deg_b = F.broadcast(deg) if small_nodes else deg
+    ranked = und \
+        .join(deg_b.withColumnRenamed("v", "lo")
+                   .withColumnRenamed("deg", "deg_lo"), "lo") \
+        .join(deg_b.withColumnRenamed("v", "hi")
+                   .withColumnRenamed("deg", "deg_hi"), "hi")
+    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | \
+        ((F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi")))
+    oriented = ranked.select(
+        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("src"),
+        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst")) \
+        .transform(_materialize)
+    adj = (oriented.groupBy("src")
+           .agg(F.collect_list("dst").alias("nbrs"))
+           .transform(_materialize))
+    nb_u = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("nb_u"))
+    nb_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nb_v"))
+    if small_nodes:
+        nb_u, nb_v = F.broadcast(nb_u), F.broadcast(nb_v)
+    return n_part, deg, oriented, nb_u, nb_v
 
 
 def triangle_count(edges_df: DataFrame,
@@ -372,50 +470,14 @@ def triangle_count(edges_df: DataFrame,
     (zero shuffles past that point); larger graphs fall back to two
     shuffle joins whose volume is O(sum deg) = O(m) rows.
     """
-    # Materialize the canonical and oriented edge lists ONCE — each is
-    # consumed by several downstream plans, and without this Spark
-    # recomputes the (potentially expensive) edge derivation per use.
-    # The dedup is an explicit-N repartition on the pair key followed by
-    # dropDuplicates over the same key: the dedup reuses the repartition
-    # exchange (no second shuffle), and the explicit numPartitions is
-    # exempt from AQE coalescing — AQE sizes reduce stages by bytes, and
-    # a 3.6M-pair stream at 16 B/row looks like "one partition" to it
-    # (measured: 8.7 s single-task dedup → 2.5 s this way at sf0.1).
-    n_part = edges_df.sparkSession.sparkContext.defaultParallelism * 2
-    und = (edges_df
-           .select(F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-                   F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"))
-           .where(F.col("lo") != F.col("hi"))
-           .repartition(n_part, "lo", "hi")
-           .dropDuplicates(["lo", "hi"])
-           .localCheckpoint(eager=True))
-    deg = (und.select(F.col("lo").alias("v"))
-           .unionByName(und.select(F.col("hi").alias("v")))
-           .groupBy("v").agg(F.count("*").alias("deg"))
-           .localCheckpoint(eager=True))
-    # node-sized frames (degree table, adjacency map) broadcast when the
-    # node count is bounded; the count is free on the checkpointed frame.
-    n_nodes = deg.count()
-    small_nodes = n_nodes <= broadcast_max_nodes
-    deg_b = F.broadcast(deg) if small_nodes else deg
-    ranked = und \
-        .join(deg_b.withColumnRenamed("v", "lo")
-                   .withColumnRenamed("deg", "deg_lo"), "lo") \
-        .join(deg_b.withColumnRenamed("v", "hi")
-                   .withColumnRenamed("deg", "deg_hi"), "hi")
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | \
-        ((F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi")))
-    oriented = ranked.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("src"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst")) \
-        .localCheckpoint(eager=True)
-    adj = (oriented.groupBy("src")
-           .agg(F.collect_list("dst").alias("nbrs"))
-           .localCheckpoint(eager=True))
-    nb_u = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("nb_u"))
-    nb_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nb_v"))
-    if small_nodes:
-        nb_u, nb_v = F.broadcast(nb_u), F.broadcast(nb_v)
+    n_part, _, oriented, nb_u, nb_v = _oriented(
+        edges_df, src_col, dst_col, broadcast_max_nodes)
+    return _triangles(n_part, oriented, nb_u, nb_v)
+
+
+def _triangles(n_part, oriented, nb_u, nb_v) -> DataFrame:
+    """Σ |N⁺(src) ∩ N⁺(dst)| over the oriented edges (see
+    :func:`_oriented`) → 1-row ``(n_triangles BIGINT)``."""
     # Explicit numPartitions again: AQE would size this stage by its
     # (tiny) input bytes, but the intersection work is the m·sqrt(m)
     # term — parallelize for the work, not the bytes.
@@ -453,12 +515,12 @@ def sssp(weighted_edges_df: DataFrame, seed_uids_df: DataFrame,
     not Dijkstra); without negative cycles the result converges in
     ≤ diameter rounds.
     """
-    edges = (weighted_edges_df.select("src", "dst", "w")
-             .localCheckpoint(eager=False))
+    edges = _materialize(weighted_edges_df.select("src", "dst", "w"),
+                         eager=False)
     seeds = (seed_uids_df.select("uid").distinct()
              .withColumn("v", F.lit(0).cast("long")))
-    return (_min_label("sssp", edges, seeds, max_hops,
-                       F.col("v") + F.col("w"))
+    return (_propagate("sssp", edges, seeds, max_hops,
+                       F.col("v") + F.col("w"), F.min)[0]
             .withColumnRenamed("v", "dist"))
 
 
@@ -479,8 +541,8 @@ def label_propagation(nodes_df: DataFrame, edges_df: DataFrame,
     once no label changes — later rounds would repeat it.  ``iters`` ≈
     the diameter of the communities sought.
     """
-    sym = _undirected(edges_df).repartition("src") \
-        .localCheckpoint(eager=False)
+    sym = _materialize(_undirected(edges_df).repartition("src"),
+                       eager=False)
 
     def step(state, frontier):
         nbr = (sym.join(state.withColumnRenamed("uid", "src"), "src")
@@ -516,8 +578,9 @@ def k_core(nodes_df: DataFrame, edges_df: DataFrame, k: int,
     definition).  ``max_iter`` bounds the peel rounds, the check that
     finds nothing left to peel included.
     """
-    sym = (_undirected(edges_df).where(F.col("src") != F.col("dst"))
-           .localCheckpoint(eager=False))
+    sym = _materialize(
+        _undirected(edges_df).where(F.col("src") != F.col("dst")),
+        eager=False)
     deg = F.col("deg")
 
     def step(state, frontier):
@@ -539,7 +602,6 @@ def k_core(nodes_df: DataFrame, edges_df: DataFrame, k: int,
         # a superset of the true k-core.  The last peeled layer has not
         # lowered its neighbours' degrees yet: keep the nodes that still
         # have an unpeeled neighbour.
-        import warnings
         warnings.warn(
             f"k_core: peel loop did not reach a fixpoint in {max_iter} "
             "rounds; result is a superset of the true k-core. "
@@ -556,22 +618,16 @@ def transitivity(edges_df: DataFrame, src_col: str = "startuid",
                  dst_col: str = "enduid") -> DataFrame:
     """Global clustering coefficient: 3·triangles / wedges over the
     undirected simple graph → 1 row ``(n_triangles, n_wedges,
-    transitivity)``.  Wedges = Σ d(v)·(d(v)−1)/2 — one degree
-    aggregation over the canonical edge set; the triangle term reuses
-    the degree-ranked edge-iterator (O(m) shuffled bytes).  The ratio
+    transitivity)``.  Wedges = Σ d(v)·(d(v)−1)/2 over the degree table
+    of the degree-ranked orientation, whose edge-iterator also counts
+    the triangles (O(m) shuffled bytes).  The ratio
     is computed from exact integers and rounded to 6 dp, so any engine
     reproduces it bit-exactly."""
-    lo = F.least(F.col(src_col), F.col(dst_col))
-    hi = F.greatest(F.col(src_col), F.col(dst_col))
-    canon = (edges_df.where(F.col(src_col) != F.col(dst_col))
-             .select(lo.alias("lo"), hi.alias("hi")).distinct())
-    deg = (canon.select(F.col("lo").alias("v"))
-           .unionByName(canon.select(F.col("hi").alias("v")))
-           .groupBy("v").agg(F.count("*").alias("d")))
-    wedges = deg.agg(F.sum(F.expr("d * (d - 1) DIV 2"))
+    n_part, deg, oriented, nb_u, nb_v = _oriented(
+        edges_df, src_col, dst_col, 1_000_000)
+    wedges = deg.agg(F.sum(F.expr("deg * (deg - 1) DIV 2"))
                      .cast("long").alias("n_wedges"))
-    tri = triangle_count(canon, "lo", "hi")
-    return (tri.crossJoin(wedges)
+    return (_triangles(n_part, oriented, nb_u, nb_v).crossJoin(wedges)
             .select("n_triangles", "n_wedges",
                     F.round(F.lit(3) * F.col("n_triangles")
                             / F.greatest(F.col("n_wedges"), F.lit(1)), 6)
@@ -587,37 +643,33 @@ def hits(edges_df: DataFrame, iters: int = 5,
     in-edges, then hub(u) = Σ auth(v) over out-edges, each side
     sum-normalized per round (order-independent up to float summation
     noise — consumers should compare at ≤6 dp, like pagerank).  The
-    edge list is materialized once, hash-partitioned on each join key's
-    side; per round only the node-sized score frames shuffle.
+    edge list is materialized once; each round is one superstep, whose
+    two normalizing totals are read on the driver, and only the
+    node-sized score frames shuffle.
     """
-    edges = (edges_df.select(F.col(src_col).alias("src"),
-                             F.col(dst_col).alias("dst"))
-             .localCheckpoint(eager=True))
-    nodes = (edges.select(F.col("src").alias("uid"))
-             .unionByName(edges.select(F.col("dst").alias("uid")))
-             .distinct().localCheckpoint(eager=True))
-    hub = nodes.withColumn("h", F.lit(1.0))
-    auth = nodes.withColumn("a", F.lit(1.0))
-    for _ in range(iters):
-        a_new = (edges.join(hub.withColumnRenamed("uid", "src"), "src")
-                 .groupBy(F.col("dst").alias("uid"))
-                 .agg(F.sum("h").alias("a")))
-        a_tot = a_new.agg(F.sum("a")).collect()[0][0] or 1.0
-        auth = (nodes.join(a_new, "uid", "left")
-                .select("uid", (F.coalesce(F.col("a"), F.lit(0.0))
-                                / F.lit(float(a_tot))).alias("a"))
-                .localCheckpoint(eager=True))
-        h_new = (edges.join(auth.withColumnRenamed("uid", "dst"), "dst")
-                 .groupBy(F.col("src").alias("uid"))
-                 .agg(F.sum("a").alias("h")))
-        h_tot = h_new.agg(F.sum("h")).collect()[0][0] or 1.0
-        hub = (nodes.join(h_new, "uid", "left")
-               .select("uid", (F.coalesce(F.col("h"), F.lit(0.0))
-                               / F.lit(float(h_tot))).alias("h"))
-               .localCheckpoint(eager=True))
-    return (nodes.join(hub, "uid", "left").join(auth, "uid", "left")
-            .select("uid", F.coalesce(F.col("h"), F.lit(0.0)).alias("hub"),
-                    F.coalesce(F.col("a"), F.lit(0.0)).alias("authority")))
+    edges = _materialize(_directed(edges_df, "out", src_col, dst_col))
+    nodes = _materialize(_endpoints(edges))
+
+    def normalized(scores, col):
+        tot = scores.agg(F.sum(col)).collect()[0][0] or 1.0
+        return (nodes.join(scores, "uid", "left")
+                .select("uid", (F.coalesce(F.col(col), F.lit(0.0))
+                                / F.lit(float(tot))).alias(col)))
+
+    def step(state):
+        auth = _materialize(normalized(
+            edges.join(state.select(F.col("uid").alias("src"), "h"), "src")
+            .groupBy(F.col("dst").alias("uid")).agg(F.sum("h").alias("a")),
+            "a"))
+        hub = normalized(
+            edges.join(auth.withColumnRenamed("uid", "dst"), "dst")
+            .groupBy(F.col("src").alias("uid")).agg(F.sum("a").alias("h")),
+            "h")
+        return hub.join(auth, "uid")
+    state = nodes.select("uid", F.lit(1.0).alias("h"), F.lit(1.0).alias("a"))
+    return (_rounds("hits", state, step, iters)
+            .select("uid", F.col("h").alias("hub"),
+                    F.col("a").alias("authority")))
 
 
 def adamic_adar(edges_df: DataFrame, max_junction_degree: int = 4096,
@@ -680,14 +732,14 @@ def _power_iteration(algo: str, nodes_df: DataFrame, edges_df: DataFrame,
     vertices and the vertex frame with the summed contributions, and the
     dangling mass is read from the checkpointed ranks.
     """
-    edges = (edges_df.select(F.col("startuid").alias("uid"),
-                             F.col("enduid").alias("dst"))
-             .repartition("uid").localCheckpoint(eager=False))
+    edges = _materialize(edges_df.select(F.col("startuid").alias("uid"),
+                                         F.col("enduid").alias("dst"))
+                         .repartition("uid"), eager=False)
     out_deg = edges.groupBy("uid").agg(F.count("*").alias("deg"))
-    vertices = (nodes_df.select("uid").join(out_deg, "uid", "left")
-                .select("uid", F.coalesce("deg", F.lit(0)).alias("deg"),
-                        share.alias("share"))
-                .localCheckpoint(eager=False))
+    vertices = _materialize(
+        nodes_df.select("uid").join(out_deg, "uid", "left")
+        .select("uid", F.coalesce("deg", F.lit(0)).alias("deg"),
+                share.alias("share")), eager=False)
 
     def step(state, frontier):
         n, dangling = state.agg(
@@ -715,34 +767,25 @@ def bfs_paths(edges_df: DataFrame, seed_uids_df: DataFrame,
     reached node, reconstructed as an array of uids (seed … node).
 
     Deterministic: among equal-length paths the MIN-uid predecessor
-    wins at every hop, so any engine reproduces the same path.  Same
-    frontier/anti-join scheme as bfs_distances; the frontier carries
-    its path array, so per-round shuffle is frontier-sized × path
-    length (bounded by max_depth — at 100 TB keep max_depth small or
-    carry only the predecessor and reconstruct on demand).
+    wins at every hop, so any engine reproduces the same path.  A
+    min-propagation of ``(dist, path)`` on the superstep loop, like
+    bfs_distances; the frontier carries its path array, so per-round
+    shuffle is frontier-sized × path length (bounded by max_depth — at
+    100 TB keep max_depth small or carry only the predecessor and
+    reconstruct on demand).
     """
-    step = _directed(edges_df, direction).repartition("src").localCheckpoint(eager=True)
-    visited = (seed_uids_df.select("uid").distinct()
-               .withColumn("dist", F.lit(0))
-               .withColumn("path", F.array(F.col("uid"))))
-    frontier = visited.select("uid", "path")
-    for d in range(1, max_depth + 1):
-        # deterministic parent choice: lexicographically smallest
-        # (parent-path ‖ parent-uid) among same-depth predecessors
-        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
-               .select(F.col("dst").alias("uid"),
-                       F.concat(F.col("path"),
-                                F.array(F.col("dst"))).alias("path"))
-               .join(visited.select("uid"), "uid", "left_anti")
-               .groupBy("uid").agg(F.min("path").alias("path"))
-               .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        visited = (visited.unionByName(
-            nxt.withColumn("dist", F.lit(d)).select("uid", "dist", "path"))
-            .localCheckpoint(eager=True))
-        frontier = nxt.select("uid", "path")
-    return visited
+    step = _materialize(_directed(edges_df, direction), eager=False)
+    seeds = (seed_uids_df.select("uid").distinct()
+             .select("uid", F.struct(F.lit(0).alias("dist"),
+                                     F.array("uid").alias("path"))
+                     .cast("struct<dist:int,path:array<string>>")
+                     .alias("v")))
+    # the struct minimum is the shortest distance, then the
+    # lexicographically smallest path (parent path ‖ own uid)
+    msg = F.struct((F.col("v.dist") + 1).alias("dist"),
+                   F.concat("v.path", F.array("dst")).alias("path"))
+    return (_propagate("bfs_paths", step, seeds, max_depth, msg, F.min)[0]
+            .select("uid", "v.dist", "v.path"))
 
 
 def random_walks(edges_df: DataFrame, start_uids_df: DataFrame,
@@ -759,44 +802,42 @@ def random_walks(edges_df: DataFrame, start_uids_df: DataFrame,
     engines (a SQL oracle replays the identical walks), which is what a
     training pipeline needs for resumable embedding corpus generation.
 
-    Shape: adjacency lists build once (one groupBy, checkpointed and
-    reused every step); each step is ONE equi-join frontier⋈adjacency +
+    Shape: adjacency lists build once (one groupBy, materialized and
+    reused every step); each step is one superstep: ONE equi-join
+    walks⋈adjacency +
     an O(1) element_at pick — no per-step fan-out by degree, shuffled
     bytes are walks × (path so far).  Walks at isolated nodes stay put
     (path stops growing).  ``symmetrize`` unions the reversed edges
     first (walks on the undirected graph, the DeepWalk default).
     """
     from .text import hash60
-    e = edges_df.select(F.col("startuid").alias("src"),
-                        F.col("enduid").alias("dst"))
-    if symmetrize:
-        e = e.unionByName(e.select(F.col("dst").alias("src"),
-                                   F.col("src").alias("dst")))
-    adj = (e.distinct().groupBy("src")
-           .agg(F.array_sort(F.collect_set("dst")).alias("nbrs"))
-           .localCheckpoint(eager=True))
+    adj = _materialize(_directed(edges_df, "both" if symmetrize else "out")
+                       .distinct().groupBy("src")
+                       .agg(F.array_sort(F.collect_set("dst")).alias("nbrs")))
+
+    def step(walks):
+        t = F.col("t") + 1
+        h = hash60(F.concat_ws(":", F.lit(seed), F.col("walk_id"),
+                               t.cast("string")))
+        nxt = F.when(
+            F.coalesce(F.size("nbrs"), F.lit(0)) > 0,
+            F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1)
+                         .cast("int")))
+        return (walks.join(adj, walks["cur"] == adj["src"], "left")
+                .withColumn("__nxt", nxt)
+                .select("walk_id",
+                        F.coalesce("__nxt", "cur").alias("cur"),
+                        F.when(F.col("__nxt").isNull(), F.col("path"))
+                        .otherwise(F.concat_ws(">", "path", "__nxt"))
+                        .alias("path"), t.alias("t")))
     walks = (start_uids_df.select("uid")
              .select(F.col("uid").alias("cur"),
                      F.explode(F.sequence(
                          F.lit(0), F.lit(walks_per_node - 1))).alias("__w"))
              .select(F.concat_ws("#", "cur", "__w").alias("walk_id"),
-                     "cur", F.col("cur").alias("path")))
-    for t in range(1, walk_len + 1):
-        h = hash60(F.concat_ws(":", F.lit(seed), F.col("walk_id"),
-                               F.lit(str(t))))
-        nxt = F.when(
-            F.coalesce(F.size("nbrs"), F.lit(0)) > 0,
-            F.element_at("nbrs", (F.pmod(h, F.size("nbrs")) + 1)
-                         .cast("int")))
-        walks = (walks.join(adj, walks["cur"] == adj["src"], "left")
-                 .withColumn("__nxt", nxt)
-                 .select("walk_id",
-                         F.coalesce("__nxt", "cur").alias("cur"),
-                         F.when(F.col("__nxt").isNull(), F.col("path"))
-                         .otherwise(F.concat_ws(">", "path", "__nxt"))
-                         .alias("path"))
-                 .localCheckpoint(eager=True))
-    return walks.select("walk_id", "path")
+                     "cur", F.col("cur").alias("path"), F.lit(0).alias("t")))
+    return (_rounds("random_walks", walks, step, walk_len)
+            .select("walk_id", "path"))
 
 
 def dag_layers(edges_df: DataFrame, max_iter: int = 32) -> DataFrame:
@@ -804,61 +845,24 @@ def dag_layers(edges_df: DataFrame, max_iter: int = 32) -> DataFrame:
     longest directed path ending at ``v`` (sources sit at layer 0) —
     the dependency-scheduling / critical-path primitive.
 
-    Bellman-Ford-shaped iteration on negated lengths: each round joins
-    the current layer frame to the edge list and max-aggregates
-    ``layer(src) + 1`` into the destinations; converges in
-    graph-depth rounds (a (count, sum) fingerprint detects the
-    fixpoint — layers only grow, so the pair is stationary iff nothing
-    changed).  Warns and stops after ``max_iter`` rounds — a cycle
-    would otherwise run forever (layers are only defined on DAGs).
-
-    Scale: the edge list is partitioned once on ``src`` and reused
-    every round; per round only the node-sized layer frame shuffles.
-    Local/mid-scale note: per-round frames are row-heavy but
-    byte-light, so AQE's byte-based coalescing can starve the rounds
-    of tasks under the default 64 MB advisory — set
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` to a few MB
-    for iterative graph work (measured 4× on a 1M-edge DAG; the same
-    lesson as the triangle pair stages in BASELINE.md).
+    Max-propagation of ``layer + 1`` from every vertex at 0 on the
+    superstep loop: only vertices whose layer grew send, and the loop
+    halts in graph-depth + 1 rounds.  Warns and stops after
+    ``max_iter`` rounds — a cycle would otherwise run forever (layers
+    are only defined on DAGs).  The edge list is partitioned once on
+    ``src``.
     """
-    step = (edges_df.select(F.col("startuid").alias("src"),
-                            F.col("enduid").alias("dst"))
-            .distinct().repartition("src").localCheckpoint(eager=True))
-    # explicit parallelism for the per-round joins: AQE sizes stages by
-    # shuffled BYTES, but the compute here is row-proportional — a 1M-
-    # node layer frame compresses to ~40 MB and would coalesce onto 1-2
-    # tasks (the pair-explosion lesson from BASELINE.md, same cause)
-    np = max(step.rdd.getNumPartitions(),
-             edges_df.sparkSession.sparkContext.defaultParallelism)
-    nodes = (step.select(F.col("src").alias("uid"))
-             .unionByName(step.select(F.col("dst").alias("uid")))
-             .distinct())
-    layers = (nodes.withColumn("layer", F.lit(0).cast("long"))
-              .repartition(np, "uid").localCheckpoint(eager=True))
-    prev_fp = None
-    for i in range(max_iter):
-        inc = (step.join(layers.withColumnRenamed("uid", "src")
-                         .withColumnRenamed("layer", "__sl"), "src")
-               .groupBy(F.col("dst").alias("uid"))
-               .agg((F.max("__sl") + 1).alias("__cand")))
-        layers = (layers.join(inc, "uid", "left")
-                  .select("uid",
-                          F.greatest("layer", F.coalesce("__cand",
-                                                         F.lit(0)))
-                          .alias("layer"))
-                  .repartition(np, "uid")
-                  .localCheckpoint(eager=True))
-        fp = layers.agg(F.count(F.lit(1)).cast("long"),
-                        F.sum("layer").cast("long")).collect()[0]
-        fp = (fp[0], fp[1])
-        if fp == prev_fp:
-            return layers
-        prev_fp = fp
-    import warnings
-    warnings.warn(f"dag_layers did not converge in {max_iter} rounds — "
-                  "the graph likely contains a cycle; returning the "
-                  "partial layering", RuntimeWarning, stacklevel=2)
-    return layers
+    step = _materialize(_directed(edges_df, "out").distinct()
+                        .repartition("src"), eager=False)
+    layers, n = _propagate(
+        "dag_layers", step,
+        _endpoints(step).withColumn("v", F.lit(0).cast("long")), max_iter,
+        F.col("v") + 1, F.max)
+    if n:
+        warnings.warn(f"dag_layers did not converge in {max_iter} rounds — "
+                      "the graph likely contains a cycle; returning the "
+                      "partial layering", RuntimeWarning, stacklevel=2)
+    return layers.withColumnRenamed("v", "layer")
 
 
 def strongly_connected_components(edges_df: DataFrame,
@@ -878,100 +882,70 @@ def strongly_connected_components(edges_df: DataFrame,
     BFS from the roots *restricted to their own color class*.  Found
     components retire, the induced subgraph shrinks, repeat.
 
-    Scale shape: edge frames are (re-)checkpointed per outer round and
-    partitioned on the join key; every propagation/BFS step shuffles
-    only node-sized frames.  Rounds are bounded by the condensation
-    depth (outer) × graph diameter (inner).  As with
-    :func:`dag_layers`, lower the AQE advisory partition size for
-    byte-light/row-heavy graphs so rounds keep their task width.
+    The outer rounds are supersteps whose frontier is the unassigned
+    vertices, and both inner loops run on the same loop: the coloring is a
+    max-propagation of the uid over the remaining edges, the backward
+    reach a min-propagation of the root, seeded at the roots, over the
+    reversed edges whose endpoints share a color.  Edge frames are
+    materialized per outer round, partitioned on the join key.  Rounds
+    are bounded by the condensation depth (outer) × graph diameter
+    (inner); an inner loop that does not converge in ``max_inner``
+    rounds raises.
     """
-    base = (edges_df.select(F.col("startuid").alias("src"),
-                            F.col("enduid").alias("dst"))
-            .where(F.col("src") != F.col("dst")).distinct()
-            .localCheckpoint(eager=True))
-    remaining = (base.select(F.col("src").alias("uid"))
-                 .unionByName(base.select(F.col("dst").alias("uid")))
-                 .unionByName(edges_df.where(
-                     F.col("startuid") == F.col("enduid"))
-                     .select(F.col("startuid").alias("uid")))
-                 .distinct().localCheckpoint(eager=True))
-    empty = edges_df.sparkSession.createDataFrame(
-        [], "uid string, scc string")
-    assigned = None
-    # explicit per-round parallelism: the node-sized frames compress to
-    # a few MB, so AQE would coalesce the row-proportional join work
-    # onto 1-2 tasks (cf. the same fix in dag_layers / BASELINE.md)
-    np = max(base.rdd.getNumPartitions(),
-             edges_df.sparkSession.sparkContext.defaultParallelism)
-    for _ in range(max_outer):
-        if remaining.limit(1).count() == 0:
-            return assigned if assigned is not None else empty
-        er = (base.join(remaining.withColumnRenamed("uid", "src"), "src")
-              .join(remaining.withColumnRenamed("uid", "dst"), "dst")
-              .select("src", "dst").repartition(np, "src")
-              .localCheckpoint(eager=True))
-        # forward max-label propagation to fixpoint
-        color = remaining.withColumn("c", F.col("uid")) \
-            .repartition(np, "uid").localCheckpoint(eager=True)
-        for _i in range(max_inner):
-            inc = (er.join(color.select(F.col("uid").alias("src"),
-                                        F.col("c").alias("__in")), "src")
-                   .groupBy(F.col("dst").alias("uid"))
-                   .agg(F.max("__in").alias("__m")))
-            nxt = (color.join(inc, "uid", "left")
-                   .select("uid", F.greatest("c", F.coalesce(
-                       "__m", F.col("c"))).alias("c"))
-                   .repartition(np, "uid")
-                   .localCheckpoint(eager=True))
-            changed = (nxt.join(color.withColumnRenamed("c", "__old"),
-                                "uid")
-                       .where(F.col("c") != F.col("__old"))
-                       .limit(1).count())
-            color = nxt
-            if changed == 0:
-                break
-        else:
+    base = _materialize(_directed(edges_df, "out")
+                        .where(F.col("src") != F.col("dst")).distinct())
+
+    def peel(state, remaining):
+        ends = remaining.select("uid")
+        er = _materialize(
+            base.join(ends.withColumnRenamed("uid", "src"), "src")
+            .join(ends.withColumnRenamed("uid", "dst"), "dst")
+            .select("src", "dst").repartition("src"), eager=False)
+        color, n = _propagate(
+            "scc_color", er, ends.withColumn("v", F.col("uid")), max_inner,
+            F.col("v"), F.max)
+        if n:
             # an unconverged coloring would mint FALSE roots and split
             # real SCCs — wrong output, so fail loudly instead
             raise RuntimeError(
                 f"scc color propagation did not converge in {max_inner} "
                 "rounds (graph diameter exceeds max_inner) — raise "
                 "max_inner")
-        # backward BFS from the color roots inside their color class
-        roots = color.where(F.col("c") == F.col("uid")) \
-            .select("uid", F.col("c").alias("root"))
-        reach = roots.select("uid", "root").localCheckpoint(eager=True)
-        frontier = reach
-        for _i in range(max_inner):
-            step = (er.join(frontier.select(F.col("uid").alias("dst"),
-                                            "root"), "dst")
-                    .select(F.col("src").alias("uid"), "root")
-                    .join(color, "uid")
-                    .where(F.col("c") == F.col("root")).drop("c")
-                    .distinct()
-                    .join(reach.select("uid"), "uid", "left_anti")
-                    .localCheckpoint(eager=True))
-            if step.limit(1).count() == 0:
-                break
-            reach = reach.unionByName(step).localCheckpoint(eager=True)
-            frontier = step
-        else:
+        # backward reach from the color roots inside their color class:
+        # the reversed edges whose endpoints share a color
+        back = _materialize(
+            er.join(color.select(F.col("uid").alias("src"),
+                                 F.col("v").alias("c_src")), "src")
+            .join(color.select(F.col("uid").alias("dst"),
+                               F.col("v").alias("c_dst")), "dst")
+            .where(F.col("c_src") == F.col("c_dst"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            eager=False)
+        roots = color.where(F.col("v") == F.col("uid"))
+        reach, n = _propagate("scc_reach", back, roots, max_inner,
+                              F.col("v"), F.min)
+        if n:
             raise RuntimeError(
                 f"scc backward reach did not converge in {max_inner} "
                 "rounds — raise max_inner")
-        comp_min = reach.groupBy("root").agg(F.min("uid").alias("scc"))
-        found = (reach.join(comp_min, "root").select("uid", "scc")
-                 .localCheckpoint(eager=True))
-        assigned = found if assigned is None else \
-            assigned.unionByName(found).localCheckpoint(eager=True)
-        remaining = (remaining.join(found.select("uid"), "uid",
-                                    "left_anti")
-                     .localCheckpoint(eager=True))
-    import warnings
-    warnings.warn(f"scc did not finish in {max_outer} outer rounds; "
-                  "returning the partial assignment", RuntimeWarning,
-                  stacklevel=2)
-    return assigned
+        found = (reach.join(reach.groupBy("v").agg(F.min("uid")
+                                                    .alias("_found")), "v")
+                 .select("uid", "_found"))
+        scc = F.coalesce("scc", "_found")
+        return (state.join(found, "uid", "left")
+                .select("uid", scc.alias("scc"),
+                        scc.isNull().alias("_active")))
+    # every endpoint, nodes with only a self-loop included
+    state = _endpoints(_directed(edges_df, "out")).select(
+        "uid", F.lit(None).cast(edges_df.schema["startuid"].dataType)
+        .alias("scc"), F.lit(True).alias("_active"))
+    state, n = _supersteps("strongly_connected_components", state, peel,
+                           max_outer)
+    if n:
+        warnings.warn(f"scc did not finish in {max_outer} outer rounds; "
+                      "returning the partial assignment", RuntimeWarning,
+                      stacklevel=2)
+    return state.where(F.col("scc").isNotNull())
 
 
 def negative_samples(edges_df: DataFrame, k: int = 5,
@@ -991,14 +965,9 @@ def negative_samples(edges_df: DataFrame, k: int = 5,
     from pyspark.sql import Window as W
 
     from .text import hash60
-    e = edges_df.select(F.col("startuid").alias("src"),
-                        F.col("enduid").alias("dst"))
-    nodes = (e.select(F.col("src").alias("uid"))
-             .unionByName(e.select(F.col("dst").alias("uid")))
-             .distinct())
-    idx = (nodes.withColumn(
+    idx = (_endpoints(_directed(edges_df, "out")).withColumn(
         "__i", F.row_number().over(W.orderBy("uid")) - 1)
-        .localCheckpoint(eager=True))
+        .transform(_materialize))
     n = idx.count()
     cand = (idx.select(F.col("uid").alias("src"), "__i")
             .withColumn("__k", F.explode(F.sequence(
@@ -1010,9 +979,7 @@ def negative_samples(edges_df: DataFrame, k: int = 5,
                                  F.col("__i").alias("__pick")), "__pick")
             .where(F.col("src") != F.col("dst"))
             .select("src", "dst").distinct())
-    sym = e.unionByName(e.select(F.col("dst").alias("src"),
-                                 F.col("src").alias("dst")))
-    return cand.join(sym, ["src", "dst"], "left_anti")
+    return cand.join(_directed(edges_df, "both"), ["src", "dst"], "left_anti")
 
 
 def reciprocity(edges_df: DataFrame) -> DataFrame:
@@ -1021,9 +988,8 @@ def reciprocity(edges_df: DataFrame) -> DataFrame:
     ``(n_edges, n_reciprocated, reciprocity)``.  One self-semi-join on
     the swapped pair + two counts; the ratio is exact-integer division
     rounded to 6 dp."""
-    e = (edges_df.select(F.col("startuid").alias("src"),
-                         F.col("enduid").alias("dst"))
-         .where(F.col("src") != F.col("dst")).distinct())
+    e = _directed(edges_df, "out").where(F.col("src") != F.col("dst")) \
+        .distinct()
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     rec = e.join(rev, ["src", "dst"], "left_semi")
     return (e.agg(F.count("*").alias("n_edges"))
@@ -1042,18 +1008,14 @@ def k_truss(edges_df: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     The standard peel loop: per round, count per-edge triangle support
     with one wedge join + one confirm join (the same degree-ordered
     shape as triangle counting), drop under-supported edges, repeat to
-    the fixpoint.  The edge frame shrinks monotonically, so per-round
-    cost falls; warns if ``max_iter`` rounds don't reach the fixpoint
-    (result would be a superset).
+    the fixpoint, one superstep per round whose frontier is the edges it
+    peeled (the loop halts when a round peels none).  The edge frame
+    shrinks monotonically, so per-round cost falls; warns if
+    ``max_iter`` rounds don't reach the fixpoint (result would be a
+    superset).
     """
-    e = (edges_df.select(
-        F.least("startuid", "enduid").alias("a"),
-        F.greatest("startuid", "enduid").alias("b"))
-        .where(F.col("a") < F.col("b")).distinct()
-        .localCheckpoint(eager=True))
-    converged = False
-    prev_n = e.count()
-    for _ in range(max_iter):
+    def peel(state, peeled):
+        e = state.where("alive").select("a", "b")
         ab = e.select(F.col("a").alias("x"), F.col("b").alias("y1"))
         ac = e.select(F.col("a").alias("x"), F.col("b").alias("y2"))
         tri = (ab.join(ac, "x").where(F.col("y1") < F.col("y2"))
@@ -1067,22 +1029,22 @@ def k_truss(edges_df: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
                .unionByName(tri.select(F.col("tb").alias("a"),
                                        F.col("tc").alias("b")))
                .groupBy("a", "b").agg(F.count("*").alias("s")))
-        nxt = (e.join(sup, ["a", "b"], "left")
-               .where(F.coalesce("s", F.lit(0)) >= k - 2)
-               .select("a", "b").localCheckpoint(eager=True))
-        n = nxt.count()
-        converged = n == prev_n          # reuse last round's count
-        prev_n = n
-        e = nxt
-        if converged:
-            break
-    if not converged:
-        import warnings
+        keep = F.coalesce("s", F.lit(0)) >= k - 2
+        return (e.join(sup, ["a", "b"], "left")
+                .select("a", "b", keep.alias("alive"),
+                        (~keep).alias("_active")))
+    state = (edges_df.select(F.least("startuid", "enduid").alias("a"),
+                             F.greatest("startuid", "enduid").alias("b"))
+             .where(F.col("a") < F.col("b")).distinct()
+             .select("a", "b", F.lit(True).alias("alive"),
+                     F.lit(True).alias("_active")))
+    state, n = _supersteps("k_truss", state, peel, max_iter)
+    if n:
         warnings.warn(
             f"k_truss: peel loop did not reach a fixpoint in "
             f"{max_iter} rounds; result is a superset. Raise max_iter.",
             RuntimeWarning, stacklevel=2)
-    return e
+    return state.where("alive").select("a", "b")
 
 
 def closeness_centrality(edges_df: DataFrame, sources_df: DataFrame,
@@ -1105,32 +1067,23 @@ def closeness_centrality(edges_df: DataFrame, sources_df: DataFrame,
     division — associative and cross-engine exact (no float
     accumulation order anywhere).
 
-    Every round shuffles only the new frontier (anti-join against the
-    per-source visited set); the edge list is repartitioned on ``src``
-    once and checkpointed, so each expansion is a single co-located
-    join at scale.
+    A min-propagation of ``dist + 1`` keyed on ``(source, uid)`` on the
+    superstep loop: every round shuffles only the new frontier's
+    messages; the edge list is repartitioned on ``src`` once and
+    materialized, so each expansion is a single co-located join at
+    scale.
     """
-    step = _directed(edges_df, direction).distinct().repartition("src").localCheckpoint(eager=True)
-    visited = (sources_df.select(F.col("uid").alias("source")).distinct()
-               .select("source", F.col("source").alias("uid"),
-                       F.lit(0).alias("dist")))
-    frontier = visited.select("source", "uid")
-    for d in range(1, max_depth + 1):
-        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
-               .select("source", F.col("dst").alias("uid")).distinct()
-               .join(visited.select("source", "uid"),
-                     ["source", "uid"], "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        visited = (visited.unionByName(
-            nxt.withColumn("dist", F.lit(d))).localCheckpoint(eager=True))
-        frontier = nxt
-    lcm = 1
-    for d in range(2, max_depth + 1):
-        lcm = lcm * d // math.gcd(lcm, d)
-    per_d = (visited.where(F.col("dist") > 0)
-             .groupBy("source", "dist").agg(F.count("*").alias("c")))
+    step = _materialize(_directed(edges_df, direction).distinct()
+                        .repartition("src"), eager=False)
+    seeds = (sources_df.select(F.col("uid").alias("source")).distinct()
+             .select("source", F.col("source").alias("uid"),
+                     F.lit(0).alias("v")))
+    visited = _propagate("closeness_centrality", step, seeds, max_depth,
+                         F.col("v") + 1, F.min)[0]
+    lcm = math.lcm(*range(1, max_depth + 1))
+    per_d = (visited.where(F.col("v") > 0)
+             .groupBy("source", F.col("v").alias("dist"))
+             .agg(F.count("*").alias("c")))
     return (per_d.groupBy("source")
             .agg(F.sum("c").cast("long").alias("reached"),
                  F.sum(F.col("c") * F.col("dist")).cast("long")
@@ -1160,46 +1113,15 @@ def local_clustering(edges_df: DataFrame,
     (never the wedge stream).  The division is one integer-fed IEEE op,
     so the coefficient is engine-portable.
     """
-    n_part = edges_df.sparkSession.sparkContext.defaultParallelism * 2
-    und = (edges_df
-           .select(F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-                   F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"))
-           .where(F.col("lo") != F.col("hi"))
-           .repartition(n_part, "lo", "hi")
-           .dropDuplicates(["lo", "hi"])
-           .localCheckpoint(eager=True))
-    deg = (und.select(F.col("lo").alias("v"))
-           .unionByName(und.select(F.col("hi").alias("v")))
-           .groupBy("v").agg(F.count("*").alias("deg"))
-           .localCheckpoint(eager=True))
-    n_nodes = deg.count()
-    small = n_nodes <= broadcast_max_nodes
-    deg_b = F.broadcast(deg) if small else deg
-    ranked = und \
-        .join(deg_b.withColumnRenamed("v", "lo")
-                   .withColumnRenamed("deg", "deg_lo"), "lo") \
-        .join(deg_b.withColumnRenamed("v", "hi")
-                   .withColumnRenamed("deg", "deg_hi"), "hi")
-    lo_first = (F.col("deg_lo") < F.col("deg_hi")) | \
-        ((F.col("deg_lo") == F.col("deg_hi")) & (F.col("lo") < F.col("hi")))
-    oriented = ranked.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("src"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("dst")) \
-        .localCheckpoint(eager=True)
-    adj = (oriented.groupBy("src")
-           .agg(F.collect_list("dst").alias("nbrs"))
-           .localCheckpoint(eager=True))
-    nb_u = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("nb_u"))
-    nb_v = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nb_v"))
-    if small:
-        nb_u, nb_v = F.broadcast(nb_u), F.broadcast(nb_v)
+    n_part, deg, oriented, nb_u, nb_v = _oriented(
+        edges_df, src_col, dst_col, broadcast_max_nodes)
     closed = (oriented.repartition(n_part)
               .join(nb_u, F.col("src") == F.col("u"))
               .join(nb_v, F.col("dst") == F.col("v"))
               .select("src", "dst",
                       F.array_intersect("nb_u", "nb_v").alias("c"))
               .where(F.size("c") > 0)
-              .localCheckpoint(eager=True))
+              .transform(_materialize))
     per_node = (closed.select(F.col("src").alias("v"),
                               F.size("c").alias("t"))
                 .unionByName(closed.select(F.col("dst").alias("v"),
@@ -1228,47 +1150,46 @@ def betweenness_sampled(edges_df: DataFrame, sources_df: DataFrame,
     way betweenness is computed on graphs too large for the O(V·E)
     full sweep.
 
-    Forward: one (source, uid)-keyed frontier carries sigma (the exact
-    integer shortest-path count, summed over predecessors); k sources
-    ride the key, not the loop.  The shortest-path DAG is recovered
-    with one edge join (BFS levels are consecutive, so ``dist_w =
-    dist_v + 1`` identifies DAG edges).  Backward: depth layers sweep
-    deepest-first; each dependency term ``sigma_v/sigma_w * (1 +
-    delta_w)`` is rounded to 9 dp and accumulated in DECIMAL so the
-    layer sums are associative — bit-stable across partitionings and
-    engines (the SQL oracle replays the same ladder).
+    Forward, on the superstep loop: one (source, uid)-keyed frontier
+    carries sigma (the exact integer shortest-path count, summed over
+    predecessors); k sources ride the key, not the loop.  The
+    shortest-path DAG is recovered with one edge join (BFS levels are
+    consecutive, so ``dist_w = dist_v + 1`` identifies DAG edges).
+    Backward: depth layers sweep deepest-first; each dependency term
+    ``sigma_v/sigma_w * (1 + delta_w)`` is rounded to 9 dp and
+    accumulated in DECIMAL so the layer sums are associative —
+    bit-stable across partitionings and engines (the SQL oracle
+    replays the same ladder).
 
     Rounds: max_depth forward + max_depth backward, each a keyed
     join + aggregation over frontier/layer-sized frames only.
     """
-    step = _directed(edges_df, direction).distinct().repartition("src").localCheckpoint(eager=True)
-    cur = (sources_df.select(F.col("uid").alias("source")).distinct()
-           .select("source", F.col("source").alias("uid"),
-                   F.lit(0).alias("dist"),
-                   F.lit(1).cast("long").alias("sigma"))
-           .localCheckpoint(eager=True))
-    layers = {0: cur}
-    visited = cur.select("source", "uid")
-    for d in range(1, max_depth + 1):
-        nxt = (step.join(cur.select("source",
-                                    F.col("uid").alias("src"), "sigma"),
-                         "src")
-               .select("source", F.col("dst").alias("uid"), "sigma")
-               .join(visited, ["source", "uid"], "left_anti")
-               .groupBy("source", "uid")
-               .agg(F.sum("sigma").cast("long").alias("sigma"))
-               .withColumn("dist", F.lit(d))
-               .localCheckpoint(eager=True))
-        if nxt.limit(1).count() == 0:
-            break
-        layers[d] = nxt
-        visited = (visited.unionByName(nxt.select("source", "uid"))
-                   .localCheckpoint(eager=True))
-        cur = nxt
-    maxd = max(layers)
-    all_v = layers[0]
-    for d in range(1, maxd + 1):
-        all_v = all_v.unionByName(layers[d])
+    step = _materialize(_directed(edges_df, direction).distinct()
+                        .repartition("src"), eager=False)
+
+    def forward(state, frontier):
+        # the frontier is the layer reached last superstep: its rows
+        # reach their unvisited successors one hop further, summing sigma
+        nxt = (step.join(frontier.withColumnRenamed("uid", "src"), "src")
+               .select("source", F.col("dst").alias("uid"),
+                       (F.col("dist") + 1).alias("dist"), "sigma")
+               .join(state.select("source", "uid"), ["source", "uid"],
+                     "left_anti")
+               .groupBy("source", "uid", "dist")
+               .agg(F.sum("sigma").cast("long").alias("sigma")))
+        return (state.withColumn("_active", F.lit(False))
+                .unionByName(nxt.withColumn("_active", F.lit(True))))
+    all_v = _supersteps(
+        "betweenness_sampled",
+        sources_df.select(F.col("uid").alias("source")).distinct()
+        .select("source", F.col("source").alias("uid"),
+                F.lit(0).alias("dist"), F.lit(1).cast("long").alias("sigma"),
+                F.lit(True).alias("_active")),
+        forward, max_depth)[0]
+    maxd = all_v.agg(F.max("dist")).first()[0]
+
+    def layer(d):
+        return all_v.where(F.col("dist") == d).select("source", "uid")
     # shortest-path DAG edges: (v at dist) -> (w at dist+1)
     sp = (all_v.select("source", F.col("uid").alias("v"),
                        F.col("dist").alias("dv"),
@@ -1281,10 +1202,10 @@ def betweenness_sampled(edges_df: DataFrame, sources_df: DataFrame,
           .where(F.col("dw") == F.col("dv") + 1)
           .select("source", "v", F.col("dst").alias("w"),
                   "dv", "sv", "sw")
-          .localCheckpoint(eager=True))
+          .transform(_materialize))
     # backward dependency sweep, deepest layer first
-    deltas = {maxd: layers[maxd].select(
-        "source", "uid", F.lit(0).cast("decimal(28,9)").alias("delta"))}
+    deltas = {maxd: layer(maxd).withColumn(
+        "delta", F.lit(0).cast("decimal(28,9)"))}
     for d in range(maxd - 1, -1, -1):
         dw = deltas[d + 1].select("source",
                                   F.col("uid").alias("w"),
@@ -1297,16 +1218,14 @@ def betweenness_sampled(edges_df: DataFrame, sources_df: DataFrame,
                .join(dw, ["source", "w"], "left")
                .groupBy("source", F.col("v").alias("uid"))
                .agg(F.sum(term).cast("decimal(28,9)").alias("delta")))
-        deltas[d] = (layers[d].select("source", "uid")
-                     .join(acc, ["source", "uid"], "left")
+        deltas[d] = (layer(d).join(acc, ["source", "uid"], "left")
                      .select("source", "uid",
                              F.coalesce(F.col("delta"),
                                         F.lit(0).cast("decimal(28,9)"))
                              .alias("delta"))
-                     .localCheckpoint(eager=True))
-    contrib = deltas[1] if 1 in deltas else None
-    for d in range(2, maxd + 1):
-        contrib = contrib.unionByName(deltas[d])
+                     .transform(_materialize))
+    contrib = reduce(DataFrame.unionByName,
+                     [deltas[d] for d in range(1, maxd + 1)])
     return (contrib.groupBy("uid")
             .agg(F.sum("delta").cast("decimal(38,9)").alias("_b"))
             .select("uid", F.round(F.col("_b").cast("double"), 6)
@@ -1325,30 +1244,28 @@ def hits_integer(edges_df: DataFrame, iters: int = 2,
     replay — no float accumulation anywhere.
 
     Returns ``(uid, hub, authority)`` (longs; nodes missing a side
-    score 0).  Each iteration is two keyed join+sum shuffles over the
-    edge frame, which is hash-partitioned once and checkpointed.
+    score 0).  Each iteration is one superstep of two keyed join+sum
+    shuffles over the edge frame, which is hash-partitioned once and
+    materialized.
     """
-    edges = (edges_df.select(F.col(src_col).alias("s"),
-                             F.col(dst_col).alias("d"))
-             .distinct().repartition("s").localCheckpoint(eager=True))
-    auth = (edges.select(F.col("d").alias("uid")).distinct()
-            .withColumn("a", F.lit(1).cast("long")))
-    hub = None
-    for _ in range(iters):
-        hub = (edges.join(auth.select(F.col("uid").alias("d"), "a"), "d")
-               .groupBy(F.col("s").alias("uid"))
-               .agg(F.sum("a").cast("long").alias("h"))
-               .localCheckpoint(eager=True))
-        auth = (edges.join(hub.select(F.col("uid").alias("s"), "h"), "s")
-                .groupBy(F.col("d").alias("uid"))
-                .agg(F.sum("h").cast("long").alias("a"))
-                .localCheckpoint(eager=True))
-    return (hub.join(auth, "uid", "full")
-            .select("uid",
-                    F.coalesce(F.col("h"), F.lit(0)).cast("long")
-                    .alias("hub"),
-                    F.coalesce(F.col("a"), F.lit(0)).cast("long")
-                    .alias("authority")))
+    edges = _materialize(_directed(edges_df, "out", src_col, dst_col)
+                         .distinct().repartition("src"))
+
+    def step(state):
+        hub = (edges.join(state.select(F.col("uid").alias("dst"), "a"), "dst")
+               .groupBy(F.col("src").alias("uid"))
+               .agg(F.sum("a").cast("long").alias("hub")))
+        auth = (edges.join(hub.withColumnRenamed("uid", "src"), "src")
+                .groupBy(F.col("dst").alias("uid"))
+                .agg(F.sum("hub").cast("long").alias("a")))
+        return (hub.join(auth, "uid", "full")
+                .select("uid", F.coalesce("hub", F.lit(0)).alias("hub"),
+                        F.coalesce("a", F.lit(0)).alias("a")))
+    state = (edges.select(F.col("dst").alias("uid")).distinct()
+             .select("uid", F.lit(0).cast("long").alias("hub"),
+                     F.lit(1).cast("long").alias("a")))
+    return (_rounds("hits_integer", state, step, iters)
+            .select("uid", "hub", F.col("a").alias("authority")))
 
 
 def katz_walks(edges_df: DataFrame, iters: int = 3, beta_inv: int = 8,
@@ -1360,28 +1277,26 @@ def katz_walks(edges_df: DataFrame, iters: int = 3, beta_inv: int = 8,
     ``walks_k(v)`` counts length-k walks ending at v (w_k = A^T
     w_{k-1} over integer vectors).  Dividing by beta_inv^iters gives
     the usual truncated Katz score; keeping the integer avoids every
-    cross-engine float question.  One keyed join+sum per length."""
-    edges = (edges_df.select(F.col(src_col).alias("s"),
-                             F.col(dst_col).alias("d"))
-             .repartition("s").localCheckpoint(eager=True))
-    nodes = (edges.select(F.col("s").alias("uid"))
-             .unionByName(edges.select(F.col("d").alias("uid")))
-             .distinct().localCheckpoint(eager=True))
-    w = nodes.withColumn("w", F.lit(1).cast("long"))
-    total = nodes.withColumn("k", F.lit(0).cast("long"))
-    for k in range(1, iters + 1):
-        w = (edges.join(w.select(F.col("uid").alias("s"), "w"), "s")
-             .groupBy(F.col("d").alias("uid"))
-             .agg(F.sum("w").cast("long").alias("w"))
-             .localCheckpoint(eager=True))
-        scale = beta_inv ** (iters - k)
-        total = (total.join(w, "uid", "left")
-                 .select("uid",
-                         (F.col("k") + F.lit(scale)
-                          * F.coalesce(F.col("w"), F.lit(0)))
-                         .cast("long").alias("k"))
-                 .localCheckpoint(eager=True))
-    return total.select("uid", F.col("k").alias("katz_scaled"))
+    cross-engine float question.  One keyed join+sum per length, one
+    superstep each; the sum accumulates by Horner's rule,
+    ``k ← beta_inv·k + walks_k``."""
+    edges = _materialize(_directed(edges_df, "out", src_col, dst_col)
+                         .repartition("src"))
+
+    def step(state):
+        # Horner: k' = beta_inv·k + w' sums beta_inv^(iters-k)·walks_k
+        w = (edges.join(state.withColumnRenamed("uid", "src"), "src")
+             .groupBy(F.col("dst").alias("uid"))
+             .agg(F.sum("w").cast("long").alias("_w")))
+        w_new = F.coalesce(F.col("_w"), F.lit(0).cast("long"))
+        return (state.join(w, "uid", "left")
+                .select("uid", w_new.alias("w"),
+                        (F.lit(beta_inv) * F.col("k") + w_new)
+                        .cast("long").alias("k")))
+    state = _endpoints(edges).select("uid", F.lit(1).cast("long").alias("w"),
+                                     F.lit(0).cast("long").alias("k"))
+    return (_rounds("katz_walks", state, step, iters)
+            .select("uid", F.col("k").alias("katz_scaled")))
 
 
 def maximal_independent_set(edges_df: DataFrame, rounds: int = 6,
@@ -1400,63 +1315,58 @@ def maximal_independent_set(edges_df: DataFrame, rounds: int = 6,
     MIS is the classic symmetry-breaking primitive (scheduling,
     graph contraction, parallel coloring); hash priorities make the
     output a pure function of the node ids — engine- and
-    partitioning-portable.  Per round: one neighbor min-join + one
-    anti-join, frontier-sized shuffles only.
+    partitioning-portable.  One superstep per round, whose frontier is
+    the alive nodes: one neighbor min-aggregate over the alive edges
+    and the joins that retire the winners and their neighbors.
 
     Returns ``(uid)`` — the selected set.
     """
-    sym = (edges_df.select(F.col(src_col).alias("u"),
-                           F.col(dst_col).alias("v"))
-           .where(F.col("u") != F.col("v"))
-           .unionByName(edges_df.select(F.col(dst_col).alias("u"),
-                                        F.col(src_col).alias("v"))
-                        .where(F.col("u") != F.col("v")))
-           .distinct().repartition("u").localCheckpoint(eager=True))
+    sym = _materialize(
+        _undirected(edges_df, src_col, dst_col)
+        .where(F.col("src") != F.col("dst")).repartition("src"))
 
     def pri(col):
         return F.conv(F.substring(
             F.md5(F.concat(F.lit(salt + ":"), col)), 1, 15), 16, 10) \
             .cast("long")
 
-    alive_nodes = (sym.select(F.col("u").alias("uid")).distinct()
-                   .localCheckpoint(eager=True))
-    alive_edges = sym
-    selected = None
-    for _ in range(rounds):
-        if alive_nodes.limit(1).count() == 0:
-            break
-        nbr_min = (alive_edges
-                   .groupBy(F.col("u").alias("uid"))
-                   .agg(F.min(F.struct(pri(F.col("v")).alias("p"),
-                                       F.col("v").alias("id")))
+    def step(state, alive):
+        # alive: (uid, sel) of the nodes still in the graph
+        ends = alive.select("uid")
+        edges = (sym.join(ends.withColumnRenamed("uid", "src"), "src",
+                          "left_semi")
+                 .join(ends.withColumnRenamed("uid", "dst"), "dst",
+                       "left_semi"))
+        nbr_min = (edges.groupBy(F.col("src").alias("uid"))
+                   .agg(F.min(F.struct(pri(F.col("dst")).alias("p"),
+                                       F.col("dst").alias("id")))
                         .alias("nm")))
-        cand = (alive_nodes.join(nbr_min, "uid", "left")
-                .where(F.col("nm").isNull()
-                       | (F.struct(pri(F.col("uid")).alias("p"),
-                                   F.col("uid").alias("id"))
-                          < F.col("nm")))
-                .select("uid").localCheckpoint(eager=True))
-        selected = cand if selected is None \
-            else selected.unionByName(cand)
-        removed = (cand.unionByName(
-            alive_edges.join(cand.withColumnRenamed("uid", "u"), "u")
-            .select(F.col("v").alias("uid"))).distinct()
-            .localCheckpoint(eager=True))
-        alive_nodes = (alive_nodes.join(removed, "uid", "left_anti")
-                       .localCheckpoint(eager=True))
-        alive_edges = (alive_edges
-                       .join(alive_nodes.withColumnRenamed("uid", "u"),
-                             "u", "left_semi")
-                       .join(alive_nodes.withColumnRenamed("uid", "v"),
-                             "v", "left_semi")
-                       .localCheckpoint(eager=True))
-    if alive_nodes.limit(1).count() > 0:
-        import warnings
+        win = (ends.join(nbr_min, "uid", "left")
+               .where(F.col("nm").isNull()
+                      | (F.struct(pri(F.col("uid")).alias("p"),
+                                  F.col("uid").alias("id"))
+                         < F.col("nm")))
+               .select("uid", F.lit(True).alias("_win")))
+        # winners join the set; they and their alive neighbours leave
+        gone = (edges.join(win.withColumnRenamed("uid", "src"), "src")
+                .select(F.col("dst").alias("uid"), F.lit(False).alias("_win"))
+                .unionByName(win)
+                .groupBy("uid").agg(F.max("_win").alias("_win")))
+        return (state.join(gone, "uid", "left")
+                .select("uid", (F.col("sel") | F.coalesce(
+                            "_win", F.lit(False))).alias("sel"),
+                        (F.col("_active") & F.col("_win").isNull())
+                        .alias("_active")))
+    state = (sym.select(F.col("src").alias("uid")).distinct()
+             .select("uid", F.lit(False).alias("sel"),
+                     F.lit(True).alias("_active")))
+    state, n = _supersteps("maximal_independent_set", state, step, rounds)
+    if n:
         warnings.warn(
             f"maximal_independent_set: not converged in {rounds} rounds; "
             "result is independent but may not be maximal.",
             RuntimeWarning, stacklevel=2)
-    return selected.select("uid")
+    return state.where("sel").select("uid")
 
 
 def maximal_matching(edges_df: DataFrame, rounds: int = 6,
@@ -1472,8 +1382,9 @@ def maximal_matching(edges_df: DataFrame, rounds: int = 6,
     set is the classic 2-approximate VERTEX COVER.
 
     Deterministic (pure function of edge ids), O(log n) expected
-    rounds, frontier-sized shuffles; ``rounds`` fixes the oracle
-    replay horizon — non-convergence warns.
+    rounds, one superstep each whose frontier is the alive edges;
+    ``rounds`` fixes the oracle replay horizon — non-convergence
+    warns.
 
     Returns ``(u, v)`` — the matched edges.
     """
@@ -1482,8 +1393,7 @@ def maximal_matching(edges_df: DataFrame, rounds: int = 6,
                            F.greatest(F.col(src_col), F.col(dst_col))
                            .alias("v"))
            .where(F.col("u") != F.col("v"))
-           .dropDuplicates(["u", "v"])
-           .localCheckpoint(eager=True))
+           .dropDuplicates(["u", "v"]))
 
     def pri():
         return F.conv(F.substring(
@@ -1491,56 +1401,58 @@ def maximal_matching(edges_df: DataFrame, rounds: int = 6,
                            F.lit("|"), F.col("v"))), 1, 15), 16, 10) \
             .cast("long")
 
-    alive = und.withColumn("p", pri()).localCheckpoint(eager=True)
-    matched = None
-    for _ in range(rounds):
-        if alive.limit(1).count() == 0:
-            break
+    def step(state, alive):
         inc = (alive.select(F.col("u").alias("n"), "p", "u", "v")
                .unionByName(alive.select(F.col("v").alias("n"),
                                          "p", "u", "v")))
         two = (inc.groupBy("n")
                .agg(F.slice(F.array_sort(F.collect_list(
                    F.struct("p", "u", "v"))), 1, 2).alias("t2")))
-        cand = (inc.join(two, "n")
-                .withColumn(
-                    "rival",
-                    F.when((F.col("t2")[0]["u"] == F.col("u"))
-                           & (F.col("t2")[0]["v"] == F.col("v")),
-                           F.get(F.col("t2"), 1))
-                    .otherwise(F.get(F.col("t2"), 0)))
-                .withColumn(
-                    "wins",
-                    F.col("rival").isNull()
-                    | (F.struct("p", "u", "v") < F.col("rival")))
-                .groupBy("u", "v")
-                .agg(F.min(F.col("wins").cast("int")).alias("all_win"))
-                .where(F.col("all_win") == 1)
-                .select("u", "v").localCheckpoint(eager=True))
-        matched = cand if matched is None else matched.unionByName(cand)
-        used = (cand.select(F.col("u").alias("n"))
-                .unionByName(cand.select(F.col("v").alias("n")))
-                .distinct().localCheckpoint(eager=True))
-        alive = (alive
-                 .join(used.withColumnRenamed("n", "u"), "u",
-                       "left_anti")
-                 .join(used.withColumnRenamed("n", "v"), "v",
-                       "left_anti")
-                 .select("u", "v", "p")
-                 .localCheckpoint(eager=True))
-    if alive.limit(1).count() > 0:
-        import warnings
+        won = (inc.join(two, "n")
+               .withColumn(
+                   "rival",
+                   F.when((F.col("t2")[0]["u"] == F.col("u"))
+                          & (F.col("t2")[0]["v"] == F.col("v")),
+                          F.get(F.col("t2"), 1))
+                   .otherwise(F.get(F.col("t2"), 0)))
+               .withColumn(
+                   "wins",
+                   F.col("rival").isNull()
+                   | (F.struct("p", "u", "v") < F.col("rival")))
+               .groupBy("u", "v")
+               .agg(F.min(F.col("wins").cast("int")).alias("all_win"))
+               .where(F.col("all_win") == 1)
+               .select("u", "v", F.lit(True).alias("_won"))
+               .transform(_materialize))
+        used = (won.select(F.col("u").alias("n"))
+                .unionByName(won.select(F.col("v").alias("n"))).distinct()
+                .withColumn("_used", F.lit(True)))
+        # winners join the matching; every edge touching them leaves
+        return (state.join(won, ["u", "v"], "left")
+                .join(used.withColumnRenamed("n", "u")
+                      .withColumnRenamed("_used", "_uu"), "u", "left")
+                .join(used.withColumnRenamed("n", "v")
+                      .withColumnRenamed("_used", "_uv"), "v", "left")
+                .select("u", "v", "p",
+                        (F.col("won") | F.col("_won").isNotNull())
+                        .alias("won"),
+                        (F.col("_active") & F.col("_uu").isNull()
+                         & F.col("_uv").isNull()).alias("_active")))
+    state = und.select("u", "v", pri().alias("p"), F.lit(False).alias("won"),
+                       F.lit(True).alias("_active"))
+    state, n = _supersteps("maximal_matching", state, step, rounds)
+    if n:
         warnings.warn(
             f"maximal_matching: not converged in {rounds} rounds; "
             "matching is valid but may not be maximal.",
             RuntimeWarning, stacklevel=2)
-    return matched.select("u", "v")
+    return state.where("won").select("u", "v")
 
 
 def boruvka_msf(edges_df: DataFrame, max_rounds: int = 12) -> DataFrame:
     """Minimum spanning forest by Borůvka's algorithm — THE textbook
     MST formulation for bulk-synchronous engines (every round is two
-    joins + one windowed argmin, components at least halve, so
+    joins + one argmin aggregate, components at least halve, so
     O(log n) rounds regardless of cluster size; Kruskal/Prim are
     sequential union-find/heap scans and do not distribute).
 
@@ -1549,40 +1461,35 @@ def boruvka_msf(edges_df: DataFrame, max_rounds: int = 12) -> DataFrame:
     (w, src, dst), so the forest is unique and engine-replayable even
     with duplicate weights.  Returns (src, dst, w) forest edges.
 
-    Each round: label endpoints with their current component, keep
-    cross-component edges, pick each component's minimum outgoing edge
-    (row_number over the symmetrized frame), add to the forest, then
-    contract via pointer jumping: every component hooks across its
-    picked edge (parent = partner), the unique 2-cycles (the merged
-    group's globally-min edge is picked by BOTH endpoints under a
-    total order) are broken to the smaller id, and parent pointers
-    double until fixpoint — O(log n) jumps on the component-sized
-    frame, never a diameter-bound label propagation.  Component
-    labels only NAME the sets (min-edge selection groups by set), so
-    any relabeling that preserves the partition yields the same
-    forest — which is what lets a SQL oracle replay the rounds with a
+    Each round is one superstep over the edge frame, every edge
+    labelled with its endpoints' components; its frontier is the
+    cross-component edges, and the loop halts when none is left.  Pick
+    each component's minimum outgoing edge (a struct-min over the
+    symmetrized frame), mark it as a forest edge, then contract via
+    pointer jumping: every component hooks across its picked edge
+    (parent = partner), the unique 2-cycles (the merged group's
+    globally-min edge is picked by BOTH endpoints under a total order)
+    are broken to the smaller id, and parent pointers double until
+    fixpoint on the superstep loop — O(log n) jumps on the
+    component-sized frame, never a diameter-bound label propagation —
+    and the edges take their endpoints' new labels.  Component labels
+    only NAME the sets (min-edge selection groups by set), so any
+    relabeling that preserves the partition yields the same forest —
+    which is what lets a SQL oracle replay the rounds with a
     reachability-closure relabel instead.
     """
-    from pyspark.sql.window import Window
+    def jump(parent, frontier):
+        # one pointer doubling; a row is active while its parent moves
+        gp = parent.select(F.col("c").alias("g_c"),
+                           F.col("parent").alias("g_p"))
+        up = F.coalesce("g_p", "parent")
+        return (parent.join(gp, F.col("parent") == F.col("g_c"), "left")
+                .select("c", up.alias("parent"),
+                        (up != F.col("parent")).alias("_active")))
 
-    edges = (edges_df.select("src", "dst", F.col("w").cast("long")
-                             .alias("w"))
-             .distinct().localCheckpoint(eager=True))
-    nodes = (edges.select(F.col("src").alias("uid"))
-             .unionByName(edges.select(F.col("dst").alias("uid")))
-             .distinct().localCheckpoint(eager=True))
-    forest = edges.limit(0).localCheckpoint(eager=True)
-    comp = nodes.select("uid", F.col("uid").alias("component"))
-    for _ in range(max_rounds):
-        ec = (edges
-              .join(comp.select(F.col("uid").alias("src"),
-                                F.col("component").alias("ca")), "src")
-              .join(comp.select(F.col("uid").alias("dst"),
-                                F.col("component").alias("cb")), "dst")
-              .where(F.col("ca") != F.col("cb")))
-        ec = checkpoint_reset_stats(ec)
-        if ec.limit(1).count() == 0:
-            break
+    def contract(state, ec):
+        # ec: the cross-component edges, each endpoint labelled with its
+        # component (ca, cb)
         sym = (ec.select(F.col("ca").alias("c"), F.col("cb").alias("o"),
                          "w", "src", "dst")
                .unionByName(ec.select(F.col("cb").alias("c"),
@@ -1600,9 +1507,6 @@ def boruvka_msf(edges_df: DataFrame, max_rounds: int = 12) -> DataFrame:
                           F.col("m.dst").alias("dst"),
                           F.col("m.o").alias("o")))
         picked = checkpoint_reset_stats(picked)
-        sel = picked.select("src", "dst", "w").distinct()
-        forest = checkpoint_reset_stats(
-            forest.unionByName(sel).distinct())
         # hook across the picked edge; break the mutual-pick 2-cycles
         # toward the smaller id, then pointer-double to the roots
         hook = picked.select("c", F.col("o").alias("parent"))
@@ -1614,24 +1518,27 @@ def boruvka_msf(edges_df: DataFrame, max_rounds: int = 12) -> DataFrame:
                                  & (F.col("c") < F.col("parent")),
                                  F.col("c"))
                           .otherwise(F.col("parent")).alias("parent")))
-        parent = checkpoint_reset_stats(parent)
-        while True:
-            gp = parent.select(F.col("c").alias("g_c"),
-                               F.col("parent").alias("g_p"))
-            jumped = (parent.join(gp, F.col("parent") == F.col("g_c"),
-                                  "left")
-                      .select("c", F.coalesce("g_p", "parent")
-                              .alias("parent")))
-            jumped = checkpoint_reset_stats(jumped)
-            moved = (jumped.alias("n").join(parent.alias("o"), "c")
-                     .where(F.col("n.parent") != F.col("o.parent"))
-                     .limit(1).count())
-            parent = jumped
-            if moved == 0:
-                break
-        comp = (comp.join(parent.withColumnRenamed("c", "component"),
-                          "component", "left")
-                .select("uid", F.coalesce("parent", "component")
-                        .alias("component")))
-        comp = checkpoint_reset_stats(comp)
-    return forest
+        parent = _supersteps("boruvka_msf jump",
+                             parent.withColumn("_active", F.lit(True)),
+                             jump, 64)[0]
+        won = (picked.select("src", "dst", "w").distinct()
+               .withColumn("_won", F.lit(True)))
+        ca, cb = F.coalesce("_ca", "ca"), F.coalesce("_cb", "cb")
+        return (state.join(won, ["src", "dst", "w"], "left")
+                .join(parent.select(F.col("c").alias("ca"),
+                                    F.col("parent").alias("_ca")),
+                      "ca", "left")
+                .join(parent.select(F.col("c").alias("cb"),
+                                    F.col("parent").alias("_cb")),
+                      "cb", "left")
+                .select("src", "dst", "w",
+                        (F.col("tree") | F.col("_won").isNotNull())
+                        .alias("tree"), ca.alias("ca"), cb.alias("cb"),
+                        (ca != cb).alias("_active")))
+    state = (edges_df.select("src", "dst", F.col("w").cast("long")
+                             .alias("w")).distinct()
+             .select("src", "dst", "w", F.lit(False).alias("tree"),
+                     F.col("src").alias("ca"), F.col("dst").alias("cb"),
+                     (F.col("src") != F.col("dst")).alias("_active")))
+    return (_supersteps("boruvka_msf", state, contract, max_rounds)[0]
+            .where("tree").select("src", "dst", "w"))

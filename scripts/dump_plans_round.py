@@ -1,11 +1,13 @@
-"""Dump .explain('formatted') for bench queries into plans/r09/<q>_<tag>.txt.
+"""Dump .explain('formatted') for bench queries into
+plans/<round>/<q>_<tag>.txt.
 
-Usage: python scripts/dump_plans_r09.py before|after [query ...]
+Usage: python scripts/dump_plans_round.py <round> before|after [query ...]
+  e.g. python scripts/dump_plans_round.py r10 after three_hop
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (bench contract).
 
-The judge cannot run Spark; these files are the committed evidence for
-every plan-shape claim in OPTIMIZATION_r09.md (Exchange counts, join
-strategies, PushedFilters, BatchEvalPython absence).
+These files are the committed evidence for every plan-shape claim in
+OPTIMIZATION_<round>.md (Exchange counts, join strategies,
+PushedFilters, BatchEvalPython absence), readable without Spark.
 """
 from __future__ import annotations
 
@@ -20,14 +22,14 @@ from graphydb_spark import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    rnd, tag = sys.argv[1], sys.argv[2]
     assert tag in ("before", "after"), "tag must be before|after"
     from bench import BENCH_QUERIES
-    names = sys.argv[2:] or BENCH_QUERIES
+    names = sys.argv[3:] or BENCH_QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="dump_plans_r09", cpus=cpus)
+    spark = get_spark(app=f"dump_plans_{rnd}", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     from graphydb_spark.queries import QUERIES
@@ -39,7 +41,7 @@ def main() -> None:
     tune_shuffle_for_input(spark, g.edges_df.count())
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r09")
+        os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)

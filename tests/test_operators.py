@@ -1714,9 +1714,9 @@ def _ranks_oracle(nodes, edges, iters, damping, seeds=None):
 
 
 def test_ported_algorithms_match_oracles(spark, multigraph):
-    """Every algorithm on the superstep loop against networkx / NumPy on
-    a multigraph with self-loops, parallel edges, isolated nodes and two
-    components."""
+    """The propagation and frontier algorithms of the superstep loop
+    against networkx / NumPy on a multigraph with self-loops, parallel
+    edges, isolated nodes and two components."""
     import networkx as nx
     nodes, edges, nodes_df, edges_df = multigraph
     und = nx.MultiGraph()
@@ -1760,6 +1760,17 @@ def test_ported_algorithms_match_oracles(spark, multigraph):
         got = {r["uid"]: r["dist"] for r in graph_algos.bfs_distances(
             edges_df, seeds_df, max_depth=depth).collect()}
         assert got == want
+        # one shortest path per node: the lexicographically smallest
+        want = {}
+        for s in seeds:
+            for u, d in nx.single_source_shortest_path_length(
+                    dig, s, cutoff=depth).items():
+                best = (d, min(nx.all_shortest_paths(dig, s, u)))
+                want[u] = min(best, want.get(u, best))
+        got = {r["uid"]: (r["dist"], list(r["path"])) for r in
+               graph_algos.bfs_paths(edges_df, seeds_df,
+                                     max_depth=depth).collect()}
+        assert got == want
         reach = {u for s in seeds for u in
                  nx.single_source_shortest_path_length(dig, s, cutoff=depth)}
         assert {r["uid"] for r in graph_algos.k_hop(
@@ -1773,6 +1784,36 @@ def test_ported_algorithms_match_oracles(spark, multigraph):
     got = {r["uid"]: r["dist"] for r in graph_algos.sssp(
         spark.createDataFrame(weighted, "src string, dst string, w long"),
         seeds_df, max_hops=len(nodes)).collect()}
+    assert got == want
+
+    sources = ["a0", "b2", "z1"]          # z1 is isolated: no row
+    want = {}
+    for s in sources:
+        dist = nx.single_source_shortest_path_length(und, s, cutoff=3)
+        reached, sum_dist = len(dist) - 1, sum(dist.values())
+        if reached:
+            want[s] = (reached, sum_dist, round(reached / sum_dist, 6))
+    got = {r["source"]: (r["reached"], r["sum_dist"], r["closeness"])
+           for r in graph_algos.closeness_centrality(
+               edges_df, spark.createDataFrame([(s,) for s in sources],
+                                               "uid string"),
+               max_depth=3).collect()}
+    assert got == want
+
+    forward = [(a, b) for a, b in edges if a < b]
+    dag = nx.DiGraph(forward)
+    want = {}
+    for u in nx.topological_sort(dag):
+        want[u] = max((want[p] + 1 for p in dag.predecessors(u)), default=0)
+    got = {r["uid"]: r["layer"] for r in graph_algos.dag_layers(
+        edges_df.where("startuid < enduid")).collect()}
+    assert got == want
+
+    touched = {u for e in edges for u in e}
+    want = {u: min(c) for c in nx.strongly_connected_components(dig)
+            for u in c if u in touched}
+    got = {r["uid"]: r["scc"] for r in
+           graph_algos.strongly_connected_components(edges_df).collect()}
     assert got == want
 
     simple = nx.Graph(und)
@@ -1813,32 +1854,41 @@ def test_label_propagation_matches_oracle(spark, multigraph):
         assert got == lab
 
 
-def test_superstep_jobs_are_labelled(spark):
+@pytest.mark.parametrize("algo", ["connected_components", "dag_layers"])
+def test_superstep_jobs_are_labelled(spark, algo):
     """Each superstep's jobs carry "<algo> superstep <i> active=<n>", n
     the frontier the halting check counted; the caller's description is
-    restored.  On a path, min-label CC's frontier shrinks by one per
-    round."""
+    restored.  On a path, min-label CC's frontier and dag_layers'
+    (max-propagation of the layer) both shrink by one per round."""
     import re
     sc = spark.sparkContext
     path = [f"p{i}" for i in range(6)]
     nodes = spark.createDataFrame([(u,) for u in path], "uid string")
     edges = spark.createDataFrame(list(zip(path, path[1:])),
                                   "startuid string, enduid string")
-    sc.setJobGroup("superstep-labels", "caller")
+    run, col, want = {
+        "connected_components": (
+            lambda: graph_algos.connected_components(nodes, edges),
+            "component", {u: "p0" for u in path}),
+        "dag_layers": (lambda: graph_algos.dag_layers(edges), "layer",
+                       {u: i for i, u in enumerate(path)}),
+    }[algo]
+    group = f"superstep-labels-{algo}"
+    sc.setJobGroup(group, "caller")
     try:
-        cc = graph_algos.connected_components(nodes, edges).collect()
+        out = run().collect()
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    assert {r["component"] for r in cc} == {"p0"}
+    assert {r["uid"]: r[col] for r in out} == want
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
     active = {}
-    for j in sc.statusTracker().getJobIdsForGroup("superstep-labels"):
+    for j in sc.statusTracker().getJobIdsForGroup(group):
         d = store.job(j).description()
-        m = re.fullmatch(r"connected_components superstep (\d+) active=(\d+)",
+        m = re.fullmatch(rf"{algo} superstep (\d+) active=(\d+)",
                          d.get() if d.isDefined() else "")
         if m:
             active[int(m[1])] = int(m[2])
