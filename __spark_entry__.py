@@ -35,6 +35,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twins; keys with None are omitted
-    (non-SQL-expressible → rows-only check)."""
-    return {k: v for k, v in ORACLES.items() if v is not None}
+    """DuckDB-runnable ANSI SQL twins, one per ``queries()`` key."""
+    return dict(ORACLES)

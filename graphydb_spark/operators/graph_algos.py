@@ -1187,6 +1187,11 @@ def betweenness_sampled(edges_df: DataFrame, sources_df: DataFrame,
                 F.lit(True).alias("_active")),
         forward, max_depth)[0]
     maxd = all_v.agg(F.max("dist")).first()[0]
+    if not maxd:
+        # no source reaches another vertex (None: no source at all), so
+        # no vertex lies on a shortest path between two others
+        return edges_df.sparkSession.createDataFrame(
+            [], "uid string, betweenness double")
 
     def layer(d):
         return all_v.where(F.col("dist") == d).select("source", "uid")

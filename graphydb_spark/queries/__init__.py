@@ -1,29 +1,18 @@
 """The declared query catalog: SURVEY.md §2 inventory as runnable queries.
 
-Split across ordered part modules (round 7 — single queries.py reached
-19.5k lines); see _shared.py for the catalog-wide ground rules.  The
-QUERIES dict (in _registry) keeps its frozen insertion order — the
-driver's first-50 correctness window depends on it.
+Each query is declared once, by ``query(name, fn, oracle_sql)`` in the part
+module that defines ``fn``, right after its oracle SQL (see _registry.py
+and, for the catalog-wide ground rules, _shared.py).  The first 50 entries
+of ``QUERIES`` are the frozen correctness window, ``_registry.WINDOW``.
 """
 from __future__ import annotations
 
-from . import _shared, _graph_core, _relational, _pipeline, _analytics_a, _analytics_b, _analytics_c, _analytics_d, _oracle_table, _retrieval_ann, _registry  # noqa: F401
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
-from ._relational import *  # noqa: F401,F403
-from ._pipeline import *  # noqa: F401,F403
-from ._analytics_a import *  # noqa: F401,F403
-from ._analytics_b import *  # noqa: F401,F403
-from ._analytics_c import *  # noqa: F401,F403
-from ._analytics_d import *  # noqa: F401,F403
-from ._oracle_table import *  # noqa: F401,F403
-from ._retrieval_ann import *  # noqa: F401,F403
-from ._registry import *  # noqa: F401,F403
+from ._registry import ORACLES, QUERIES, query
+# importing a part runs its query() declarations
+from . import (_graph_core, _relational, _pipeline,  # noqa: F401
+               _analytics_a, _analytics_b, _analytics_c, _analytics_d,
+               _retrieval_ann)
 
-# No namespace backfill (VERDICT r7 #6): each part module resolves its
-# call-time globals from its OWN namespace — earlier parts via the
-# ordered star-import chain, the two forward references (minhash_pairs
-# from _graph_core/_analytics_d into later parts) via function-local
-# imports.  tests/test_queries_import_hygiene.py asserts every global
-# a part's functions load resolves without injection, so a typo'd name
-# is a lint failure instead of silently binding another part's helper.
+if None in QUERIES.values():
+    raise ImportError("window queries never declared: " + ", ".join(
+        name for name, fn in QUERIES.items() if fn is None))

@@ -1,213 +1,13 @@
-"""analytics catalog (rounds 3-5): graph algorithms, sketches, projections.
-
-Part of the ordered queries package (see __init__.py) — split from the
-single-module queries.py in round 7; contiguous slice, original order.
-"""
+"""analytics catalog (rounds 3-5): graph algorithms, sketches, projections."""
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
-from ._relational import *  # noqa: F401,F403
-from ._pipeline import *  # noqa: F401,F403
+from pyspark.sql import functions as F
 
-# --------------------------------------------------------------------------
-# oracle SQL (DuckDB dialect-compatible ANSI)
-
-def _pagerank_top10_sql(iters: int = 5, d: float = 0.85) -> str:
-    """Unrolled power iteration replaying graph_algos.pagerank exactly:
-    ranks init 1.0, per-round dangling-mass scalar, base = 1-d +
-    d·dangling/N, contributions rank/outdeg over the raw (non-distinct)
-    edge rows."""
-    parts = [
-        """nodes AS (
-          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS uid
-          FROM customer
-          UNION ALL
-          SELECT 'Order:' || CAST(o_orderkey AS VARCHAR) FROM orders
-          UNION ALL
-          SELECT 'Part:' || CAST(p_partkey AS VARCHAR) FROM part)""",
-        """edges AS (
-          SELECT 'Customer:' || CAST(o_custkey AS VARCHAR) AS src,
-                 'Order:' || CAST(o_orderkey AS VARCHAR) AS dst
-          FROM orders
-          UNION ALL
-          SELECT 'Order:' || CAST(l_orderkey AS VARCHAR),
-                 'Part:' || CAST(l_partkey AS VARCHAR)
-          FROM lineitem)""",
-        "odeg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)",
-        "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes)",
-        "r0 AS (SELECT uid, 1.0 AS rank FROM nodes)"]
-    for i in range(iters):
-        parts.append(f"""d{i} AS MATERIALIZED (
-          SELECT COALESCE(SUM(r.rank), 0) AS dm FROM r{i} r
-          LEFT JOIN odeg o ON o.src = r.uid WHERE o.src IS NULL)""")
-        parts.append(f"""r{i + 1} AS MATERIALIZED (
-          SELECT n.uid,
-                 (1 - {d}) + {d} * (SELECT dm FROM d{i}) / (SELECT n FROM nn)
-                 + {d} * COALESCE(inc.s, 0) AS rank
-          FROM nodes n LEFT JOIN (
-            SELECT e.dst AS uid, SUM(r.rank / o.deg) AS s
-            FROM edges e
-            JOIN r{i} r ON r.uid = e.src
-            JOIN odeg o ON o.src = e.src
-            GROUP BY e.dst) inc ON inc.uid = n.uid)""")
-    return ("WITH " + ",\n".join(parts)
-            + f"\nSELECT uid FROM r{iters} "
-              "ORDER BY round(rank, 6) DESC, uid LIMIT 10")
-
-
-def _label_propagation_sql(iters: int = 4,
-                           final: str | None = None) -> str:
-    """Unrolled synchronous LPA replaying graph_algos.label_propagation:
-    per round every node adopts its neighborhood's most frequent label,
-    ties to the smallest label string; isolated nodes keep their uid."""
-    parts = [
-        """nodes AS (
-          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS uid
-          FROM customer
-          UNION ALL
-          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR) FROM nation
-          UNION ALL
-          SELECT 'Region:' || CAST(r_regionkey AS VARCHAR) FROM region)""",
-        """de AS (
-          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS src,
-                 'Nation:' || CAST(c_nationkey AS VARCHAR) AS dst
-          FROM customer
-          UNION ALL
-          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR),
-                 'Region:' || CAST(n_regionkey AS VARCHAR)
-          FROM nation)""",
-        """sym AS (SELECT DISTINCT src, dst FROM (
-          SELECT src, dst FROM de
-          UNION ALL SELECT dst, src FROM de))""",
-        "l0 AS (SELECT uid, uid AS label FROM nodes)"]
-    for i in range(iters):
-        parts.append(f"""l{i + 1} AS MATERIALIZED (
-          SELECT n.uid, COALESCE(b.lab, n.uid) AS label
-          FROM nodes n LEFT JOIN (
-            SELECT uid, lab FROM (
-              SELECT uid, lab,
-                     ROW_NUMBER() OVER (PARTITION BY uid
-                                        ORDER BY c DESC, lab) AS rn
-              FROM (SELECT s.dst AS uid, l.label AS lab, COUNT(*) AS c
-                    FROM sym s JOIN l{i} l ON l.uid = s.src
-                    GROUP BY s.dst, l.label))
-            WHERE rn = 1) b ON b.uid = n.uid)""")
-    tail = final if final is not None else (
-        f"SELECT label, COUNT(*) AS n_members "
-        f"FROM l{iters} GROUP BY label")
-    return "WITH " + ",\n".join(parts) + "\n" + tail
-
-
-def _k_core_sql(k: int = 6, rounds: int = 16) -> str:
-    """Unrolled peel replaying graph_algos.k_core: round i keeps nodes
-    with ≥ k distinct neighbors in the surviving subgraph.  Peeling is
-    idempotent after its fixpoint, so unrolling more rounds than the
-    actual peel depth is exact (the engine-side loop warns if 30 rounds
-    ever stop short; this fixture peels in far fewer)."""
-    parts = ["""e0 AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
-          SELECT 'Order:' || CAST(l_orderkey AS VARCHAR) AS src,
-                 'Part:' || CAST(l_partkey AS VARCHAR) AS dst
-          FROM lineitem
-          UNION ALL
-          SELECT 'Part:' || CAST(l_partkey AS VARCHAR),
-                 'Order:' || CAST(l_orderkey AS VARCHAR)
-          FROM lineitem))"""]
-    for i in range(rounds):
-        parts.append(f"""k{i} AS MATERIALIZED (
-          SELECT src AS uid FROM e{i} GROUP BY src HAVING COUNT(*) >= {k})""")
-        parts.append(f"""e{i + 1} AS MATERIALIZED (
-          SELECT e.src, e.dst FROM e{i} e
-          JOIN k{i} a ON a.uid = e.src
-          JOIN k{i} b ON b.uid = e.dst)""")
-    return ("WITH " + ",\n".join(parts)
-            + f"\nSELECT DISTINCT src AS uid FROM e{rounds}")
-
-
-def _hits_sql(iters: int = 5) -> str:
-    """Unrolled HITS replaying graph_algos.hits on the Contains graph:
-    hub/auth init 1.0 over edge-touched nodes, per-round sum
-    normalization via MATERIALIZED scalar CTEs."""
-    parts = [
-        """edges AS MATERIALIZED (
-          SELECT 'Order:' || CAST(l_orderkey AS VARCHAR) AS src,
-                 'Part:' || CAST(l_partkey AS VARCHAR) AS dst
-          FROM lineitem)""",
-        """nodes AS MATERIALIZED (
-          SELECT DISTINCT uid FROM (
-            SELECT src AS uid FROM edges
-            UNION ALL SELECT dst FROM edges))""",
-        "h0 AS (SELECT uid, 1.0 AS h FROM nodes)"]
-    for i in range(iters):
-        parts.append(f"""ar{i} AS MATERIALIZED (
-          SELECT n.uid, COALESCE(x.a, 0) AS a
-          FROM nodes n LEFT JOIN (
-            SELECT e.dst AS uid, SUM(h.h) AS a
-            FROM edges e JOIN h{i} h ON h.uid = e.src
-            GROUP BY e.dst) x ON x.uid = n.uid)""")
-        parts.append(f"""a{i + 1} AS MATERIALIZED (
-          SELECT uid, a / (SELECT SUM(a) FROM ar{i}) AS a FROM ar{i})""")
-        parts.append(f"""hr{i} AS MATERIALIZED (
-          SELECT n.uid, COALESCE(x.h, 0) AS h
-          FROM nodes n LEFT JOIN (
-            SELECT e.src AS uid, SUM(a.a) AS h
-            FROM edges e JOIN a{i + 1} a ON a.uid = e.dst
-            GROUP BY e.src) x ON x.uid = n.uid)""")
-        parts.append(f"""h{i + 1} AS MATERIALIZED (
-          SELECT uid, h / (SELECT SUM(h) FROM hr{i}) AS h FROM hr{i})""")
-    return ("WITH " + ",\n".join(parts) + f"""
-        SELECT uid, round(a, 6) AS authority FROM a{iters}
-        ORDER BY authority DESC, uid LIMIT 10""")
-
-
-def _ppr_sql(iters: int = 5, d: float = 0.85, n_seeds: int = 5) -> str:
-    """Unrolled personalized PageRank replaying
-    graph_algos.personalized_pagerank: teleport + dangling mass return
-    to the seed customers uniformly."""
-    seeds = ", ".join(f"'Customer:{i}'" for i in range(n_seeds))
-    parts = [
-        """nodes AS MATERIALIZED (
-          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS uid
-          FROM customer
-          UNION ALL
-          SELECT 'Order:' || CAST(o_orderkey AS VARCHAR) FROM orders
-          UNION ALL
-          SELECT 'Part:' || CAST(p_partkey AS VARCHAR) FROM part)""",
-        """edges AS MATERIALIZED (
-          SELECT 'Customer:' || CAST(o_custkey AS VARCHAR) AS src,
-                 'Order:' || CAST(o_orderkey AS VARCHAR) AS dst
-          FROM orders
-          UNION ALL
-          SELECT 'Order:' || CAST(l_orderkey AS VARCHAR),
-                 'Part:' || CAST(l_partkey AS VARCHAR)
-          FROM lineitem)""",
-        "odeg AS MATERIALIZED "
-        "(SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)",
-        f"""ss AS MATERIALIZED (
-          SELECT uid, CASE WHEN uid IN ({seeds})
-                 THEN 1.0 / {n_seeds} ELSE 0.0 END AS s
-          FROM nodes)""",
-        "r0 AS (SELECT uid, s AS rank FROM ss)"]
-    for i in range(iters):
-        parts.append(f"""d{i} AS MATERIALIZED (
-          SELECT COALESCE(SUM(r.rank), 0) AS dm FROM r{i} r
-          LEFT JOIN odeg o ON o.src = r.uid WHERE o.src IS NULL)""")
-        parts.append(f"""r{i + 1} AS MATERIALIZED (
-          SELECT n.uid,
-                 ss.s * ((1 - {d}) + {d} * (SELECT dm FROM d{i}))
-                 + {d} * COALESCE(inc.x, 0) AS rank
-          FROM nodes n
-          JOIN ss ON ss.uid = n.uid
-          LEFT JOIN (
-            SELECT e.dst AS uid, SUM(r.rank / o.deg) AS x
-            FROM edges e
-            JOIN r{i} r ON r.uid = e.src
-            JOIN odeg o ON o.src = e.src
-            GROUP BY e.dst) inc ON inc.uid = n.uid)""")
-    return ("WITH " + ",\n".join(parts) + f"""
-        SELECT uid, round(rank, 9) AS rank FROM r{iters}
-        WHERE uid NOT IN ({seeds}) AND round(rank, 9) > 0
-        ORDER BY rank DESC, uid LIMIT 15""")
+from ..operators import graph_algos, similarity, text
+from ..sources.tpch_graph import load_tables, tpch_graph
+from ._registry import query
+from ._shared import _docs, _emb, _events
+from ._pipeline import _ivf_ctes
 
 
 def q_resample_locf(spark, sf_dir):
@@ -239,6 +39,7 @@ SELECT g.user_id, g.bucket_ts,
        l.obs IS NULL AS filled
 FROM grid g LEFT JOIN latest l USING (user_id, bucket_ts)
 """
+query("resample_locf", q_resample_locf, _RESAMPLE_LOCF_ORACLE)
 
 
 def q_pq_topk(spark, sf_dir):
@@ -286,6 +87,7 @@ q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
 SELECT s0_fin.vec_id, round({dist}, 6) AS adc_dist
 FROM s0_fin {code_joins} {tab_joins}
 ORDER BY {dist}, s0_fin.vec_id LIMIT {topk}"""
+query("pq_topk", q_pq_topk, _pq_oracle_sql())
 
 
 def q_random_walks(spark, sf_dir):
@@ -332,6 +134,7 @@ w0 AS (SELECT uid || '#' || CAST(t.w AS VARCHAR) AS walk_id,
   FROM w{t-1} LEFT JOIN adj ON cur = src)""")
     return ("WITH " + ",\n".join(parts)
             + f"\nSELECT walk_id, path FROM w{walk_len}")
+query("random_walks", q_random_walks, _random_walks_oracle_sql())
 
 
 def q_event_transitions(spark, sf_dir):
@@ -355,6 +158,7 @@ SELECT state, next_state, cnt,
        round(cnt / SUM(cnt) OVER (PARTITION BY state), 6) AS prob
 FROM c
 """
+query("event_transitions", q_event_transitions, _EVENT_TRANSITIONS_ORACLE)
 
 
 def q_incremental_dedup(spark, sf_dir):
@@ -383,6 +187,7 @@ SELECT fp.doc_id, fp.content_hash,
 FROM fp LEFT JOIN hist USING (content_hash)
 JOIN first USING (content_hash)
 """
+query("incremental_dedup", q_incremental_dedup, _INCREMENTAL_DEDUP_ORACLE)
 
 
 _PROFILE_COLS = ["event_id", "user_id", "event_type", "value", "ts"]
@@ -409,6 +214,7 @@ def _profile_events_oracle_sql() -> str:
         f"mn_{i} AS min_value, mx_{i} AS max_value FROM a"
         for i, c in enumerate(_PROFILE_COLS))
     return f"WITH a AS (SELECT {aggs} FROM events)\n{sel}"
+query("profile_events", q_profile_events, _profile_events_oracle_sql())
 
 
 def q_knn_join(spark, sf_dir):
@@ -442,6 +248,7 @@ SELECT query_id, vec_id, round(cos, 6) AS cosine,
 FROM pairs
 QUALIFY rn <= 5
 """
+query("knn_join", q_knn_join, _KNN_JOIN_ORACLE)
 
 
 def q_standardize(spark, sf_dir):
@@ -481,6 +288,7 @@ SELECT vec_id, z,
        round(sqrt(list_sum(list_transform(z, v -> v*v))), 6) AS z_norm
 FROM zz
 """
+query("standardize_embeddings", q_standardize, _STANDARDIZE_ORACLE)
 
 
 def q_jl_projection(spark, sf_dir):
@@ -511,6 +319,7 @@ SELECT vec_id, proj,
        round(sqrt(list_sum(list_transform(proj, v -> v*v))), 6)
        AS proj_norm
 FROM proj"""
+query("jl_projection", q_jl_projection, _jl_oracle_sql())
 
 
 def q_dag_layers(spark, sf_dir):
@@ -551,6 +360,7 @@ SELECT n.uid, CAST(COALESCE(MAX(w.len), 0) AS BIGINT) AS layer
 FROM nodes n LEFT JOIN walk w ON w.uid = n.uid
 GROUP BY n.uid
 """
+query("dag_layers", q_dag_layers, _DAG_LAYERS_ORACLE)
 
 
 def q_scc(spark, sf_dir):
@@ -600,6 +410,7 @@ JOIN reach r ON r.b = n.uid
 JOIN reach r2 ON r2.a = n.uid AND r2.b = r.a
 GROUP BY n.uid
 """
+query("scc_parts", q_scc, _SCC_ORACLE)
 
 
 def q_temperature_mixture(spark, sf_dir):
@@ -632,6 +443,8 @@ WHERE rate >= 1.0
    OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
       < printf('%04x', CAST(floor(rate * 65536) AS INT))
 """
+query("temperature_mixture", q_temperature_mixture,
+      _TEMPERATURE_MIXTURE_ORACLE)
 
 
 def q_negative_samples(spark, sf_dir):
@@ -672,6 +485,7 @@ SELECT p.src, p.dst FROM pairs p
 WHERE NOT EXISTS (SELECT 1 FROM sym s
                   WHERE s.src = p.src AND s.dst = p.dst)
 """
+query("negative_samples", q_negative_samples, _NEGATIVE_SAMPLES_ORACLE)
 
 
 def q_apply_cdc(spark, sf_dir):
@@ -730,6 +544,7 @@ SELECT COALESCE(s.k, w.k) AS o_orderkey,
 FROM snap s FULL OUTER JOIN win w ON s.k = w.k
 WHERE w.op IS NULL OR w.op != 'D'
 """
+query("apply_cdc", q_apply_cdc, _APPLY_CDC_ORACLE)
 
 
 def q_histogram_values(spark, sf_dir):
@@ -759,6 +574,7 @@ SELECT s.bin, round(p.blo + s.bin * p.w, 6) AS lo,
        CAST(COALESCE(c.n, 0) AS BIGINT) AS n
 FROM spine s CROSS JOIN p LEFT JOIN c ON c.bin = s.bin
 """
+query("histogram_values", q_histogram_values, _HISTOGRAM_ORACLE)
 
 
 def q_winsorize_values(spark, sf_dir):
@@ -778,6 +594,7 @@ SELECT event_id,
        AS value_winsorized
 FROM events, p
 """
+query("winsorize_values", q_winsorize_values, _WINSORIZE_ORACLE)
 
 
 def q_tfidf_keywords(spark, sf_dir):
@@ -809,6 +626,7 @@ SELECT doc_id, term, tfidf,
 FROM scored
 QUALIFY rank <= 3
 """
+query("tfidf_keywords", q_tfidf_keywords, _TFIDF_ORACLE)
 
 
 def q_reciprocity(spark, sf_dir):
@@ -850,6 +668,7 @@ SELECT (SELECT COUNT(*) FROM e) AS n_edges,
        round(nr / (SELECT COUNT(*) FROM e), 6) AS reciprocity
 FROM rec
 """
+query("reciprocity_parts", q_reciprocity, _RECIPROCITY_ORACLE)
 
 
 def q_grouped_split(spark, sf_dir):
@@ -875,6 +694,7 @@ SELECT doc_id, source,
        END AS split
 FROM documents
 """
+query("grouped_split", q_grouped_split, _GROUPED_SPLIT_ORACLE)
 
 
 _VALUE_BANDS = [(0.0, 1.0, "tiny"), (1.0, 2.0, "small"),
@@ -905,6 +725,7 @@ SELECT e.event_id, e.value, b.band
 FROM events e LEFT JOIN bands b
   ON CAST(e.value AS DOUBLE) >= b.lo AND CAST(e.value AS DOUBLE) < b.hi
 """
+query("interval_lookup", q_interval_lookup, _interval_lookup_oracle_sql())
 
 
 def q_grouped_percentiles(spark, sf_dir):
@@ -928,6 +749,8 @@ SELECT event_type,
        COUNT(*) AS n
 FROM events GROUP BY event_type
 """
+query("grouped_percentiles", q_grouped_percentiles,
+      _GROUPED_PERCENTILES_ORACLE)
 
 
 def q_degree_distribution(spark, sf_dir):
@@ -947,6 +770,8 @@ WITH deg AS (SELECT l_partkey, COUNT(*) AS degree
              FROM lineitem GROUP BY l_partkey)
 SELECT degree, COUNT(*) AS n_nodes FROM deg GROUP BY degree
 """
+query("degree_distribution", q_degree_distribution,
+      _DEGREE_DISTRIBUTION_ORACLE)
 
 
 def q_modal_event(spark, sf_dir):
@@ -973,6 +798,7 @@ SELECT user_id, event_type AS modal_event, cnt FROM (
                             ORDER BY cnt DESC, event_type) AS rn
   FROM c) WHERE rn = 1
 """
+query("modal_event", q_modal_event, _MODAL_EVENT_ORACLE)
 
 
 def q_media_pipeline(spark, sf_dir):
@@ -1012,6 +838,7 @@ SELECT media_id, fmt,
        CAST(nf AS INT) AS n_frames
 FROM scaled
 """
+query("media_pipeline", q_media_pipeline, _MEDIA_PIPELINE_ORACLE)
 
 
 def q_k_truss(spark, sf_dir):
@@ -1064,6 +891,7 @@ e{r} AS MATERIALIZED (
   WHERE COALESCE(s, 0) >= {k - 2})""")
     return ("WITH " + ",\n".join(parts)
             + f"\nSELECT a, b FROM e{rounds}")
+query("k_truss_parts", q_k_truss, _k_truss_oracle_sql())
 
 
 def q_sentence_stats(spark, sf_dir):
@@ -1100,6 +928,7 @@ SELECT doc_id,
              / greatest(len(sents), 1), 6) AS mean_sentence_tokens
 FROM s
 """
+query("sentence_stats", q_sentence_stats, _SENTENCE_STATS_ORACLE)
 
 
 def q_interarrival_stats(spark, sf_dir):
@@ -1132,6 +961,7 @@ SELECT user_id,
        COUNT(*) AS n_gaps
 FROM g WHERE g IS NOT NULL GROUP BY user_id
 """
+query("interarrival_stats", q_interarrival_stats, _INTERARRIVAL_ORACLE)
 
 
 def q_pixel_stats(spark, sf_dir):
@@ -1178,6 +1008,7 @@ gif AS (
   FROM dims WHERE k = 2)
 SELECT * FROM bmp UNION ALL SELECT * FROM png UNION ALL SELECT * FROM gif
 """
+query("pixel_stats", q_pixel_stats, _PIXEL_STATS_ORACLE)
 
 
 def q_jpeg_stats(spark, sf_dir):
@@ -1215,6 +1046,7 @@ SELECT media_id,
             AS BIGINT) AS px_sum_sq
 FROM blocks
 """
+query("jpeg_stats", q_jpeg_stats, _JPEG_STATS_ORACLE)
 
 
 def q_weekly_trend(spark, sf_dir):
@@ -1250,6 +1082,7 @@ SELECT CAST(week AS DATE) AS week, CAST(rev AS DOUBLE) AS revenue,
        AS wow_pct
 FROM weekly
 """
+query("weekly_trend", q_weekly_trend, _WEEKLY_TREND_ORACLE)
 
 
 def q_transition_entropy(spark, sf_dir):
@@ -1293,6 +1126,7 @@ SELECT state, round(CAST(SUM(term) AS DOUBLE), 6) AS entropy_bits,
        COUNT(*) AS n_successors
 FROM t GROUP BY state
 """
+query("transition_entropy", q_transition_entropy, _TRANSITION_ENTROPY_ORACLE)
 
 
 def q_pmi_collocations(spark, sf_dir):
@@ -1357,6 +1191,7 @@ FROM cxy JOIN uni ux ON ux.t = x JOIN uni uy ON uy.t = y
 WHERE cxy >= 5
 ORDER BY pmi DESC, x, y LIMIT 20
 """
+query("pmi_collocations", q_pmi_collocations, _PMI_ORACLE)
 
 
 def q_bpe_train(spark, sf_dir):
@@ -1421,6 +1256,7 @@ def _bpe_train_oracle_sql(rounds: int = 6) -> str:
         f"FROM b{r}"
         for r in range(1, rounds + 1))
     return "WITH " + _bpe_ctes(rounds) + "\n" + sel
+query("bpe_train", q_bpe_train, _bpe_train_oracle_sql())
 
 
 def _bpe_tokenize_oracle_sql(rounds: int = 6) -> str:
@@ -1444,6 +1280,7 @@ SELECT doc_id,
 FROM (SELECT doc_id, list_filter(
         string_split_regex(lower(text), '[^a-z0-9]+'), x -> x != '') AS ws
       FROM documents), mrg"""
+query("bpe_tokenize", q_bpe_tokenize, _bpe_tokenize_oracle_sql())
 
 
 def q_zscore_anomaly(spark, sf_dir):
@@ -1481,6 +1318,7 @@ z AS (SELECT hour, n,
       FROM g)
 SELECT hour, n, z FROM z WHERE abs(z) > 2
 """
+query("zscore_anomaly", q_zscore_anomaly, _ZSCORE_ANOMALY_ORACLE)
 
 
 def q_autocorr_revenue(spark, sf_dir):
@@ -1545,6 +1383,7 @@ WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day,
                            AS DECIMAL(18,2)) AS rev
                FROM orders GROUP BY 1)
 """ + " UNION ALL ".join(sels))
+query("autocorr_revenue", q_autocorr_revenue, _autocorr_oracle_sql())
 
 
 def q_benford_digits(spark, sf_dir):
@@ -1581,6 +1420,7 @@ SELECT digit, n,
        round(log10(1.0 + 1.0 / digit), 6) AS benford
 FROM c
 """
+query("benford_digits", q_benford_digits, _BENFORD_ORACLE)
 
 
 def q_rfm_segments(spark, sf_dir):
@@ -1626,6 +1466,7 @@ SELECT segment, COUNT(*) AS n_customers,
        CAST(SUM(m) AS DOUBLE) AS monetary
 FROM coded GROUP BY segment
 """
+query("rfm_segments", q_rfm_segments, _RFM_ORACLE)
 
 
 def q_activity_streaks(spark, sf_dir):
@@ -1662,6 +1503,7 @@ SELECT user_id, MAX(len) AS longest, COUNT(*) AS n_streaks,
        SUM(len) AS active_days
 FROM streaks GROUP BY user_id
 """
+query("activity_streaks", q_activity_streaks, _STREAKS_ORACLE)
 
 
 def q_decile_share(spark, sf_dir):
@@ -1703,6 +1545,7 @@ SELECT decile, n_customers, CAST(drev AS DOUBLE) AS revenue,
              / CAST(SUM(drev) OVER () AS DOUBLE), 6) AS share
 FROM by_d
 """
+query("decile_share", q_decile_share, _DECILE_SHARE_ORACLE)
 
 
 def q_gini_revenue(spark, sf_dir):
@@ -1749,6 +1592,7 @@ SELECT CAST(n AS BIGINT) AS n_customers,
        round((2.0 * sir - (n + 1) * sr) / (n * sr), 6) AS gini
 FROM a
 """
+query("gini_revenue", q_gini_revenue, _GINI_ORACLE)
 
 
 def q_fingerprint_dups(spark, sf_dir):
@@ -1771,6 +1615,7 @@ SELECT array_to_string(list_sort(string_split(p_name, ' ')), ' ')
        COUNT(DISTINCT p_name) AS n_names
 FROM part GROUP BY 1 HAVING COUNT(*) > 1
 """
+query("fingerprint_dups", q_fingerprint_dups, _FINGERPRINT_DUPS_ORACLE)
 
 
 def q_fuzzy_name_pairs(spark, sf_dir):
@@ -1808,6 +1653,7 @@ FROM t a JOIN t b
 WHERE levenshtein(a.p_name, b.p_name) BETWEEN 1 AND 2
 ORDER BY dist, k1, k2 LIMIT 50
 """
+query("fuzzy_name_pairs", q_fuzzy_name_pairs, _FUZZY_NAME_ORACLE)
 
 
 def q_lexical_diversity(spark, sf_dir):
@@ -1845,6 +1691,7 @@ SELECT doc_id, SUM(c) AS n_tokens,
              / SUM(c), 6) AS hapax_ratio
 FROM freq GROUP BY doc_id
 """
+query("lexical_diversity", q_lexical_diversity, _LEXICAL_DIVERSITY_ORACLE)
 
 
 def q_zipf_slope(spark, sf_dir):
@@ -1909,6 +1756,7 @@ SELECT CAST(n AS BIGINT) AS n_ranks,
              6) AS intercept
 FROM a
 """
+query("zipf_slope", q_zipf_slope, _ZIPF_ORACLE)
 
 
 def q_mad_outliers(spark, sf_dir):
@@ -1948,6 +1796,7 @@ SELECT c_nationkey, COUNT(*) AS n_customers,
 FROM dev JOIN mad d USING (c_nationkey)
 GROUP BY c_nationkey
 """
+query("mad_outliers", q_mad_outliers, _MAD_ORACLE)
 
 
 def q_scd2_intervals(spark, sf_dir):
@@ -1993,6 +1842,7 @@ SELECT user_id, grp, MIN(event_type) AS state,
        COUNT(*) AS n_events
 FROM runs GROUP BY user_id, grp
 """
+query("scd2_intervals", q_scd2_intervals, _SCD2_ORACLE)
 
 
 def q_attribution_last_touch(spark, sf_dir):
@@ -2032,6 +1882,7 @@ SELECT COALESCE(channel, 'direct') AS channel,
 FROM marked WHERE event_type = 'purchase'
 GROUP BY 1
 """
+query("attribution_last_touch", q_attribution_last_touch, _ATTRIBUTION_ORACLE)
 
 
 def q_rolling_distinct_users(spark, sf_dir):
@@ -2061,6 +1912,8 @@ FROM du JOIN days
   ON du.day <= as_of AND du.day >= as_of - 6
 GROUP BY as_of
 """
+query("rolling_distinct_users", q_rolling_distinct_users,
+      _ROLLING_DISTINCT_ORACLE)
 
 
 def q_skyline_parts(spark, sf_dir):
@@ -2098,6 +1951,7 @@ FROM part p JOIN sz ON p.p_size = sz.p_size
 WHERE (min_gt IS NULL OR p_retailprice < min_gt)
   AND p_retailprice = minp
 """
+query("skyline_parts", q_skyline_parts, _SKYLINE_ORACLE)
 
 
 def q_ngram_novelty(spark, sf_dir):
@@ -2157,6 +2011,7 @@ SELECT doc_id, COUNT(*) AS n_grams,
 FROM dg JOIN first USING (g)
 GROUP BY doc_id
 """
+query("ngram_novelty", q_ngram_novelty, _NGRAM_NOVELTY_ORACLE)
 
 
 def q_rrf_fusion(spark, sf_dir):
@@ -2245,6 +2100,7 @@ SELECT COALESCE(tr.id, cr.id) AS id, r_text, r_vec,
 FROM tr FULL JOIN cr ON tr.id = cr.id
 ORDER BY rrf DESC, id LIMIT 10
 """
+query("rrf_fusion", q_rrf_fusion, _RRF_ORACLE)
 
 
 def q_mmr_select(spark, sf_dir):
@@ -2321,6 +2177,7 @@ s{r} AS MATERIALIZED (
         f"round(cos0, 6) AS cos0 FROM s{r}" for r in range(1, k + 1))
     parts.append("\n" + sels)
     return "".join(parts)
+query("mmr_select", q_mmr_select, _mmr_oracle_sql())
 
 
 def q_silhouette_kmeans(spark, sf_dir):
@@ -2382,6 +2239,7 @@ t AS (SELECT cluster,
 SELECT cluster, COUNT(*) AS n,
        round(CAST(SUM(t) AS DOUBLE) / COUNT(*), 6) AS avg_silhouette
 FROM t GROUP BY cluster"""
+query("silhouette_kmeans", q_silhouette_kmeans, _silhouette_oracle_sql())
 
 
 def q_new_vs_returning(spark, sf_dir):
@@ -2423,6 +2281,7 @@ SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
 FROM orders JOIN firsts USING (o_custkey)
 GROUP BY 1, 2
 """
+query("new_vs_returning", q_new_vs_returning, _NEW_VS_RETURNING_ORACLE)
 
 
 def q_cohort_ltv(spark, sf_dir):
@@ -2477,6 +2336,7 @@ SELECT CAST(cohort AS VARCHAR) AS cohort, age, n_orders,
        AS cum_ltv
 FROM cells
 """
+query("cohort_ltv", q_cohort_ltv, _COHORT_LTV_ORACLE)
 
 
 def q_churn_screen(spark, sf_dir):
@@ -2518,6 +2378,7 @@ SELECT c_nationkey, COUNT(*) AS n_buyers,
 FROM flagged JOIN customer ON o_custkey = c_custkey
 GROUP BY c_nationkey
 """
+query("churn_screen", q_churn_screen, _CHURN_ORACLE)
 
 
 def q_seq_copurchase(spark, sf_dir):
@@ -2570,6 +2431,7 @@ SELECT p1, p2, COUNT(*) AS support
 FROM seq GROUP BY p1, p2
 ORDER BY support DESC, p1, p2 LIMIT 20
 """
+query("seq_copurchase", q_seq_copurchase, _SEQ_COPURCHASE_ORACLE)
 
 
 def q_rich_club(spark, sf_dir):
@@ -2638,6 +2500,7 @@ SELECT nk.k, n_rich, COALESCE(e_rich, 0) AS e_rich,
             ELSE 0.0 END AS phi
 FROM nk LEFT JOIN ek ON nk.k = ek.k
 """
+query("rich_club", q_rich_club, _RICH_CLUB_ORACLE)
 
 
 def q_neighbor_degree(spark, sf_dir):
@@ -2689,6 +2552,7 @@ SELECT d, COUNT(*) AS n_nodes,
        round(CAST(SUM(t) AS DOUBLE) / COUNT(*), 6) AS knn
 FROM per_node GROUP BY d
 """
+query("neighbor_degree", q_neighbor_degree, _NEIGHBOR_DEGREE_ORACLE)
 
 
 def _ewma_weights(alpha: float = 0.2, n: int = 20) -> list[float]:
@@ -2741,142 +2605,4 @@ SELECT day, rev,
              / list_sum(wrev), 6) AS ewma
 FROM wts
 """
-
-
-
-
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    '_pagerank_top10_sql',
-    '_label_propagation_sql',
-    '_k_core_sql',
-    '_hits_sql',
-    '_ppr_sql',
-    'q_resample_locf',
-    '_RESAMPLE_LOCF_ORACLE',
-    'q_pq_topk',
-    '_pq_oracle_sql',
-    'q_random_walks',
-    '_random_walks_oracle_sql',
-    'q_event_transitions',
-    '_EVENT_TRANSITIONS_ORACLE',
-    'q_incremental_dedup',
-    '_INCREMENTAL_DEDUP_ORACLE',
-    '_PROFILE_COLS',
-    'q_profile_events',
-    '_profile_events_oracle_sql',
-    'q_knn_join',
-    '_KNN_JOIN_ORACLE',
-    'q_standardize',
-    '_STANDARDIZE_ORACLE',
-    'q_jl_projection',
-    '_jl_oracle_sql',
-    'q_dag_layers',
-    '_DAG_LAYERS_ORACLE',
-    'q_scc',
-    '_SCC_ORACLE',
-    'q_temperature_mixture',
-    '_TEMPERATURE_MIXTURE_ORACLE',
-    'q_negative_samples',
-    '_NEGATIVE_SAMPLES_ORACLE',
-    'q_apply_cdc',
-    '_APPLY_CDC_ORACLE',
-    'q_histogram_values',
-    '_HISTOGRAM_ORACLE',
-    'q_winsorize_values',
-    '_WINSORIZE_ORACLE',
-    'q_tfidf_keywords',
-    '_TFIDF_ORACLE',
-    'q_reciprocity',
-    '_RECIPROCITY_ORACLE',
-    'q_grouped_split',
-    '_GROUPED_SPLIT_ORACLE',
-    '_VALUE_BANDS',
-    'q_interval_lookup',
-    '_interval_lookup_oracle_sql',
-    'q_grouped_percentiles',
-    '_GROUPED_PERCENTILES_ORACLE',
-    'q_degree_distribution',
-    '_DEGREE_DISTRIBUTION_ORACLE',
-    'q_modal_event',
-    '_MODAL_EVENT_ORACLE',
-    'q_media_pipeline',
-    '_MEDIA_PIPELINE_ORACLE',
-    'q_k_truss',
-    '_k_truss_oracle_sql',
-    'q_sentence_stats',
-    '_SENTENCE_STATS_ORACLE',
-    'q_interarrival_stats',
-    '_INTERARRIVAL_ORACLE',
-    'q_pixel_stats',
-    '_PIXEL_STATS_ORACLE',
-    'q_jpeg_stats',
-    '_JPEG_STATS_ORACLE',
-    'q_weekly_trend',
-    '_WEEKLY_TREND_ORACLE',
-    'q_transition_entropy',
-    '_TRANSITION_ENTROPY_ORACLE',
-    'q_pmi_collocations',
-    '_PMI_ORACLE',
-    'q_bpe_train',
-    'q_bpe_tokenize',
-    '_bpe_ctes',
-    '_bpe_train_oracle_sql',
-    '_bpe_tokenize_oracle_sql',
-    'q_zscore_anomaly',
-    '_ZSCORE_ANOMALY_ORACLE',
-    'q_autocorr_revenue',
-    '_autocorr_oracle_sql',
-    'q_benford_digits',
-    '_BENFORD_ORACLE',
-    'q_rfm_segments',
-    '_RFM_ORACLE',
-    'q_activity_streaks',
-    '_STREAKS_ORACLE',
-    'q_decile_share',
-    '_DECILE_SHARE_ORACLE',
-    'q_gini_revenue',
-    '_GINI_ORACLE',
-    'q_fingerprint_dups',
-    '_FINGERPRINT_DUPS_ORACLE',
-    'q_fuzzy_name_pairs',
-    '_FUZZY_NAME_ORACLE',
-    'q_lexical_diversity',
-    '_LEXICAL_DIVERSITY_ORACLE',
-    'q_zipf_slope',
-    '_ZIPF_ORACLE',
-    'q_mad_outliers',
-    '_MAD_ORACLE',
-    'q_scd2_intervals',
-    '_SCD2_ORACLE',
-    'q_attribution_last_touch',
-    '_ATTRIBUTION_ORACLE',
-    'q_rolling_distinct_users',
-    '_ROLLING_DISTINCT_ORACLE',
-    'q_skyline_parts',
-    '_SKYLINE_ORACLE',
-    'q_ngram_novelty',
-    '_NGRAM_NOVELTY_ORACLE',
-    'q_rrf_fusion',
-    '_RRF_ORACLE',
-    'q_mmr_select',
-    '_mmr_oracle_sql',
-    'q_silhouette_kmeans',
-    '_silhouette_oracle_sql',
-    'q_new_vs_returning',
-    '_NEW_VS_RETURNING_ORACLE',
-    'q_cohort_ltv',
-    '_COHORT_LTV_ORACLE',
-    'q_churn_screen',
-    '_CHURN_ORACLE',
-    'q_seq_copurchase',
-    '_SEQ_COPURCHASE_ORACLE',
-    'q_rich_club',
-    '_RICH_CLUB_ORACLE',
-    'q_neighbor_degree',
-    '_NEIGHBOR_DEGREE_ORACLE',
-    '_ewma_weights',
-    'q_ewma_revenue',
-    '_ewma_oracle_sql',
-]
+query("ewma_revenue", q_ewma_revenue, _ewma_oracle_sql())

@@ -1,15 +1,16 @@
-"""analytics catalog: trends, percentiles, correlation, coverage.
-
-Part of the ordered queries package (see __init__.py) — split from the
-single-module queries.py in round 7; contiguous slice, original order.
-"""
+"""analytics catalog: trends, percentiles, correlation, coverage."""
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
-from ._relational import *  # noqa: F401,F403
-from ._pipeline import *  # noqa: F401,F403
-from ._analytics_a import *  # noqa: F401,F403
+import math
+
+from pyspark.sql import functions as F
+
+from ..operators import dedup, graph_algos, text
+from ..sources.tpch_graph import load_tables, tpch_graph
+from ._registry import query
+from ._shared import _docs, _emb, _events, _ivf_blocked
+from ._pipeline import _ivf_ctes, _label_propagation_sql, q_minhash_pairs
+
 
 def q_spend_percentile(spark, sf_dir):
     """Customer spend table with percent_rank and cume_dist — the
@@ -40,6 +41,7 @@ SELECT o_custkey, CAST(spend AS DOUBLE) AS spend,
        round(cume_dist() OVER (ORDER BY spend, o_custkey), 9) AS cume
 FROM per
 """
+query("spend_percentile", q_spend_percentile, _SPEND_PERCENTILE_ORACLE)
 
 
 def q_ahash_groups(spark, sf_dir):
@@ -79,6 +81,7 @@ FROM (SELECT media_id,
       GROUP BY media_id)
 GROUP BY ahash HAVING COUNT(*) > 1
 """
+query("ahash_groups", q_ahash_groups, _AHASH_ORACLE)
 
 
 def q_fk_orphans(spark, sf_dir):
@@ -135,6 +138,7 @@ UNION ALL SELECT 'supplier->nation',
        (SELECT COUNT(*) FROM supplier
         WHERE s_nationkey NOT IN (SELECT n_nationkey FROM nation))
 """
+query("fk_orphans", q_fk_orphans, _FK_ORPHANS_ORACLE)
 
 
 def q_calendar_gaps(spark, sf_dir):
@@ -167,6 +171,7 @@ SELECT spine.day, COALESCE(n, 0) AS n_events,
        COALESCE(n, 0) = 0 AS is_gap
 FROM spine LEFT JOIN seen ON spine.day = seen.day
 """
+query("calendar_gaps", q_calendar_gaps, _CALENDAR_GAPS_ORACLE)
 
 
 def q_chisq_independence(spark, sf_dir):
@@ -230,6 +235,7 @@ SELECT round(chi2, 6) AS chi2,
        round(sqrt(chi2 / (n * LEAST(r - 1, c - 1))), 6) AS cramers_v
 FROM a
 """
+query("chisq_independence", q_chisq_independence, _CHISQ_ORACLE)
 
 
 def q_category_entropy(spark, sf_dir):
@@ -279,6 +285,7 @@ SELECT col, COUNT(*) AS n_distinct,
        round(CAST(SUM(term) AS DOUBLE), 6) AS entropy_bits
 FROM t GROUP BY col
 """
+query("category_entropy", q_category_entropy, _CATEGORY_ENTROPY_ORACLE)
 
 
 def q_survival_curve(spark, sf_dir):
@@ -318,6 +325,7 @@ SELECT lifespan AS day,
              / SUM(c) OVER (), 6) AS survival
 FROM per
 """
+query("survival_curve", q_survival_curve, _SURVIVAL_ORACLE)
 
 
 def q_ab_proportion_test(spark, sf_dir):
@@ -379,6 +387,7 @@ SELECT n1, c1, n2, c2,
             END AS z
 FROM j
 """
+query("ab_proportion_test", q_ab_proportion_test, _AB_TEST_ORACLE)
 
 
 def q_user_trend_slope(spark, sf_dir):
@@ -431,6 +440,7 @@ SELECT user_id, CAST(n AS BIGINT) AS n_events,
        round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope
 FROM a WHERE (n * sxx - sx * sx) != 0
 """
+query("user_trend_slope", q_user_trend_slope, _USER_TREND_ORACLE)
 
 
 def q_readability_scores(spark, sf_dir):
@@ -475,6 +485,7 @@ SELECT doc_id, n_sents, n_words, n_syll,
              - 84.6 * (CAST(n_syll AS DOUBLE) / n_words), 4) AS flesch
 FROM c
 """
+query("readability_scores", q_readability_scores, _READABILITY_ORACLE)
 
 
 def q_abc_classification(spark, sf_dir):
@@ -521,6 +532,7 @@ SELECT CASE WHEN share <= 0.8 THEN 'A'
        COUNT(*) AS n_parts, CAST(SUM(rev) AS DOUBLE) AS revenue
 FROM ranked GROUP BY 1
 """
+query("abc_classification", q_abc_classification, _ABC_ORACLE)
 
 
 def q_leadtime_percentiles(spark, sf_dir):
@@ -554,6 +566,7 @@ SELECT o_orderpriority, COUNT(*) AS n,
        round(quantile_cont(lead, 0.99), 6) AS p99
 FROM j GROUP BY 1
 """
+query("leadtime_percentiles", q_leadtime_percentiles, _LEADTIME_ORACLE)
 
 
 def q_discount_quantity_corr(spark, sf_dir):
@@ -606,6 +619,7 @@ SELECT l_returnflag, CAST(n AS BIGINT) AS n_lines,
        AS corr
 FROM a
 """
+query("discount_quantity_corr", q_discount_quantity_corr, _DISCOUNT_QTY_ORACLE)
 
 
 def q_weekday_seasonality(spark, sf_dir):
@@ -642,6 +656,7 @@ SELECT dow, n_orders, CAST(rev AS DOUBLE) AS revenue,
              * 7, 6) AS seasonality_idx
 FROM per
 """
+query("weekday_seasonality", q_weekday_seasonality, _WEEKDAY_ORACLE)
 
 
 def q_hhi_by_month(spark, sf_dir):
@@ -688,6 +703,7 @@ SELECT month, COUNT(*) AS n_nations,
        round(CAST(SUM(term) AS DOUBLE), 6) AS hhi
 FROM t GROUP BY month
 """
+query("hhi_by_month", q_hhi_by_month, _HHI_ORACLE)
 
 
 def q_modularity_lpa(spark, sf_dir):
@@ -748,6 +764,8 @@ SELECT dc.label, n_members, COALESCE(e_in, 0) AS e_in, d_sum,
        AS contribution
 FROM dc LEFT JOIN ein USING (label), m
 """
+query("modularity_lpa", q_modularity_lpa,
+      _label_propagation_sql(4, final="," + _MODULARITY_FINAL))
 
 
 def q_node_jaccard(spark, sf_dir):
@@ -791,6 +809,7 @@ FROM inter JOIN deg du ON du.l_partkey = u
            JOIN deg dv ON dv.l_partkey = v
 ORDER BY jaccard DESC, u, v LIMIT 20
 """
+query("node_jaccard", q_node_jaccard, _NODE_JACCARD_ORACLE)
 
 
 def q_revenue_drawdown(spark, sf_dir):
@@ -825,6 +844,7 @@ SELECT day, CAST(rev AS DOUBLE) AS rev,
 FROM daily
 WINDOW w AS (ORDER BY day ROWS UNBOUNDED PRECEDING)
 """
+query("revenue_drawdown", q_revenue_drawdown, _DRAWDOWN_ORACLE)
 
 
 def q_bot_screen(spark, sf_dir):
@@ -880,6 +900,7 @@ SELECT span.user_id, n_events,
        AS flagged
 FROM span JOIN ent ON span.user_id = ent.user_id
 """
+query("bot_screen", q_bot_screen, _BOT_SCREEN_ORACLE)
 
 
 def q_conversion_latency(spark, sf_dir):
@@ -918,6 +939,7 @@ SELECT COUNT(*) AS n_converted,
        round(quantile_cont(lat_h, 0.9), 6) AS p90_h
 FROM j
 """
+query("conversion_latency", q_conversion_latency, _CONVERSION_LATENCY_ORACLE)
 
 
 def q_seasonal_naive_backtest(spark, sf_dir):
@@ -965,6 +987,8 @@ SELECT COUNT(*) AS n_days,
        round(CAST(SUM(ape) AS DOUBLE) / COUNT(*), 6) AS mape
 FROM t
 """
+query("seasonal_naive_backtest", q_seasonal_naive_backtest,
+      _SEASONAL_NAIVE_ORACLE)
 
 
 def q_basket_diversity(spark, sf_dir):
@@ -987,6 +1011,7 @@ WITH per AS (
   GROUP BY 1)
 SELECT n_brands, COUNT(*) AS n_orders FROM per GROUP BY 1
 """
+query("basket_diversity", q_basket_diversity, _BASKET_DIVERSITY_ORACLE)
 
 
 def q_topk_share_by_nation(spark, sf_dir):
@@ -1039,6 +1064,7 @@ SELECT c_nationkey, COUNT(*) AS n_customers,
              / CAST(SUM(rev) AS DOUBLE), 6) AS top3_share
 FROM flagged GROUP BY c_nationkey
 """
+query("topk_share_by_nation", q_topk_share_by_nation, _TOPK_SHARE_ORACLE)
 
 
 def q_return_rate_by_discount(spark, sf_dir):
@@ -1075,6 +1101,8 @@ SELECT disc_pct, n_lines, n_returned,
                 / SUM(n_lines) OVER ()), 6) AS lift
 FROM per
 """
+query("return_rate_by_discount", q_return_rate_by_discount,
+      _RETURN_RATE_ORACLE)
 
 
 def q_price_dispersion(spark, sf_dir):
@@ -1118,6 +1146,7 @@ SELECT p_brand, CAST(n AS BIGINT) AS n_lines,
        round(sqrt((sxx - sx * sx / n) / (n - 1)) / (sx / n), 6) AS cv
 FROM a
 """
+query("price_dispersion", q_price_dispersion, _PRICE_DISPERSION_ORACLE)
 
 
 def q_ks_statistic(spark, sf_dir):
@@ -1160,6 +1189,7 @@ t AS (
                RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
 SELECT MAX(n1) AS n1, MAX(n2) AS n2, round(MAX(d), 6) AS ks FROM t
 """
+query("ks_statistic", q_ks_statistic, _KS_ORACLE)
 
 
 def q_mann_whitney(spark, sf_dir):
@@ -1225,6 +1255,7 @@ SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
                     * ((n + 1) - tcorr / (n * (n - 1)))), 6) AS z
 FROM a
 """
+query("mann_whitney", q_mann_whitney, _MANN_WHITNEY_ORACLE)
 
 
 def q_welch_ttest(spark, sf_dir):
@@ -1301,6 +1332,7 @@ SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
              6) AS cohens_d
 FROM c
 """
+query("welch_ttest", q_welch_ttest, _WELCH_ORACLE)
 
 
 def q_revenue_peaks(spark, sf_dir):
@@ -1348,6 +1380,7 @@ FROM t
 WHERE prev IS NOT NULL AND nxt IS NOT NULL
   AND rev > prev AND rev > nxt
 """
+query("revenue_peaks", q_revenue_peaks, _REVENUE_PEAKS_ORACLE)
 
 
 def q_level_shifts(spark, sf_dir):
@@ -1394,6 +1427,7 @@ t AS (
 SELECT day, shift FROM t WHERE cb = 7 AND ca = 7
 ORDER BY shift DESC, day LIMIT 5
 """
+query("level_shifts", q_level_shifts, _LEVEL_SHIFTS_ORACLE)
 
 
 def q_session_event_pairs(spark, sf_dir):
@@ -1460,6 +1494,7 @@ FROM pairs
 JOIN per ca ON ca.event_type = et_a
 JOIN per cb ON cb.event_type = et_b, nses
 """
+query("session_event_pairs", q_session_event_pairs, _SESSION_PAIRS_ORACLE)
 
 
 def q_ssjoin_exact(spark, sf_dir):
@@ -1496,6 +1531,7 @@ inter AS (
 SELECT id_a, id_b, round(CAST(i AS DOUBLE)/(na+nb-i), 6) AS jaccard
 FROM inter WHERE CAST(i AS DOUBLE)/(na+nb-i) >= 0.5
 """
+query("ssjoin_exact", q_ssjoin_exact, _SSJOIN_ORACLE)
 
 
 def q_closeness_nations(spark, sf_dir):
@@ -1553,6 +1589,7 @@ SELECT source, CAST(SUM(c) AS BIGINT) AS reached,
        round(SUM(c * (6 // d)) / 6.0, 6) AS harmonic
 FROM per GROUP BY source
 """
+query("closeness_nations", q_closeness_nations, _CLOSENESS_ORACLE)
 
 
 def _holt_coeffs(T: int = 12, horizons=(1, 2, 3, 4)):
@@ -1644,6 +1681,7 @@ SELECT h AS horizon,
        AS forecast
 FROM last JOIN coef USING (i) GROUP BY h
 """
+query("holt_forecast", q_holt_forecast, _holt_oracle_sql())
 
 
 def q_priority_sample(spark, sf_dir):
@@ -1674,6 +1712,7 @@ SELECT o_orderkey, cents,
              / CAST(h + 1 AS DOUBLE) AS priority
 FROM w ORDER BY priority DESC, o_orderkey LIMIT 64
 """
+query("priority_sample", q_priority_sample, _PRIORITY_SAMPLE_ORACLE)
 
 
 def q_local_clustering(spark, sf_dir):
@@ -1720,6 +1759,7 @@ SELECT d.v AS l_partkey, CAST(d.deg AS BIGINT) AS deg,
 FROM deg d LEFT JOIN pn ON pn.v = d.v
 WHERE d.deg >= 2
 """
+query("local_clustering", q_local_clustering, _LOCAL_CLUSTERING_ORACLE)
 
 
 def q_seq_triples(spark, sf_dir):
@@ -1753,6 +1793,7 @@ SELECT et1, et2, et3, COUNT(*) AS support
 FROM t WHERE et3 IS NOT NULL
 GROUP BY 1, 2, 3 HAVING COUNT(*) >= 10
 """
+query("seq_triples", q_seq_triples, _SEQ_TRIPLES_ORACLE)
 
 
 def q_embedding_covariance(spark, sf_dir):
@@ -1821,6 +1862,7 @@ FROM cells c
 JOIN mom mi ON mi.i = c.i
 JOIN mom mj ON mj.i = c.j, n
 """
+query("embedding_covariance", q_embedding_covariance, _EMB_COV_ORACLE)
 
 
 def q_interval_coverage(spark, sf_dir):
@@ -1871,6 +1913,7 @@ SELECT user_id,
        COUNT(*) AS n_intervals
 FROM run GROUP BY user_id
 """
+query("interval_coverage", q_interval_coverage, _INTERVAL_COVERAGE_ORACLE)
 
 
 def q_betweenness_customers(spark, sf_dir):
@@ -1964,6 +2007,7 @@ contrib AS (
 SELECT uid, round(CAST(SUM(delta) AS DOUBLE), 6) AS betweenness
 FROM contrib GROUP BY uid
 """
+query("betweenness_customers", q_betweenness_customers, _BETWEENNESS_ORACLE)
 
 
 def q_minhash_recall(spark, sf_dir):
@@ -2023,6 +2067,7 @@ SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
        round((SELECT COUNT(*) FROM hit) * 1.0
              / (SELECT COUNT(*) FROM exact), 6) AS recall
 """
+query("minhash_recall", q_minhash_recall, _MINHASH_RECALL_ORACLE)
 
 
 def q_stratified_topn(spark, sf_dir):
@@ -2056,6 +2101,7 @@ r AS (
   FROM h)
 SELECT lang, doc_id FROM r WHERE rn <= 20
 """
+query("stratified_topn", q_stratified_topn, _STRATIFIED_TOPN_ORACLE)
 
 
 def q_funnel_windowed(spark, sf_dir):
@@ -2126,6 +2172,7 @@ SELECT (SELECT COUNT(*) FROM v) AS n_view,
        round((SELECT COUNT(*) FROM p) * 1.0
              / (SELECT COUNT(*) FROM v), 6) AS conversion
 """
+query("funnel_windowed", q_funnel_windowed, _FUNNEL_WINDOWED_ORACLE)
 
 
 def q_psi_drift(spark, sf_dir):
@@ -2198,6 +2245,7 @@ SELECT bucket, n_ref, n_cur,
          AS DOUBLE), 9) + 0.0 AS psi_term
 FROM ref JOIN cur USING (bucket), tot
 """
+query("psi_drift", q_psi_drift, _PSI_DRIFT_ORACLE)
 
 
 def q_dsir_select(spark, sf_dir):
@@ -2237,6 +2285,7 @@ SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
        round(CAST(r AS DOUBLE), 6) + 0.0 AS log_ratio
 FROM scored ORDER BY log_ratio DESC, doc_id LIMIT 100
 """
+query("dsir_select", q_dsir_select, _DSIR_ORACLE)
 
 
 def q_hits_copurchase(spark, sf_dir):
@@ -2278,6 +2327,7 @@ SELECT COALESCE(h2.uid, a2.uid) AS uid,
        CAST(COALESCE(a2.a, 0) AS BIGINT) AS authority
 FROM h2 FULL JOIN a2 ON h2.uid = a2.uid
 """
+query("hits_copurchase", q_hits_copurchase, _HITS_ORACLE)
 
 
 def q_katz_parts(spark, sf_dir):
@@ -2313,6 +2363,7 @@ LEFT JOIN w1 ON w1.uid = n.uid
 LEFT JOIN w2 ON w2.uid = n.uid
 LEFT JOIN w3 ON w3.uid = n.uid
 """
+query("katz_parts", q_katz_parts, _KATZ_ORACLE)
 
 
 def q_item_recommendations(spark, sf_dir):
@@ -2421,6 +2472,7 @@ SELECT c AS c_custkey, q AS rec_partkey,
        round(CAST(s AS DOUBLE), 6) AS score
 FROM r WHERE rn <= 3
 """
+query("item_recommendations", q_item_recommendations, _ITEM_RECS_ORACLE)
 
 
 def q_mis_parts(spark, sf_dir):
@@ -2473,6 +2525,7 @@ def _mis_oracle_sql(rounds: int = 6) -> str:
                               for r in range(rounds))
     return ("WITH " + ",\n".join(ctes)
             + f"\nSELECT CAST(uid AS BIGINT) AS l_partkey FROM ({sel})")
+query("mis_parts", q_mis_parts, _mis_oracle_sql())
 
 
 def q_sorted_neighborhood(spark, sf_dir):
@@ -2505,6 +2558,7 @@ SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
 FROM r a JOIN r b ON b.rn > a.rn AND b.rn <= a.rn + 5
 WHERE levenshtein(a.p_name, b.p_name) <= 12
 """
+query("sorted_neighborhood", q_sorted_neighborhood, _SORTED_NBR_ORACLE)
 
 
 def q_theil_sen(spark, sf_dir):
@@ -2573,6 +2627,7 @@ SELECT c AS o_custkey, round(slope, 6) + 0.0 AS theil_sen_slope,
        cnt AS n_pairs
 FROM ranked WHERE rn = CAST(floor((cnt + 1) / 2.0) AS INT)
 """
+query("theil_sen", q_theil_sen, _THEIL_SEN_ORACLE)
 
 
 def q_greedy_cover(spark, sf_dir):
@@ -2632,6 +2687,7 @@ SELECT CAST(round AS INT) AS round, o AS o_orderkey,
        CAST(gain AS BIGINT) AS gain,
        CAST(SUM(gain) OVER (ORDER BY round) AS BIGINT) AS covered_total
 FROM ({" UNION ALL ".join(picks)})""")
+query("greedy_cover", q_greedy_cover, _greedy_cover_oracle_sql())
 
 
 def q_facility_location(spark, sf_dir):
@@ -2727,6 +2783,8 @@ SELECT CAST(round AS INT) AS round, vb AS vec_id,
        CAST(gain AS BIGINT) AS gain,
        CAST(SUM(gain) OVER (ORDER BY round) AS BIGINT) AS objective
 FROM ({" UNION ALL ".join(picks)})""")
+query("facility_location", q_facility_location,
+      _facility_location_oracle_sql())
 
 
 def q_cohort_retention(spark, sf_dir):
@@ -2774,6 +2832,7 @@ SELECT CAST(c.cohort AS DATE) AS cohort, c.age, c.n,
        round(c.n * 1.0 / s.n0, 9) AS retention
 FROM cell c JOIN size_ s USING (cohort)
 """
+query("cohort_retention", q_cohort_retention, _COHORT_RETENTION_ORACLE)
 
 
 def q_incremental_agg(spark, sf_dir):
@@ -2814,6 +2873,7 @@ SELECT o_orderpriority, COUNT(*) AS n_orders,
        MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS max_price
 FROM orders GROUP BY o_orderpriority
 """
+query("incremental_agg", q_incremental_agg, _INCREMENTAL_AGG_ORACLE)
 
 
 def q_twap_users(spark, sf_dir):
@@ -2853,6 +2913,7 @@ SELECT user_id, CAST(SUM(dt) AS BIGINT) AS span_sec,
                   AS DOUBLE) / SUM(dt), 6) AS twap
 FROM seg WHERE dt IS NOT NULL GROUP BY user_id
 """
+query("twap_users", q_twap_users, _TWAP_ORACLE)
 
 
 def q_segment_overlap(spark, sf_dir):
@@ -2896,6 +2957,7 @@ FROM inter
 JOIN size_ sa ON sa.event_type = et_a
 JOIN size_ sb ON sb.event_type = et_b
 """
+query("segment_overlap", q_segment_overlap, _SEGMENT_OVERLAP_ORACLE)
 
 
 def q_session_labels(spark, sf_dir):
@@ -2943,6 +3005,7 @@ SELECT user_id, CAST(sid AS BIGINT) AS sid, COUNT(*) AS n_events,
             AS INT) AS label
 FROM g GROUP BY user_id, sid
 """
+query("session_labels", q_session_labels, _SESSION_LABELS_ORACLE)
 
 
 def q_hard_negatives(spark, sf_dir):
@@ -2999,6 +3062,7 @@ r AS (
 SELECT va AS vec_id, vb AS hard_negative, s AS dot_scaled
 FROM r WHERE rn = 1
 """
+query("hard_negatives", q_hard_negatives, _HARD_NEG_ORACLE)
 
 
 def q_spearman_corr(spark, sf_dir):
@@ -3082,6 +3146,7 @@ SELECT CAST(n AS BIGINT) AS n,
                             AS DOUBLE))), 6) AS spearman_rho
 FROM agg
 """
+query("spearman_corr", q_spearman_corr, _SPEARMAN_ORACLE)
 
 
 def q_cusum_alarm(spark, sf_dir):
@@ -3132,6 +3197,7 @@ SELECT day, cents, CAST(cusum AS BIGINT) AS cusum,
        cusum > 5 * k AS alarm
 FROM s WHERE cusum > 5 * k
 """
+query("cusum_alarm", q_cusum_alarm, _CUSUM_ORACLE)
 
 
 def q_wilson_intervals(spark, sf_dir):
@@ -3172,6 +3238,7 @@ SELECT cohort, n, x,
              6) AS hi
 FROM g
 """
+query("wilson_intervals", q_wilson_intervals, _WILSON_ORACLE)
 
 
 def q_kendall_nations(spark, sf_dir):
@@ -3225,6 +3292,7 @@ SELECT COUNT(*) AS n_pairs,
              / COUNT(*), 6) AS kendall_tau
 FROM pairs
 """
+query("kendall_nations", q_kendall_nations, _KENDALL_ORACLE)
 
 
 def q_eb_shrinkage(spark, sf_dir):
@@ -3256,6 +3324,7 @@ SELECT l_partkey, n, x,
        round((x + 20) * 1.0 / (n + 100), 9) AS shrunk_rate
 FROM g ORDER BY shrunk_rate DESC, l_partkey LIMIT 25
 """
+query("eb_shrinkage", q_eb_shrinkage, _EB_SHRINK_ORACLE)
 
 
 def q_sax_symbols(spark, sf_dir):
@@ -3340,6 +3409,7 @@ SELECT seg, seg_start,
             ELSE 'd' END AS symbol
 FROM m, stats
 """
+query("sax_symbols", q_sax_symbols, _SAX_ORACLE)
 
 
 def q_textrank_keywords(spark, sf_dir):
@@ -3412,6 +3482,7 @@ def _textrank_oracle_sql(iters: int = 4) -> str:
     return ("WITH " + ",\n".join(ctes) + f"""
 SELECT w, CAST(r AS DOUBLE) AS rank
 FROM r{iters} ORDER BY rank DESC, w LIMIT 30""")
+query("textrank_keywords", q_textrank_keywords, _textrank_oracle_sql())
 
 
 def q_isotonic_trend(spark, sf_dir):
@@ -3475,6 +3546,7 @@ SELECT idx.i, CAST(idx.wk AS DATE) AS week, idx.cents,
        round(fit.fit, 6) AS fit
 FROM idx JOIN fit ON fit.i = idx.i
 """
+query("isotonic_trend", q_isotonic_trend, _ISOTONIC_ORACLE)
 
 
 def q_exact_median_terasort(spark, sf_dir):
@@ -3509,6 +3581,7 @@ SELECT n.n,
         LIMIT 1 OFFSET (SELECT (n + 1) // 2 - 1 FROM n)) AS median_cents
 FROM n
 """
+query("exact_median_terasort", q_exact_median_terasort, _EXACT_MEDIAN_ORACLE)
 
 
 def q_frequent_triples(spark, sf_dir):
@@ -3569,6 +3642,7 @@ FROM tri t
 JOIN fp p1 ON p1.x = t.x AND p1.y = t.y
 JOIN fp p2 ON p2.x = t.x AND p2.y = t.z
 """
+query("frequent_triples", q_frequent_triples, _FREQ_TRIPLES_ORACLE)
 
 
 def q_ppr_asia(spark, sf_dir):
@@ -3659,6 +3733,7 @@ def _ppr_oracle_sql(iters: int = 4) -> str:
     return ("WITH " + ",\n".join(ctes) + f"""
 SELECT w, CAST(r AS DOUBLE) AS ppr
 FROM r{iters} WHERE r > 0 ORDER BY ppr DESC, w LIMIT 40""")
+query("ppr_asia", q_ppr_asia, _ppr_oracle_sql())
 
 
 def q_maximal_matching(spark, sf_dir):
@@ -3715,6 +3790,7 @@ def _matching_oracle_sql(rounds: int = 6) -> str:
     return ("WITH " + ",\n".join(ctes) + f"""
 SELECT CAST(u AS BIGINT) AS part_a, CAST(v AS BIGINT) AS part_b
 FROM ({" UNION ALL ".join(sel)})""")
+query("maximal_matching", q_maximal_matching, _matching_oracle_sql())
 
 
 def q_changepoint_sse(spark, sf_dir):
@@ -3783,159 +3859,4 @@ scored AS (
 SELECT split, split_week, sse FROM scored
 ORDER BY sse, split LIMIT 1
 """
-
-
-
-
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    'q_spend_percentile',
-    '_SPEND_PERCENTILE_ORACLE',
-    'q_ahash_groups',
-    '_AHASH_ORACLE',
-    'q_fk_orphans',
-    '_FK_ORPHANS_ORACLE',
-    'q_calendar_gaps',
-    '_CALENDAR_GAPS_ORACLE',
-    'q_chisq_independence',
-    '_CHISQ_ORACLE',
-    'q_category_entropy',
-    '_CATEGORY_ENTROPY_ORACLE',
-    'q_survival_curve',
-    '_SURVIVAL_ORACLE',
-    'q_ab_proportion_test',
-    '_AB_TEST_ORACLE',
-    'q_user_trend_slope',
-    '_USER_TREND_ORACLE',
-    'q_readability_scores',
-    '_READABILITY_ORACLE',
-    'q_abc_classification',
-    '_ABC_ORACLE',
-    'q_leadtime_percentiles',
-    '_LEADTIME_ORACLE',
-    'q_discount_quantity_corr',
-    '_DISCOUNT_QTY_ORACLE',
-    'q_weekday_seasonality',
-    '_WEEKDAY_ORACLE',
-    'q_hhi_by_month',
-    '_HHI_ORACLE',
-    'q_modularity_lpa',
-    '_MODULARITY_FINAL',
-    'q_node_jaccard',
-    '_NODE_JACCARD_ORACLE',
-    'q_revenue_drawdown',
-    '_DRAWDOWN_ORACLE',
-    'q_bot_screen',
-    '_BOT_SCREEN_ORACLE',
-    'q_conversion_latency',
-    '_CONVERSION_LATENCY_ORACLE',
-    'q_seasonal_naive_backtest',
-    '_SEASONAL_NAIVE_ORACLE',
-    'q_basket_diversity',
-    '_BASKET_DIVERSITY_ORACLE',
-    'q_topk_share_by_nation',
-    '_TOPK_SHARE_ORACLE',
-    'q_return_rate_by_discount',
-    '_RETURN_RATE_ORACLE',
-    'q_price_dispersion',
-    '_PRICE_DISPERSION_ORACLE',
-    'q_ks_statistic',
-    '_KS_ORACLE',
-    'q_mann_whitney',
-    '_MANN_WHITNEY_ORACLE',
-    'q_welch_ttest',
-    '_WELCH_ORACLE',
-    'q_revenue_peaks',
-    '_REVENUE_PEAKS_ORACLE',
-    'q_level_shifts',
-    '_LEVEL_SHIFTS_ORACLE',
-    'q_session_event_pairs',
-    '_SESSION_PAIRS_ORACLE',
-    'q_ssjoin_exact',
-    '_SSJOIN_ORACLE',
-    'q_closeness_nations',
-    '_CLOSENESS_ORACLE',
-    '_holt_coeffs',
-    '_HOLT_T',
-    '_HOLT_D',
-    '_HOLT_NUMS',
-    'q_holt_forecast',
-    '_holt_oracle_sql',
-    'q_priority_sample',
-    '_PRIORITY_SAMPLE_ORACLE',
-    'q_local_clustering',
-    '_LOCAL_CLUSTERING_ORACLE',
-    'q_seq_triples',
-    '_SEQ_TRIPLES_ORACLE',
-    'q_embedding_covariance',
-    '_EMB_COV_ORACLE',
-    'q_interval_coverage',
-    '_INTERVAL_COVERAGE_ORACLE',
-    'q_betweenness_customers',
-    '_BETWEENNESS_ORACLE',
-    'q_minhash_recall',
-    '_MINHASH_RECALL_ORACLE',
-    'q_stratified_topn',
-    '_STRATIFIED_TOPN_ORACLE',
-    'q_funnel_windowed',
-    '_FUNNEL_WINDOWED_ORACLE',
-    'q_psi_drift',
-    '_PSI_DRIFT_ORACLE',
-    'q_dsir_select',
-    '_DSIR_ORACLE',
-    'q_hits_copurchase',
-    '_HITS_ORACLE',
-    'q_katz_parts',
-    '_KATZ_ORACLE',
-    'q_item_recommendations',
-    '_ITEM_RECS_ORACLE',
-    'q_mis_parts',
-    '_mis_oracle_sql',
-    'q_sorted_neighborhood',
-    '_SORTED_NBR_ORACLE',
-    'q_theil_sen',
-    '_THEIL_SEN_ORACLE',
-    'q_greedy_cover',
-    '_greedy_cover_oracle_sql',
-    'q_facility_location',
-    '_facility_location_oracle_sql',
-    'q_cohort_retention',
-    '_COHORT_RETENTION_ORACLE',
-    'q_incremental_agg',
-    '_INCREMENTAL_AGG_ORACLE',
-    'q_twap_users',
-    '_TWAP_ORACLE',
-    'q_segment_overlap',
-    '_SEGMENT_OVERLAP_ORACLE',
-    'q_session_labels',
-    '_SESSION_LABELS_ORACLE',
-    'q_hard_negatives',
-    '_HARD_NEG_ORACLE',
-    'q_spearman_corr',
-    '_SPEARMAN_ORACLE',
-    'q_cusum_alarm',
-    '_CUSUM_ORACLE',
-    'q_wilson_intervals',
-    '_WILSON_ORACLE',
-    'q_kendall_nations',
-    '_KENDALL_ORACLE',
-    'q_eb_shrinkage',
-    '_EB_SHRINK_ORACLE',
-    'q_sax_symbols',
-    '_SAX_ORACLE',
-    'q_textrank_keywords',
-    '_textrank_oracle_sql',
-    'q_isotonic_trend',
-    '_ISOTONIC_ORACLE',
-    'q_exact_median_terasort',
-    '_EXACT_MEDIAN_ORACLE',
-    'q_frequent_triples',
-    '_FREQ_TRIPLES_ORACLE',
-    'q_ppr_asia',
-    '_ppr_oracle_sql',
-    'q_maximal_matching',
-    '_matching_oracle_sql',
-    'q_changepoint_sse',
-    '_CHANGEPOINT_ORACLE',
-]
+query("changepoint_sse", q_changepoint_sse, _CHANGEPOINT_ORACLE)

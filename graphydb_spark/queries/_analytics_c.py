@@ -1,16 +1,17 @@
-"""analytics catalog: audits, attribution, ranking metrics, stats tests.
-
-Part of the ordered queries package (see __init__.py) — split from the
-single-module queries.py in round 7; contiguous slice, original order.
-"""
+"""analytics catalog: audits, attribution, ranking metrics, stats tests."""
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
-from ._relational import *  # noqa: F401,F403
-from ._pipeline import *  # noqa: F401,F403
-from ._analytics_a import *  # noqa: F401,F403
-from ._analytics_b import *  # noqa: F401,F403
+import math
+
+from pyspark.sql import functions as F
+
+from ..operators import dedup, graph_algos, text
+from ..sources.tpch_graph import load_tables
+from ._registry import query
+from ._shared import _docs, _events
+from ._pipeline import (_ANN_LSH_TOPK_ORACLE, _KNN_COSINE_ORACLE,
+                        _LANGUAGE_ID_ORACLE, q_ann_lsh_topk, q_knn_cosine)
+
 
 def q_rebalance_audit(spark, sf_dir):
     """Shard-rebalancing audit: fraction of documents that MOVE when a
@@ -83,6 +84,7 @@ SELECT COUNT(*) AS total,
              / COUNT(*), 6) AS hrw_moved_frac
 FROM scored
 """
+query("rebalance_audit", q_rebalance_audit, _rebalance_oracle_sql())
 
 
 def q_percolation_curve(spark, sf_dir):
@@ -156,6 +158,7 @@ FROM (
     FROM reach GROUP BY a)
   SELECT component, COUNT(*) AS sz FROM comp GROUP BY component)""")
     return " UNION ALL ".join(parts)
+query("percolation_curve", q_percolation_curve, _percolation_oracle_sql())
 
 
 def q_simrank_parts(spark, sf_dir):
@@ -240,6 +243,7 @@ JOIN n na ON na.p = pairs.pa
 JOIN n nb ON nb.p = pairs.pb
 ORDER BY simrank2 DESC, pairs.pa, pairs.pb LIMIT 50
 """
+query("simrank_parts", q_simrank_parts, _SIMRANK_ORACLE)
 
 
 def q_corpus_pipeline_v2(spark, sf_dir):
@@ -349,6 +353,7 @@ SELECT lang,
        CAST(SUM(n_chars) AS BIGINT) AS shard_chars
 FROM c GROUP BY lang, shard_id
 """
+query("corpus_pipeline_v2", q_corpus_pipeline_v2, _PIPELINE_V2_ORACLE)
 
 
 _SHAPLEY_CHANNELS = ("click", "error", "signup", "view")
@@ -458,6 +463,7 @@ SELECT channel,
              9) + 0.0 AS shapley
 FROM j GROUP BY channel
 """
+query("shapley_attribution", q_shapley_attribution, _shapley_oracle_sql())
 
 
 def q_attack_robustness(spark, sf_dir):
@@ -554,6 +560,7 @@ FROM (
     FROM reach GROUP BY a)
   SELECT component, COUNT(*) AS sz FROM comp GROUP BY component)""")
     return " UNION ALL ".join(parts)
+query("attack_robustness", q_attack_robustness, _attack_oracle_sql())
 
 
 def q_kappa_langid(spark, sf_dir):
@@ -588,10 +595,9 @@ def q_kappa_langid(spark, sf_dir):
 
 
 def _kappa_oracle_sql() -> str:
-    # reuse the committed language_id oracle as the guess source
-    lang_guess = ORACLES["language_id"]
+    # the committed language_id oracle is the guess source
     return f"""
-WITH guesses AS ({lang_guess}),
+WITH guesses AS ({_LANGUAGE_ID_ORACLE}),
 conf AS (
   SELECT d.lang, g.lang_guess, COUNT(*) AS c
   FROM guesses g JOIN documents d USING (doc_id)
@@ -612,6 +618,7 @@ SELECT n, agree,
              / (1 - pn * 1.0 / (n * n)), 6) AS kappa
 FROM tot, pe
 """
+query("kappa_langid", q_kappa_langid, _kappa_oracle_sql())
 
 
 def q_boilerplate_lines(spark, sf_dir):
@@ -649,6 +656,7 @@ g AS (
 SELECT gram, COUNT(*) AS n_docs
 FROM g GROUP BY gram HAVING COUNT(*) >= 3
 """
+query("boilerplate_lines", q_boilerplate_lines, _BOILERPLATE_ORACLE)
 
 
 def q_heaps_law(spark, sf_dir):
@@ -717,6 +725,7 @@ SELECT CAST(k AS BIGINT) AS n_points,
          AS heaps_beta
 FROM a
 """
+query("heaps_law", q_heaps_law, _HEAPS_ORACLE)
 
 
 def q_burstiness_users(spark, sf_dir):
@@ -769,6 +778,7 @@ SELECT user_id, k AS n_gaps,
                 + CAST(s AS DOUBLE) / k), 6) AS burstiness
 FROM agg WHERE k >= 10
 """
+query("burstiness_users", q_burstiness_users, _BURSTINESS_ORACLE)
 
 
 _DCG_DISCOUNTS = [1.0 / math.log2(i + 1) for i in range(1, 6)]
@@ -808,8 +818,8 @@ def _ndcg_oracle_sql() -> str:
     discounts = ", ".join(f"({i + 1}, {d!r})"
                           for i, d in enumerate(_DCG_DISCOUNTS))
     return f"""
-WITH gt AS ({ORACLES["knn_cosine"]}),
-ann AS ({ORACLES["ann_lsh_topk"]}),
+WITH gt AS ({_KNN_COSINE_ORACLE}),
+ann AS ({_ANN_LSH_TOPK_ORACLE}),
 rgt AS (
   SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id)
     AS rank_gt FROM gt),
@@ -828,6 +838,7 @@ SELECT SUM(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS n_hits,
        round(SUM(rel * d) / {_IDCG5!r}, 6) AS ndcg5
 FROM j
 """
+query("ndcg_ann", q_ndcg_ann, _ndcg_oracle_sql())
 
 
 def q_kfold_groups(spark, sf_dir):
@@ -852,6 +863,7 @@ SELECT CAST(('0x' || substr(md5('cv:' || CAST(o_custkey AS VARCHAR)),
        COUNT(DISTINCT o_custkey) AS n_customers
 FROM orders GROUP BY 1
 """
+query("kfold_groups", q_kfold_groups, _KFOLD_ORACLE)
 
 
 def q_timeseries_cv(spark, sf_dir):
@@ -896,6 +908,7 @@ FROM orders, (VALUES
   (3, DATE '1999-01-01', DATE '2000-01-01')) AS f(fold, cut, te)
 GROUP BY fold
 """
+query("timeseries_cv", q_timeseries_cv, _TSCV_ORACLE)
 
 
 def q_dispersion_index(spark, sf_dir):
@@ -932,6 +945,7 @@ SELECT event_type, k AS n_days,
              / (CAST(s AS DOUBLE) / k), 6) AS dispersion
 FROM agg
 """
+query("dispersion_index", q_dispersion_index, _DISPERSION_ORACLE)
 
 
 def q_did_estimator(spark, sf_dir):
@@ -993,6 +1007,7 @@ SELECT round(tp, 6) AS treat_post, round(tb, 6) AS treat_pre,
        round((tp - tb) - (cp - cb), 6) AS did
 FROM agg
 """
+query("did_estimator", q_did_estimator, _DID_ORACLE)
 
 
 def q_littles_law(spark, sf_dir):
@@ -1036,6 +1051,7 @@ SELECT n, h AS horizon_sec,
        round(busy * 1.0 / n, 6) AS mean_span_sec
 FROM a
 """
+query("littles_law", q_littles_law, _LITTLES_ORACLE)
 
 
 def q_aa_test(spark, sf_dir):
@@ -1099,6 +1115,7 @@ SELECT a.n AS n0, b.n AS n1,
        abs((a.m - b.m) / sqrt(a.vn + b.vn)) < 3 AS healthy
 FROM st a JOIN st b ON a.arm = 0 AND b.arm = 1
 """
+query("aa_test", q_aa_test, _AA_ORACLE)
 
 
 def q_price_elasticity(spark, sf_dir):
@@ -1152,6 +1169,7 @@ SELECT CAST(k AS BIGINT) AS n,
          AS elasticity
 FROM a
 """
+query("price_elasticity", q_price_elasticity, _ELASTICITY_ORACLE)
 
 
 def q_repeat_purchase_fit(spark, sf_dir):
@@ -1179,6 +1197,7 @@ SELECT COUNT(*) AS n_customers,
        round(COUNT(*) * 1.0 / SUM(k), 9) AS geometric_p
 FROM per
 """
+query("repeat_purchase_fit", q_repeat_purchase_fit, _REPEAT_FIT_ORACLE)
 
 
 def q_abc_xyz(spark, sf_dir):
@@ -1257,6 +1276,7 @@ cls AS (
   FROM ranked)
 SELECT abc, xyz, COUNT(*) AS n_parts FROM cls GROUP BY 1, 2
 """
+query("abc_xyz", q_abc_xyz, _ABC_XYZ_ORACLE)
 
 
 def q_p_chart(spark, sf_dir):
@@ -1305,6 +1325,7 @@ SELECT day, n, x,
          AS out_of_control
 FROM daily, tot
 """
+query("p_chart", q_p_chart, _P_CHART_ORACLE)
 
 
 def q_topk_turnover(spark, sf_dir):
@@ -1373,6 +1394,7 @@ SELECT w.wk, COALESCE(i.n_common, 0) AS n_common,
 FROM weeks w JOIN prev p ON p.wk = w.wk
 LEFT JOIN inter i ON i.wk = w.wk
 """
+query("topk_turnover", q_topk_turnover, _TOPK_TURNOVER_ORACLE)
 
 
 def q_logodds_terms(spark, sf_dir):
@@ -1441,6 +1463,7 @@ SELECT tok, a, b, round(delta, 6) AS delta FROM (
   SELECT *, row_number() OVER (ORDER BY delta ASC, tok) AS r
   FROM scored) WHERE r <= 15
 """
+query("logodds_terms", q_logodds_terms, _LOGODDS_ORACLE)
 
 
 def q_quota_violations(spark, sf_dir):
@@ -1472,6 +1495,7 @@ r AS (
 SELECT user_id, CAST(MAX(in_hour) AS BIGINT) AS max_burst
 FROM r GROUP BY user_id HAVING MAX(in_hour) > 8
 """
+query("quota_violations", q_quota_violations, _QUOTA_ORACLE)
 
 
 def q_peak_concurrency(spark, sf_dir):
@@ -1520,6 +1544,7 @@ FROM run, (SELECT MAX(c) AS m FROM (
   SELECT SUM(d) OVER (ORDER BY t, d ROWS UNBOUNDED PRECEDING) AS c
   FROM pts))
 """
+query("peak_concurrency", q_peak_concurrency, _PEAK_ORACLE)
 
 
 def q_hill_tail(spark, sf_dir):
@@ -1573,6 +1598,7 @@ SELECT CAST(k AS BIGINT) AS k,
        round(k / CAST(lsum AS DOUBLE), 6) AS hill_alpha
 FROM s
 """
+query("hill_tail", q_hill_tail, _HILL_ORACLE)
 
 
 def q_var_cvar(spark, sf_dir):
@@ -1624,6 +1650,7 @@ SELECT n.n AS n_days,
               FROM ranked, n WHERE rk <= n.k), 6) AS cvar_cents
 FROM n
 """
+query("var_cvar", q_var_cvar, _VAR_CVAR_ORACLE)
 
 
 def q_jsd_daily_mix(spark, sf_dir):
@@ -1692,6 +1719,7 @@ SELECT day,
 FROM t GROUP BY day
 ORDER BY jsd_bits DESC, day LIMIT 10
 """
+query("jsd_daily_mix", q_jsd_daily_mix, _JSD_ORACLE)
 
 
 def q_cuped_adjustment(spark, sf_dir):
@@ -1778,6 +1806,7 @@ SELECT CAST(n AS BIGINT) AS n_customers,
          AS var_ratio_after_cuped
 FROM a
 """
+query("cuped_adjustment", q_cuped_adjustment, _CUPED_ORACLE)
 
 
 def q_budget_allocation(spark, sf_dir):
@@ -1827,6 +1856,7 @@ SELECT source, chars, round(chars_per_doc, 6) AS chars_per_doc,
 FROM ranked
 WHERE GREATEST(0, LEAST(chars, 200000 - cum_before)) > 0
 """
+query("budget_allocation", q_budget_allocation, _BUDGET_ALLOC_ORACLE)
 
 
 def q_mann_kendall(spark, sf_dir):
@@ -1914,6 +1944,7 @@ SELECT CAST(nn.n AS BIGINT) AS n_weeks, sa.s,
        med.sens_slope
 FROM sa, nn, ties, med
 """
+query("mann_kendall", q_mann_kendall, _MANN_KENDALL_ORACLE)
 
 
 def q_runs_test(spark, sf_dir):
@@ -1976,6 +2007,7 @@ SELECT r, np, nm,
              6) AS z
 FROM runs
 """
+query("runs_test", q_runs_test, _RUNS_TEST_ORACLE)
 
 
 def q_durbin_watson(spark, sf_dir):
@@ -2029,6 +2061,7 @@ SELECT CAST(n AS BIGINT) AS n_weeks,
          AS durbin_watson
 FROM a
 """
+query("durbin_watson", q_durbin_watson, _DW_ORACLE)
 
 
 def q_friedman_test(spark, sf_dir):
@@ -2089,6 +2122,7 @@ SELECT CAST(nn.n AS BIGINT) AS n_blocks,
              - 3.0 * nn.n * 6, 6) AS friedman_chi2
 FROM rj, nn GROUP BY nn.n
 """
+query("friedman_test", q_friedman_test, _FRIEDMAN_ORACLE)
 
 
 def q_segment_migration(spark, sf_dir):
@@ -2147,6 +2181,7 @@ SELECT COALESCE(CAST(q_before AS VARCHAR), 'none') AS q_before,
 FROM q1 FULL JOIN q2 USING (o_custkey)
 GROUP BY 1, 2
 """
+query("segment_migration", q_segment_migration, _MIGRATION_ORACLE)
 
 
 def q_theil_index(spark, sf_dir):
@@ -2229,6 +2264,7 @@ SELECT theil_total, theil_between,
        round(theil_total - theil_between, 6) AS theil_within
 FROM tt, tb
 """
+query("theil_index", q_theil_index, _THEIL_ORACLE)
 
 
 def q_growth_contribution(spark, sf_dir):
@@ -2280,6 +2316,7 @@ SELECT c_nationkey, r98 - r97 AS delta_cents,
        round((r98 - r97) * 1.0 / total_delta, 6) AS share_of_growth
 FROM p, tot
 """
+query("growth_contribution", q_growth_contribution, _GROWTH_CONTRIB_ORACLE)
 
 
 def q_price_index(spark, sf_dir):
@@ -2353,6 +2390,7 @@ SELECT n_parts,
        round(CAST(p1 AS DOUBLE) / CAST(p0 AS DOUBLE), 6) AS paasche
 FROM agg
 """
+query("price_index", q_price_index, _PRICE_INDEX_ORACLE)
 
 
 def q_stickiness(spark, sf_dir):
@@ -2377,6 +2415,7 @@ mau AS (SELECT COUNT(DISTINCT user_id) AS mau FROM events)
 SELECT day, dau, mau, round(dau * 1.0 / mau, 6) AS stickiness
 FROM dau, mau
 """
+query("stickiness", q_stickiness, _STICKINESS_ORACLE)
 
 
 def q_data_contract(spark, sf_dir):
@@ -2427,6 +2466,7 @@ SELECT
      SELECT o_orderkey FROM orders GROUP BY o_orderkey
      HAVING COUNT(*) > 1)) AS duplicate_orderkeys
 """
+query("data_contract", q_data_contract, _DATA_CONTRACT_ORACLE)
 
 
 _HOUR_TRIG = [(h, math.cos(2 * math.pi * h / 24),
@@ -2478,6 +2518,7 @@ SELECT event_type, n,
        round(sqrt(sc * sc + ss * ss) / n, 6) AS concentration
 FROM agg
 """
+query("hour_concentration", q_hour_concentration, _hour_conc_oracle_sql())
 
 
 def q_qte_segments(spark, sf_dir):
@@ -2534,6 +2575,7 @@ SELECT a.q, a.v AS treat_cents, b.v AS ctrl_cents,
        a.v - b.v AS qte_cents
 FROM qs a JOIN qs b ON a.q = b.q AND a.treat AND NOT b.treat
 """
+query("qte_segments", q_qte_segments, _QTE_ORACLE)
 
 
 def q_conformal_interval(spark, sf_dir):
@@ -2605,6 +2647,7 @@ SELECT (SELECT hn FROM nn) AS n_cal,
          AS empirical_coverage
 FROM test
 """
+query("conformal_interval", q_conformal_interval, _conformal_oracle_sql())
 
 
 _REPLAY_ARMS = ("click", "error", "purchase", "signup", "view")
@@ -2694,6 +2737,7 @@ SELECT tot.n_total, COUNT(*) AS n_matched,
              / COUNT(*), 6) AS replay_value
 FROM m, tot GROUP BY tot.n_total
 """
+query("policy_replay", q_policy_replay, _policy_replay_oracle_sql())
 
 
 def q_anova_segments(spark, sf_dir):
@@ -2768,6 +2812,7 @@ SELECT CAST(nt AS BIGINT) AS n, CAST(k AS BIGINT) AS k,
          AS eta_squared
 FROM tot
 """
+query("anova_segments", q_anova_segments, _ANOVA_ORACLE)
 
 
 def q_degree_powerlaw(spark, sf_dir):
@@ -2826,6 +2871,7 @@ SELECT CAST(k AS BIGINT) AS n_degrees,
          AS powerlaw_slope
 FROM a
 """
+query("degree_powerlaw", q_degree_powerlaw, _DEGREE_PL_ORACLE)
 
 
 def q_basket_entropy_nation(spark, sf_dir):
@@ -2865,6 +2911,7 @@ SELECT j.c_nationkey,
 FROM j JOIN tot USING (c_nationkey)
 GROUP BY j.c_nationkey
 """
+query("basket_entropy_nation", q_basket_entropy_nation, _BASKET_ENTROPY_ORACLE)
 
 
 def q_whale_share(spark, sf_dir):
@@ -2910,6 +2957,7 @@ SELECT nn.n AS n_customers, nn.k AS n_whales,
              / CAST(SUM(s) AS DOUBLE), 6) AS whale_revenue_share
 FROM r, nn GROUP BY nn.n, nn.k
 """
+query("whale_share", q_whale_share, _WHALE_ORACLE)
 
 
 def q_trade_flows(spark, sf_dir):
@@ -2948,6 +2996,7 @@ JOIN customer ON o_custkey = c_custkey
 JOIN supplier ON l_suppkey = s_suppkey
 GROUP BY 1, 2
 """
+query("trade_flows", q_trade_flows, _TRADE_FLOWS_ORACLE)
 
 
 def q_supply_concentration(spark, sf_dir):
@@ -2995,6 +3044,7 @@ FROM j JOIN tot USING (ptype)
 GROUP BY j.ptype, tot.n_suppliers
 ORDER BY hhi DESC, j.ptype LIMIT 10
 """
+query("supply_concentration", q_supply_concentration, _SUPPLY_CONC_ORACLE)
 
 
 def q_source_dup_matrix(spark, sf_dir):
@@ -3043,6 +3093,7 @@ JOIN documents da ON da.doc_id = id_a
 JOIN documents db ON db.doc_id = id_b
 GROUP BY 1, 2
 """
+query("source_dup_matrix", q_source_dup_matrix, _SOURCE_DUP_ORACLE)
 
 
 def q_backlog_curve(spark, sf_dir):
@@ -3086,6 +3137,7 @@ run AS (
 SELECT d, CAST(backlog AS BIGINT) AS open_orders
 FROM run ORDER BY open_orders DESC, d LIMIT 15
 """
+query("backlog_curve", q_backlog_curve, _BACKLOG_ORACLE)
 
 
 def q_ccdf_orders(spark, sf_dir):
@@ -3120,6 +3172,7 @@ SELECT CAST(g.x AS BIGINT) AS threshold,
                  THEN 1 ELSE 0 END) * 1.0 / MIN(n.n), 9) AS ccdf
 FROM orders, g, n GROUP BY g.x
 """
+query("ccdf_orders", q_ccdf_orders, _ccdf_oracle_sql())
 
 
 def q_revenue_bridge(spark, sf_dir):
@@ -3208,6 +3261,7 @@ SELECT n_parts,
        round(CAST(delta AS DOUBLE) / 100, 2) AS total_delta
 FROM agg
 """
+query("revenue_bridge", q_revenue_bridge, _REVENUE_BRIDGE_ORACLE)
 
 
 def q_dedup_roi(spark, sf_dir):
@@ -3287,6 +3341,7 @@ SELECT total_chars, exact_chars, near_chars,
          AS savings_ratio
 FROM tot, exact_d, near_d
 """
+query("dedup_roi", q_dedup_roi, _DEDUP_ROI_ORACLE)
 
 
 def q_seasonality_strength(spark, sf_dir):
@@ -3345,6 +3400,7 @@ SELECT CAST(nt AS BIGINT) AS n_days,
          AS seasonality_strength
 FROM tot
 """
+query("seasonality_strength", q_seasonality_strength, _SEASONALITY_ORACLE)
 
 
 def q_quartile_dispersion(spark, sf_dir):
@@ -3397,6 +3453,7 @@ SELECT c_nationkey, q1, q3,
        round((q3 - q1) * 1.0 / (q3 + q1), 6) AS qcd
 FROM q1 JOIN q3 USING (c_nationkey)
 """
+query("quartile_dispersion", q_quartile_dispersion, _QCD_ORACLE)
 
 
 def q_lines_per_order_trend(spark, sf_dir):
@@ -3428,6 +3485,7 @@ SELECT EXTRACT(year FROM o_orderdate) AS yr,
 FROM orders JOIN li ON o_orderkey = l_orderkey
 GROUP BY 1, 2
 """
+query("lines_per_order_trend", q_lines_per_order_trend, _LPO_ORACLE)
 
 
 def q_tenure_spend_corr(spark, sf_dir):
@@ -3494,6 +3552,7 @@ SELECT CAST(n AS BIGINT) AS n_customers,
                             AS DOUBLE))), 6) AS tenure_spend_r
 FROM a
 """
+query("tenure_spend_corr", q_tenure_spend_corr, _TENURE_CORR_ORACLE)
 
 
 def q_acf_table(spark, sf_dir):
@@ -3569,137 +3628,4 @@ SELECT lag, CAST(n AS BIGINT) AS n_pairs,
                             AS DOUBLE))), 6) AS acf
 FROM agg
 """
-
-
-
-
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    'q_rebalance_audit',
-    '_rebalance_oracle_sql',
-    'q_percolation_curve',
-    '_percolation_oracle_sql',
-    'q_simrank_parts',
-    '_SIMRANK_ORACLE',
-    'q_corpus_pipeline_v2',
-    '_PIPELINE_V2_ORACLE',
-    '_SHAPLEY_CHANNELS',
-    '_shapley_lattice',
-    'q_shapley_attribution',
-    '_shapley_oracle_sql',
-    'q_attack_robustness',
-    '_attack_oracle_sql',
-    'q_kappa_langid',
-    '_kappa_oracle_sql',
-    'q_boilerplate_lines',
-    '_BOILERPLATE_ORACLE',
-    'q_heaps_law',
-    '_HEAPS_ORACLE',
-    'q_burstiness_users',
-    '_BURSTINESS_ORACLE',
-    '_DCG_DISCOUNTS',
-    '_IDCG5',
-    'q_ndcg_ann',
-    '_ndcg_oracle_sql',
-    'q_kfold_groups',
-    '_KFOLD_ORACLE',
-    'q_timeseries_cv',
-    '_TSCV_ORACLE',
-    'q_dispersion_index',
-    '_DISPERSION_ORACLE',
-    'q_did_estimator',
-    '_DID_ORACLE',
-    'q_littles_law',
-    '_LITTLES_ORACLE',
-    'q_aa_test',
-    '_AA_ORACLE',
-    'q_price_elasticity',
-    '_ELASTICITY_ORACLE',
-    'q_repeat_purchase_fit',
-    '_REPEAT_FIT_ORACLE',
-    'q_abc_xyz',
-    '_ABC_XYZ_ORACLE',
-    'q_p_chart',
-    '_P_CHART_ORACLE',
-    'q_topk_turnover',
-    '_TOPK_TURNOVER_ORACLE',
-    'q_logodds_terms',
-    '_LOGODDS_ORACLE',
-    'q_quota_violations',
-    '_QUOTA_ORACLE',
-    'q_peak_concurrency',
-    '_PEAK_ORACLE',
-    'q_hill_tail',
-    '_HILL_ORACLE',
-    'q_var_cvar',
-    '_VAR_CVAR_ORACLE',
-    'q_jsd_daily_mix',
-    '_JSD_ORACLE',
-    'q_cuped_adjustment',
-    '_CUPED_ORACLE',
-    'q_budget_allocation',
-    '_BUDGET_ALLOC_ORACLE',
-    'q_mann_kendall',
-    '_MANN_KENDALL_ORACLE',
-    'q_runs_test',
-    '_RUNS_TEST_ORACLE',
-    'q_durbin_watson',
-    '_DW_ORACLE',
-    'q_friedman_test',
-    '_FRIEDMAN_ORACLE',
-    'q_segment_migration',
-    '_MIGRATION_ORACLE',
-    'q_theil_index',
-    '_THEIL_ORACLE',
-    'q_growth_contribution',
-    '_GROWTH_CONTRIB_ORACLE',
-    'q_price_index',
-    '_PRICE_INDEX_ORACLE',
-    'q_stickiness',
-    '_STICKINESS_ORACLE',
-    'q_data_contract',
-    '_DATA_CONTRACT_ORACLE',
-    '_HOUR_TRIG',
-    'q_hour_concentration',
-    '_hour_conc_oracle_sql',
-    'q_qte_segments',
-    '_QTE_ORACLE',
-    'q_conformal_interval',
-    '_conformal_oracle_sql',
-    '_REPLAY_ARMS',
-    'q_policy_replay',
-    '_policy_replay_oracle_sql',
-    'q_anova_segments',
-    '_ANOVA_ORACLE',
-    'q_degree_powerlaw',
-    '_DEGREE_PL_ORACLE',
-    'q_basket_entropy_nation',
-    '_BASKET_ENTROPY_ORACLE',
-    'q_whale_share',
-    '_WHALE_ORACLE',
-    'q_trade_flows',
-    '_TRADE_FLOWS_ORACLE',
-    'q_supply_concentration',
-    '_SUPPLY_CONC_ORACLE',
-    'q_source_dup_matrix',
-    '_SOURCE_DUP_ORACLE',
-    'q_backlog_curve',
-    '_BACKLOG_ORACLE',
-    'q_ccdf_orders',
-    '_ccdf_oracle_sql',
-    'q_revenue_bridge',
-    '_REVENUE_BRIDGE_ORACLE',
-    'q_dedup_roi',
-    '_DEDUP_ROI_ORACLE',
-    'q_seasonality_strength',
-    '_SEASONALITY_ORACLE',
-    'q_quartile_dispersion',
-    '_QCD_ORACLE',
-    'q_lines_per_order_trend',
-    '_LPO_ORACLE',
-    'q_tenure_spend_corr',
-    '_TENURE_CORR_ORACLE',
-    'q_acf_table',
-    '_acf_oracle_sql',
-]
+query("acf_table", q_acf_table, _acf_oracle_sql())

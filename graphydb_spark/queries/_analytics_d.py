@@ -1,17 +1,16 @@
-"""analytics catalog: steady states, histograms, distances, reservoirs.
-
-Part of the ordered queries package (see __init__.py) — split from the
-single-module queries.py in round 7; contiguous slice, original order.
-"""
+"""analytics catalog: steady states, histograms, distances, reservoirs."""
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
-from ._relational import *  # noqa: F401,F403
-from ._pipeline import *  # noqa: F401,F403
-from ._analytics_a import *  # noqa: F401,F403
-from ._analytics_b import *  # noqa: F401,F403
-from ._analytics_c import *  # noqa: F401,F403
+from pyspark.sql import functions as F
+
+from ..operators import dedup, graph_algos, similarity, text
+from ..sources.tpch_graph import load_tables, tpch_graph
+from ._registry import query
+from ._shared import _docs, _emb, _events, _ivf_blocked
+from ._pipeline import (_LANGUAGE_ID_ORACLE, _MINHASH_PAIRS_ORACLE, _ivf_ctes,
+                        q_minhash_pairs)
+from ._analytics_a import _bpe_ctes
+
 
 def q_markov_steady_state(spark, sf_dir):
     """Stationary distribution of the per-user event-type Markov chain
@@ -75,6 +74,7 @@ def _steady_state_oracle_sql(iters: int = 8) -> str:
     return ("WITH " + ",\n".join(ctes) + f"""
 SELECT d AS event_type, CAST(pi AS DOUBLE) AS steady_state
 FROM pi{iters}""")
+query("markov_steady_state", q_markov_steady_state, _steady_state_oracle_sql())
 
 
 def q_token_burstiness(spark, sf_dir):
@@ -107,6 +107,7 @@ agg AS (
 SELECT tok, cf, df, round(cf * 1.0 / df, 6) AS burstiness
 FROM agg ORDER BY cf DESC, tok LIMIT 30
 """
+query("token_burstiness", q_token_burstiness, _TOKEN_BURST_ORACLE)
 
 
 def q_mutual_knn(spark, sf_dir):
@@ -169,6 +170,7 @@ SELECT p.x AS vec_a, p.y AS vec_b
 FROM nn p JOIN nn q ON p.x = q.y AND p.y = q.x
 WHERE p.x < p.y
 """
+query("mutual_knn", q_mutual_knn, _MUTUAL_KNN_ORACLE)
 
 
 def q_dead_stock(spark, sf_dir):
@@ -205,6 +207,7 @@ SELECT o.l_partkey, o.last_sale, o.n_lifetime_lines
 FROM old o LEFT JOIN recent r ON r.l_partkey = o.l_partkey
 WHERE r.l_partkey IS NULL
 """
+query("dead_stock", q_dead_stock, _DEAD_STOCK_ORACLE)
 
 
 def q_session_depth_curve(spark, sf_dir):
@@ -256,6 +259,7 @@ SELECT k, SUM(CASE WHEN depth >= k THEN 1 ELSE 0 END) AS n_reaching,
              / MIN(tot.n), 6) AS survival
 FROM ks, sess, tot GROUP BY k
 """
+query("session_depth_curve", q_session_depth_curve, _SESSION_DEPTH_ORACLE)
 
 
 def q_price_stickiness(spark, sf_dir):
@@ -312,6 +316,7 @@ SELECT COUNT(*) AS n_parts,
              / COUNT(*), 6) AS sticky_share
 FROM j
 """
+query("price_stickiness", q_price_stickiness, _PRICE_STICKY_ORACLE)
 
 
 def q_roc_curve(spark, sf_dir):
@@ -362,6 +367,7 @@ SELECT thr_pct, cum_tp, cum_fp,
        round(cum_fp * 1.0 / neg, 6) AS fpr
 FROM cum, tot
 """
+query("roc_curve", q_roc_curve, _ROC_ORACLE)
 
 
 def q_pr_curve(spark, sf_dir):
@@ -412,6 +418,7 @@ SELECT thr_pct,
        round(pos * 1.0 / n, 6) AS prevalence
 FROM cum, tot
 """
+query("pr_curve", q_pr_curve, _PR_ORACLE)
 
 
 def q_brier_calibration(spark, sf_dir):
@@ -458,6 +465,7 @@ SELECT bin, COUNT(*) AS n,
        AS brier
 FROM b GROUP BY 1
 """
+query("brier_calibration", q_brier_calibration, _BRIER_ORACLE)
 
 
 def q_butterfly_count(spark, sf_dir):
@@ -514,6 +522,7 @@ SELECT (SELECT CAST(SUM(d) AS BIGINT) FROM keep) AS n_edges,
        (SELECT CAST(COALESCE(SUM(s * (s - 1) // 2), 0) AS BIGINT)
         FROM pairs) AS n_butterflies
 """
+query("butterfly_count", q_butterfly_count, _BUTTERFLY_ORACLE)
 
 
 def q_diameter_sweep(spark, sf_dir):
@@ -582,6 +591,7 @@ SELECT (SELECT uid FROM far) AS far_uid,
        CAST((SELECT d FROM far) AS INT) AS ecc_start,
        CAST((SELECT MAX(d) FROM d2) AS INT) AS diameter_lb
 """
+query("diameter_sweep", q_diameter_sweep, _DIAMETER_SWEEP_ORACLE)
 
 
 def q_eigenvector_parts(spark, sf_dir):
@@ -624,6 +634,7 @@ SELECT uid, round(x / mx, 6) AS score
 FROM fin, m
 ORDER BY score DESC, uid LIMIT 20
 """
+query("eigenvector_parts", q_eigenvector_parts, _EIGENVECTOR_ORACLE)
 
 
 def q_unpivot_metrics(spark, sf_dir):
@@ -681,6 +692,7 @@ SELECT r_name, 'n_suppliers', CAST(n_suppliers AS BIGINT) FROM wide
 UNION ALL
 SELECT r_name, 'acctbal_cents', CAST(acctbal_cents AS BIGINT) FROM wide
 """
+query("unpivot_metrics", q_unpivot_metrics, _UNPIVOT_ORACLE)
 
 
 def q_bitmap_distinct(spark, sf_dir):
@@ -707,6 +719,7 @@ _BITMAP_DISTINCT_ORACLE = """
 SELECT event_type, COUNT(DISTINCT user_id) AS n_users
 FROM events GROUP BY 1
 """
+query("bitmap_distinct", q_bitmap_distinct, _BITMAP_DISTINCT_ORACLE)
 
 
 def q_croston_demand(spark, sf_dir):
@@ -779,6 +792,7 @@ SELECT brand, n_demand_days,
                0.9::DOUBLE * acc + 0.1::DOUBLE * x), 6) AS demand_rate
 FROM i
 """
+query("croston_demand", q_croston_demand, _CROSTON_ORACLE)
 
 
 def q_attribution_time_decay(spark, sf_dir):
@@ -854,6 +868,7 @@ SELECT channel, round(SUM(credit), 4) AS credited_value
 FROM (SELECT * FROM credited UNION ALL SELECT * FROM direct)
 GROUP BY 1
 """
+query("attribution_time_decay", q_attribution_time_decay, _TIME_DECAY_ORACLE)
 
 
 def q_moments_by_segment(spark, sf_dir):
@@ -927,6 +942,7 @@ SELECT mm.c_mktsegment, mm.n,
        round(m4 / (m2 * m2) - 3, 6) AS excess_kurtosis
 FROM mm JOIN g ON mm.c_mktsegment = g.c_mktsegment
 """
+query("moments_by_segment", q_moments_by_segment, _MOMENTS_ORACLE)
 
 
 def q_lorenz_curve(spark, sf_dir):
@@ -979,6 +995,7 @@ SELECT decile, round(cum_n * 1.0 / tn, 6) AS pop_share,
        round(cum_c * 1.0 / t, 6) AS revenue_share
 FROM cum, tot
 """
+query("lorenz_curve", q_lorenz_curve, _LORENZ_ORACLE)
 
 
 def q_otif_rate(spark, sf_dir):
@@ -1026,6 +1043,7 @@ SELECT o_orderpriority, COUNT(*) AS n_lines,
          AS mean_late_days
 FROM li GROUP BY 1
 """
+query("otif_rate", q_otif_rate, _OTIF_ORACLE)
 
 
 def q_embedding_norm_outliers(spark, sf_dir):
@@ -1067,6 +1085,8 @@ mad AS (SELECT quantile_cont(ad, 0.5) AS mad FROM dev)
 SELECT vec_id, sq_norm, ad AS abs_dev
 FROM dev, mad WHERE ad > 3 * mad
 """
+query("embedding_norm_outliers", q_embedding_norm_outliers,
+      _NORM_OUTLIER_ORACLE)
 
 
 def q_seasonal_decomposition(spark, sf_dir):
@@ -1112,6 +1132,8 @@ SELECT isodow(day) - 1 AS wd, COUNT(*) AS n_days,
          AS seasonal_cents
 FROM t WHERE n7 = 7 GROUP BY 1
 """
+query("seasonal_decomposition", q_seasonal_decomposition,
+      _SEASONAL_DECOMP_ORACLE)
 
 
 def q_discount_qty_heatmap(spark, sf_dir):
@@ -1143,6 +1165,7 @@ SELECT disc_pct, qty_bucket, COUNT(*) AS n_lines,
        round(SUM(cents) / (100.0 * COUNT(*)), 4) AS mean_revenue
 FROM li GROUP BY 1, 2
 """
+query("discount_qty_heatmap", q_discount_qty_heatmap, _HEATMAP_ORACLE)
 
 
 def q_equi_depth_bounds(spark, sf_dir):
@@ -1174,6 +1197,7 @@ pct AS (
 SELECT CAST(i AS INT) AS q16, b[CAST(i AS INT)] AS boundary_cents
 FROM pct, range(1, 16) t(i)
 """.format(fracs=", ".join(repr(i / 16.0) for i in range(1, 16)))
+query("equi_depth_bounds", q_equi_depth_bounds, _EQUI_DEPTH_ORACLE)
 
 
 def q_lateness_audit(spark, sf_dir):
@@ -1219,6 +1243,7 @@ SELECT event_type, COUNT(*) AS n_events,
        MAX(lag_s) AS max_lag_s
 FROM lagged GROUP BY 1
 """
+query("lateness_audit", q_lateness_audit, _LATENESS_ORACLE)
 
 
 def q_id_gaps(spark, sf_dir):
@@ -1268,6 +1293,7 @@ SELECT gap_start, gap_end, gap_len
 FROM gaps WHERE gap_end IS NOT NULL
 ORDER BY gap_len DESC, gap_start LIMIT 20
 """
+query("id_gaps", q_id_gaps, _ID_GAPS_ORACLE)
 
 
 def q_newsvendor_stock(spark, sf_dir):
@@ -1319,6 +1345,7 @@ SELECT d.brand, MAX(stock_level) AS stock_level,
 FROM d JOIN lvl ON d.brand = lvl.brand
 GROUP BY 1
 """
+query("newsvendor_stock", q_newsvendor_stock, _NEWSVENDOR_ORACLE)
 
 
 def q_srm_check(spark, sf_dir):
@@ -1363,6 +1390,7 @@ SELECT event_type, na, nb,
                  > 3.841 THEN 1 ELSE 0 END AS srm_flag
 FROM g
 """
+query("srm_check", q_srm_check, _SRM_ORACLE)
 
 
 def q_power_analysis(spark, sf_dir):
@@ -1420,6 +1448,7 @@ SELECT c_mktsegment, n_customers, round(p1, 6) AS baseline_rate,
        CAST(ceil(z * z / (0.02 * 0.02)) AS BIGINT) AS n_per_arm
 FROM num
 """
+query("power_analysis", q_power_analysis, _POWER_ORACLE)
 
 
 def q_hypergeom_enrichment(spark, sf_dir):
@@ -1486,6 +1515,7 @@ zz AS (
 SELECT nation, brand, k, round(z, 6) AS z
 FROM zz WHERE abs(z) > 2
 """
+query("hypergeom_enrichment", q_hypergeom_enrichment, _HYPERGEOM_ORACLE)
 
 
 def q_quantile_normalize(spark, sf_dir):
@@ -1541,6 +1571,7 @@ SELECT source, CAST(ceil(rs * 10.0 / ns) AS INT) AS decile,
 FROM mapped JOIN pooled USING (target_rank)
 GROUP BY 1, 2
 """
+query("quantile_normalize", q_quantile_normalize, _QNORM_ORACLE)
 
 
 def q_gains_curve(spark, sf_dir):
@@ -1594,6 +1625,7 @@ SELECT decile, n_customers, captured,
              * 1.0 / t, 6) AS cum_gain
 FROM per, tot
 """
+query("gains_curve", q_gains_curve, _GAINS_ORACLE)
 
 
 def q_quality_rule_breakdown(spark, sf_dir):
@@ -1668,6 +1700,8 @@ SELECT 'ok_stopwords',
        SUM(CASE WHEN NOT ok_stopwords AND n_ok = 3 THEN 1 ELSE 0 END)
 FROM g
 """
+query("quality_rule_breakdown", q_quality_rule_breakdown,
+      _QUALITY_BREAKDOWN_ORACLE)
 
 
 def q_token_length_histogram(spark, sf_dir):
@@ -1696,6 +1730,7 @@ SELECT source, CAST(length(bin(n)) - 1 AS INT) AS log2_bucket,
        COUNT(*) AS n_docs
 FROM d GROUP BY 1, 2
 """
+query("token_length_histogram", q_token_length_histogram, _TOKEN_HIST_ORACLE)
 
 
 def q_pack_efficiency_curve(spark, sf_dir):
@@ -1757,6 +1792,7 @@ SELECT window_size,
                 * window_size), 6) AS utilization
 FROM cc, ws GROUP BY 1
 """
+query("pack_efficiency_curve", q_pack_efficiency_curve, _PACK_CURVE_ORACLE)
 
 
 def q_lang_confusion(spark, sf_dir):
@@ -1777,7 +1813,7 @@ def q_lang_confusion(spark, sf_dir):
 
 def _lang_confusion_oracle_sql() -> str:
     return f"""
-WITH guesses AS ({ORACLES["language_id"]}),
+WITH guesses AS ({_LANGUAGE_ID_ORACLE}),
 conf AS (
   SELECT d.lang, g.lang_guess, COUNT(*) AS n
   FROM guesses g JOIN documents d USING (doc_id)
@@ -1787,6 +1823,7 @@ SELECT lang, lang_guess, n,
          AS row_share
 FROM conf
 """
+query("lang_confusion", q_lang_confusion, _lang_confusion_oracle_sql())
 
 
 def q_oov_rate(spark, sf_dir):
@@ -1854,6 +1891,7 @@ SELECT occ.split, n_types, n_oov_types,
        round(n_oov_tokens * 1.0 / n_tokens, 6) AS token_oov_rate
 FROM occ JOIN ty ON occ.split = ty.split
 """
+query("oov_rate", q_oov_rate, _OOV_ORACLE)
 
 
 def q_split_leakage_check(spark, sf_dir):
@@ -1882,7 +1920,7 @@ def q_split_leakage_check(spark, sf_dir):
 
 def _split_leakage_oracle_sql() -> str:
     return f"""
-WITH pairs AS ({ORACLES["minhash_pairs"]}),
+WITH pairs AS ({_MINHASH_PAIRS_ORACLE}),
 sp AS (
   SELECT doc_id,
          CASE
@@ -1906,6 +1944,8 @@ SELECT COUNT(*) AS n_candidate_pairs,
        round(SUM(leak) * 1.0 / COUNT(*), 6) AS leak_share
 FROM j
 """
+query("split_leakage_check", q_split_leakage_check,
+      _split_leakage_oracle_sql())
 
 
 def q_shingle_df_histogram(spark, sf_dir):
@@ -1947,6 +1987,7 @@ SELECT CAST(length(bin(df)) - 1 AS INT) AS log2_df,
        COUNT(*) AS n_shingles
 FROM dfc GROUP BY 1
 """
+query("shingle_df_histogram", q_shingle_df_histogram, _SHINGLE_DF_ORACLE)
 
 
 def q_ahash_near_dup(spark, sf_dir):
@@ -2017,6 +2058,7 @@ ham AS (
 SELECT id_a, id_b, CAST(hamming AS INT) AS hamming
 FROM ham WHERE hamming <= 6
 """
+query("ahash_near_dup", q_ahash_near_dup, _AHASH_NEAR_DUP_ORACLE)
 
 
 def q_qq_year_compare(spark, sf_dir):
@@ -2062,6 +2104,7 @@ SELECT a.q16, a.v AS v1996, b.v AS v1997,
 FROM (SELECT q16, v FROM e WHERE yr = 1996) a
 JOIN (SELECT q16, v FROM e WHERE yr = 1997) b USING (q16)
 """.format(fracs=", ".join(repr(i / 16.0) for i in range(1, 16)))
+query("qq_year_compare", q_qq_year_compare, _QQ_ORACLE)
 
 
 def q_substring_spans(spark, sf_dir):
@@ -2107,6 +2150,7 @@ SELECT id_a, id_b, MIN(pa) AS start_a, MIN(pb) AS start_b,
 FROM isl GROUP BY id_a, id_b, pa - pb, isl
 HAVING COUNT(*) + 7 >= 12
 """
+query("substring_spans", q_substring_spans, _SUBSTRING_SPANS_ORACLE)
 
 
 def q_dbscan_embeddings(spark, sf_dir):
@@ -2219,6 +2263,7 @@ SELECT e.vec_id, COALESCE(a.role, 'noise') AS role,
        CAST(COALESCE(a.cluster, -1) AS BIGINT) AS cluster
 FROM e LEFT JOIN assigned a ON e.vec_id = a.id
 """
+query("dbscan_embeddings", q_dbscan_embeddings, _DBSCAN_ORACLE)
 
 
 def q_price_model(spark, sf_dir):
@@ -2314,6 +2359,7 @@ SELECT CAST(n AS BIGINT) AS n,
                 + sx2 * (sx1 * sx12 - sx11 * sx2)), 6) AS beta2
 FROM s
 """
+query("price_model", q_price_model, _PRICE_MODEL_ORACLE)
 
 
 def q_mst_trade(spark, sf_dir):
@@ -2393,6 +2439,7 @@ forest{r}(src, dst, w) AS MATERIALIZED (
     parts.append(tail if tail is not None else f"""
 SELECT src, dst, w AS w_cents FROM forest{rounds}""")
     return "".join(parts)
+query("mst_trade", q_mst_trade, _mst_oracle_sql())
 
 
 def _nation_flows(spark, sf_dir, negate=False):
@@ -2465,6 +2512,9 @@ reachk(s, d) AS (
   UNION
   SELECT t.s, f.b FROM reachk t JOIN ksym f ON f.a = t.d)
 SELECT s AS nation, MIN(d) AS cluster FROM reachk GROUP BY 1"""
+query("single_linkage_nations", q_single_linkage_nations,
+      _mst_oracle_sql(
+          negate=True, tail=_SINGLE_LINKAGE_TAIL.format(r=6)))
 
 
 def q_tokenizer_fertility(spark, sf_dir):
@@ -2530,6 +2580,8 @@ SELECT lang, words, chars, bpe_tokens,
        round(bpe_tokens / words, 6) AS fertility,
        round(chars / bpe_tokens, 6) AS chars_per_token
 FROM st"""
+query("tokenizer_fertility", q_tokenizer_fertility,
+      _tokenizer_fertility_oracle_sql())
 
 
 def q_hll_distinct(spark, sf_dir):
@@ -2598,6 +2650,7 @@ SELECT CAST(16 AS INT) AS m, nonzero_regs,
        (SELECT COUNT(DISTINCT user_id) FROM events) AS n_exact
 FROM sk
 """
+query("hll_distinct", q_hll_distinct, _HLL_ORACLE)
 
 
 def q_cms_heavy_hitters(spark, sf_dir):
@@ -2666,6 +2719,7 @@ FROM est
 WHERE cms_estimate >= GREATEST(1, CAST(
   (SELECT COUNT(*) FROM events) * 0.002 AS BIGINT))
 """
+query("cms_heavy_hitters", q_cms_heavy_hitters, _CMS_ORACLE)
 
 
 _MRE_ITERS = 16
@@ -2838,6 +2892,8 @@ FROM (SELECT removed, v FROM v{iters}
      (SELECT v FROM v{iters}
       WHERE s = 'START' AND removed = 'base') b"""
     return head + "".join(rounds) + tail
+query("markov_removal_effects", q_markov_removal_effects,
+      _markov_removal_oracle_sql())
 
 
 def q_edit_distance_pairs(spark, sf_dir):
@@ -2884,6 +2940,7 @@ SELECT id_a, id_b,
 FROM cand JOIN documents x ON x.doc_id = id_a
           JOIN documents y ON y.doc_id = id_b
 """
+query("edit_distance_pairs", q_edit_distance_pairs, _EDIT_DISTANCE_ORACLE)
 
 
 def q_tfidf_cosine_pairs(spark, sf_dir):
@@ -2983,6 +3040,7 @@ SELECT id_a, id_b,
 FROM dots JOIN nrm x ON x.doc_id = id_a
           JOIN nrm y ON y.doc_id = id_b
 """
+query("tfidf_cosine_pairs", q_tfidf_cosine_pairs, _TFIDF_COSINE_ORACLE)
 
 
 def q_corpus_pipeline_v3(spark, sf_dir):
@@ -3134,6 +3192,7 @@ SELECT lang, CAST(floor((cum - nb) / 4000.0) AS BIGINT) AS shard_id,
        COUNT(*) AS n_docs, CAST(SUM(nb) AS BIGINT) AS shard_tokens
 FROM pk GROUP BY 1, 2"""
     return head + _bpe_ctes(rounds, source="s2") + tail
+query("corpus_pipeline_v3", q_corpus_pipeline_v3, _pipeline_v3_oracle_sql())
 
 
 def q_rec_precision_at_k(spark, sf_dir):
@@ -3271,6 +3330,7 @@ SELECT COUNT(*) AS n_users,
              6) AS hit_rate
 FROM per_user
 """
+query("rec_precision_at_k", q_rec_precision_at_k, _REC_PRECISION_ORACLE)
 
 
 def q_k_anonymity(spark, sf_dir):
@@ -3323,6 +3383,7 @@ SELECT k,
              / (SELECT COUNT(*) FROM qi), 6) AS risk_share
 FROM sizes, ks GROUP BY k
 """
+query("k_anonymity", q_k_anonymity, _K_ANON_ORACLE)
 
 
 def q_posting_lists(spark, sf_dir):
@@ -3357,6 +3418,7 @@ SELECT term, COUNT(DISTINCT doc_id) AS df, COUNT(*) AS cf,
 FROM toks GROUP BY 1
 ORDER BY cf DESC, term LIMIT 30
 """
+query("posting_lists", q_posting_lists, _POSTING_LISTS_ORACLE)
 
 
 def q_wasserstein_drift(spark, sf_dir):
@@ -3502,6 +3564,7 @@ SELECT source, rk, doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM (
   FROM keyed)
 WHERE rk <= 10
 """
+query("weighted_reservoir", q_weighted_reservoir, _WEIGHTED_RESERVOIR_ORACLE)
 
 
 def q_kmv_setops(spark, sf_dir):
@@ -3601,6 +3664,7 @@ SELECT 64 AS k,
          AS est_inter
 FROM ka, kb, ku, sh, ex
 """
+query("kmv_setops", q_kmv_setops, _KMV_SETOPS_ORACLE)
 
 
 def q_l_diversity(spark, sf_dir):
@@ -3659,6 +3723,7 @@ SELECT l.l,
 FROM cls CROSS JOIN (SELECT UNNEST([2, 3, 5]) AS l) l CROSS JOIN tot
 GROUP BY l.l
 """
+query("l_diversity", q_l_diversity, _L_DIVERSITY_ORACLE)
 
 
 def q_t_closeness(spark, sf_dir):
@@ -3733,6 +3798,7 @@ SELECT n_name, bal_band, n, tvd FROM (
   HAVING MIN(dense.n_c) >= 5
   ORDER BY tvd DESC, dense.n_name, dense.bal_band LIMIT 10)
 """
+query("t_closeness", q_t_closeness, _T_CLOSENESS_ORACLE)
 
 
 def q_video_features(spark, sf_dir):
@@ -3755,135 +3821,4 @@ SELECT doc_id AS media_id, 'mp4' AS fmt,
        CAST((1 + doc_id % 24) * 100 AS BIGINT) AS duration_ms
 FROM documents
 """
-
-
-
-
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    'q_markov_steady_state',
-    '_steady_state_oracle_sql',
-    'q_token_burstiness',
-    '_TOKEN_BURST_ORACLE',
-    'q_mutual_knn',
-    '_MUTUAL_KNN_ORACLE',
-    'q_dead_stock',
-    '_DEAD_STOCK_ORACLE',
-    'q_session_depth_curve',
-    '_SESSION_DEPTH_ORACLE',
-    'q_price_stickiness',
-    '_PRICE_STICKY_ORACLE',
-    'q_roc_curve',
-    '_ROC_ORACLE',
-    'q_pr_curve',
-    '_PR_ORACLE',
-    'q_brier_calibration',
-    '_BRIER_ORACLE',
-    'q_butterfly_count',
-    '_BUTTERFLY_ORACLE',
-    'q_diameter_sweep',
-    '_DIAMETER_SWEEP_ORACLE',
-    'q_eigenvector_parts',
-    '_EIGENVECTOR_ORACLE',
-    'q_unpivot_metrics',
-    '_UNPIVOT_ORACLE',
-    'q_bitmap_distinct',
-    '_BITMAP_DISTINCT_ORACLE',
-    'q_croston_demand',
-    '_CROSTON_ORACLE',
-    'q_attribution_time_decay',
-    '_TIME_DECAY_ORACLE',
-    'q_moments_by_segment',
-    '_MOMENTS_ORACLE',
-    'q_lorenz_curve',
-    '_LORENZ_ORACLE',
-    'q_otif_rate',
-    '_OTIF_ORACLE',
-    'q_embedding_norm_outliers',
-    '_NORM_OUTLIER_ORACLE',
-    'q_seasonal_decomposition',
-    '_SEASONAL_DECOMP_ORACLE',
-    'q_discount_qty_heatmap',
-    '_HEATMAP_ORACLE',
-    'q_equi_depth_bounds',
-    '_EQUI_DEPTH_ORACLE',
-    'q_lateness_audit',
-    '_LATENESS_ORACLE',
-    'q_id_gaps',
-    '_ID_GAPS_ORACLE',
-    'q_newsvendor_stock',
-    '_NEWSVENDOR_ORACLE',
-    'q_srm_check',
-    '_SRM_ORACLE',
-    'q_power_analysis',
-    '_POWER_ORACLE',
-    'q_hypergeom_enrichment',
-    '_HYPERGEOM_ORACLE',
-    'q_quantile_normalize',
-    '_QNORM_ORACLE',
-    'q_gains_curve',
-    '_GAINS_ORACLE',
-    'q_quality_rule_breakdown',
-    '_QUALITY_BREAKDOWN_ORACLE',
-    'q_token_length_histogram',
-    '_TOKEN_HIST_ORACLE',
-    'q_pack_efficiency_curve',
-    '_PACK_CURVE_ORACLE',
-    'q_lang_confusion',
-    '_lang_confusion_oracle_sql',
-    'q_oov_rate',
-    '_OOV_ORACLE',
-    'q_split_leakage_check',
-    '_split_leakage_oracle_sql',
-    'q_shingle_df_histogram',
-    '_SHINGLE_DF_ORACLE',
-    'q_ahash_near_dup',
-    '_AHASH_NEAR_DUP_ORACLE',
-    'q_qq_year_compare',
-    '_QQ_ORACLE',
-    'q_substring_spans',
-    '_SUBSTRING_SPANS_ORACLE',
-    'q_dbscan_embeddings',
-    '_DBSCAN_ORACLE',
-    'q_price_model',
-    '_PRICE_MODEL_ORACLE',
-    'q_mst_trade',
-    '_mst_oracle_sql',
-    '_nation_flows',
-    'q_single_linkage_nations',
-    '_SINGLE_LINKAGE_TAIL',
-    'q_tokenizer_fertility',
-    '_tokenizer_fertility_oracle_sql',
-    'q_hll_distinct',
-    '_HLL_ORACLE',
-    'q_cms_heavy_hitters',
-    '_CMS_ORACLE',
-    '_MRE_ITERS',
-    'q_markov_removal_effects',
-    '_markov_removal_oracle_sql',
-    'q_edit_distance_pairs',
-    '_EDIT_DISTANCE_ORACLE',
-    'q_tfidf_cosine_pairs',
-    '_TFIDF_COSINE_ORACLE',
-    'q_corpus_pipeline_v3',
-    '_pipeline_v3_oracle_sql',
-    'q_rec_precision_at_k',
-    '_REC_PRECISION_ORACLE',
-    'q_k_anonymity',
-    '_K_ANON_ORACLE',
-    'q_posting_lists',
-    '_POSTING_LISTS_ORACLE',
-    'q_wasserstein_drift',
-    '_WASSERSTEIN_ORACLE',
-    'q_weighted_reservoir',
-    '_WEIGHTED_RESERVOIR_ORACLE',
-    'q_kmv_setops',
-    '_KMV_SETOPS_ORACLE',
-    'q_l_diversity',
-    '_L_DIVERSITY_ORACLE',
-    'q_t_closeness',
-    '_T_CLOSENESS_ORACLE',
-    'q_video_features',
-    '_VIDEO_FEATURES_ORACLE',
-]
+query("video_features", q_video_features, _VIDEO_FEATURES_ORACLE)

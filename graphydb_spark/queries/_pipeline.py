@@ -1,13 +1,17 @@
 """LLM-pipeline extensions (SURVEY §7.3): dedup, text quality, packing, sampling.
-
-Part of the ordered queries package (see __init__.py) — split from the
-single-module queries.py in round 7; contiguous slice, original order.
 """
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
-from ._relational import *  # noqa: F401,F403
+from pyspark.sql import functions as F
+
+from ..operators import dedup, graph_algos, relational, similarity, text
+from ..sources.tpch_graph import load_tables, tpch_graph
+from ..streaming.windows import sessionize, tumbling_counts
+from ._registry import query
+from ._shared import (_CLUSTER_CTES, _TOKENIZE_DUCK, _docs, _emb, _events,
+                      _ivf_blocked, _register_raw)
+from ._relational import _Q3_SPARK_SQL, _Q3_SQL
+
 
 # --------------------------------------------------------------------------
 # LLM-pipeline extensions (SURVEY §7.3)
@@ -21,6 +25,11 @@ def q_dedup_exact(spark, sf_dir):
     docs = text.fingerprint(_docs(spark, sf_dir))
     return docs.groupBy("fp").agg(F.count("*").alias("n_dups"),
                                   F.min("doc_id").alias("keep_id"))
+query("dedup_exact", q_dedup_exact,
+      "SELECT md5(array_to_string(list_filter("
+      + _TOKENIZE_DUCK.format(col="text") + ", x -> x != ''), ' ')) AS fp, "
+      "COUNT(*) AS n_dups, MIN(doc_id) AS keep_id "
+      "FROM documents GROUP BY fp")
 
 
 def q_minhash_pairs(spark, sf_dir):
@@ -35,6 +44,21 @@ def q_minhash_pairs(spark, sf_dir):
     return (a.join(b, (F.col("sig0") == F.col("s2")) &
                    (F.col("id_a") < F.col("id_b")))
             .select("id_a", "id_b"))
+_MINHASH_PAIRS_ORACLE = """
+        WITH toks AS (
+          SELECT doc_id, list_filter(
+            string_split_regex(lower(text),'[^a-z0-9]+'), x -> x != '') AS ws
+          FROM documents
+        ), sh AS (
+          SELECT doc_id, list_min(list_transform(range(1, len(ws)-1),
+                i -> md5('0:' || ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])))
+                AS mh
+          FROM toks WHERE len(ws) >= 3
+        )
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM sh a JOIN sh b ON a.mh = b.mh AND a.doc_id < b.doc_id
+    """
+query("minhash_pairs", q_minhash_pairs, _MINHASH_PAIRS_ORACLE)
 
 
 def q_top_bigrams(spark, sf_dir):
@@ -50,6 +74,20 @@ def q_top_bigrams(spark, sf_dir):
             .groupBy("bigram").agg(F.count("*").alias("n"))
             .orderBy(F.col("n").desc(), F.col("bigram").asc())
             .limit(20))
+query("top_bigrams", q_top_bigrams, """
+        WITH toks AS (
+          SELECT list_filter(string_split_regex(lower(text),'[^a-z0-9]+'),
+                             x -> x != '') AS ws
+          FROM documents
+        ),
+        bg AS (
+          SELECT unnest(list_transform(range(1, len(ws)),
+                        i -> ws[i] || ' ' || ws[i+1])) AS bigram
+          FROM toks
+        )
+        SELECT bigram, COUNT(*) AS n FROM bg GROUP BY bigram
+        ORDER BY n DESC, bigram ASC LIMIT 20
+    """)
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -64,6 +102,10 @@ def q_dedup_clusters(spark, sf_dir):
                     (F.col("id_a") < F.col("id_b")))
              .select("id_a", "id_b"))
     return dedup.dedup_clusters(pairs)
+query("dedup_clusters", q_dedup_clusters,
+      "WITH RECURSIVE " + _CLUSTER_CTES + """
+        SELECT src AS doc_id, MIN(dst) AS cluster FROM reach GROUP BY src
+    """)
 
 
 def q_dedup_resolve(spark, sf_dir):
@@ -79,17 +121,41 @@ def q_dedup_resolve(spark, sf_dir):
              .select("id_a", "id_b"))
     clusters = dedup.dedup_clusters(pairs)
     return dedup.resolve_duplicates(docs, clusters, F.length("text"))
+query("dedup_resolve", q_dedup_resolve,
+      "WITH RECURSIVE " + _CLUSTER_CTES + """,
+        cl AS (SELECT src AS doc_id, MIN(dst) AS cluster
+               FROM reach GROUP BY src),
+        scored AS (
+          SELECT cl.cluster, cl.doc_id, CAST(length(d.text) AS BIGINT) AS s
+          FROM cl JOIN documents d ON d.doc_id = cl.doc_id)
+        SELECT cluster, doc_id AS keep_id, s AS best_score, n_members
+        FROM (SELECT cluster, doc_id, s,
+                     COUNT(*) OVER (PARTITION BY cluster) AS n_members,
+                     row_number() OVER (PARTITION BY cluster
+                                        ORDER BY s DESC, doc_id) AS rn
+              FROM scored)
+        WHERE rn = 1
+    """)
 
 
 def q_text_stats(spark, sf_dir):
     """Per-doc token/char stats (JVM-side tokenizer)."""
     return text.with_text_stats(_docs(spark, sf_dir)) \
         .select("doc_id", "n_tokens", "n_chars_obs")
+query("text_stats", q_text_stats,
+      "SELECT doc_id, CAST(len(list_filter("
+      + _TOKENIZE_DUCK.format(col="text") + ", x -> x != '')) AS BIGINT) "
+      "AS n_tokens, CAST(length(text) AS BIGINT) AS n_chars_obs "
+      "FROM documents")
 
 
 def q_token_count_by_lang(spark, sf_dir):
     return (text.token_counts(_docs(spark, sf_dir), group_col="lang")
             .select("lang", "total_tokens"))
+query("token_count_by_lang", q_token_count_by_lang,
+      "SELECT lang, CAST(SUM(len(list_filter("
+      + _TOKENIZE_DUCK.format(col="text") + ", x -> x != ''))) AS BIGINT) "
+      "AS total_tokens FROM documents GROUP BY lang")
 
 
 def q_quality_score(spark, sf_dir):
@@ -105,6 +171,17 @@ def q_quality_score(spark, sf_dir):
         F.size(F.filter(toks, lambda t: F.array_contains(swarr, t)))
          .cast("long").alias("n_stopwords"),
         F.size(toks).cast("long").alias("n_tokens"))
+query("quality_score", q_quality_score, """
+        SELECT doc_id,
+          CAST(len(list_filter(
+            string_split_regex(lower(text),'[^a-z0-9]+'),
+            x -> list_contains(['the','a','of','and','to','in','is','for',
+                                'on','with'], x))) AS BIGINT) AS n_stopwords,
+          CAST(len(list_filter(
+            string_split_regex(lower(text),'[^a-z0-9]+'),
+            x -> x != '')) AS BIGINT) AS n_tokens
+        FROM documents
+    """)
 
 
 def q_knn_cosine(spark, sf_dir):
@@ -114,6 +191,24 @@ def q_knn_cosine(spark, sf_dir):
     qv = emb.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     top = similarity.cosine_topk(emb, list(qv), k=5, exclude_ids=[0])
     return top.select("vec_id", F.round("cosine", 6).alias("cosine"))
+_KNN_COSINE_ORACLE = """
+        WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
+        scored AS (
+          SELECT e.vec_id,
+            list_sum(list_transform(range(1, len(e.embedding)+1),
+              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE)))
+            / (sqrt(list_sum(list_transform(range(1, len(q.qe)+1),
+                 i -> CAST(q.qe[i] AS DOUBLE) * CAST(q.qe[i] AS DOUBLE))))
+             * sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
+                 i -> CAST(e.embedding[i] AS DOUBLE)
+                    * CAST(e.embedding[i] AS DOUBLE)))))
+            AS cos
+          FROM embeddings e, q WHERE e.vec_id != 0
+        )
+        SELECT vec_id, round(cos, 6) AS cosine
+        FROM scored ORDER BY cos DESC, vec_id LIMIT 5
+    """
+query("knn_cosine", q_knn_cosine, _KNN_COSINE_ORACLE)
 
 
 def q_events_window(spark, sf_dir):
@@ -124,11 +219,36 @@ def q_events_window(spark, sf_dir):
     out = tumbling_counts(_events(spark, sf_dir), "1 hour")
     return out.select(F.col("wstart").cast("double").alias("wstart"),
                       "event_type", "n", "total")
+query("events_window", q_events_window, """
+        SELECT CAST(epoch(date_trunc('hour', ts)) AS DOUBLE) AS wstart,
+               event_type,
+               COUNT(*) AS n,
+               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        FROM events GROUP BY 1, 2
+    """)
 
 
 def q_sessionize(spark, sf_dir):
     """30-min-gap sessionization per user (lag + cumsum windows)."""
     return sessionize(_events(spark, sf_dir), gap_minutes=30)
+query("sessionize", q_sessionize, """
+        WITH g AS (
+          SELECT user_id, ts,
+            CASE WHEN (CAST(epoch_us(ts) AS DOUBLE)
+                     - CAST(epoch_us(LAG(ts) OVER
+                 (PARTITION BY user_id ORDER BY ts)) AS DOUBLE)) / 1e6 > 1800
+                 THEN 1 ELSE 0 END AS brk
+          FROM events
+        ), s AS (
+          SELECT user_id,
+                 SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS UNBOUNDED PRECEDING) AS sess
+          FROM g
+        )
+        SELECT user_id, CAST(MAX(sess) + 1 AS BIGINT) AS n_sessions,
+               COUNT(*) AS n_events
+        FROM s GROUP BY user_id
+    """)
 
 
 #: the wedge pivot is the part: a part in n orders yields n(n-1)/2
@@ -162,6 +282,20 @@ def q_copurchase_pairs(spark, sf_dir):
         where,
         other="c2.uid",
         as_df=True).select("uid", "other").distinct()
+query("copurchase_pairs", q_copurchase_pairs, """
+        WITH hot AS (SELECT l_partkey FROM lineitem
+                     GROUP BY l_partkey HAVING COUNT(*) > 4096)
+        SELECT DISTINCT
+               'Customer:' || CAST(o1.o_custkey AS VARCHAR) AS uid,
+               'Customer:' || CAST(o2.o_custkey AS VARCHAR) AS other
+        FROM lineitem l1
+        JOIN lineitem l2 ON l1.l_partkey = l2.l_partkey
+        JOIN orders o1 ON l1.l_orderkey = o1.o_orderkey
+        JOIN orders o2 ON l2.l_orderkey = o2.o_orderkey
+        WHERE 'Customer:' || CAST(o1.o_custkey AS VARCHAR)
+            < 'Customer:' || CAST(o2.o_custkey AS VARCHAR)
+          AND l1.l_partkey NOT IN (SELECT l_partkey FROM hot)
+    """)
 
 
 def q_asof_join(spark, sf_dir):
@@ -177,6 +311,17 @@ def q_asof_join(spark, sf_dir):
     out = relational.asof_join(clicks, views, on="user_id",
                                right_cols=("view_id",))
     return out.select("event_id", F.col("view_id_matched").alias("view_id"))
+query("asof_join", q_asof_join, """
+        WITH clicks AS (
+          SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
+        ), views AS (
+          SELECT user_id, ts, MAX(event_id) AS view_id
+          FROM events WHERE event_type = 'view' GROUP BY user_id, ts
+        )
+        SELECT c.event_id, v.view_id
+        FROM clicks c ASOF LEFT JOIN views v
+          ON c.user_id = v.user_id AND c.ts >= v.ts
+    """)
 
 
 def q_asof_nearest(spark, sf_dir):
@@ -193,6 +338,30 @@ def q_asof_nearest(spark, sf_dir):
                                right_cols=("view_id",),
                                direction="nearest")
     return out.select("event_id", F.col("view_id_matched").alias("view_id"))
+query("asof_nearest", q_asof_nearest, """
+        WITH clicks AS (
+          SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
+        ), views AS (
+          SELECT user_id, ts, MAX(event_id) AS view_id
+          FROM events WHERE event_type = 'view' GROUP BY user_id, ts
+        ), cand AS (
+          SELECT c.event_id, c.user_id, c.ts,
+                 MAX(CASE WHEN v.ts <= c.ts THEN v.ts END) AS bts,
+                 MIN(CASE WHEN v.ts >= c.ts THEN v.ts END) AS fts
+          FROM clicks c LEFT JOIN views v ON c.user_id = v.user_id
+          GROUP BY 1, 2, 3
+        ), chosen AS (
+          SELECT event_id, user_id,
+                 CASE WHEN fts IS NULL THEN bts
+                      WHEN bts IS NULL THEN fts
+                      WHEN epoch(ts) - epoch(bts) <= epoch(fts) - epoch(ts)
+                      THEN bts ELSE fts END AS cts
+          FROM cand
+        )
+        SELECT ch.event_id, v.view_id
+        FROM chosen ch LEFT JOIN views v
+          ON v.user_id = ch.user_id AND v.ts = ch.cts
+    """)
 
 
 def q_topk_per_group(spark, sf_dir):
@@ -203,6 +372,14 @@ def q_topk_per_group(spark, sf_dir):
         orders, ["o_custkey"],
         [F.col("o_totalprice").desc(), F.col("o_orderkey")], k=3)
     return out.select("o_custkey", "o_orderkey", "o_totalprice", "rn")
+query("topk_per_group", q_topk_per_group, """
+        SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
+          SELECT o_custkey, o_orderkey, o_totalprice,
+                 row_number() OVER (PARTITION BY o_custkey
+                                    ORDER BY o_totalprice DESC, o_orderkey)
+                     AS rn
+          FROM orders) WHERE rn <= 3
+    """)
 
 
 def q_rollup_revenue(spark, sf_dir):
@@ -215,6 +392,13 @@ def q_rollup_revenue(spark, sf_dir):
                    AS rev,
                COUNT(*) AS n
         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""")
+query("rollup_revenue", q_rollup_revenue, """
+        SELECT l_returnflag, l_linestatus,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS rev,
+               COUNT(*) AS n
+        FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+    """)
 
 
 def q_cube_revenue(spark, sf_dir):
@@ -227,6 +411,13 @@ def q_cube_revenue(spark, sf_dir):
                    AS rev,
                COUNT(*) AS n
         FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""")
+query("cube_revenue", q_cube_revenue, """
+        SELECT o_orderstatus, o_orderpriority,
+               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS rev,
+               COUNT(*) AS n
+        FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+    """)
 
 
 def q_percentile_price(spark, sf_dir):
@@ -238,6 +429,12 @@ def q_percentile_price(spark, sf_dir):
                ROUND(percentile(o_totalprice, 0.5), 6) AS p50,
                ROUND(percentile(o_totalprice, 0.9), 6) AS p90
         FROM orders GROUP BY o_orderpriority""")
+query("percentile_price", q_percentile_price, """
+        SELECT o_orderpriority,
+               ROUND(quantile_cont(o_totalprice, 0.5), 6) AS p50,
+               ROUND(quantile_cont(o_totalprice, 0.9), 6) AS p90
+        FROM orders GROUP BY o_orderpriority
+    """)
 
 
 def q_moving_avg_daily(spark, sf_dir):
@@ -256,6 +453,18 @@ def q_moving_avg_daily(spark, sf_dir):
                     / (COUNT(*) OVER w) AS DOUBLE) AS avg7
         FROM daily
         WINDOW w AS (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""")
+query("moving_avg_daily", q_moving_avg_daily, """
+        WITH daily AS (
+          SELECT CAST(o_orderdate AS DATE) AS d,
+                 SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
+          FROM orders GROUP BY CAST(o_orderdate AS DATE)
+        )
+        SELECT CAST(d AS STRING) AS d,
+               CAST(CAST(SUM(rev) OVER w AS DOUBLE)
+                    / (COUNT(*) OVER w) AS DOUBLE) AS avg7
+        FROM daily
+        WINDOW w AS (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+    """)
 
 
 def q_range_join_events(spark, sf_dir):
@@ -273,6 +482,15 @@ def q_range_join_events(spark, sf_dir):
                                 window_s=86400.0)
     return (out.groupBy("event_id")
             .agg(F.count("*").alias("n_clicks")))
+query("range_join_events", q_range_join_events, """
+        SELECT a.event_id, COUNT(*) AS n_clicks
+        FROM events a JOIN events b
+          ON a.user_id = b.user_id
+         AND a.event_type = 'error' AND b.event_type = 'click'
+         AND epoch(b.ts) > epoch(a.ts)
+         AND epoch(b.ts) <= epoch(a.ts) + 86400.0
+        GROUP BY a.event_id
+    """)
 
 
 def q_pivot_status(spark, sf_dir):
@@ -289,6 +507,13 @@ def q_pivot_status(spark, sf_dir):
         F.coalesce(F.col("F"), F.lit(0)).alias("n_f"),
         F.coalesce(F.col("O"), F.lit(0)).alias("n_o"),
         F.coalesce(F.col("P"), F.lit(0)).alias("n_p"))
+query("pivot_status", q_pivot_status, """
+        SELECT o_orderpriority,
+               COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
+               COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
+               COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
+        FROM orders GROUP BY o_orderpriority
+    """)
 
 
 def q_grouping_sets(spark, sf_dir):
@@ -301,6 +526,13 @@ def q_grouping_sets(spark, sf_dir):
                    AS rev
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))""")
+query("grouping_sets", q_grouping_sets, """
+        SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
+               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS rev
+        FROM orders
+        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
+    """)
 
 
 def q_window_rank(spark, sf_dir):
@@ -316,6 +548,16 @@ def q_window_rank(spark, sf_dir):
             .withColumn("rnk", F.rank().over(w).cast("long"))
             .withColumn("prev_price", F.lag("o_totalprice").over(w))
             .where(F.col("rnk") <= 3))
+query("window_rank", q_window_rank, """
+        SELECT * FROM (
+          SELECT o_orderkey, o_orderpriority, o_totalprice,
+                 rank() OVER w AS rnk,
+                 lag(o_totalprice) OVER w AS prev_price
+          FROM orders
+          WINDOW w AS (PARTITION BY o_orderpriority
+                       ORDER BY o_totalprice DESC, o_orderkey)
+        ) WHERE rnk <= 3
+    """)
 
 
 def q_tpch_q3(spark, sf_dir):
@@ -326,6 +568,7 @@ def q_tpch_q3(spark, sf_dir):
     segment-filtered customer (dim-sized)."""
     _register_raw(spark, sf_dir)
     return spark.sql(_Q3_SPARK_SQL)
+query("tpch_q3", q_tpch_q3, _Q3_SQL)
 
 
 def q_anti_join_customers(spark, sf_dir):
@@ -339,6 +582,12 @@ def q_anti_join_customers(spark, sf_dir):
             .join(big, t["customer"].c_custkey == big.o_custkey,
                   "left_anti")
             .select("c_custkey", "c_name"))
+query("anti_join_customers", q_anti_join_customers, """
+        SELECT c_custkey, c_name FROM customer
+        WHERE NOT EXISTS (SELECT 1 FROM orders
+                          WHERE o_custkey = c_custkey
+                            AND o_totalprice > 400000)
+    """)
 
 
 def q_regex_extract(spark, sf_dir):
@@ -350,6 +599,12 @@ def q_regex_extract(spark, sf_dir):
             .select("doc_id",
                     F.regexp_extract("text", pat, 1).alias("kw"))
             .where(F.col("kw") != ""))
+query("regex_extract", q_regex_extract, """
+        SELECT doc_id,
+               regexp_extract(text, '(spark|stream|scan|sort)', 1) AS kw
+        FROM documents
+        WHERE regexp_extract(text, '(spark|stream|scan|sort)', 1) != ''
+    """)
 
 
 def q_hash_sample(spark, sf_dir):
@@ -362,6 +617,10 @@ def q_hash_sample(spark, sf_dir):
             .where(F.substring(F.md5(F.col("o_orderkey").cast("string")),
                                1, 2) < "10")
             .select("o_orderkey", "o_totalprice"))
+query("hash_sample", q_hash_sample, """
+        SELECT o_orderkey, o_totalprice FROM orders
+        WHERE substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 2) < '10'
+    """)
 
 
 def q_embedding_near_dup(spark, sf_dir):
@@ -397,6 +656,41 @@ def q_bm25_rank(spark, sf_dir):
     return (bm25_scores(idx, ["data", "query"])
             .orderBy(F.col("score").desc(), F.col("uid"))
             .limit(10).select("uid"))
+# full BM25 replay in SQL (k1=1.2, b=0.75, same tokenizer); the
+# rank-10/11 score gap is ~5e-3, far beyond float noise, so the
+# top-10 set is stable across engines
+query("bm25_rank", q_bm25_rank, """
+        WITH toks AS (
+          SELECT doc_id, list_filter(
+            string_split_regex(lower(text),'[^a-z0-9]+'),
+            x -> x != '') AS ws
+          FROM documents
+        ),
+        docs AS (SELECT doc_id, len(ws) AS dl FROM toks WHERE len(ws) > 0),
+        stats AS (SELECT COUNT(*) AS n, AVG(dl) AS avgdl FROM docs),
+        tf AS (
+          SELECT toks.doc_id, u.tok AS term, COUNT(*) AS tf
+          FROM toks, UNNEST(ws) AS u(tok)
+          WHERE u.tok IN ('data','query')
+          GROUP BY toks.doc_id, u.tok
+        ),
+        dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df
+                  FROM tf GROUP BY term),
+        scored AS (
+          SELECT tf.doc_id,
+                 SUM( ln((s.n - d.df + 0.5)/(d.df + 0.5) + 1.0)
+                      * (tf.tf * 2.2)
+                      / (tf.tf + 1.2 * (1 - 0.75 + 0.75 * docs.dl / s.avgdl))
+                    ) AS score
+          FROM tf JOIN dfreq d USING (term)
+               JOIN docs ON docs.doc_id = tf.doc_id
+               CROSS JOIN stats s
+          GROUP BY tf.doc_id
+        )
+        SELECT 'Document:' || CAST(doc_id AS VARCHAR) AS uid
+        FROM scored
+        ORDER BY score DESC, uid ASC LIMIT 10
+    """)
 
 
 def q_ivf_topk(spark, sf_dir):
@@ -511,6 +805,29 @@ def _ivf_ctes(k: int, iters: int,
                               ORDER BY {dist(fc)}, {fc}.c) AS rn
     FROM {e}, {fc}) WHERE rn = 1)""")
     return "".join(sql)
+# same-cell candidate pairs via the shared unrolled-Lloyd chain
+# (k=8, iters=2 — the _ivf_blocked assignment), then the exact
+# cosine fold — the blocked pair set replays engine-identically
+query("embedding_near_dup", q_embedding_near_dup, _ivf_ctes(8, 2) + """,
+        p AS (
+          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+            round(
+              list_sum(list_transform(range(1, len(a.embedding)+1),
+                i -> CAST(a.embedding[i] AS DOUBLE)
+                   * CAST(b.embedding[i] AS DOUBLE)))
+              / (sqrt(list_sum(list_transform(range(1, len(a.embedding)+1),
+                   i -> CAST(a.embedding[i] AS DOUBLE)
+                      * CAST(a.embedding[i] AS DOUBLE))))
+               * sqrt(list_sum(list_transform(range(1, len(b.embedding)+1),
+                   i -> CAST(b.embedding[i] AS DOUBLE)
+                      * CAST(b.embedding[i] AS DOUBLE))))), 6) AS cosine
+          FROM e a JOIN e b ON a.vec_id < b.vec_id
+               JOIN fin fa ON fa.vec_id = a.vec_id
+               JOIN fin fb ON fb.vec_id = b.vec_id AND fb.c = fa.c
+        )
+        SELECT id_a, id_b, cosine FROM p WHERE cosine >= 0.35
+    """)
+query("ivf_topk", q_ivf_topk, _ivf_oracle_sql())
 
 
 def _cluster_balanced_oracle_sql(k: int = 8, iters: int = 2,
@@ -572,6 +889,7 @@ JOIN bi USING (prev, cur)
 JOIN ctx USING (prev)
 JOIN uni ON uni.tok = g.cur, tot
 GROUP BY 1"""
+query("bigram_logprob", q_bigram_logprob, _bigram_logprob_oracle_sql())
 
 
 def q_source_reputation(spark, sf_dir):
@@ -604,6 +922,7 @@ stats AS (
 SELECT source, n_docs, ROUND(mean_ratio, 9) AS mean_ratio,
        (mean_ratio >= 0.06 AND n_docs >= 5) AS kept
 FROM stats"""
+query("source_reputation", q_source_reputation, _SOURCE_REPUTATION_ORACLE)
 
 
 def q_weighted_sample(spark, sf_dir):
@@ -636,6 +955,7 @@ ORDER BY ROUND(CASE WHEN weight > 0 THEN POW(u, 1.0/weight)
                ELSE 0 END, 12) DESC,
          doc_id
 LIMIT 50"""
+query("weighted_sample", q_weighted_sample, _WEIGHTED_SAMPLE_ORACLE)
 
 
 def q_semantic_dedup(spark, sf_dir):
@@ -690,6 +1010,7 @@ dom AS (
   WHERE {cos} >= {thresh})
 SELECT f.vec_id, f.c AS cluster, (d.vid IS NULL) AS kept
 FROM fin f LEFT JOIN dom d ON f.vec_id = d.vid"""
+query("semantic_dedup", q_semantic_dedup, _semantic_dedup_oracle_sql())
 
 
 def q_cluster_balanced(spark, sf_dir):
@@ -703,6 +1024,7 @@ def q_cluster_balanced(spark, sf_dir):
     indexed, _ = similarity.ivf_index(emb, k=8, iters=2)
     return (balanced_sample(indexed, "cluster", "vec_id", per_group=40)
             .select("vec_id", "cluster"))
+query("cluster_balanced", q_cluster_balanced, _cluster_balanced_oracle_sql())
 
 
 def q_k_hop(spark, sf_dir):
@@ -712,6 +1034,28 @@ def q_k_hop(spark, sf_dir):
     seeds = spark.createDataFrame(
         [(f"Customer:{i}",) for i in range(10)], "uid string")
     return graph_algos.k_hop(g.edges_df, seeds, k=2, direction="out")
+query("k_hop", q_k_hop, """
+        SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS uid
+          FROM customer WHERE c_custkey < 10
+        UNION
+        SELECT 'Order:' || CAST(o_orderkey AS VARCHAR)
+          FROM orders WHERE o_custkey < 10
+        UNION
+        SELECT 'Part:' || CAST(l_partkey AS VARCHAR)
+          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+          WHERE o_custkey < 10
+        UNION
+        SELECT 'Supplier:' || CAST(l_suppkey AS VARCHAR)
+          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+          WHERE o_custkey < 10
+        UNION
+        SELECT 'Nation:' || CAST(c_nationkey AS VARCHAR)
+          FROM customer WHERE c_custkey < 10
+        UNION
+        SELECT 'Region:' || CAST(n_regionkey AS VARCHAR)
+          FROM nation JOIN customer ON c_nationkey = n_nationkey
+          WHERE c_custkey < 10
+    """)
 
 
 def q_language_id(spark, sf_dir):
@@ -719,6 +1063,36 @@ def q_language_id(spark, sf_dir):
     the same stopword lists; argmax = max hits, ties to max code)."""
     return text.language_id(_docs(spark, sf_dir)) \
         .select("doc_id", "lang_guess")
+# stopword-vote replay: hits per (doc, lang) from the same stopword
+# lists, argmax = max hits then max code (the engine's array_max on
+# (hits, code) structs).  The VALUES list is generated from
+# text.STOPWORDS so the two sides can never drift.
+_LANGUAGE_ID_ORACLE = """
+        WITH toks AS (
+          SELECT doc_id, unnest(list_filter(
+            string_split_regex(lower(text), '[^\\pL\\pN]+'),
+            x -> x != '')) AS tok
+          FROM documents
+        ),
+        sw(code, w) AS (VALUES {sw_values}),
+        langs AS (SELECT DISTINCT code FROM sw),
+        hits AS (
+          SELECT d.doc_id, l.code, COUNT(s.w) AS h
+          FROM documents d
+          CROSS JOIN langs l
+          LEFT JOIN toks t ON t.doc_id = d.doc_id
+          LEFT JOIN sw s ON s.code = l.code AND s.w = t.tok
+          GROUP BY d.doc_id, l.code
+        )
+        SELECT doc_id, code AS lang_guess
+        FROM (SELECT doc_id, code, ROW_NUMBER() OVER
+                (PARTITION BY doc_id ORDER BY h DESC, code DESC) AS rn
+              FROM hits)
+        WHERE rn = 1
+    """.format(sw_values=", ".join(
+        f"('{code}','{w}')"
+        for code in text.STOPWORDS for w in text.STOPWORDS[code]))
+query("language_id", q_language_id, _LANGUAGE_ID_ORACLE)
 
 
 def q_connected_components(spark, sf_dir):
@@ -728,6 +1102,29 @@ def q_connected_components(spark, sf_dir):
     nodes = g.nodes_df.where(F.col("kind").isin("Nation", "Region"))
     edges = g.edges_df.where(F.col("kind") == "InRegion")
     return graph_algos.connected_components(nodes, edges, max_iter=6)
+# iterative label propagation in the engine; the oracle replays it as
+# a recursive reachability closure (tiny subgraph: Nation/Region)
+query("connected_components", q_connected_components, """
+        WITH RECURSIVE
+        nr_nodes(uid) AS (
+          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR) FROM nation
+          UNION ALL
+          SELECT 'Region:' || CAST(r_regionkey AS VARCHAR) FROM region
+        ),
+        nr_edges(a, b) AS (
+          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR),
+                 'Region:' || CAST(n_regionkey AS VARCHAR) FROM nation
+          UNION ALL
+          SELECT 'Region:' || CAST(n_regionkey AS VARCHAR),
+                 'Nation:' || CAST(n_nationkey AS VARCHAR) FROM nation
+        ),
+        reach(src, dst) AS (
+          SELECT uid, uid FROM nr_nodes
+          UNION
+          SELECT r.src, e.b FROM reach r JOIN nr_edges e ON e.a = r.dst
+        )
+        SELECT src AS uid, MIN(dst) AS component FROM reach GROUP BY src
+    """)
 
 
 def q_triangles_copurchase(spark, sf_dir):
@@ -752,6 +1149,17 @@ def q_triangles_copurchase(spark, sf_dir):
     # no .distinct() here: triangle_count canonicalizes+dedups anyway —
     # a second dedup would be one more full shuffle of the pair stream
     return graph_algos.triangle_count(co, "pa", "pb")
+query("triangles_copurchase", q_triangles_copurchase, """
+        WITH e AS (
+          SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
+          FROM lineitem a JOIN lineitem b
+            ON a.l_orderkey = b.l_orderkey
+           AND a.l_partkey < b.l_partkey)
+        SELECT COUNT(*)::BIGINT AS n_triangles
+        FROM e ab
+        JOIN e bc ON ab.hi = bc.lo
+        JOIN e ac ON ac.lo = ab.lo AND ac.hi = bc.hi
+    """)
 
 
 def q_bfs_distance(spark, sf_dir):
@@ -767,6 +1175,36 @@ def q_bfs_distance(spark, sf_dir):
         F.col("kind").isin("InRegion", "FromNation", "Placed"))
     return graph_algos.bfs_distances(edges, seed, max_depth=3,
                                      direction="both")
+query("bfs_distance", q_bfs_distance, """
+        WITH RECURSIVE
+        ed(a, b) AS (
+          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR),
+                 'Region:' || CAST(n_regionkey AS VARCHAR) FROM nation
+          UNION ALL
+          SELECT 'Region:' || CAST(n_regionkey AS VARCHAR),
+                 'Nation:' || CAST(n_nationkey AS VARCHAR) FROM nation
+          UNION ALL
+          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR),
+                 'Nation:' || CAST(c_nationkey AS VARCHAR) FROM customer
+          UNION ALL
+          SELECT 'Nation:' || CAST(c_nationkey AS VARCHAR),
+                 'Customer:' || CAST(c_custkey AS VARCHAR) FROM customer
+          UNION ALL
+          SELECT 'Customer:' || CAST(o_custkey AS VARCHAR),
+                 'Order:' || CAST(o_orderkey AS VARCHAR) FROM orders
+          UNION ALL
+          SELECT 'Order:' || CAST(o_orderkey AS VARCHAR),
+                 'Customer:' || CAST(o_custkey AS VARCHAR) FROM orders
+        ),
+        walk(uid, d) AS (
+          SELECT 'Region:' || CAST(r_regionkey AS VARCHAR), 0
+          FROM region WHERE r_name = 'ASIA'
+          UNION
+          SELECT ed.b, w.d + 1 FROM walk w
+          JOIN ed ON ed.a = w.uid WHERE w.d < 3
+        )
+        SELECT uid, CAST(MIN(d) AS INT) AS dist FROM walk GROUP BY uid
+    """)
 
 
 def q_tpch_q2(spark, sf_dir):
@@ -799,6 +1237,24 @@ def q_tpch_q2(spark, sf_dir):
                         & (F.col("unit_price") == F.col("min_price")))
             .select("p_partkey", "s_suppkey", "s_name", "n_name",
                     F.col("unit_price").cast("double").alias("unit_price")))
+query("tpch_q2", q_tpch_q2, """
+        WITH offers AS (
+          SELECT p_partkey, s_suppkey, s_name, n_name,
+                 CAST(l_extendedprice AS DECIMAL(18,6))
+                   / CAST(l_quantity AS DECIMAL(18,6)) AS unit_price
+          FROM lineitem
+          JOIN part ON l_partkey = p_partkey AND p_size = 15
+          JOIN supplier ON l_suppkey = s_suppkey
+          JOIN nation ON s_nationkey = n_nationkey
+          JOIN region ON n_regionkey = r_regionkey
+                     AND r_name = 'EUROPE')
+        SELECT p_partkey, s_suppkey, s_name, n_name,
+               CAST(unit_price AS DOUBLE) AS unit_price
+        FROM offers o
+        JOIN (SELECT p_partkey AS pk, MIN(unit_price) AS min_price
+              FROM offers GROUP BY p_partkey) m
+          ON o.p_partkey = m.pk AND o.unit_price = m.min_price
+    """)
 
 
 def q_tpch_q11(spark, sf_dir):
@@ -815,6 +1271,15 @@ def q_tpch_q11(spark, sf_dir):
             .where(F.col("value") > F.col("threshold"))
             .select("l_partkey", F.col("value").cast("double")
                     .alias("value")))
+query("tpch_q11", q_tpch_q11, """
+        WITH val AS (
+          SELECT l_partkey,
+                 SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS value
+          FROM lineitem GROUP BY l_partkey)
+        SELECT l_partkey, CAST(value AS DOUBLE) AS value
+        FROM val
+        WHERE value > (SELECT SUM(value) * 0.0005 FROM val)
+    """)
 
 
 def q_tpch_q16(spark, sf_dir):
@@ -831,6 +1296,14 @@ def q_tpch_q16(spark, sf_dir):
             .groupBy("p_brand", "p_type", "p_size")
             .agg(F.count_distinct(F.col("l_suppkey"))
                  .alias("supplier_cnt")))
+query("tpch_q16", q_tpch_q16, """
+        SELECT p_brand, p_type, p_size,
+               COUNT(DISTINCT l_suppkey) AS supplier_cnt
+        FROM lineitem
+        JOIN part ON l_partkey = p_partkey
+        WHERE p_brand <> 'Brand#13' AND p_size IN (1, 7, 15)
+        GROUP BY p_brand, p_type, p_size
+    """)
 
 
 def q_tpch_q20(spark, sf_dir):
@@ -857,6 +1330,20 @@ def q_tpch_q20(spark, sf_dir):
             .join(big, F.col("s_suppkey") == F.col("l_suppkey"),
                   "left_semi")
             .select("s_suppkey", "s_name"))
+query("tpch_q20", q_tpch_q20, """
+        SELECT s_suppkey, s_name
+        FROM supplier
+        JOIN nation ON s_nationkey = n_nationkey
+                   AND n_name = 'NATION_1'
+        WHERE s_suppkey IN (
+          SELECT l_suppkey FROM lineitem
+          JOIN part ON l_partkey = p_partkey
+                   AND p_name LIKE '%widget%'
+          WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+            AND l_shipdate <  TIMESTAMP '1997-01-01'
+          GROUP BY l_suppkey, l_partkey
+          HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 50)
+    """)
 
 
 def q_tpch_q21(spark, sf_dir):
@@ -887,6 +1374,22 @@ def q_tpch_q21(spark, sf_dir):
             .join(F.broadcast(t["supplier"]),
                   F.col("l_suppkey") == F.col("s_suppkey"))
             .select("s_suppkey", "s_name"))
+query("tpch_q21", q_tpch_q21, """
+        WITH li AS (
+          SELECT l_orderkey, l_suppkey,
+                 l_shipdate > o_orderdate + INTERVAL 60 DAY AS late
+          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+          WHERE o_orderstatus = 'F'),
+        sole AS (
+          SELECT l_orderkey FROM li GROUP BY l_orderkey
+          HAVING COUNT(DISTINCT l_suppkey) > 1
+             AND COUNT(DISTINCT CASE WHEN late THEN l_suppkey END) = 1)
+        SELECT DISTINCT s_suppkey, s_name
+        FROM li
+        JOIN sole USING (l_orderkey)
+        JOIN supplier ON l_suppkey = s_suppkey
+        WHERE li.late
+    """)
 
 
 def q_contamination(spark, sf_dir):
@@ -898,6 +1401,29 @@ def q_contamination(spark, sf_dir):
     bench = docs.where(F.col("doc_id") % 20 == 0)
     train = docs.where(F.col("doc_id") % 20 != 0)
     return dedup.ngram_contamination(train, bench, n=8)
+query("contamination", q_contamination, """
+        WITH toks AS (
+          SELECT doc_id, list_filter(
+            string_split_regex(lower(text), '[^a-z0-9]+'),
+            x -> x != '') AS ws
+          FROM documents
+        ), grams AS (
+          SELECT doc_id, fp FROM (
+            SELECT doc_id,
+                   list_distinct(list_transform(
+                     range(1, len(ws) - 6),
+                     i -> ('0x' || substr(md5(
+                            array_to_string(list_slice(ws, i, i + 7), ' ')
+                          ), 1, 15))::BIGINT)) AS fps
+            FROM toks), UNNEST(fps) AS t(fp)
+        )
+        SELECT g.doc_id, COUNT(*)::BIGINT AS n_hits
+        FROM grams g
+        JOIN (SELECT DISTINCT fp FROM grams WHERE doc_id % 20 = 0) b
+          ON g.fp = b.fp
+        WHERE g.doc_id % 20 <> 0
+        GROUP BY g.doc_id
+    """)
 
 
 def q_decontaminate_spans(spark, sf_dir):
@@ -910,6 +1436,45 @@ def q_decontaminate_spans(spark, sf_dir):
     bench = docs.where(F.col("doc_id") % 20 == 0)
     train = docs.where(F.col("doc_id") % 20 != 0)
     return dedup.mask_contaminated_spans(train, bench, n=8)
+query("decontaminate_spans", q_decontaminate_spans, """
+        WITH toks AS (
+          SELECT doc_id, list_filter(
+            string_split_regex(lower(text), '[^a-z0-9]+'),
+            x -> x != '') AS ws
+          FROM documents
+        ), bench AS (
+          SELECT DISTINCT fp FROM (
+            SELECT list_distinct(list_transform(
+                     range(1, len(ws) - 6),
+                     i -> ('0x' || substr(md5(
+                            array_to_string(list_slice(ws, i, i + 7), ' ')
+                          ), 1, 15))::BIGINT)) AS fps
+            FROM toks WHERE doc_id % 20 = 0), UNNEST(fps) AS t(fp)
+        ), tr AS (SELECT doc_id, ws FROM toks WHERE doc_id % 20 <> 0),
+        tg AS (
+          SELECT doc_id, i - 1 AS pos,
+                 ('0x' || substr(md5(
+                    array_to_string(list_slice(ws, i, i + 7), ' ')
+                  ), 1, 15))::BIGINT AS fp
+          FROM tr, UNNEST(range(1, len(ws) - 6)) AS t(i)
+        ), m AS (SELECT tg.doc_id, tg.pos FROM tg JOIN bench USING (fp)),
+        cl AS (
+          SELECT doc_id, list(DISTINCT ci) AS cov FROM (
+            SELECT DISTINCT m.doc_id, u.ci
+            FROM m, UNNEST(range(m.pos, m.pos + 8)) AS u(ci))
+          GROUP BY doc_id
+        ), kept AS (
+          SELECT tr.doc_id, tr.ws,
+                 list_filter(range(1, len(tr.ws)+1),
+                   i -> NOT list_contains(COALESCE(cl.cov, []), i - 1))
+                 AS ki
+          FROM tr LEFT JOIN cl USING (doc_id))
+        SELECT doc_id,
+               COALESCE(array_to_string(list_transform(ki, i -> ws[i]),
+                                        ' '), '') AS clean_text,
+               CAST(len(ws) - len(ki) AS BIGINT) AS n_masked
+        FROM kept
+    """)
 
 
 def q_chunk_docs(spark, sf_dir):
@@ -920,6 +1485,27 @@ def q_chunk_docs(spark, sf_dir):
                                chunk_tokens=64, overlap=16)
     return out.select("doc_id", "chunk_id",
                       F.md5("chunk_text").alias("chunk_hash"), "n_tokens")
+query("chunk_docs", q_chunk_docs, """
+        WITH toks AS (
+          SELECT doc_id, list_filter(
+            string_split_regex(lower(text), '[^a-z0-9]+'),
+            x -> x != '') AS ws
+          FROM documents
+        ), meta AS (
+          SELECT doc_id, ws,
+                 CASE WHEN len(ws) <= 64 THEN 0
+                      ELSE CAST(CEIL((len(ws) - 64)::DOUBLE / 48) AS INT)
+                 END AS i_max
+          FROM toks
+        )
+        SELECT doc_id, i.i AS chunk_id,
+               md5(array_to_string(
+                   list_slice(ws, i.i * 48 + 1, i.i * 48 + 64), ' '))
+                   AS chunk_hash,
+               len(list_slice(ws, i.i * 48 + 1, i.i * 48 + 64))::BIGINT
+                   AS n_tokens
+        FROM meta, UNNEST(range(0, i_max + 1)) AS i(i)
+    """)
 
 
 def q_pagerank_nations(spark, sf_dir):
@@ -938,6 +1524,74 @@ def q_pagerank_nations(spark, sf_dir):
                    F.col("startuid").alias("enduid")))
     pr = graph_algos.pagerank(nodes, edges, iters=5)
     return pr.select("uid", F.round("rank", 6).alias("rank"))
+query("pagerank_nations", q_pagerank_nations, """
+        WITH RECURSIVE
+        ed(a, b) AS (
+          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR),
+                 'Region:' || CAST(n_regionkey AS VARCHAR) FROM nation
+          UNION ALL
+          SELECT 'Region:' || CAST(n_regionkey AS VARCHAR),
+                 'Nation:' || CAST(n_nationkey AS VARCHAR) FROM nation
+        ),
+        nodes(uid) AS (SELECT DISTINCT a FROM ed),
+        deg AS (SELECT a, COUNT(*) AS out_deg FROM ed GROUP BY a),
+        pr(iter, uid, rank) AS (
+          SELECT 0, uid, 1.0::DOUBLE FROM nodes
+          UNION ALL
+          SELECT p.iter + 1, n.uid,
+                 0.15 + 0.85 * COALESCE(SUM(p.rank / dg.out_deg), 0)
+          FROM pr p
+          JOIN deg dg ON p.uid = dg.a
+          JOIN ed ON p.uid = ed.a
+          RIGHT JOIN nodes n ON ed.b = n.uid
+          WHERE p.iter < 5
+          GROUP BY p.iter + 1, n.uid
+        )
+        SELECT uid, ROUND(rank, 6) AS rank FROM pr WHERE iter = 5
+    """)
+
+
+def _pagerank_top10_sql(iters: int = 5, d: float = 0.85) -> str:
+    """Unrolled power iteration replaying graph_algos.pagerank exactly:
+    ranks init 1.0, per-round dangling-mass scalar, base = 1-d +
+    d·dangling/N, contributions rank/outdeg over the raw (non-distinct)
+    edge rows."""
+    parts = [
+        """nodes AS (
+          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS uid
+          FROM customer
+          UNION ALL
+          SELECT 'Order:' || CAST(o_orderkey AS VARCHAR) FROM orders
+          UNION ALL
+          SELECT 'Part:' || CAST(p_partkey AS VARCHAR) FROM part)""",
+        """edges AS (
+          SELECT 'Customer:' || CAST(o_custkey AS VARCHAR) AS src,
+                 'Order:' || CAST(o_orderkey AS VARCHAR) AS dst
+          FROM orders
+          UNION ALL
+          SELECT 'Order:' || CAST(l_orderkey AS VARCHAR),
+                 'Part:' || CAST(l_partkey AS VARCHAR)
+          FROM lineitem)""",
+        "odeg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src)",
+        "nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes)",
+        "r0 AS (SELECT uid, 1.0 AS rank FROM nodes)"]
+    for i in range(iters):
+        parts.append(f"""d{i} AS MATERIALIZED (
+          SELECT COALESCE(SUM(r.rank), 0) AS dm FROM r{i} r
+          LEFT JOIN odeg o ON o.src = r.uid WHERE o.src IS NULL)""")
+        parts.append(f"""r{i + 1} AS MATERIALIZED (
+          SELECT n.uid,
+                 (1 - {d}) + {d} * (SELECT dm FROM d{i}) / (SELECT n FROM nn)
+                 + {d} * COALESCE(inc.s, 0) AS rank
+          FROM nodes n LEFT JOIN (
+            SELECT e.dst AS uid, SUM(r.rank / o.deg) AS s
+            FROM edges e
+            JOIN r{i} r ON r.uid = e.src
+            JOIN odeg o ON o.src = e.src
+            GROUP BY e.dst) inc ON inc.uid = n.uid)""")
+    return ("WITH " + ",\n".join(parts)
+            + f"\nSELECT uid FROM r{iters} "
+              "ORDER BY round(rank, 6) DESC, uid LIMIT 10")
 
 
 def q_pagerank_top10(spark, sf_dir):
@@ -952,6 +1606,7 @@ def q_pagerank_top10(spark, sf_dir):
     pr = graph_algos.pagerank(nodes, edges, iters=5)
     return (pr.orderBy(F.round("rank", 6).desc(), F.col("uid")).limit(10)
             .select("uid"))
+query("pagerank_top10", q_pagerank_top10, _pagerank_top10_sql())
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -968,6 +1623,16 @@ def q_multimodal_features(spark, sf_dir):
     media = documents_as_media(_docs(spark, sf_dir))
     return extract_features(media).select(
         "media_id", "fmt", "width", "height", "n_frames")
+query("multimodal_features", q_multimodal_features, """
+        SELECT doc_id AS media_id,
+               CASE doc_id % 3 WHEN 0 THEN 'bmp' WHEN 1 THEN 'png'
+                    ELSE 'gif' END AS fmt,
+               CAST(4 + n_chars % 60 AS INT) AS width,
+               CAST(4 + (n_chars // 7) % 60 AS INT) AS height,
+               CAST(CASE WHEN doc_id % 3 = 2 THEN 1 + doc_id % 4
+                         ELSE 1 END AS INT) AS n_frames
+        FROM documents
+    """)
 
 
 def q_multimodal_resize(spark, sf_dir):
@@ -981,6 +1646,22 @@ def q_multimodal_resize(spark, sf_dir):
     from ..operators.multimodal import documents_as_media, resize
     media = documents_as_media(_docs(spark, sf_dir))
     return resize(media, max_side=32).select("media_id", "width", "height")
+query("multimodal_resize", q_multimodal_resize, """
+        WITH dims AS (
+          SELECT doc_id AS media_id,
+                 4 + n_chars % 60 AS w,
+                 4 + (n_chars // 7) % 60 AS h
+          FROM documents
+        ), scaled AS (
+          SELECT media_id, w, h,
+                 LEAST(1.0, 32.0 / GREATEST(w, h)) AS scale
+          FROM dims
+        )
+        SELECT media_id,
+               CAST(GREATEST(1, FLOOR(w * scale)) AS INT) AS width,
+               CAST(GREATEST(1, FLOOR(h * scale)) AS INT) AS height
+        FROM scaled
+    """)
 
 
 def q_gif_frames(spark, sf_dir):
@@ -996,6 +1677,14 @@ def q_gif_frames(spark, sf_dir):
             .select("media_id", "frame_idx",
                     F.length("frame_payload").cast("long")
                     .alias("frame_bytes")))
+query("gif_frames", q_gif_frames, """
+        WITH g AS (
+          SELECT doc_id AS media_id, 1 + doc_id % 4 AS nf
+          FROM documents WHERE doc_id % 3 = 2)
+        SELECT media_id, CAST(t.i AS INT) AS frame_idx,
+               CAST(35 AS BIGINT) AS frame_bytes
+        FROM g, UNNEST(range(0, nf, 2)) AS t(i)
+    """)
 
 
 def q_audio_features(spark, sf_dir):
@@ -1007,6 +1696,28 @@ def q_audio_features(spark, sf_dir):
     from ..operators.multimodal import audio_features, documents_as_audio
     media = documents_as_audio(_docs(spark, sf_dir))
     return audio_features(media)
+query("audio_features", q_audio_features, """
+        WITH m AS (
+          SELECT doc_id AS media_id, 200 + n_chars % 600 AS n
+          FROM documents
+        ), s AS (
+          SELECT media_id, n, t.i AS i,
+                 (media_id * 31 + t.i * 7) % 256 - 128 AS a
+          FROM m, UNNEST(range(0, n)) AS t(i)
+        ), f AS (
+          SELECT media_id, n, a,
+                 LAG(a) OVER (PARTITION BY media_id ORDER BY i) AS pa
+          FROM s)
+        SELECT media_id, 'wav' AS fmt, 8000 AS sample_rate,
+               CAST(n AS BIGINT) AS n_samples,
+               CAST(n * 1000 // 8000 AS BIGINT) AS duration_ms,
+               CAST(SUM(a * a) AS BIGINT) AS sum_sq,
+               CAST(SUM(CASE WHEN pa IS NOT NULL
+                              AND ((a >= 0) <> (pa >= 0))
+                             THEN 1 ELSE 0 END) AS BIGINT)
+                 AS zero_crossings
+        FROM f GROUP BY media_id, n
+    """)
 
 
 def q_simhash_pairs(spark, sf_dir):
@@ -1017,6 +1728,33 @@ def q_simhash_pairs(spark, sf_dir):
     which is what the DuckDB twin computes."""
     return dedup.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3,
                                     nbits=60, portable=True)
+query("simhash_pairs", q_simhash_pairs, """
+        WITH toks AS (
+          SELECT doc_id, list_distinct(list_filter(
+            string_split_regex(lower(text),'[^a-z0-9]+'),
+            x -> x != '')) AS ws
+          FROM documents
+        ), hashes AS (
+          SELECT doc_id,
+                 ('0x' || substr(md5(t.tok), 1, 15))::BIGINT AS h
+          FROM toks, UNNEST(ws) AS t(tok)
+        ), votes AS (
+          SELECT doc_id, i.i,
+                 SUM(CASE WHEN (h >> i.i) & 1 = 1 THEN 1 ELSE -1 END)
+                     AS vote
+          FROM hashes CROSS JOIN (SELECT UNNEST(range(60)) AS i) i
+          GROUP BY doc_id, i.i
+        ), sig AS (
+          SELECT doc_id,
+                 SUM(CASE WHEN vote > 0 THEN (1::BIGINT << i)
+                          ELSE 0 END)::BIGINT AS simhash
+          FROM votes GROUP BY doc_id
+        )
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               bit_count(xor(a.simhash, b.simhash))::INT AS hamming
+        FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+        WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+    """)
 
 
 def q_winnow_pairs(spark, sf_dir):
@@ -1027,6 +1765,29 @@ def q_winnow_pairs(spark, sf_dir):
     fingerprint sets match bit-for-bit."""
     return dedup.winnow_pairs(_docs(spark, sf_dir), k=5, window=4,
                               min_shared=2)
+query("winnow_pairs", q_winnow_pairs, """
+        WITH toks AS (
+          SELECT doc_id, list_filter(
+            string_split_regex(lower(text),'[^a-z0-9]+'),
+            x -> x != '') AS ws
+          FROM documents
+        ), grams AS (
+          SELECT doc_id, list_transform(range(1, len(ws)-5+2),
+            i -> ('0x' || substr(md5(array_to_string(ws[i:i+4], ' ')),
+                                 1, 15))::BIGINT) AS hs
+          FROM toks WHERE len(ws) >= 8
+        ), sel AS (
+          SELECT doc_id, list_distinct(list_transform(
+            range(1, len(hs)-4+2), s -> list_min(hs[s:s+3]))) AS sfps
+          FROM grams
+        ), fps AS (
+          SELECT doc_id, f.fp FROM sel, UNNEST(sfps) AS f(fp)
+        )
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               COUNT(*)::BIGINT AS n_shared
+        FROM fps a JOIN fps b ON a.fp = b.fp AND a.doc_id < b.doc_id
+        GROUP BY 1, 2 HAVING COUNT(*) >= 2
+    """)
 
 
 def q_ann_lsh_topk(spark, sf_dir):
@@ -1076,6 +1837,8 @@ def _ann_oracle_sql() -> str:
         SELECT vec_id, ROUND(cos, 6) AS cosine FROM top
         WHERE vec_id <> 0
     """
+_ANN_LSH_TOPK_ORACLE = _ann_oracle_sql()
+query("ann_lsh_topk", q_ann_lsh_topk, _ANN_LSH_TOPK_ORACLE)
 
 
 def q_lsh_near_dup(spark, sf_dir):
@@ -1151,6 +1914,7 @@ def _lsh_near_dup_oracle_sql(dim: int = 64, bits: int = 6,
           JOIN corpus y ON y.vec_id = c.id_b)
         WHERE cos >= {thresh}
     """
+query("lsh_near_dup", q_lsh_near_dup, _lsh_near_dup_oracle_sql())
 
 
 def q_tpch_q4(spark, sf_dir):
@@ -1163,6 +1927,12 @@ def q_tpch_q4(spark, sf_dir):
         "left_semi")
     return hit.groupBy("o_orderpriority") \
               .agg(F.count("*").alias("n_orders"))
+query("tpch_q4", q_tpch_q4,
+      "SELECT o_orderpriority, COUNT(*) AS n_orders FROM orders o "
+      "WHERE EXISTS (SELECT 1 FROM lineitem l "
+      "WHERE l.l_orderkey = o.o_orderkey "
+      "AND l.l_shipdate > o.o_orderdate) "
+      "GROUP BY o_orderpriority")
 
 
 def q_tpch_q5(spark, sf_dir):
@@ -1200,6 +1970,21 @@ def q_tpch_q5(spark, sf_dir):
                   & (F.col("s_nationkey") == F.col("c_nationkey")))
             .groupBy("n_name")
             .agg(F.sum("dp").cast("double").alias("revenue")))
+query("tpch_q5", q_tpch_q5, """
+        SELECT n_name,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                        CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE)
+                   AS revenue
+        FROM lineitem
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN supplier ON l_suppkey = s_suppkey
+                     AND c_nationkey = s_nationkey
+        JOIN nation   ON s_nationkey = n_nationkey
+        JOIN region   ON n_regionkey = r_regionkey
+        WHERE r_name = 'ASIA'
+        GROUP BY n_name
+    """)
 
 
 def q_tpch_q14(spark, sf_dir):
@@ -1221,6 +2006,17 @@ def q_tpch_q14(spark, sf_dir):
     return agg.select(
         (F.col("promo").cast("double") * 100.0
          / F.col("total").cast("double")).alias("promo_pct"))
+query("tpch_q14", q_tpch_q14, """
+        SELECT CAST(SUM(CASE WHEN p_type = 'PROMO'
+                    THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
+                         CAST(1 - l_discount AS DECIMAL(18,2))
+                    ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) * 100.0
+               / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                          CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE)
+               AS promo_pct
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
+    """)
 
 
 def q_tpch_q18(spark, sf_dir):
@@ -1238,6 +2034,16 @@ def q_tpch_q18(spark, sf_dir):
                   F.col("o_custkey") == F.col("c_custkey"))
             .select("c_custkey", "o_orderkey",
                     F.col("sum_qty").cast("double").alias("sum_qty")))
+query("tpch_q18", q_tpch_q18, """
+        SELECT c_custkey, o_orderkey, CAST(sum_qty AS DOUBLE) AS sum_qty
+        FROM orders
+        JOIN (SELECT l_orderkey,
+                     SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty
+              FROM lineitem GROUP BY l_orderkey
+              HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 150) big
+          ON o_orderkey = big.l_orderkey
+        JOIN customer ON o_custkey = c_custkey
+    """)
 
 
 def q_tpch_q7(spark, sf_dir):
@@ -1262,6 +2068,21 @@ def q_tpch_q7(spark, sf_dir):
                 F.col("o_custkey") == F.col("c_custkey"))
             .groupBy(F.year("l_shipdate").alias("l_year"))
             .agg(F.sum(dp).cast("double").alias("revenue")))
+query("tpch_q7", q_tpch_q7, """
+        SELECT CAST(EXTRACT(YEAR FROM l_shipdate) AS INT) AS l_year,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                        CAST(1 - l_discount AS DECIMAL(18,2))) AS DOUBLE)
+                   AS revenue
+        FROM lineitem
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation n1 ON s_nationkey = n1.n_nationkey
+                      AND n1.n_name = 'NATION_1'
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation n2 ON c_nationkey = n2.n_nationkey
+                      AND n2.n_name = 'NATION_2'
+        GROUP BY l_year
+    """)
 
 
 def q_tpch_q10(spark, sf_dir):
@@ -1283,6 +2104,19 @@ def q_tpch_q10(spark, sf_dir):
                     F.col("rev").cast("double").alias("revenue"))
             .orderBy(F.col("revenue").desc(), F.col("c_custkey").asc())
             .limit(20))
+query("tpch_q10", q_tpch_q10, """
+        SELECT c_custkey, c_name, n_name,
+               CAST(rev AS DOUBLE) AS revenue
+        FROM (SELECT o_custkey,
+                     SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                         CAST(1 - l_discount AS DECIMAL(18,2))) AS rev
+              FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+              WHERE l_returnflag = 'R'
+              GROUP BY o_custkey) g
+        JOIN customer ON g.o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        ORDER BY revenue DESC, c_custkey ASC LIMIT 20
+    """)
 
 
 def q_above_nation_avg(spark, sf_dir):
@@ -1299,6 +2133,16 @@ def q_above_nation_avg(spark, sf_dir):
             .where(F.col("c_acctbal").cast("decimal(18,2)")
                    * F.col("cnt") > F.col("bal_sum"))
             .select("c_custkey"))
+query("above_nation_avg", q_above_nation_avg, """
+        SELECT c_custkey
+        FROM customer
+        JOIN (SELECT c_nationkey AS nk,
+                     SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS bal_sum,
+                     COUNT(*) AS cnt
+              FROM customer GROUP BY c_nationkey) s
+          ON c_nationkey = s.nk
+        WHERE CAST(c_acctbal AS DECIMAL(18,2)) * cnt > bal_sum
+    """)
 
 
 def q_running_total(spark, sf_dir):
@@ -1315,6 +2159,15 @@ def q_running_total(spark, sf_dir):
             .select("o_custkey", "o_orderkey",
                     F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
                     .over(w).cast("double").alias("running_total")))
+query("running_total", q_running_total, """
+        SELECT o_custkey, o_orderkey,
+               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+                    PARTITION BY o_custkey
+                    ORDER BY o_orderdate ASC, o_orderkey ASC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS DOUBLE) AS running_total
+        FROM orders WHERE o_custkey < 100
+    """)
 
 
 def q_ntile_quartiles(spark, sf_dir):
@@ -1325,6 +2178,10 @@ def q_ntile_quartiles(spark, sf_dir):
     w = W.orderBy(F.col("s_acctbal").asc(), F.col("s_suppkey").asc())
     return t["supplier"].select(
         "s_suppkey", F.ntile(4).over(w).alias("quartile"))
+query("ntile_quartiles", q_ntile_quartiles,
+      "SELECT s_suppkey, NTILE(4) OVER "
+      "(ORDER BY s_acctbal ASC, s_suppkey ASC) AS quartile "
+      "FROM supplier")
 
 
 def q_event_funnel(spark, sf_dir):
@@ -1341,6 +2198,17 @@ def q_event_funnel(spark, sf_dir):
         F.count(F.col("first_view")).alias("n_viewers"),
         F.sum(F.when(F.col("first_view") < F.col("last_purchase"), 1)
               .otherwise(0)).cast("long").alias("n_converted"))
+query("event_funnel", q_event_funnel, """
+        SELECT COUNT(first_view) AS n_viewers,
+               CAST(SUM(CASE WHEN first_view < last_purchase
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
+        FROM (SELECT user_id,
+                     MIN(CASE WHEN event_type = 'view' THEN ts END)
+                         AS first_view,
+                     MAX(CASE WHEN event_type = 'purchase' THEN ts END)
+                         AS last_purchase
+              FROM events GROUP BY user_id)
+    """)
 
 
 def q_event_props_json(spark, sf_dir):
@@ -1350,6 +2218,12 @@ def q_event_props_json(spark, sf_dir):
     k = F.get_json_object(F.col("props"), "$.k").cast("long")
     return ev.groupBy("event_type").agg(
         F.sum(k).alias("k_sum"), F.count(k).alias("k_cnt"))
+query("event_props_json", q_event_props_json,
+      "SELECT event_type, "
+      "CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) "
+      "AS BIGINT) AS k_sum, "
+      "COUNT(json_extract_string(props, '$.k')) AS k_cnt "
+      "FROM events GROUP BY event_type")
 
 
 def _dp():
@@ -1392,6 +2266,29 @@ def q_tpch_q8(spark, sf_dir):
                        .otherwise(F.lit(0).cast("decimal(18,2)")))
                  .cast("double").alias("nation_rev"),
                  F.sum(_dp()).cast("double").alias("total_rev")))
+query("tpch_q8", q_tpch_q8, """
+        SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS o_year,
+               CAST(SUM(CASE WHEN n2.n_name = 'NATION_3'
+                             THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
+                                  CAST(1 - l_discount AS DECIMAL(18,2))
+                             ELSE CAST(0 AS DECIMAL(18,2)) END)
+                    AS DOUBLE) AS nation_rev,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                        CAST(1 - l_discount AS DECIMAL(18,2)))
+                    AS DOUBLE) AS total_rev
+        FROM lineitem
+        JOIN part     ON l_partkey = p_partkey AND p_type = 'STANDARD'
+        JOIN orders   ON l_orderkey = o_orderkey
+                     AND o_orderdate >= TIMESTAMP '1995-01-01'
+                     AND o_orderdate <  TIMESTAMP '1997-01-01'
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        JOIN region   ON n1.n_regionkey = r_regionkey
+                     AND r_name = 'AMERICA'
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        GROUP BY o_year
+    """)
 
 
 def q_tpch_q9(spark, sf_dir):
@@ -1418,6 +2315,20 @@ def q_tpch_q9(spark, sf_dir):
             .groupBy(F.col("nation"),
                      F.year("o_orderdate").alias("o_year"))
             .agg(F.sum(_dp()).cast("double").alias("sum_profit")))
+query("tpch_q9", q_tpch_q9, """
+        SELECT n_name AS nation,
+               CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS o_year,
+               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                        CAST(1 - l_discount AS DECIMAL(18,2)))
+                    AS DOUBLE) AS sum_profit
+        FROM lineitem
+        JOIN part     ON l_partkey = p_partkey
+                     AND p_name LIKE '%widget%'
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN nation   ON s_nationkey = n_nationkey
+        GROUP BY n_name, o_year
+    """)
 
 
 def q_tpch_q12(spark, sf_dir):
@@ -1439,6 +2350,20 @@ def q_tpch_q12(spark, sf_dir):
                  .alias("high_line_count"),
                  F.sum(F.when(urgent, 0).otherwise(1)).cast("long")
                  .alias("low_line_count")))
+query("tpch_q12", q_tpch_q12, """
+        SELECT l_linestatus,
+               CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
+                             THEN 1 ELSE 0 END) AS BIGINT)
+                   AS high_line_count,
+               CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
+                             THEN 0 ELSE 1 END) AS BIGINT)
+                   AS low_line_count
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+          AND l_shipdate <  TIMESTAMP '1997-01-01'
+          AND l_shipdate > o_orderdate + INTERVAL 30 DAY
+        GROUP BY l_linestatus
+    """)
 
 
 def q_tpch_q13(spark, sf_dir):
@@ -1454,6 +2379,13 @@ def q_tpch_q13(spark, sf_dir):
                 .agg(F.count("o_orderkey").alias("c_count")))
     return (per_cust.groupBy("c_count")
             .agg(F.count("*").alias("custdist")))
+query("tpch_q13", q_tpch_q13, """
+        SELECT c_count, COUNT(*) AS custdist
+        FROM (SELECT c_custkey, COUNT(o_orderkey) AS c_count
+              FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+              GROUP BY c_custkey)
+        GROUP BY c_count
+    """)
 
 
 def q_tpch_q15(spark, sf_dir):
@@ -1473,6 +2405,19 @@ def q_tpch_q15(spark, sf_dir):
                   F.col("l_suppkey") == F.col("s_suppkey"))
             .select("s_suppkey", "s_name",
                     F.col("total_rev").cast("double").alias("total_rev")))
+query("tpch_q15", q_tpch_q15, """
+        WITH rev AS (
+            SELECT l_suppkey,
+                   SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                       CAST(1 - l_discount AS DECIMAL(18,2))) AS total_rev
+            FROM lineitem
+            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+              AND l_shipdate <  TIMESTAMP '1996-04-01'
+            GROUP BY l_suppkey)
+        SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_rev
+        FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
+    """)
 
 
 def q_tpch_q17(spark, sf_dir):
@@ -1493,6 +2438,19 @@ def q_tpch_q17(spark, sf_dir):
             .where(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
             .agg((F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
                   .cast("double") / F.lit(7.0)).alias("avg_yearly")))
+query("tpch_q17", q_tpch_q17, """
+        WITH bl AS (
+            SELECT l_partkey, l_quantity, l_extendedprice
+            FROM lineitem JOIN part ON l_partkey = p_partkey
+            WHERE p_brand = 'Brand#13')
+        SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
+                    AS DOUBLE) / 7.0 AS avg_yearly
+        FROM bl
+        JOIN (SELECT l_partkey AS pk, AVG(l_quantity) AS avg_qty
+              FROM bl GROUP BY l_partkey) a
+          ON l_partkey = a.pk
+        WHERE l_quantity < 0.2 * avg_qty
+    """)
 
 
 def q_tpch_q19(spark, sf_dir):
@@ -1512,6 +2470,18 @@ def q_tpch_q19(spark, sf_dir):
            & F.col("l_quantity").between(20, 30)))
     return j.where(band).agg(
         F.sum(_dp()).cast("double").alias("revenue"))
+query("tpch_q19", q_tpch_q19, """
+        SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
+                        CAST(1 - l_discount AS DECIMAL(18,2)))
+                    AS DOUBLE) AS revenue
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        WHERE (p_brand = 'Brand#1' AND p_size <= 5
+               AND l_quantity BETWEEN 1 AND 11)
+           OR (p_brand = 'Brand#13' AND p_size <= 10
+               AND l_quantity BETWEEN 10 AND 20)
+           OR (p_brand = 'Brand#23' AND p_size <= 15
+               AND l_quantity BETWEEN 20 AND 30)
+    """)
 
 
 def q_tpch_q22(spark, sf_dir):
@@ -1538,6 +2508,19 @@ def q_tpch_q22(spark, sf_dir):
             .agg(F.count("*").alias("numcust"),
                  F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
                  .cast("double").alias("totacctbal")))
+query("tpch_q22", q_tpch_q22, """
+        SELECT c_nationkey AS nationkey,
+               COUNT(*) AS numcust,
+               CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
+                   AS totacctbal
+        FROM customer
+        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer
+                           WHERE c_acctbal > 0)
+          AND NOT EXISTS (SELECT 1 FROM orders
+                          WHERE o_custkey = c_custkey
+                            AND o_orderdate >= TIMESTAMP '2000-01-01')
+        GROUP BY c_nationkey
+    """)
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -1552,6 +2535,21 @@ def q_stratified_sample(spark, sf_dir):
         {"en": 0.8, "de": 0.5, "fr": 0.25, "es": 0.25},
         key_col="doc_id", default_rate=0.1)
     return out.select("doc_id", "lang")
+# hash-gated sampling twins: keep ⇔ 16-bit md5 prefix < floor(rate·2^16)
+# rendered as %04x (fixed-width hex orders like the integer; rate ≥ 1
+# special-cased — its threshold would be 5 chars and mis-compare)
+query("stratified_sample", q_stratified_sample, """
+        WITH r AS (
+          SELECT doc_id, lang,
+                 CASE lang WHEN 'en' THEN 0.8 WHEN 'de' THEN 0.5
+                           WHEN 'fr' THEN 0.25 WHEN 'es' THEN 0.25
+                           ELSE 0.1 END AS rate
+          FROM documents)
+        SELECT doc_id, lang FROM r
+        WHERE rate >= 1.0
+           OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
+              < printf('%04x', CAST(floor(rate * 65536) AS INT))
+    """)
 
 
 def q_mixture_sample(spark, sf_dir):
@@ -1565,6 +2563,21 @@ def q_mixture_sample(spark, sf_dir):
                          {"src0": 0.5, "src1": 0.3, "src2": 0.2},
                          key_col="doc_id")
     return out.select("doc_id", "source")
+query("mixture_sample", q_mixture_sample, """
+        WITH counts AS (
+          SELECT source, COUNT(*) AS n,
+                 CASE source WHEN 'src0' THEN 0.5 WHEN 'src1' THEN 0.3
+                             WHEN 'src2' THEN 0.2 END AS w
+          FROM documents GROUP BY source
+        ), kept AS (SELECT * FROM counts WHERE w IS NOT NULL),
+        cap AS (SELECT MIN(n / w) AS c FROM kept),
+        rates AS (SELECT source, (c * w / n) AS rate FROM kept, cap)
+        SELECT d.doc_id, d.source
+        FROM documents d JOIN rates USING (source)
+        WHERE rate >= 1.0
+           OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
+              < printf('%04x', CAST(floor(rate * 65536) AS INT))
+    """)
 
 
 def q_pack_shards(spark, sf_dir):
@@ -1578,6 +2591,18 @@ def q_pack_shards(spark, sf_dir):
     return (packed.groupBy("lang", "shard_id")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_chars").cast("long").alias("shard_chars")))
+query("pack_shards", q_pack_shards, """
+        WITH c AS (
+          SELECT lang, doc_id, n_chars,
+                 SUM(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+          FROM documents)
+        SELECT lang,
+               CAST(floor((cum - n_chars) / 2000) AS BIGINT) AS shard_id,
+               COUNT(*) AS n_docs,
+               CAST(SUM(n_chars) AS BIGINT) AS shard_chars
+        FROM c GROUP BY lang, shard_id
+    """)
 
 
 def q_pii_redact(spark, sf_dir):
@@ -1594,6 +2619,20 @@ def q_pii_redact(spark, sf_dir):
                  F.lit("@example.com or 555-123-4567 at 10.0."),
                  (F.col("doc_id") % 256).cast("string"), F.lit(".7")))
     return pii_redact(seeded).select("doc_id", "redacted")
+query("pii_redact", q_pii_redact, r"""
+        SELECT doc_id,
+          regexp_replace(
+            regexp_replace(
+              regexp_replace(
+                text || ' contact user' || CAST(doc_id AS VARCHAR)
+                     || '@example.com or 555-123-4567 at 10.0.'
+                     || CAST(doc_id % 256 AS VARCHAR) || '.7',
+                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+                '<EMAIL>', 'g'),
+              '\b\d{3}[-.]\d{3,4}[-.]\d{4}\b', '<PHONE>', 'g'),
+            '\b(\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g') AS redacted
+        FROM documents
+    """)
 
 
 def q_quality_filter(spark, sf_dir):
@@ -1605,6 +2644,33 @@ def q_quality_filter(spark, sf_dir):
     return quality_filter(docs).select(
         "doc_id", "ok_tokens", "ok_avg_len", "ok_symbols",
         "ok_stopwords", "keep")
+query("quality_filter", q_quality_filter, """
+        WITH t AS (
+          SELECT doc_id, text,
+            list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
+                        x -> x != '') AS toks
+          FROM documents),
+        m AS (
+          SELECT doc_id, text, len(toks) AS n,
+            length(array_to_string(toks, ''))
+              / greatest(len(toks), 1) AS avg_len,
+            length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g'))
+              / greatest(length(text), 1) AS sym_ratio,
+            len(list_filter(toks, x -> list_contains(
+              ['the','a','of','and','to','in','is','for','on','with'], x)))
+              AS sw_hits
+          FROM t)
+        SELECT doc_id,
+               (n >= 20 AND n <= 100000) AS ok_tokens,
+               (avg_len >= 2.0 AND avg_len <= 12.0) AS ok_avg_len,
+               (sym_ratio <= 0.10) AS ok_symbols,
+               (sw_hits >= 2) AS ok_stopwords,
+               ((n >= 20 AND n <= 100000)
+                AND (avg_len >= 2.0 AND avg_len <= 12.0)
+                AND (sym_ratio <= 0.10)
+                AND (sw_hits >= 2)) AS keep
+        FROM m
+    """)
 
 
 def q_sssp_cost(spark, sf_dir):
@@ -1641,6 +2707,34 @@ def q_sssp_cost(spark, sf_dir):
                               F.col("r_regionkey").cast("string"))
                      .alias("uid")))
     return sssp(edges, seeds, max_hops=3).select("uid", "dist")
+query("sssp_cost", q_sssp_cost, """
+        WITH RECURSIVE
+        ed(a, b, w) AS (
+          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR),
+                 'Region:' || CAST(n_regionkey AS VARCHAR),
+                 n_nationkey % 5 + 1 FROM nation
+          UNION ALL
+          SELECT 'Region:' || CAST(n_regionkey AS VARCHAR),
+                 'Nation:' || CAST(n_nationkey AS VARCHAR),
+                 n_nationkey % 5 + 1 FROM nation
+          UNION ALL
+          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR),
+                 'Nation:' || CAST(c_nationkey AS VARCHAR),
+                 c_custkey % 7 + 1 FROM customer
+          UNION ALL
+          SELECT 'Nation:' || CAST(c_nationkey AS VARCHAR),
+                 'Customer:' || CAST(c_custkey AS VARCHAR),
+                 c_custkey % 7 + 1 FROM customer
+        ),
+        walk(uid, hops, d) AS (
+          SELECT 'Region:' || CAST(r_regionkey AS VARCHAR), 0, 0
+          FROM region WHERE r_name = 'ASIA'
+          UNION ALL
+          SELECT ed.b, w.hops + 1, w.d + ed.w FROM walk w
+          JOIN ed ON ed.a = w.uid WHERE w.hops < 3
+        )
+        SELECT uid, CAST(MIN(d) AS BIGINT) AS dist FROM walk GROUP BY uid
+    """)
 
 
 # Session-lifetime co-bucketed layout for the recurring interval join —
@@ -1710,6 +2804,13 @@ def q_interval_join_events(spark, sf_dir):
     lt, rt = _interval_layout(spark, sf_dir)
     return interval_join_bucketed(spark, lt, rt, key_col="user_id",
                                   lower_s=1, upper_s=120)
+query("interval_join_events", q_interval_join_events, """
+        SELECT a.user_id, a.event_id AS left_id, b.event_id AS right_id
+        FROM events a JOIN events b
+          ON a.user_id = b.user_id
+         AND b.ts >= a.ts + INTERVAL 1 SECOND
+         AND b.ts <= a.ts + INTERVAL 120 SECOND
+    """)
 
 
 def q_corpus_pipeline(spark, sf_dir):
@@ -1746,6 +2847,41 @@ def q_corpus_pipeline(spark, sf_dir):
     return (packed.groupBy("lang", "shard_id")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("n_chars").cast("long").alias("shard_chars")))
+query("corpus_pipeline", q_corpus_pipeline, r"""
+        WITH q AS (
+          SELECT doc_id, lang, text, n_chars,
+            list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
+                        x -> x != '') AS toks
+          FROM documents),
+        m AS (
+          SELECT doc_id, lang, text, n_chars, toks FROM q
+          WHERE len(toks) >= 20 AND len(toks) <= 100000
+            AND length(array_to_string(toks, ''))
+                / greatest(len(toks), 1) >= 2.0
+            AND length(array_to_string(toks, ''))
+                / greatest(len(toks), 1) <= 12.0
+            AND length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
+                / greatest(length(text), 1) <= 0.10
+            AND len(list_filter(toks, x -> list_contains(
+              ['the','a','of','and','to','in','is','for','on','with'], x)))
+                >= 2),
+        f AS (SELECT doc_id, lang, n_chars,
+                     md5(array_to_string(toks, ' ')) AS fp FROM m),
+        d AS (SELECT doc_id, lang, n_chars FROM (
+                SELECT *, ROW_NUMBER() OVER (PARTITION BY fp
+                  ORDER BY doc_id) AS rn FROM f) WHERE rn = 1),
+        s AS (SELECT * FROM d
+              WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'),
+        c AS (SELECT lang, doc_id, n_chars,
+                SUM(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+              FROM s)
+        SELECT lang,
+               CAST(floor((cum - n_chars) / 4000) AS BIGINT) AS shard_id,
+               COUNT(*) AS n_docs,
+               CAST(SUM(n_chars) AS BIGINT) AS shard_chars
+        FROM c GROUP BY lang, shard_id
+    """)
 
 
 def q_optional_match(spark, sf_dir):
@@ -1759,6 +2895,12 @@ def q_optional_match(spark, sf_dir):
         "[c:Customer,ordercount] -(pl?:Placed)> (o)",
         GROUP="c.uid", ordercount="COUNT(pl.uid)",
         as_df=True).select("uid", "ordercount")
+query("optional_match", q_optional_match, """
+        SELECT 'Customer:' || CAST(c.c_custkey AS VARCHAR) AS uid,
+               COUNT(o.o_orderkey) AS ordercount
+        FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
+        GROUP BY c.c_custkey
+    """)
 
 
 #: pair expansion is n(n-1)/2 per basket — one pathological 10k-item
@@ -1797,6 +2939,26 @@ def q_basket_lift(spark, sf_dir):
                             / (F.col("n_a") * F.col("n_b")), 6)
                     .alias("lift"))
             .orderBy(F.col("n_ab").desc(), "pa", "pb").limit(20))
+query("basket_lift", q_basket_lift, """
+        WITH e AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                   FROM lineitem),
+        small AS (SELECT o FROM e GROUP BY o HAVING COUNT(*) <= 256),
+        ec AS (SELECT e.* FROM e JOIN small USING (o)),
+        pairs AS (
+          SELECT a.p AS pa, b.p AS pb, COUNT(*) AS n_ab
+          FROM ec a JOIN ec b ON a.o = b.o AND a.p < b.p
+          GROUP BY 1, 2),
+        supp AS (SELECT p, COUNT(*) AS n FROM e GROUP BY p),
+        tot AS (SELECT COUNT(DISTINCT o) AS n_orders FROM e)
+        SELECT pa, pb, n_ab,
+               round(CAST(n_ab AS DOUBLE) / sa.n, 6) AS confidence,
+               round(CAST(n_ab AS DOUBLE) * n_orders / (sa.n * sb.n), 6)
+                 AS lift
+        FROM pairs
+        JOIN supp sa ON sa.p = pa
+        JOIN supp sb ON sb.p = pb, tot
+        ORDER BY n_ab DESC, pa, pb LIMIT 20
+    """)
 
 
 def q_cumulative_users(spark, sf_dir):
@@ -1815,6 +2977,18 @@ def q_cumulative_users(spark, sf_dir):
             .select(F.col("d").cast("string").alias("d"),
                     F.col("new_users").cast("long").alias("new_users"),
                     "cum_users"))
+query("cumulative_users", q_cumulative_users, """
+        WITH firsts AS (
+          SELECT user_id, MIN(CAST(ts AS DATE)) AS d
+          FROM events GROUP BY user_id),
+        daily AS (SELECT d, COUNT(*) AS new_users FROM firsts GROUP BY d)
+        SELECT CAST(d AS VARCHAR) AS d,
+               CAST(new_users AS BIGINT) AS new_users,
+               CAST(SUM(new_users) OVER (ORDER BY d
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                 AS BIGINT) AS cum_users
+        FROM daily
+    """)
 
 
 def q_assortativity(spark, sf_dir):
@@ -1842,6 +3016,25 @@ def q_assortativity(spark, sf_dir):
                 .cast("double")
                 / (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")),
                 6).alias("assortativity"))
+query("assortativity_orders", q_assortativity, """
+        WITH e AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
+                   FROM lineitem),
+        dd AS (
+          SELECT e.o, e.p, d1.don AS dor, d2.dpn AS dpr
+          FROM e
+          JOIN (SELECT o, COUNT(*) AS don FROM e GROUP BY o) d1 USING (o)
+          JOIN (SELECT p, COUNT(*) AS dpn FROM e GROUP BY p) d2 USING (p)),
+        s AS (
+          SELECT CAST(COUNT(*) * 2 AS BIGINT) AS n,
+                 CAST(SUM(dor + dpr) AS BIGINT) AS sx,
+                 CAST(SUM(dor * dpr) * 2 AS BIGINT) AS sxy,
+                 CAST(SUM(dor * dor + dpr * dpr) AS BIGINT) AS sxx
+          FROM dd)
+        SELECT n,
+               round(CAST(n * sxy - sx * sx AS DOUBLE)
+                     / (n * sxx - sx * sx), 6) AS assortativity
+        FROM s
+    """)
 
 
 def q_transitivity(spark, sf_dir):
@@ -1859,6 +3052,53 @@ def q_transitivity(spark, sf_dir):
           .select(F.col("a.l_partkey").alias("pa"),
                   F.col("b.l_partkey").alias("pb")))
     return transitivity(co, "pa", "pb")
+query("transitivity_copurchase", q_transitivity, """
+        WITH e AS (
+          SELECT DISTINCT a.l_partkey AS lo, b.l_partkey AS hi
+          FROM lineitem a JOIN lineitem b
+            ON a.l_orderkey = b.l_orderkey
+           AND a.l_partkey < b.l_partkey),
+        tri AS (
+          SELECT COUNT(*)::BIGINT AS n_triangles
+          FROM e ab
+          JOIN e bc ON ab.hi = bc.lo
+          JOIN e ac ON ac.lo = ab.lo AND ac.hi = bc.hi),
+        deg AS (
+          SELECT v, COUNT(*) AS d FROM (
+            SELECT lo AS v FROM e UNION ALL SELECT hi FROM e)
+          GROUP BY v),
+        w AS (SELECT CAST(SUM(d * (d - 1) // 2) AS BIGINT) AS n_wedges
+              FROM deg)
+        SELECT n_triangles, n_wedges,
+               round(3.0 * n_triangles / greatest(n_wedges, 1), 6)
+                 AS transitivity
+        FROM tri, w
+    """)
+
+
+def _k_core_sql(k: int = 6, rounds: int = 16) -> str:
+    """Unrolled peel replaying graph_algos.k_core: round i keeps nodes
+    with ≥ k distinct neighbors in the surviving subgraph.  Peeling is
+    idempotent after its fixpoint, so unrolling more rounds than the
+    actual peel depth is exact (the engine-side loop warns if 30 rounds
+    ever stop short; this fixture peels in far fewer)."""
+    parts = ["""e0 AS MATERIALIZED (SELECT DISTINCT src, dst FROM (
+          SELECT 'Order:' || CAST(l_orderkey AS VARCHAR) AS src,
+                 'Part:' || CAST(l_partkey AS VARCHAR) AS dst
+          FROM lineitem
+          UNION ALL
+          SELECT 'Part:' || CAST(l_partkey AS VARCHAR),
+                 'Order:' || CAST(l_orderkey AS VARCHAR)
+          FROM lineitem))"""]
+    for i in range(rounds):
+        parts.append(f"""k{i} AS MATERIALIZED (
+          SELECT src AS uid FROM e{i} GROUP BY src HAVING COUNT(*) >= {k})""")
+        parts.append(f"""e{i + 1} AS MATERIALIZED (
+          SELECT e.src, e.dst FROM e{i} e
+          JOIN k{i} a ON a.uid = e.src
+          JOIN k{i} b ON b.uid = e.dst)""")
+    return ("WITH " + ",\n".join(parts)
+            + f"\nSELECT DISTINCT src AS uid FROM e{rounds}")
 
 
 def q_k_core(spark, sf_dir):
@@ -1872,6 +3112,7 @@ def q_k_core(spark, sf_dir):
     nodes = g.nodes_df.where(F.col("kind").isin("Order", "Part"))
     edges = g.edges_df.where(F.col("kind") == "Contains")
     return k_core(nodes, edges, k=6)
+query("k_core_orders", q_k_core, _k_core_sql())
 
 
 def q_global_shuffle(spark, sf_dir):
@@ -1883,6 +3124,15 @@ def q_global_shuffle(spark, sf_dir):
     return (global_shuffle(docs, "doc_id", seed="42")
             .where(F.col("shuffle_rank") <= 100)
             .select("doc_id", "shuffle_rank"))
+query("global_shuffle", q_global_shuffle, """
+        WITH h AS (
+          SELECT doc_id,
+                 ROW_NUMBER() OVER (
+                   ORDER BY md5('42:' || CAST(doc_id AS VARCHAR)), doc_id)
+                 AS shuffle_rank
+          FROM documents)
+        SELECT doc_id, shuffle_rank FROM h WHERE shuffle_rank <= 100
+    """)
 
 
 def q_train_val_test(spark, sf_dir):
@@ -1892,6 +3142,19 @@ def q_train_val_test(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     return (train_val_test_split(docs, "doc_id")
             .groupBy("split").agg(F.count("*").alias("n")))
+query("train_val_test", q_train_val_test, """
+        SELECT CASE
+                 WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
+                      < printf('%04x', CAST(ceil(0.05 * 65536) AS INT))
+                   THEN 'val'
+                 WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
+                      < printf('%04x', CAST(ceil(0.10 * 65536) AS INT))
+                   THEN 'test'
+                 ELSE 'train'
+               END AS split,
+               COUNT(*) AS n
+        FROM documents GROUP BY 1
+    """)
 
 
 def q_line_dedup(spark, sf_dir):
@@ -1916,6 +3179,39 @@ def q_line_dedup(spark, sf_dir):
     reshaped = docs.select(
         "doc_id", F.array_join(lines, "\n").alias("text"))
     return line_dedup(reshaped)
+query("line_dedup", q_line_dedup, """
+        WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+                   FROM documents),
+        resh AS (
+          SELECT doc_id,
+                 array_to_string(list_transform(
+                   range(0, GREATEST(CAST(ceil(len(toks)/8.0) AS INT), 1)),
+                   i -> array_to_string(toks[i*8+1 : i*8+8], ' ')),
+                   chr(10)) AS text
+          FROM t),
+        l AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM resh),
+        lines AS (
+          SELECT doc_id, i - 1 AS line_no, ls[i] AS line
+          FROM l, UNNEST(range(1, len(ls)+1)) AS s(i)),
+        win AS (
+          SELECT h, wd, wp FROM (
+            SELECT md5(line) AS h, doc_id AS wd, line_no AS wp,
+                   row_number() OVER (PARTITION BY md5(line)
+                                      ORDER BY doc_id, line_no) AS rn
+            FROM lines WHERE length(line) >= 16) WHERE rn = 1),
+        flagged AS (
+          SELECT li.doc_id, li.line_no, li.line,
+                 (length(li.line) < 16
+                  OR (w.wd = li.doc_id AND w.wp = li.line_no)) AS keep
+          FROM lines li LEFT JOIN win w
+            ON length(li.line) >= 16 AND md5(li.line) = w.h)
+        SELECT doc_id,
+               COALESCE(string_agg(CASE WHEN keep THEN line END, chr(10)
+                                   ORDER BY line_no), '') AS clean_text,
+               SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS n_kept,
+               SUM(CASE WHEN NOT keep THEN 1 ELSE 0 END) AS n_dropped
+        FROM flagged GROUP BY doc_id
+    """)
 
 
 def q_ppl_bucket_sample(spark, sf_dir):
@@ -1929,6 +3225,39 @@ def q_ppl_bucket_sample(spark, sf_dir):
     scored = unigram_logprob(docs)
     return (quantile_sample(scored, "logprob", "doc_id")
             .select("doc_id", "bucket"))
+query("ppl_bucket_sample", q_ppl_bucket_sample, """
+        WITH tok AS (
+          SELECT doc_id,
+            unnest(list_filter(
+              string_split_regex(lower(text), '[^a-z0-9]+'),
+              x -> x != '')) AS tok
+          FROM documents),
+        freq AS (SELECT tok, COUNT(*) AS tf FROM tok GROUP BY tok),
+        stats AS (SELECT SUM(tf) AS total, COUNT(*) AS vocab FROM freq),
+        scored AS (
+          SELECT doc_id,
+            round(CAST(SUM(CAST(round(log10(
+                    CAST(tf + 1 AS DOUBLE) / (total + vocab)), 6)
+                  AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS logprob
+          FROM tok JOIN freq USING (tok), stats
+          GROUP BY doc_id),
+        cs AS (SELECT quantile_cont(logprob, 0.25) AS c25,
+                      quantile_cont(logprob, 0.75) AS c75 FROM scored),
+        b AS (
+          SELECT doc_id,
+                 CASE WHEN logprob >= c75 THEN 'head'
+                      WHEN logprob >= c25 THEN 'mid'
+                      ELSE 'tail' END AS bucket
+          FROM scored, cs),
+        r AS (SELECT doc_id, bucket,
+                     CASE bucket WHEN 'head' THEN 1.0 WHEN 'mid' THEN 0.5
+                                 ELSE 0.1 END AS rate
+              FROM b)
+        SELECT doc_id, bucket FROM r
+        WHERE rate >= 1.0
+           OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
+              < printf('%04x', CAST(floor(rate * 65536) AS INT))
+    """)
 
 
 def q_retention_cohorts(spark, sf_dir):
@@ -1950,6 +3279,19 @@ def q_retention_cohorts(spark, sf_dir):
                     .cast("int").alias("week_offset"))
             .groupBy("cohort", "week_offset")
             .agg(F.count("*").cast("long").alias("n_users")))
+query("retention_cohorts", q_retention_cohorts, """
+        WITH firsts AS (
+          SELECT user_id, date_trunc('week', MIN(ts)) AS cohort
+          FROM events GROUP BY user_id),
+        act AS (
+          SELECT DISTINCT user_id, date_trunc('week', ts) AS wk
+          FROM events)
+        SELECT CAST(CAST(cohort AS DATE) AS VARCHAR) AS cohort,
+               CAST(date_diff('day', cohort, wk) / 7 AS INT) AS week_offset,
+               COUNT(*) AS n_users
+        FROM act JOIN firsts USING (user_id)
+        GROUP BY 1, 2
+    """)
 
 
 def q_unigram_logprob(spark, sf_dir):
@@ -1964,6 +3306,66 @@ def q_unigram_logprob(spark, sf_dir):
     # bytes-proportional spread (no-op at bench scale)
     return unigram_logprob(spread_scan_by_bytes(_docs(spark, sf_dir))) \
         .select("doc_id", "logprob", "n_tokens")
+query("unigram_logprob", q_unigram_logprob, """
+        WITH tok AS (
+          SELECT doc_id,
+            unnest(list_filter(
+              string_split_regex(lower(text), '[^a-z0-9]+'),
+              x -> x != '')) AS tok
+          FROM documents),
+        freq AS (SELECT tok, COUNT(*) AS tf FROM tok GROUP BY tok),
+        stats AS (SELECT SUM(tf) AS total, COUNT(*) AS vocab FROM freq)
+        SELECT doc_id,
+          round(CAST(SUM(CAST(round(log10(
+                  CAST(tf + 1 AS DOUBLE) / (total + vocab)), 6)
+                AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*), 6) AS logprob,
+          COUNT(*) AS n_tokens
+        FROM tok JOIN freq USING (tok), stats
+        GROUP BY doc_id
+    """)
+
+
+def _label_propagation_sql(iters: int = 4,
+                           final: str | None = None) -> str:
+    """Unrolled synchronous LPA replaying graph_algos.label_propagation:
+    per round every node adopts its neighborhood's most frequent label,
+    ties to the smallest label string; isolated nodes keep their uid."""
+    parts = [
+        """nodes AS (
+          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS uid
+          FROM customer
+          UNION ALL
+          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR) FROM nation
+          UNION ALL
+          SELECT 'Region:' || CAST(r_regionkey AS VARCHAR) FROM region)""",
+        """de AS (
+          SELECT 'Customer:' || CAST(c_custkey AS VARCHAR) AS src,
+                 'Nation:' || CAST(c_nationkey AS VARCHAR) AS dst
+          FROM customer
+          UNION ALL
+          SELECT 'Nation:' || CAST(n_nationkey AS VARCHAR),
+                 'Region:' || CAST(n_regionkey AS VARCHAR)
+          FROM nation)""",
+        """sym AS (SELECT DISTINCT src, dst FROM (
+          SELECT src, dst FROM de
+          UNION ALL SELECT dst, src FROM de))""",
+        "l0 AS (SELECT uid, uid AS label FROM nodes)"]
+    for i in range(iters):
+        parts.append(f"""l{i + 1} AS MATERIALIZED (
+          SELECT n.uid, COALESCE(b.lab, n.uid) AS label
+          FROM nodes n LEFT JOIN (
+            SELECT uid, lab FROM (
+              SELECT uid, lab,
+                     ROW_NUMBER() OVER (PARTITION BY uid
+                                        ORDER BY c DESC, lab) AS rn
+              FROM (SELECT s.dst AS uid, l.label AS lab, COUNT(*) AS c
+                    FROM sym s JOIN l{i} l ON l.uid = s.src
+                    GROUP BY s.dst, l.label))
+            WHERE rn = 1) b ON b.uid = n.uid)""")
+    tail = final if final is not None else (
+        f"SELECT label, COUNT(*) AS n_members "
+        f"FROM l{iters} GROUP BY label")
+    return "WITH " + ",\n".join(parts) + "\n" + tail
 
 
 def q_label_propagation(spark, sf_dir):
@@ -1980,6 +3382,7 @@ def q_label_propagation(spark, sf_dir):
     edges = g.edges_df.where(F.col("kind").isin("FromNation", "InRegion"))
     lp = label_propagation(nodes, edges, iters=4)
     return (lp.groupBy("label").agg(F.count("*").alias("n_members")))
+query("label_propagation", q_label_propagation, _label_propagation_sql())
 
 
 def q_approx_distinct_users(spark, sf_dir):
@@ -2001,6 +3404,11 @@ def q_approx_distinct_users(spark, sf_dir):
             .select("event_type", "n_exact",
                     ((F.abs(F.col("approx") - F.col("n_exact"))
                       / F.col("n_exact")) <= 0.05).alias("approx_ok")))
+query("approx_distinct_users", q_approx_distinct_users, """
+        SELECT event_type, COUNT(DISTINCT user_id) AS n_exact,
+               TRUE AS approx_ok
+        FROM events GROUP BY event_type
+    """)
 
 
 def q_approx_percentiles(spark, sf_dir):
@@ -2027,126 +3435,8 @@ def q_approx_percentiles(spark, sf_dir):
         ((x[0] <= p[0]) & (p[0] <= x[1])).alias("p50_ok"),
         ((x[2] <= p[1]) & (p[1] <= x[3])).alias("p95_ok"),
         ((x[4] <= p[2]) & (p[2] <= x[5])).alias("p99_ok"))
-
-
-
-
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    'q_dedup_exact',
-    'q_minhash_pairs',
-    'q_top_bigrams',
-    'q_dedup_clusters',
-    'q_dedup_resolve',
-    'q_text_stats',
-    'q_token_count_by_lang',
-    'q_quality_score',
-    'q_knn_cosine',
-    'q_events_window',
-    'q_sessionize',
-    'MAX_PART_DEGREE',
-    'q_copurchase_pairs',
-    'q_asof_join',
-    'q_asof_nearest',
-    'q_topk_per_group',
-    'q_rollup_revenue',
-    'q_cube_revenue',
-    'q_percentile_price',
-    'q_moving_avg_daily',
-    'q_range_join_events',
-    'q_pivot_status',
-    'q_grouping_sets',
-    'q_window_rank',
-    'q_tpch_q3',
-    'q_anti_join_customers',
-    'q_regex_extract',
-    'q_hash_sample',
-    'q_embedding_near_dup',
-    'q_bm25_rank',
-    'q_ivf_topk',
-    '_ivf_oracle_sql',
-    '_ivf_ctes',
-    '_cluster_balanced_oracle_sql',
-    'q_bigram_logprob',
-    '_bigram_logprob_oracle_sql',
-    'q_source_reputation',
-    '_SOURCE_REPUTATION_ORACLE',
-    'q_weighted_sample',
-    '_WEIGHTED_SAMPLE_ORACLE',
-    'q_semantic_dedup',
-    '_SEMDEDUP_SOURCE',
-    '_semantic_dedup_oracle_sql',
-    'q_cluster_balanced',
-    'q_k_hop',
-    'q_language_id',
-    'q_connected_components',
-    'q_triangles_copurchase',
-    'q_bfs_distance',
-    'q_tpch_q2',
-    'q_tpch_q11',
-    'q_tpch_q16',
-    'q_tpch_q20',
-    'q_tpch_q21',
-    'q_contamination',
-    'q_decontaminate_spans',
-    'q_chunk_docs',
-    'q_pagerank_nations',
-    'q_pagerank_top10',
-    'q_multimodal_features',
-    'q_multimodal_resize',
-    'q_gif_frames',
-    'q_audio_features',
-    'q_simhash_pairs',
-    'q_winnow_pairs',
-    'q_ann_lsh_topk',
-    '_ann_oracle_sql',
-    'q_lsh_near_dup',
-    '_lsh_near_dup_oracle_sql',
-    'q_tpch_q4',
-    'q_tpch_q5',
-    'q_tpch_q14',
-    'q_tpch_q18',
-    'q_tpch_q7',
-    'q_tpch_q10',
-    'q_above_nation_avg',
-    'q_running_total',
-    'q_ntile_quartiles',
-    'q_event_funnel',
-    'q_event_props_json',
-    '_dp',
-    'q_tpch_q8',
-    'q_tpch_q9',
-    'q_tpch_q12',
-    'q_tpch_q13',
-    'q_tpch_q15',
-    'q_tpch_q17',
-    'q_tpch_q19',
-    'q_tpch_q22',
-    'q_stratified_sample',
-    'q_mixture_sample',
-    'q_pack_shards',
-    'q_pii_redact',
-    'q_quality_filter',
-    'q_sssp_cost',
-    '_IJB_CACHE',
-    '_interval_layout',
-    'q_interval_join_events',
-    'q_corpus_pipeline',
-    'q_optional_match',
-    'MAX_BASKET',
-    'q_basket_lift',
-    'q_cumulative_users',
-    'q_assortativity',
-    'q_transitivity',
-    'q_k_core',
-    'q_global_shuffle',
-    'q_train_val_test',
-    'q_line_dedup',
-    'q_ppl_bucket_sample',
-    'q_retention_cohorts',
-    'q_unigram_logprob',
-    'q_label_propagation',
-    'q_approx_distinct_users',
-    'q_approx_percentiles',
-]
+query("approx_percentiles", q_approx_percentiles, """
+        SELECT COUNT(*) AS n_orders, TRUE AS p50_ok, TRUE AS p95_ok,
+               TRUE AS p99_ok
+        FROM orders
+    """)

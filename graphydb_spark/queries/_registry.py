@@ -1,20 +1,11 @@
-"""the ordered QUERIES registry (first-50 window FROZEN) + plan cache wrapper.
+"""The query registry: ``query(name, fn, oracle_sql)`` declares one query.
 
-Part of the ordered queries package (see __init__.py) — split from the
-single-module queries.py in round 7; contiguous slice, original order.
+Every part module calls ``query`` once per query, right after the query's
+oracle is defined; this module imports no part, so it is the first one
+loaded.  ``QUERIES`` maps each name to its plan-cached engine function and
+``ORACLES`` maps it to its DuckDB twin.
 """
 from __future__ import annotations
-
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
-from ._relational import *  # noqa: F401,F403
-from ._pipeline import *  # noqa: F401,F403
-from ._analytics_a import *  # noqa: F401,F403
-from ._analytics_b import *  # noqa: F401,F403
-from ._analytics_c import *  # noqa: F401,F403
-from ._analytics_d import *  # noqa: F401,F403
-from ._oracle_table import *  # noqa: F401,F403
-from ._retrieval_ann import *  # noqa: F401,F403
 
 _PLAN_CACHE: dict = {}
 
@@ -54,434 +45,40 @@ def _plan_cached(name, fn):
     return wrapper
 
 
-QUERIES = {
-    "node_kind_counts": q_node_kind_counts,
-    "edge_kind_counts": q_edge_kind_counts,
-    "filter_json": q_filter_json,
-    "filter_glob": q_filter_glob,
-    "one_hop": q_one_hop,
-    "two_hop": q_two_hop,
-    "three_hop": q_three_hop,
-    "group_count": q_group_count,
-    "order_limit": q_order_limit,
-    "count_distinct": q_count_distinct,
-    "traverse_out": q_traverse_out,
-    "degree_supplier": q_degree_supplier,
-    "set_difference": q_set_difference,
-    "set_intersection": q_set_intersection,
-    "fts_term": q_fts_term,
-    "fts_prefix": q_fts_prefix,
-    "fts_and": q_fts_and,
-    "sql_escape_hatch": q_sql_escape_hatch,
-    "offset_page": q_offset_page,
-    "group_concat": q_group_concat,
-    "theta_join": q_theta_join,
-    "param_bind": q_param_bind,
-    "point_lookup": q_point_lookup,
-    "edge_prop_filter": q_edge_prop_filter,
-    "fts_or": q_fts_or,
-    "fts_not": q_fts_not,
-    "fts_field": q_fts_field,
-    "fts_phrase": q_fts_phrase,
-    "sliding_window": q_sliding_window,
-    "bpe_token_count": q_bpe_token_count,
-    "jaccard_pairs": q_jaccard_pairs,
-    "graph_q1": q_graph_q1,
-    "tpch_q1": q_tpch_q1,
-    "tpch_q6": q_tpch_q6,
-    "orders_by_segment": q_orders_by_segment,
-    "dedup_exact": q_dedup_exact,
-    "dedup_clusters": q_dedup_clusters,
-    "top_bigrams": q_top_bigrams,
-    "minhash_pairs": q_minhash_pairs,
-    "text_stats": q_text_stats,
-    "token_count_by_lang": q_token_count_by_lang,
-    "quality_score": q_quality_score,
-    "knn_cosine": q_knn_cosine,
-    "events_window": q_events_window,
-    "sessionize": q_sessionize,
-    "k_hop": q_k_hop,
-    "language_id": q_language_id,
-    "copurchase_pairs": q_copurchase_pairs,
-    "asof_join": q_asof_join,
-    "topk_per_group": q_topk_per_group,
-    "rollup_revenue": q_rollup_revenue,
-    "cube_revenue": q_cube_revenue,
-    "percentile_price": q_percentile_price,
-    "moving_avg_daily": q_moving_avg_daily,
-    "range_join_events": q_range_join_events,
-    "pivot_status": q_pivot_status,
-    "grouping_sets": q_grouping_sets,
-    "window_rank": q_window_rank,
-    "tpch_q3": q_tpch_q3,
-    "anti_join_customers": q_anti_join_customers,
-    "regex_extract": q_regex_extract,
-    "hash_sample": q_hash_sample,
-    "embedding_near_dup": q_embedding_near_dup,
-    "bm25_rank": q_bm25_rank,
-    "ivf_topk": q_ivf_topk,
-    "connected_components": q_connected_components,
-    "pagerank_top10": q_pagerank_top10,
-    "pagerank_nations": q_pagerank_nations,
-    "chunk_docs": q_chunk_docs,
-    "contamination": q_contamination,
-    "triangles_copurchase": q_triangles_copurchase,
-    "bfs_distance": q_bfs_distance,
-    "multimodal_features": q_multimodal_features,
-    "multimodal_resize": q_multimodal_resize,
-    "simhash_pairs": q_simhash_pairs,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "tpch_q4": q_tpch_q4,
-    "tpch_q5": q_tpch_q5,
-    "tpch_q14": q_tpch_q14,
-    "tpch_q18": q_tpch_q18,
-    "tpch_q7": q_tpch_q7,
-    "tpch_q10": q_tpch_q10,
-    "above_nation_avg": q_above_nation_avg,
-    "running_total": q_running_total,
-    "ntile_quartiles": q_ntile_quartiles,
-    "event_funnel": q_event_funnel,
-    "event_props_json": q_event_props_json,
-    "tpch_q8": q_tpch_q8,
-    "tpch_q9": q_tpch_q9,
-    "tpch_q12": q_tpch_q12,
-    "tpch_q13": q_tpch_q13,
-    "tpch_q15": q_tpch_q15,
-    "tpch_q17": q_tpch_q17,
-    "tpch_q19": q_tpch_q19,
-    "tpch_q22": q_tpch_q22,
-    "tpch_q2": q_tpch_q2,
-    "tpch_q11": q_tpch_q11,
-    "tpch_q16": q_tpch_q16,
-    "tpch_q20": q_tpch_q20,
-    "tpch_q21": q_tpch_q21,
-    "stratified_sample": q_stratified_sample,
-    "mixture_sample": q_mixture_sample,
-    "pack_shards": q_pack_shards,
-    "pii_redact": q_pii_redact,
-    "quality_filter": q_quality_filter,
-    "sssp_cost": q_sssp_cost,
-    "interval_join_events": q_interval_join_events,
-    "approx_distinct_users": q_approx_distinct_users,
-    "approx_percentiles": q_approx_percentiles,
-    "optional_match": q_optional_match,
-    "corpus_pipeline": q_corpus_pipeline,
-    "label_propagation": q_label_propagation,
-    "unigram_logprob": q_unigram_logprob,
-    "retention_cohorts": q_retention_cohorts,
-    "global_shuffle": q_global_shuffle,
-    "train_val_test": q_train_val_test,
-    "k_core_orders": q_k_core,
-    "transitivity_copurchase": q_transitivity,
-    "assortativity_orders": q_assortativity,
-    "cumulative_users": q_cumulative_users,
-    "basket_lift": q_basket_lift,
-    "fts_near": q_fts_near,
-    "fts_colgroup": q_fts_colgroup,
-    "repetition_filter": q_repetition_filter,
-    "hits_authorities": q_hits_authorities,
-    "link_prediction": q_link_prediction,
-    "pack_sequences": q_pack_sequences,
-    "personalized_pagerank": q_personalized_pagerank,
-    "var_length_reach": q_var_length_reach,
-    "bfs_paths": q_bfs_paths,
-    "empty_orders": q_empty_orders,
-    "line_dedup": q_line_dedup,
-    "dedup_resolve": q_dedup_resolve,
-    "cluster_balanced": q_cluster_balanced,
-    "ppl_bucket_sample": q_ppl_bucket_sample,
-    "decontaminate_spans": q_decontaminate_spans,
-    "lsh_near_dup": q_lsh_near_dup,
-    "audio_features": q_audio_features,
-    "gif_frames": q_gif_frames,
-    "winnow_pairs": q_winnow_pairs,
-    "semantic_dedup": q_semantic_dedup,
-    "weighted_sample": q_weighted_sample,
-    "asof_nearest": q_asof_nearest,
-    "source_reputation": q_source_reputation,
-    "bigram_logprob": q_bigram_logprob,
-    "resample_locf": q_resample_locf,
-    "bpe_train": q_bpe_train,
-    "pq_topk": q_pq_topk,
-    "random_walks": q_random_walks,
-    "event_transitions": q_event_transitions,
-    "incremental_dedup": q_incremental_dedup,
-    "bpe_tokenize": q_bpe_tokenize,
-    "profile_events": q_profile_events,
-    "knn_join": q_knn_join,
-    "containment_pairs": q_containment_pairs,
-    "standardize_embeddings": q_standardize,
-    "jl_projection": q_jl_projection,
-    "dag_layers": q_dag_layers,
-    "scc_parts": q_scc,
-    "temperature_mixture": q_temperature_mixture,
-    "negative_samples": q_negative_samples,
-    "apply_cdc": q_apply_cdc,
-    "histogram_values": q_histogram_values,
-    "winsorize_values": q_winsorize_values,
-    "tfidf_keywords": q_tfidf_keywords,
-    "reciprocity_parts": q_reciprocity,
-    "grouped_split": q_grouped_split,
-    "interval_lookup": q_interval_lookup,
-    "grouped_percentiles": q_grouped_percentiles,
-    "degree_distribution": q_degree_distribution,
-    "modal_event": q_modal_event,
-    "media_pipeline": q_media_pipeline,
-    "k_truss_parts": q_k_truss,
-    "sentence_stats": q_sentence_stats,
-    "interarrival_stats": q_interarrival_stats,
-    "pixel_stats": q_pixel_stats,
-    "jpeg_stats": q_jpeg_stats,
-    "weekly_trend": q_weekly_trend,
-    "transition_entropy": q_transition_entropy,
-    "pmi_collocations": q_pmi_collocations,
-    "zscore_anomaly": q_zscore_anomaly,
-    "autocorr_revenue": q_autocorr_revenue,
-    "benford_digits": q_benford_digits,
-    "rfm_segments": q_rfm_segments,
-    "activity_streaks": q_activity_streaks,
-    "decile_share": q_decile_share,
-    "gini_revenue": q_gini_revenue,
-    "fingerprint_dups": q_fingerprint_dups,
-    "fuzzy_name_pairs": q_fuzzy_name_pairs,
-    "lexical_diversity": q_lexical_diversity,
-    "zipf_slope": q_zipf_slope,
-    "mad_outliers": q_mad_outliers,
-    "scd2_intervals": q_scd2_intervals,
-    "attribution_last_touch": q_attribution_last_touch,
-    "rolling_distinct_users": q_rolling_distinct_users,
-    "skyline_parts": q_skyline_parts,
-    "ngram_novelty": q_ngram_novelty,
-    "rrf_fusion": q_rrf_fusion,
-    "mmr_select": q_mmr_select,
-    "silhouette_kmeans": q_silhouette_kmeans,
-    "new_vs_returning": q_new_vs_returning,
-    "cohort_ltv": q_cohort_ltv,
-    "churn_screen": q_churn_screen,
-    "seq_copurchase": q_seq_copurchase,
-    "rich_club": q_rich_club,
-    "neighbor_degree": q_neighbor_degree,
-    "ewma_revenue": q_ewma_revenue,
-    "spend_percentile": q_spend_percentile,
-    "ahash_groups": q_ahash_groups,
-    "fk_orphans": q_fk_orphans,
-    "calendar_gaps": q_calendar_gaps,
-    "chisq_independence": q_chisq_independence,
-    "category_entropy": q_category_entropy,
-    "survival_curve": q_survival_curve,
-    "ab_proportion_test": q_ab_proportion_test,
-    "user_trend_slope": q_user_trend_slope,
-    "readability_scores": q_readability_scores,
-    "abc_classification": q_abc_classification,
-    "leadtime_percentiles": q_leadtime_percentiles,
-    "discount_quantity_corr": q_discount_quantity_corr,
-    "weekday_seasonality": q_weekday_seasonality,
-    "hhi_by_month": q_hhi_by_month,
-    "modularity_lpa": q_modularity_lpa,
-    "node_jaccard": q_node_jaccard,
-    "revenue_drawdown": q_revenue_drawdown,
-    "bot_screen": q_bot_screen,
-    "conversion_latency": q_conversion_latency,
-    "seasonal_naive_backtest": q_seasonal_naive_backtest,
-    "basket_diversity": q_basket_diversity,
-    "topk_share_by_nation": q_topk_share_by_nation,
-    "return_rate_by_discount": q_return_rate_by_discount,
-    "price_dispersion": q_price_dispersion,
-    "ks_statistic": q_ks_statistic,
-    "mann_whitney": q_mann_whitney,
-    "welch_ttest": q_welch_ttest,
-    "revenue_peaks": q_revenue_peaks,
-    "level_shifts": q_level_shifts,
-    "session_event_pairs": q_session_event_pairs,
-    "ssjoin_exact": q_ssjoin_exact,
-    "closeness_nations": q_closeness_nations,
-    "holt_forecast": q_holt_forecast,
-    "priority_sample": q_priority_sample,
-    "local_clustering": q_local_clustering,
-    "seq_triples": q_seq_triples,
-    "embedding_covariance": q_embedding_covariance,
-    "interval_coverage": q_interval_coverage,
-    "betweenness_customers": q_betweenness_customers,
-    "minhash_recall": q_minhash_recall,
-    "stratified_topn": q_stratified_topn,
-    "funnel_windowed": q_funnel_windowed,
-    "psi_drift": q_psi_drift,
-    "dsir_select": q_dsir_select,
-    "hits_copurchase": q_hits_copurchase,
-    "katz_parts": q_katz_parts,
-    "item_recommendations": q_item_recommendations,
-    "mis_parts": q_mis_parts,
-    "sorted_neighborhood": q_sorted_neighborhood,
-    "theil_sen": q_theil_sen,
-    "greedy_cover": q_greedy_cover,
-    "facility_location": q_facility_location,
-    "cohort_retention": q_cohort_retention,
-    "incremental_agg": q_incremental_agg,
-    "twap_users": q_twap_users,
-    "segment_overlap": q_segment_overlap,
-    "session_labels": q_session_labels,
-    "hard_negatives": q_hard_negatives,
-    "spearman_corr": q_spearman_corr,
-    "cusum_alarm": q_cusum_alarm,
-    "wilson_intervals": q_wilson_intervals,
-    "kendall_nations": q_kendall_nations,
-    "eb_shrinkage": q_eb_shrinkage,
-    "sax_symbols": q_sax_symbols,
-    "textrank_keywords": q_textrank_keywords,
-    "isotonic_trend": q_isotonic_trend,
-    "exact_median_terasort": q_exact_median_terasort,
-    "frequent_triples": q_frequent_triples,
-    "ppr_asia": q_ppr_asia,
-    "maximal_matching": q_maximal_matching,
-    "changepoint_sse": q_changepoint_sse,
-    "rebalance_audit": q_rebalance_audit,
-    "percolation_curve": q_percolation_curve,
-    "simrank_parts": q_simrank_parts,
-    "corpus_pipeline_v2": q_corpus_pipeline_v2,
-    "shapley_attribution": q_shapley_attribution,
-    "attack_robustness": q_attack_robustness,
-    "kappa_langid": q_kappa_langid,
-    "boilerplate_lines": q_boilerplate_lines,
-    "heaps_law": q_heaps_law,
-    "burstiness_users": q_burstiness_users,
-    "ndcg_ann": q_ndcg_ann,
-    "kfold_groups": q_kfold_groups,
-    "timeseries_cv": q_timeseries_cv,
-    "dispersion_index": q_dispersion_index,
-    "did_estimator": q_did_estimator,
-    "littles_law": q_littles_law,
-    "aa_test": q_aa_test,
-    "price_elasticity": q_price_elasticity,
-    "repeat_purchase_fit": q_repeat_purchase_fit,
-    "abc_xyz": q_abc_xyz,
-    "p_chart": q_p_chart,
-    "topk_turnover": q_topk_turnover,
-    "logodds_terms": q_logodds_terms,
-    "quota_violations": q_quota_violations,
-    "peak_concurrency": q_peak_concurrency,
-    "hill_tail": q_hill_tail,
-    "var_cvar": q_var_cvar,
-    "jsd_daily_mix": q_jsd_daily_mix,
-    "cuped_adjustment": q_cuped_adjustment,
-    "budget_allocation": q_budget_allocation,
-    "mann_kendall": q_mann_kendall,
-    "runs_test": q_runs_test,
-    "durbin_watson": q_durbin_watson,
-    "friedman_test": q_friedman_test,
-    "segment_migration": q_segment_migration,
-    "theil_index": q_theil_index,
-    "growth_contribution": q_growth_contribution,
-    "price_index": q_price_index,
-    "stickiness": q_stickiness,
-    "data_contract": q_data_contract,
-    "hour_concentration": q_hour_concentration,
-    "qte_segments": q_qte_segments,
-    "conformal_interval": q_conformal_interval,
-    "policy_replay": q_policy_replay,
-    "anova_segments": q_anova_segments,
-    "degree_powerlaw": q_degree_powerlaw,
-    "basket_entropy_nation": q_basket_entropy_nation,
-    "whale_share": q_whale_share,
-    "trade_flows": q_trade_flows,
-    "supply_concentration": q_supply_concentration,
-    "source_dup_matrix": q_source_dup_matrix,
-    "backlog_curve": q_backlog_curve,
-    "ccdf_orders": q_ccdf_orders,
-    "revenue_bridge": q_revenue_bridge,
-    "dedup_roi": q_dedup_roi,
-    "seasonality_strength": q_seasonality_strength,
-    "quartile_dispersion": q_quartile_dispersion,
-    "lines_per_order_trend": q_lines_per_order_trend,
-    "tenure_spend_corr": q_tenure_spend_corr,
-    "acf_table": q_acf_table,
-    "markov_steady_state": q_markov_steady_state,
-    "token_burstiness": q_token_burstiness,
-    "mutual_knn": q_mutual_knn,
-    "dead_stock": q_dead_stock,
-    "session_depth_curve": q_session_depth_curve,
-    "price_stickiness": q_price_stickiness,
-    "roc_curve": q_roc_curve,
-    "pr_curve": q_pr_curve,
-    "brier_calibration": q_brier_calibration,
-    "butterfly_count": q_butterfly_count,
-    "diameter_sweep": q_diameter_sweep,
-    "eigenvector_parts": q_eigenvector_parts,
-    "unpivot_metrics": q_unpivot_metrics,
-    "bitmap_distinct": q_bitmap_distinct,
-    "croston_demand": q_croston_demand,
-    "attribution_time_decay": q_attribution_time_decay,
-    "moments_by_segment": q_moments_by_segment,
-    "lorenz_curve": q_lorenz_curve,
-    "otif_rate": q_otif_rate,
-    "embedding_norm_outliers": q_embedding_norm_outliers,
-    "seasonal_decomposition": q_seasonal_decomposition,
-    "discount_qty_heatmap": q_discount_qty_heatmap,
-    "equi_depth_bounds": q_equi_depth_bounds,
-    "lateness_audit": q_lateness_audit,
-    "id_gaps": q_id_gaps,
-    "newsvendor_stock": q_newsvendor_stock,
-    "srm_check": q_srm_check,
-    "power_analysis": q_power_analysis,
-    "hypergeom_enrichment": q_hypergeom_enrichment,
-    "quantile_normalize": q_quantile_normalize,
-    "gains_curve": q_gains_curve,
-    "quality_rule_breakdown": q_quality_rule_breakdown,
-    "token_length_histogram": q_token_length_histogram,
-    "pack_efficiency_curve": q_pack_efficiency_curve,
-    "lang_confusion": q_lang_confusion,
-    "oov_rate": q_oov_rate,
-    "split_leakage_check": q_split_leakage_check,
-    "shingle_df_histogram": q_shingle_df_histogram,
-    "ahash_near_dup": q_ahash_near_dup,
-    "qq_year_compare": q_qq_year_compare,
-    "substring_spans": q_substring_spans,
-    "dbscan_embeddings": q_dbscan_embeddings,
-    "price_model": q_price_model,
-    "mst_trade": q_mst_trade,
-    "single_linkage_nations": q_single_linkage_nations,
-    "tokenizer_fertility": q_tokenizer_fertility,
-    "hll_distinct": q_hll_distinct,
-    "cms_heavy_hitters": q_cms_heavy_hitters,
-    "markov_removal_effects": q_markov_removal_effects,
-    "edit_distance_pairs": q_edit_distance_pairs,
-    "tfidf_cosine_pairs": q_tfidf_cosine_pairs,
-    "corpus_pipeline_v3": q_corpus_pipeline_v3,
-    "rec_precision_at_k": q_rec_precision_at_k,
-    "k_anonymity": q_k_anonymity,
-    "posting_lists": q_posting_lists,
-    "video_features": q_video_features,
-    "l_diversity": q_l_diversity,
-    "t_closeness": q_t_closeness,
-    "kmv_setops": q_kmv_setops,
-    "weighted_reservoir": q_weighted_reservoir,
-    "lsh_probe": q_lsh_probe,
-    "hybrid_search": q_hybrid_search,
-    "bm25_probe": q_bm25_probe,
-    "fts_match_probe": q_fts_match_probe,
-    "ivf_probe": q_ivf_probe,
-    "pq_rerank_topk": q_pq_rerank_topk,
-    "ivfpq_rerank_probe": q_ivfpq_rerank_probe,
-    "token_budget_mixture": q_token_budget_mixture,
-    "prf_expansion": q_prf_expansion,
-    "ann_recall_curve": q_ann_recall_curve,
-    "pq_batch_rerank": q_pq_batch_rerank,
-    "ivf_batch_probe": q_ivf_batch_probe,
-    "rerank_shuffle_probe": q_rerank_shuffle_probe,
-    "dist_stage1_probe": q_dist_stage1_probe,
-    "dist_rerank_probe": q_dist_rerank_probe,
-    "ivf_cell_stats": q_ivf_cell_stats,
-    "ingest_df_roundtrip": q_ingest_df_roundtrip,
-}
+#: The correctness window: the oracle check of ``__spark_entry__`` covers
+#: the first 50 entries of QUERIES, so these names lead it in this order
+#: wherever each one is declared.  Frozen.  Every other query follows
+#: declaration order.
+WINDOW = (
+    "node_kind_counts", "edge_kind_counts", "filter_json", "filter_glob",
+    "one_hop", "two_hop", "three_hop", "group_count", "order_limit",
+    "count_distinct", "traverse_out", "degree_supplier", "set_difference",
+    "set_intersection", "fts_term", "fts_prefix", "fts_and",
+    "sql_escape_hatch", "offset_page", "group_concat", "theta_join",
+    "param_bind", "point_lookup", "edge_prop_filter", "fts_or", "fts_not",
+    "fts_field", "fts_phrase", "sliding_window", "bpe_token_count",
+    "jaccard_pairs", "graph_q1", "tpch_q1", "tpch_q6", "orders_by_segment",
+    "dedup_exact", "dedup_clusters", "top_bigrams", "minhash_pairs",
+    "text_stats", "token_count_by_lang", "quality_score", "knn_cosine",
+    "events_window", "sessionize", "k_hop", "language_id", "copurchase_pairs",
+    "asof_join", "topk_per_group",
+)
 
-QUERIES = {name: _plan_cached(name, fn) for name, fn in QUERIES.items()}
+#: name -> plan-cached ``fn(spark, sf_dir) -> DataFrame``; the window's
+#: keys exist from the start and are filled in place as they are declared
+QUERIES: dict = dict.fromkeys(WINDOW)
+#: name -> DuckDB SQL over the raw parquet views, with the same rows,
+#: column names and types as the query
+ORACLES: dict[str, str] = {}
 
 
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    '_PLAN_CACHE',
-    '_SHIPPED_SESSIONS',
-    '_ensure_shipped',
-    '_plan_cached',
-    'QUERIES',
-]
+def query(name, fn, oracle_sql):
+    """Declare catalog query ``name``: ``fn(spark, sf_dir)`` is its engine
+    path and ``oracle_sql`` the SQL DuckDB runs for the same answer."""
+    if name in ORACLES:
+        raise ValueError(f"query {name!r} is declared twice")
+    if not isinstance(oracle_sql, str):
+        raise TypeError(f"query {name!r}: the oracle must be SQL text, "
+                        f"not {type(oracle_sql).__name__}")
+    QUERIES[name] = _plan_cached(name, fn)
+    ORACLES[name] = oracle_sql

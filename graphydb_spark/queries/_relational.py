@@ -1,12 +1,10 @@
-"""relational headliners (scale/bench anchors; S13 spark.sql parity).
-
-Part of the ordered queries package (see __init__.py) — split from the
-single-module queries.py in round 7; contiguous slice, original order.
-"""
+"""relational headliners (scale/bench anchors; S13 spark.sql parity)."""
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._graph_core import *  # noqa: F401,F403
+from ..sources.tpch_graph import tpch_graph
+from ._registry import query
+from ._shared import _register_raw
+
 
 # --------------------------------------------------------------------------
 # relational headliners (scale/bench anchors; S13 spark.sql parity)
@@ -118,35 +116,22 @@ def q_graph_q1(spark, sf_dir):
         as_df=True,
     ).select("l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
              "sum_disc_price", "count_order")
+query("graph_q1", q_graph_q1, _Q1_SQL)
 
 
 def q_tpch_q1(spark, sf_dir):
     _register_raw(spark, sf_dir)
     return spark.sql(_Q1_SQL)
+query("tpch_q1", q_tpch_q1, _Q1_SQL)
 
 
 def q_tpch_q6(spark, sf_dir):
     _register_raw(spark, sf_dir)
     return spark.sql(_Q6_SQL)
+query("tpch_q6", q_tpch_q6, _Q6_SQL)
 
 
 def q_orders_by_segment(spark, sf_dir):
     _register_raw(spark, sf_dir)
     return spark.sql(_Q3ISH_SQL)
-
-
-
-
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    '_Q1_SQL',
-    '_Q3_SQL',
-    '_Q3_SPARK_SQL',
-    '_Q6_SQL',
-    '_Q3ISH_SQL',
-    'q_graph_q1',
-    'q_tpch_q1',
-    'q_tpch_q6',
-    'q_orders_by_segment',
-]
+query("orders_by_segment", q_orders_by_segment, _Q3ISH_SQL)

@@ -1,14 +1,16 @@
-"""The declared query catalog: SURVEY.md §2 inventory as runnable queries.
+"""Helpers and ground rules shared by the query catalog's part modules.
 
-Each entry is ``name → (spark_fn, oracle_sql | None)``:
+Each query is declared once, ``query(name, fn, oracle_sql)`` (see
+_registry.py), in the part that defines ``fn`` and right after its oracle:
 
-* ``spark_fn(spark, sf_dir) → DataFrame`` — the engine path (graph fetch /
+* ``fn(spark, sf_dir) → DataFrame`` — the engine path (graph fetch /
   operator / SQL escape hatch).
 * ``oracle_sql`` — ANSI SQL DuckDB runs on the raw parquet views
   (``region nation customer supplier part orders lineitem events documents
-  embeddings``) producing the same rows, column names, and types.  ``None``
-  for non-SQL-expressible ops (iterative algorithms) → driver records a
-  rows-only check.
+  embeddings``) producing the same rows, column names, and types.
+
+The names in ``_registry.WINDOW`` lead ``QUERIES`` in a frozen order: they
+are the correctness window, its first 50 entries.
 
 Determinism ground rules (why the SQL looks the way it does):
 * money/value sums go through DECIMAL(18,2) (order-independent, exact) and
@@ -20,23 +22,8 @@ Determinism ground rules (why the SQL looks the way it does):
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..operators import (dedup, graph_algos, persisted_index, relational,
-                        similarity, text)
-from ..sources.tpch_graph import load_tables, tpch_graph
-from ..streaming.windows import sessionize, tumbling_counts
-
-#: name -> DuckDB oracle SQL (None = rows-only).  Defined HERE, in the
-#: FIRST part, as one shared dict every later part mutates in place —
-#: module-level code in any part (e.g. _oracle_table's late
-#: registrations calling helpers from _analytics_*) sees the same
-#: object at the same point in execution order as the original
-#: single module did.
-ORACLES: dict[str, str | None] = {}
+from ..operators import similarity
+from ..sources.tpch_graph import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -138,40 +125,3 @@ def _ivf_blocked(spark, sf_dir):
 def _register_raw(spark, sf_dir):
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-
-
-#: module-level names this part defines (import * honors this,
-#: underscores included)
-__all__ = [
-    'ORACLES',
-    'annotations',
-    'math',
-    'DataFrame',
-    'SparkSession',
-    'F',
-    'dedup',
-    'graph_algos',
-    'persisted_index',
-    'relational',
-    'similarity',
-    'text',
-    'load_tables',
-    'tpch_graph',
-    'sessionize',
-    'tumbling_counts',
-    '_NODE_KINDS_SQL',
-    '_EDGE_KINDS_SQL',
-    '_TOKENIZE_DUCK',
-    '_CLUSTER_CTES',
-    '_docs',
-    '_events',
-    '_emb',
-    '_IVFB_CACHE',
-    '_IVFB_K',
-    '_IVFB_ITERS',
-    '_ivfb_full',
-    '_ivf_blocked',
-    '_register_raw',
-]

@@ -41,7 +41,7 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 # Per probe query: ``setup`` DDL materializing the index-equivalent state
 # (run once, untimed), and a ``probe`` that reads it.  The tokenizer /
 # BM25 constants / band layout / unrolled-Lloyd chain are copied verbatim
-# from the full oracles in graphydb_spark/queries.py so the standing
+# from the full oracles in graphydb_spark/queries/ so the standing
 # probe is result-identical (asserted at startup).
 
 _FTS_SETUP = [
@@ -139,7 +139,7 @@ LIMIT 10
 # persisted_index.build_minhash_index's snapshot rows (which hold one
 # row per band instead of a band array).  The 'sliced'
 # signing scheme (2 md5/shingle, each digest cut into four 32-bit hex
-# slices) matches queries._LSH_PROBE_ORACLE verbatim.
+# slices) matches queries._retrieval_ann._LSH_PROBE_ORACLE verbatim.
 _LSH_SETUP = ["""
 CREATE TEMP TABLE idx_banded AS
 WITH toks AS (
@@ -224,7 +224,7 @@ def _ivf_setup(k: int = 8, iters: int = 2) -> list[str]:
     """Materialize the IVF snapshot analogue: final centroids + final
     assignment from the shared unrolled-Lloyd chain (identical CTE text
     to _ivf_ctes, so the standing cells equal the full oracle's)."""
-    from graphydb_spark.queries import _ivf_ctes
+    from graphydb_spark.queries._pipeline import _ivf_ctes
     chain = _ivf_ctes(k, iters)
     return [
         f"CREATE TEMP TABLE idx_ivf_cents AS {chain} "
@@ -299,10 +299,10 @@ ORDER BY rrf DESC, doc_id LIMIT 10
 
 # interval_join_events standing layout: Spark's probe reads a
 # session-lifetime co-bucketed table pair with precomputed epoch-µs
-# (queries._interval_layout); the anchor's analogue precomputes the µs
-# columns once and lets DuckDB pick its best join over them (its
-# IEJoin needs no bucket decomposition — pricing the layout, not
-# forcing the plan).
+# (queries._pipeline._interval_layout); the anchor's analogue
+# precomputes the µs columns once and lets DuckDB pick its best join
+# over them (its IEJoin needs no bucket decomposition — pricing the
+# layout, not forcing the plan).
 _IJ_SETUP = ["""
 CREATE TEMP TABLE idx_ij_ev AS
 SELECT user_id AS k, epoch_us(ts) AS us, event_id FROM events

@@ -286,7 +286,8 @@ def test_betweenness_additive_over_sources(spark, seed):
 def test_holt_forecast_is_linear_in_inputs(spark):
     """The unrolled Holt coefficients define a LINEAR map: forecasting
     y+z must equal forecast(y) + forecast(z)."""
-    from graphydb_spark.queries import _HOLT_D, _HOLT_NUMS, _HOLT_T
+    from graphydb_spark.queries._analytics_b import (_HOLT_D, _HOLT_NUMS,
+                                                     _HOLT_T)
     import random as _r
     rng = _r.Random(5)
     y = [rng.randint(1, 100) for _ in range(_HOLT_T)]

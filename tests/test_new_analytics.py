@@ -101,7 +101,7 @@ def test_rfm_segments_cover_all_customers(spark):
 def test_holt_coeffs_match_direct_recursion():
     """The unrolled dyadic coefficient ladder must reproduce the
     textbook Holt recursion run directly in floats."""
-    from graphydb_spark.queries import _holt_coeffs
+    from graphydb_spark.queries._analytics_b import _holt_coeffs
     T = 12
     D, nums = _holt_coeffs(T)
     import random
@@ -122,7 +122,7 @@ def test_embedding_covariance_matches_numpy(spark):
     """Quantized-grid covariance must equal numpy's population cov of
     the quantized vectors."""
     import numpy as np
-    from graphydb_spark.queries import q_embedding_covariance
+    from graphydb_spark.queries._analytics_b import q_embedding_covariance
     sf = "/root/testdata/sf0.001"
     got = {(r["i"], r["j"]): r["cov"]
            for r in q_embedding_covariance(spark, sf).collect()}
@@ -138,7 +138,8 @@ def test_embedding_covariance_matches_numpy(spark):
 def test_interval_coverage_hand_case(spark):
     """Overlap, containment, disjoint, zero-length — hand-checked."""
     import datetime as dt
-    from graphydb_spark.queries import q_interval_coverage  # noqa: F401
+    from graphydb_spark.queries._analytics_b import (  # noqa: F401
+        q_interval_coverage)
     from pyspark.sql import functions as F, Window as W
     rows = [
         # user 1: [0,10) + [5,20) overlap -> 20; [30,40) disjoint -> 10
@@ -174,7 +175,7 @@ def test_interval_coverage_hand_case(spark):
 def test_spearman_matches_scipy_formula(spark):
     """Doubled-rank Spearman must equal the textbook formula computed
     directly in Python on the same data."""
-    from graphydb_spark.queries import q_spearman_corr
+    from graphydb_spark.queries._analytics_b import q_spearman_corr
     import statistics
     got = q_spearman_corr(spark, "/root/testdata/sf0.001").collect()[0]
     import duckdb
@@ -224,7 +225,7 @@ def test_cusum_prefix_max_equals_recursion(spark):
         s = max(0, s + c - k)
         if s > 5 * k:
             out[day] = s
-    from graphydb_spark.queries import q_cusum_alarm
+    from graphydb_spark.queries._analytics_b import q_cusum_alarm
     got = {r["day"]: r["cusum"] for r in
            q_cusum_alarm(spark, "/root/testdata/sf0.001").collect()}
     assert got == out
@@ -234,7 +235,7 @@ def test_isotonic_minimax_equals_pava(spark):
     """The window minimax formulation must equal the classic
     pool-adjacent-violators algorithm run in Python."""
     import duckdb
-    from graphydb_spark.queries import q_isotonic_trend
+    from graphydb_spark.queries._analytics_b import q_isotonic_trend
     con = duckdb.connect()
     ys = [r[0] for r in con.execute(
         "SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))*100 "
@@ -267,8 +268,8 @@ def test_shapley_efficiency_axiom(spark):
     """Shapley values must sum to v(grand coalition) - v(empty) —
     the efficiency axiom, computed on the real fixture data."""
     import duckdb
-    from graphydb_spark.queries import (q_shapley_attribution,
-                                        _SHAPLEY_CHANNELS)
+    from graphydb_spark.queries._analytics_c import (q_shapley_attribution,
+                                                     _SHAPLEY_CHANNELS)
     sf = "/root/testdata/sf0.001"
     got = {r["channel"]: r["shapley"]
            for r in q_shapley_attribution(spark, sf).collect()}
@@ -296,7 +297,7 @@ def test_conformal_coverage_near_nominal(spark):
     sit near the 90% nominal level (exchangeability holds only
     approximately on a trending series — allow a wide band, but the
     guarantee must not collapse)."""
-    from graphydb_spark.queries import q_conformal_interval
+    from graphydb_spark.queries._analytics_c import q_conformal_interval
     row = q_conformal_interval(spark, "/root/testdata/sf0.01") \
         .collect()[0]
     assert row["n_cal"] > 100 and row["n_test"] > 100

@@ -428,8 +428,8 @@ def test_approx_aggregates_error_bounds(spark):
     carry the bracketing check themselves (oracle-promoted): every
     emitted boolean must be TRUE and the exact counts must match an
     independently computed exact aggregation."""
-    from graphydb_spark.queries import (q_approx_distinct_users,
-                                        q_approx_percentiles)
+    from graphydb_spark.queries._pipeline import (q_approx_distinct_users,
+                                                  q_approx_percentiles)
     from graphydb_spark.sources.tpch_graph import load_tables
     sf = "/root/testdata/sf0.001"
     ev = load_tables(spark, sf)["events"]
@@ -1603,6 +1603,15 @@ def test_betweenness_sampled_hand_graphs(spark):
            graph_algos.betweenness_sampled(dia, seeds_a, 3).collect()}
     assert got["b"] == 0.5 and got["c"] == 0.5
     assert got["d"] == 0.0
+    # no source reaches another vertex — a source outside the graph, a
+    # depth of 0, no source at all: an empty frame, not a crash
+    for srcs, depth in ((spark.createDataFrame([("z",)], "uid string"), 3),
+                        (seeds_a, 0),
+                        (spark.createDataFrame([], "uid string"), 3)):
+        out = graph_algos.betweenness_sampled(dia, srcs, depth)
+        assert out.collect() == []
+        assert out.schema.simpleString() == (
+            "struct<uid:string,betweenness:double>")
 
 
 def test_hits_and_katz_hand_graphs(spark):

@@ -1,16 +1,14 @@
-"""Import hygiene of the ordered queries package (VERDICT r7 #6).
+"""Import hygiene of the queries package.
 
-Round 7 split the 19.5k-line queries module into ordered parts and
-backfilled every part's namespace with every other part's names — which
-preserved byte-stability but meant a typo'd global in one part could
-silently resolve to another part's helper.  Round 8 removed the
-backfill: each part owns its namespace (earlier parts arrive via the
-ordered star-import chain; the two genuine forward references are
-function-local imports).  This lint walks every function a part
+Each part module imports by name the few names it uses from earlier
+parts, next to its stdlib, pyspark and package imports: there is no
+star-import chain and no namespace backfill, so a name a part did not
+import is simply missing.  This lint walks every function a part
 defines, collects its actual LOAD_GLOBAL names from bytecode
 (recursively through nested code objects — lambdas, comprehensions,
 inner defs), and asserts each resolves in the part's own namespace or
-builtins.  A typo is now a red test, not a silent cross-part binding.
+builtins.  A typo or a missing import is a red test, not a silent
+cross-part binding.
 """
 import builtins
 import dis
@@ -21,7 +19,7 @@ import pytest
 
 PARTS = ["_shared", "_graph_core", "_relational", "_pipeline",
          "_analytics_a", "_analytics_b", "_analytics_c", "_analytics_d",
-         "_oracle_table", "_retrieval_ann", "_registry"]
+         "_retrieval_ann", "_registry"]
 
 _BUILTINS = frozenset(dir(builtins))
 
@@ -58,3 +56,47 @@ def test_package_has_no_backfill():
     shared = importlib.import_module("graphydb_spark.queries._shared")
     assert not hasattr(shared, "QUERIES")
     assert not hasattr(shared, "q_ivf_batch_probe")
+
+
+def test_catalog_pinned():
+    """The catalog's observable surface, pinned: the frozen first-50
+    correctness window in order, one oracle per query (416 of each), and a
+    digest of every oracle's SQL text.  Moving a declaration between
+    parts, or an oracle builder that starts reading another oracle,
+    must leave all three as they are."""
+    import hashlib
+    import json
+
+    from graphydb_spark.queries import ORACLES, QUERIES
+    assert list(QUERIES)[:50] == [
+        "node_kind_counts", "edge_kind_counts", "filter_json",
+        "filter_glob", "one_hop", "two_hop", "three_hop", "group_count",
+        "order_limit", "count_distinct", "traverse_out", "degree_supplier",
+        "set_difference", "set_intersection", "fts_term", "fts_prefix",
+        "fts_and", "sql_escape_hatch", "offset_page", "group_concat",
+        "theta_join", "param_bind", "point_lookup", "edge_prop_filter",
+        "fts_or", "fts_not", "fts_field", "fts_phrase", "sliding_window",
+        "bpe_token_count", "jaccard_pairs", "graph_q1", "tpch_q1",
+        "tpch_q6", "orders_by_segment", "dedup_exact", "dedup_clusters",
+        "top_bigrams", "minhash_pairs", "text_stats", "token_count_by_lang",
+        "quality_score", "knn_cosine", "events_window", "sessionize",
+        "k_hop", "language_id", "copurchase_pairs", "asof_join",
+        "topk_per_group"]
+    assert len(QUERIES) == 416
+    assert set(QUERIES) == set(ORACLES)
+    digest = hashlib.sha256(
+        json.dumps(sorted(ORACLES.items())).encode()).hexdigest()
+    assert digest == ("ae18e88dee26a7f673ecf9d6cf380c4cad12b8c02b6406540731"
+                      "445d165928f5")
+
+
+def test_query_refuses_duplicate_and_non_sql():
+    """A second declaration of a name, or an oracle that is not SQL
+    text, raises before anything is registered."""
+    from graphydb_spark.queries import ORACLES, QUERIES, query
+    before = (dict(QUERIES), dict(ORACLES))
+    with pytest.raises(ValueError, match="declared twice"):
+        query("node_kind_counts", lambda spark, sf_dir: None, "SELECT 1")
+    with pytest.raises(TypeError, match="SQL text"):
+        query("___no_oracle", lambda spark, sf_dir: None, None)
+    assert (dict(QUERIES), dict(ORACLES)) == before
