@@ -4,9 +4,9 @@ The reference uses SQLite FTS5 virtual tables (``nodefts``/``edgefts``,
 /root/reference/graphydb.py:638-658) and joins them on uid with a ``MATCH``
 predicate (graphydb.py:876-893).  Here the index is a *derived* DataFrame
 ``(uid, field, token)`` built with JVM-side built-ins (lower + regex split +
-posexplode — no Python UDF in the hot path), and a MATCH expression compiles
-to one per-uid aggregate of match flags (plain terms) or to semi-join set
-algebra on uids (phrase/NEAR).
+posexplode — no Python UDF in the hot path), and every MATCH expression
+compiles to one per-uid aggregate of match flags: a ``bool_or`` per plain
+term, position arrays per phrase or NEAR item.
 
 Tokenizer parity: FTS5's default ``unicode61`` splits on non-alphanumeric
 codepoints and lowercases.  We mirror that with ``[^\\p{L}\\p{N}]+`` —
@@ -28,9 +28,10 @@ tests/test_graphdb.py:107-110 + graphydb.py:855):
   pairwise over the listed terms/phrases, default n = 10
 
 At scale the index is just another DataFrame: partition it by token for
-point lookups, or leave it co-partitioned with the base table for rebuilds;
-phrase/NEAR matches are semi-joins that AQE can broadcast when the term is
-selective.
+point lookups, or leave it co-partitioned with the base table for rebuilds.
+The aggregate reads only the rows the query's tokens select
+(:func:`match_ranges` names them for a token-sorted persisted index), and
+phrase/NEAR positions are matched inside each uid's group — no join.
 """
 
 from __future__ import annotations
@@ -42,12 +43,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TOKEN_SPLIT = r"[^\p{L}\p{N}]+"
-
-
-def tokens_col(col):
-    """Array-of-tokens column (JVM-side, codegen-friendly)."""
-    return F.filter(F.split(F.lower(col), TOKEN_SPLIT), lambda t: t != "")
+from .operators.text import tokens
 
 
 def _field_col(df: DataFrame, f_name: str):
@@ -78,7 +74,7 @@ def build_index(df: DataFrame, fields: list[str]) -> DataFrame:
             df.select(
                 F.col("uid"),
                 F.lit(f_name).alias("field"),
-                F.posexplode(tokens_col(src)).alias("pos", "token"),
+                F.posexplode(tokens(src)).alias("pos", "token"),
             ).where(F.col("token").isNotNull())
             .select("uid", "field", "token", "pos")
         )
@@ -103,7 +99,7 @@ def build_tf_index(df: DataFrame, fields: list[str]) -> DataFrame:
     for f_name in fields:
         src = _field_col(df, f_name)
         toks = df.select(F.col("uid"), F.lit(f_name).alias("field"),
-                         F.explode(tokens_col(src)).alias("token"))
+                         F.explode(tokens(src)).alias("token"))
         tf = (toks.groupBy("uid", "field", "token")
                   .agg(F.count("*").alias("tf")))
         dlen = (toks.groupBy("uid", "field")
@@ -170,8 +166,9 @@ def parse_match(query: str) -> list[tuple[str, list[tuple]]]:
     ``field`` is None, a name, or a TUPLE of names (column group).
     ``term`` is a token string, a tuple of tokens (quoted phrase,
     matched at adjacent positions), or ``(NEAR_KIND, items, gaps)``
-    where each item is ``(tokens_tuple, prefix)`` and ``gaps[i]`` is the
-    max token count allowed strictly between item i and item i+1."""
+    where each item is ``(tokens_tuple, prefix)`` (a prefix item has one
+    token) and ``gaps[i]`` is the max token count allowed strictly
+    between item i and item i+1."""
     groups: list[list[tuple]] = [[]]
     colgroups: list[tuple] = []
     phrases: list[tuple] = []
@@ -306,114 +303,111 @@ def _field_cond(field):
     return F.col("field") == field
 
 
-def _term_uids(index: DataFrame, field, term, prefix) -> DataFrame:
-    if isinstance(term, tuple):
-        if term and term[0] == NEAR_KIND:
-            return _near_uids(index, field, term[1], term[2])
-        return _phrase_uids(index, field, term)
-    return index.where(_item_cond(field, term, prefix)) \
-        .select("uid").distinct()
-
-
 def _item_cond(field, term: str, prefix: bool):
-    """Posting filter of one plain (term or prefix) item."""
+    """Posting filter of one token (or token prefix) in ``field``."""
     tok = F.col("token")
     return ((tok.startswith(term) if prefix else tok == term)
             & _field_cond(field))
 
 
-def _phrase_uids(index: DataFrame, field, terms: tuple) -> DataFrame:
-    """uids containing the tokens at ADJACENT positions (FTS5 phrase).
-
-    Anchor on the first token's (uid, field, pos) and semi-join each
-    subsequent token at pos+i — per-term postings are small after the
-    token filter, so the joins stay narrow."""
-    def postings(term, alias_pos):
-        cond = (F.col("token") == term) & _field_cond(field)
-        return index.where(cond).select(
-            "uid", F.col("field").alias("f"),
-            F.col("pos").alias(alias_pos))
-    acc = postings(terms[0], "p0")
-    for i, term in enumerate(terms[1:], start=1):
-        nxt = postings(term, "pn") \
-            .withColumn("p0", F.col("pn") - i).drop("pn")
-        acc = acc.join(nxt, ["uid", "f", "p0"], "left_semi")
-    return acc.select("uid").distinct()
+def _postings(term, prefix) -> list[tuple[str, bool]]:
+    """The (token, prefix) postings one parsed item reads: a plain term
+    reads itself, a phrase each of its tokens, a NEAR item each token
+    of each participant (only a one-token participant is a prefix)."""
+    if not isinstance(term, tuple):
+        return [(term, prefix)]
+    if term[0] == NEAR_KIND:
+        return [(t, pfx) for toks, pfx in term[1] for t in toks]
+    return [(t, False) for t in term]
 
 
-def _near_occurrences(index: DataFrame, field, item) -> DataFrame:
-    """(uid, f, s, e) spans of one NEAR participant (term, prefix term,
-    or phrase — a phrase span covers its whole token run)."""
-    toks, prefix = item
-    first_cond = (F.col("token").startswith(toks[0]) if prefix
-                  and len(toks) == 1 else F.col("token") == toks[0])
-    acc = (index.where(first_cond & _field_cond(field))
-           .select("uid", F.col("field").alias("f"),
-                   F.col("pos").alias("s")))
-    for k, t in enumerate(toks[1:], start=1):
-        nxt = (index.where((F.col("token") == t) & _field_cond(field))
-               .select("uid", F.col("field").alias("f"),
-                       (F.col("pos") - k).alias("s")))
-        acc = acc.join(nxt, ["uid", "f", "s"], "left_semi")
-    return acc.withColumn("e", F.col("s") + len(toks) - 1)
+def _starts(field, toks: tuple, prefix: bool = False):
+    """Aggregate: array of ``(f, s)`` — field and start position of
+    every run of ``toks`` at adjacent positions in the uid's rows.
+    Token i contributes ``(field, pos - i)``; a run starts where all of
+    them agree, so the arrays' intersection is the starts."""
+    return reduce(F.array_intersect, (
+        F.collect_list(F.when(
+            _item_cond(field, t, prefix),
+            F.struct(F.col("field").alias("f"), (F.col("pos") - i)
+                     .alias("s"))))
+        for i, t in enumerate(toks)))
 
 
-def _near_uids(index: DataFrame, field, items: tuple,
-               gaps: tuple) -> DataFrame:
-    """uids where the NEAR participants co-occur within bounded gaps:
-    consecutive items must have ≤ ``gaps[i]`` tokens strictly between
-    their spans, in either order (FTS3 ``NEAR/n`` / FTS5 ``NEAR(.., n)``).
+def _near_spans(field, items: tuple, gaps: tuple):
+    """Aggregate: the ``(f, s)`` starts of the last NEAR participant
+    that close a chain of participants whose consecutive spans (start
+    to start + length - 1) lie in one field with at most ``gaps[i]``
+    tokens strictly between them, in either order (FTS3 ``NEAR/n`` /
+    FTS5 ``NEAR(.., n)``).  Each step keeps the next participant's
+    starts near some start kept by the step before."""
+    (toks, prefix), *rest = items
+    cur, width = _starts(field, toks, prefix), len(toks) - 1
+    for (toks, prefix), n in zip(rest, gaps):
+        nxt, w = _starts(field, toks, prefix), len(toks) - 1
+        # the lambdas are called here, building the expression, so
+        # they see this iteration's cur/width/w/n
+        cur = F.filter(nxt, lambda y: F.exists(cur, lambda x: (
+            x["f"] == y["f"]) & (F.greatest(x["s"], y["s"])
+                                 - F.least(x["s"] + width, y["s"] + w) - 1
+                                 <= n)))
+        width = w
+    return cur
 
-    Positional band-join over per-term postings: each pair joins on
-    (uid, field) with the gap predicate — postings are tiny after the
-    token filter, so the inequality rides a narrow equi-join, never a
-    full cross product."""
-    if len(items) == 1:
-        return _near_occurrences(index, field, items[0]) \
-            .select("uid").distinct()
-    cur = (_near_occurrences(index, field, items[0])
-           .select("uid", "f", F.col("s").alias("cs"),
-                   F.col("e").alias("ce")))
-    for item, n in zip(items[1:], gaps):
-        nxt = (_near_occurrences(index, field, item)
-               .select("uid", "f", F.col("s").alias("ns"),
-                       F.col("e").alias("ne")))
-        cur = (cur.join(nxt, ["uid", "f"])
-               .where(F.greatest(F.col("cs"), F.col("ns"))
-                      - F.least(F.col("ce"), F.col("ne")) - 1 <= n)
-               .select("uid", "f", F.col("ns").alias("cs"),
-                       F.col("ne").alias("ce"))
-               .dropDuplicates(["uid", "f", "cs", "ce"]))
-    return cur.select("uid").distinct()
+
+def _item_flag(field, term, prefix):
+    """Aggregate flag: does the uid match this item?  A plain term is a
+    ``bool_or`` of its posting filter; a phrase or NEAR item is true
+    when its start or span array is non-empty."""
+    if not isinstance(term, tuple):
+        return F.coalesce(F.bool_or(_item_cond(field, term, prefix)),
+                          F.lit(False))
+    if term[0] == NEAR_KIND:
+        return F.size(_near_spans(field, term[1], term[2])) > 0
+    return F.size(_starts(field, term)) > 0
+
+
+def _all_positive(groups) -> bool:
+    """Every OR-group has a positive item, so only the rows some item
+    reads can make a uid match; a group of bare NOTs needs every uid."""
+    return all(any(not t[0] for t in g) for g in groups)
+
+
+def match_ranges(query: str) -> list[tuple[str, str]] | None:
+    """Sorted ``(lo, hi)`` token ranges holding every posting the MATCH
+    expression reads (a prefix reads ``[t, t+\\uffff)``), or None when
+    some group has no positive item and the whole index is needed."""
+    groups = [g for _, g in parse_match(query)]
+    if not _all_positive(groups):
+        return None
+    return sorted({(t, t + "\uffff" if pfx else t)
+                   for g in groups for _, _, term, prefix in g
+                   for t, pfx in _postings(term, prefix)})
 
 
 def match_uids(index: DataFrame, query: str) -> DataFrame:
     """Compile a MATCH expression to a DataFrame of matching uids.
 
-    A query of plain terms (term, prefix, field-qualified, AND/OR/NOT)
-    is ONE ``groupBy("uid")``: a ``bool_or`` flag per distinct item,
-    then a filter ORing the groups, each an AND of its flags and
-    negated flags — one aggregate however many terms.  When every
-    group has a positive item, only rows matching some item can make a
-    uid match, so the index is filtered to them before the aggregate;
-    a group of bare NOTs needs the whole index as its uid universe.
-    A query with a phrase or NEAR item compiles to per-term uid sets
-    joined as set algebra (semi-joins for AND, anti-joins for NOT,
-    union for OR), because positions must be matched across rows."""
+    Every query is ONE ``groupBy("uid")``: a flag per distinct item
+    (:func:`_item_flag` — ``bool_or`` for a plain term, position
+    arrays for a phrase or NEAR item), then a filter ORing the groups,
+    each an AND of its flags and negated flags — one aggregate however
+    many items.  When every group has a positive item, only rows some
+    item reads can make a uid match, so the index is filtered to them
+    before the aggregate; a group of bare NOTs needs the whole index
+    as its uid universe."""
     groups = [g for _, g in parse_match(query)]
     if not groups:
         return index.select("uid").limit(0)
-    # a tuple term is a phrase or NEAR item, matched on positions
-    if any(isinstance(t[2], tuple) for g in groups for t in g):
-        return _match_by_joins(index, groups)
     slot = {it: i for i, it in enumerate(
         dict.fromkeys(t[1:] for g in groups for t in g))}
-    conds = [_item_cond(*item) for item in slot]
-    if all(any(not t[0] for t in g) for g in groups):
-        index = index.where(reduce(operator.or_, conds))
+    if _all_positive(groups):
+        index = index.where(reduce(operator.or_, (
+            _item_cond(*p) for p in dict.fromkeys(
+                (field, t, pfx) for field, term, prefix in slot
+                for t, pfx in _postings(term, prefix)))))
     flags = index.groupBy("uid").agg(*(
-        F.coalesce(F.bool_or(c), F.lit(False)).alias(f"m{i}")
-        for i, c in enumerate(conds)))
+        _item_flag(*item).alias(f"m{i}") for item, i in slot.items()))
 
     def flag(t):
         f = F.col(f"m{slot[t[1:]]}")
@@ -422,23 +416,3 @@ def match_uids(index: DataFrame, query: str) -> DataFrame:
     keep = reduce(operator.or_, (reduce(operator.and_, map(flag, g))
                                  for g in groups))
     return flags.where(keep).select("uid")
-
-
-def _match_by_joins(index: DataFrame, groups: list[list[tuple]]
-                    ) -> DataFrame:
-    """The set-algebra form of :func:`match_uids` for queries with a
-    positional (phrase/NEAR) item."""
-    or_parts = []
-    for group in groups:
-        pos = [t for t in group if not t[0]]
-        neg = [t for t in group if t[0]]
-        if pos:
-            acc = _term_uids(index, *pos[0][1:])
-            for t in pos[1:]:
-                acc = acc.join(_term_uids(index, *t[1:]), "uid", "left_semi")
-        else:
-            acc = index.select("uid").distinct()
-        for t in neg:
-            acc = acc.join(_term_uids(index, *t[1:]), "uid", "left_anti")
-        or_parts.append(acc)
-    return reduce(DataFrame.unionByName, or_parts).distinct()

@@ -2383,47 +2383,22 @@ def match_fts_table(spark: SparkSession, path: str, query: str,
     token ranges the query's terms touch — FTS5's persistent-index
     behavior (graphydb.py:876-893), scaled out.
 
-    The ranges are ONE read (a range list on ``token``), so every
-    posting is scanned once even where a prefix range covers an exact
-    one.  Prefix terms read the ``[t, t+\\uffff)`` token range (still
-    pruned: the range intersects few files in a token-sorted layout).
-    A group with no positive term needs the uid universe and falls back
-    to a full index scan — the same cost the reference pays for a bare
-    NOT.  When the rows read fit one partition (:func:`_probe_width`)
-    the scan is coalesced to one task, so a plain-term query — one
-    aggregate in :func:`fts.match_uids` — runs as one exchange-free
-    stage.
+    The ranges (:func:`fts.match_ranges`) are ONE read (a range list
+    on ``token``), so every posting is scanned once even where a prefix
+    range covers an exact one.  Prefix terms read the
+    ``[t, t+\\uffff)`` token range (still pruned: the range intersects
+    few files in a token-sorted layout).  A group with no positive
+    term needs the uid universe and falls back to a full index scan —
+    the same cost the reference pays for a bare NOT.  When the rows
+    read fit one partition (:func:`_probe_width`) the scan is coalesced
+    to one task, so every MATCH form — one aggregate in
+    :func:`fts.match_uids` — runs as one exchange-free stage.
     """
-    from ..fts import NEAR_KIND, match_uids, parse_match
+    from ..fts import match_ranges, match_uids
 
     _fts_params(path, version)
-    groups = parse_match(query)
-    ranges: set[tuple[str, str]] = set()
-    need_full = False
-
-    def add(term, prefix):
-        if isinstance(term, tuple):
-            if term and term[0] == NEAR_KIND:
-                for toks, pfx in term[1]:
-                    if pfx and len(toks) == 1:
-                        ranges.add((toks[0], toks[0] + "\uffff"))
-                    else:
-                        for t in toks:
-                            ranges.add((t, t))
-            else:
-                for t in term:
-                    ranges.add((t, t))
-        elif prefix:
-            ranges.add((term, term + "\uffff"))
-        else:
-            ranges.add((term, term))
-
-    for _, group in groups:
-        if not any(not neg for neg, *_ in group):
-            need_full = True
-        for neg, _field, term, prefix in group:
-            add(term, prefix)
-    where = None if need_full or not ranges else {"token": sorted(ranges)}
+    ranges = match_ranges(query)
+    where = {"token": ranges} if ranges else None
     idx = read_snapshot(spark, path, version=version, where=where)
     if _probe_width(spark, path, version, where) == 1:
         idx = idx.coalesce(1)

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: same tokenizer as the FTS layer (lower + split on non-alphanumeric)
+#: the tokenizer of this module and the FTS index (lower + split on
+#: non-alphanumeric)
 TOKEN_SPLIT = r"[^\p{L}\p{N}]+"
 
 #: tiny multilingual stopword lists for the n-gram/stopword language

@@ -11,7 +11,7 @@ order-insensitive canonical values — and writes REPLAY_r{N}.json:
     {"sf": 0.01, "finished_at": ..., "git_head": ...,
      "n_queries": N, "n_match": N, "failures": [...],
      "queries": {name: {"rows": n, "hash": md5-of-normalized-rows,
-                        "match": true, "oracle": "full"|"rows-only"}}}
+                        "match": true, "oracle": "full"}}}
 
 Run: python scripts/replay_all.py [round_tag] [sf_dir]
 Exit code 1 if any query mismatches.
@@ -76,19 +76,14 @@ def main():
             got = [tuple(r) for r in df.collect()]
             g = normalize(got, got_cols)
             h = hashlib.md5(repr(g).encode()).hexdigest()
-            if name not in oracles:
-                ok = bool(got_cols)
-                out[name] = {"rows": len(got), "hash": h, "match": ok,
-                             "oracle": "rows-only"}
-            else:
-                res = con.execute(oracles[name])
-                want_cols = [d[0].lower() for d in res.description]
-                want = res.fetchall()
-                w = normalize(want, want_cols)
-                ok = (sorted(got_cols) == sorted(want_cols)
-                      and len(got) == len(want) and g == w)
-                out[name] = {"rows": len(got), "hash": h, "match": ok,
-                             "oracle": "full"}
+            res = con.execute(oracles[name])
+            want_cols = [d[0].lower() for d in res.description]
+            want = res.fetchall()
+            w = normalize(want, want_cols)
+            ok = (sorted(got_cols) == sorted(want_cols)
+                  and len(got) == len(want) and g == w)
+            out[name] = {"rows": len(got), "hash": h, "match": ok,
+                         "oracle": "full"}
             if not ok:
                 failures.append(name)
         except Exception as e:  # noqa: BLE001 — record, keep replaying

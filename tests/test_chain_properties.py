@@ -141,31 +141,84 @@ def match_queries(draw):
     return " ".join(pieces)
 
 
+#: (uid, {field: text}) — the fuzzed MATCH corpus
+_FTS_DOCS = [("D:0", {"t": "big data query engine", "u": "spark table"}),
+             ("D:1", {"t": "spark scan table data", "u": "query engine"}),
+             ("D:2", {"t": "zzz", "u": "zzz zzz"}),
+             ("D:3", {"t": "", "u": "big big data"})]
+
+
+def _fts_docs_df(spark):
+    import json
+    return spark.createDataFrame(
+        [(uid, json.dumps(fields)) for uid, fields in _FTS_DOCS],
+        "uid string, props string")
+
+
+def _model_match(query):
+    """Reference MATCH evaluator in plain Python over the token
+    positions of ``_FTS_DOCS``, following ``parse_match``'s groups:
+    a uid matches when, in some OR-group, every positive item holds
+    and no negated one does.  A phrase holds where its tokens sit at
+    adjacent positions of one field; a NEAR chain holds where each
+    participant has a span in the same field as a span kept for the
+    participant before it, with at most n tokens strictly between."""
+    import re
+
+    from graphydb_spark.fts import NEAR_KIND, parse_match
+    pos = {uid: {(f, i): t for f, text in fields.items()
+                 for i, t in enumerate(w for w in re.split(
+                     r"[^\w]+", text.lower()) if w)}
+           for uid, fields in _FTS_DOCS}
+
+    def in_field(f, field):
+        return (not field or f == field
+                or isinstance(field, tuple) and f in field)
+
+    def spans(uid, field, toks, prefix):
+        first = (lambda t: t.startswith(toks[0])) if prefix \
+            else (lambda t: t == toks[0])
+        return {(f, s, s + len(toks) - 1)
+                for (f, s), t in pos[uid].items()
+                if in_field(f, field) and first(t)
+                and all(pos[uid].get((f, s + k)) == w
+                        for k, w in enumerate(toks[1:], start=1))}
+
+    def holds(uid, field, term, prefix):
+        if isinstance(term, str):
+            return bool(spans(uid, field, (term,), prefix))
+        if term[0] != NEAR_KIND:
+            return bool(spans(uid, field, term, False))
+        (toks, pfx), *rest = term[1]
+        cur = spans(uid, field, toks, pfx)
+        for ((toks, pfx), n) in zip(rest, term[2]):
+            cur = {y for y in spans(uid, field, toks, pfx)
+                   if any(x[0] == y[0] and max(x[1], y[1])
+                          - min(x[2], y[2]) - 1 <= n for x in cur)}
+        return bool(cur)
+
+    universe = {uid for uid in pos if pos[uid]}
+    return {uid for uid in universe
+            if any(all(holds(uid, *t[1:]) != t[0] for t in g)
+                   for _, g in parse_match(query))}
+
+
 @pytest.fixture(scope="module")
 def fts_idx(spark):
     from graphydb_spark.fts import build_index
-    docs = spark.createDataFrame(
-        [("D:0", '{"t": "big data query engine", "u": "spark table"}'),
-         ("D:1", '{"t": "spark scan table data", "u": "query engine"}'),
-         ("D:2", '{"t": "zzz", "u": "zzz zzz"}'),
-         ("D:3", '{"t": "", "u": "big big data"}')],
-        "uid string, props string")
-    return build_index(docs, ["t", "u"])
+    return build_index(_fts_docs_df(spark), ["t", "u"])
 
 
 @settings(max_examples=40, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(q=match_queries())
-def test_fts_grammar_never_crashes_and_stays_bounded(fts_idx, q):
+def test_fts_grammar_matches_positional_model(fts_idx, q):
     """Any expression the grammar can produce must parse and evaluate
-    to a subset of the indexed uids — no exceptions, no phantom rows.
-    (The differential value-checks live in the oracle suite; this pins
-    total robustness of the parser/compiler composition.)"""
-    from graphydb_spark.fts import match_uids, parse_match
-    parsed = parse_match(q)
-    assert isinstance(parsed, list)
+    to exactly the uid set of the pure-Python positional model — no
+    exceptions, no phantom or missing rows."""
+    from graphydb_spark.fts import match_uids
     got = {r["uid"] for r in match_uids(fts_idx, q).collect()}
-    assert got <= {"D:0", "D:1", "D:2", "D:3"}
+    assert got == _model_match(q), q
 
 
 # --------------------------------------------------------- promotion parity
@@ -210,14 +263,8 @@ def test_typed_promotion_agrees_where_json_path_is_defined(spark, rows):
 def fts_snapshot(spark, tmp_path_factory):
     """The fts_idx corpus committed as a persisted positional index."""
     from graphydb_spark.operators.persisted_index import build_fts_table
-    docs = spark.createDataFrame(
-        [("D:0", '{"t": "big data query engine", "u": "spark table"}'),
-         ("D:1", '{"t": "spark scan table data", "u": "query engine"}'),
-         ("D:2", '{"t": "zzz", "u": "zzz zzz"}'),
-         ("D:3", '{"t": "", "u": "big big data"}')],
-        "uid string, props string")
     p = str(tmp_path_factory.mktemp("fts_prop") / "fts")
-    build_fts_table(docs, p, ["t", "u"], n_files=3)
+    build_fts_table(_fts_docs_df(spark), p, ["t", "u"], n_files=3)
     return p
 
 

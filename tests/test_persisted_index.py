@@ -991,8 +991,8 @@ def test_fts_match_grammar_from_persisted_index(spark, tmp_path):
         got = {r.uid for r in match_fts_table(spark, p, q).collect()}
         want = {r.uid for r in match_uids(derived, q).collect()}
         assert got == want, f"MATCH {q!r}: {got} vs {want}"
-    # the in-memory compiler against hand-derived sets, both shapes
-    # (one aggregate for plain terms, joins for a phrase)
+    # the in-memory compiler (one aggregate, phrase included) against
+    # hand-derived sets
     for q, want in [("alp* alpha", {1, 2, 3, 5}), ("text: delta", {1, 3}),
                     ("nofield: alpha OR eta", {4}),
                     ("alpha OR beta NOT gamma", {1, 2, 3, 5}),

@@ -15,6 +15,8 @@
    a bench-scale corpus, proportional width beyond it, untouched
    shuffled inputs; neither spread helper runs a job on a shuffled
    (aggregate-shaped) input.
+4. match_fts_table compiles every MATCH form to one per-uid aggregate:
+   a probe that fits one partition is one job with no exchange.
 """
 import pytest
 from pyspark.sql import functions as F
@@ -170,6 +172,36 @@ def test_spread_helpers_run_no_job_on_aggregate_input(spark, corpus,
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert out is agg
         assert sc.statusTracker().getJobIdsForGroup(group) == [], helper
+
+
+@pytest.fixture(scope="module")
+def fts_path(corpus, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("fts_match") / "fts")
+    persisted_index.build_fts_table(corpus, path, ["text"], id_col="doc_id")
+    return path
+
+
+@pytest.mark.parametrize("q", ["quick", "quick dog", "quick OR nothing",
+                               "quick NOT 7", "qui*", '"quick brown"',
+                               "quick NEAR/2 fox",
+                               'NEAR("quick brown" one, 3)'])
+def test_fts_match_probe_is_one_job_without_exchange(spark, fts_path, q):
+    """Every MATCH form is one per-uid aggregate over the pruned scan:
+    a probe that fits one partition runs as ONE job with no exchange,
+    and no form plans a join (phrase and NEAR included)."""
+    sc = spark.sparkContext
+    group = f"fts-match-{q}"
+    sc.setJobGroup(group, group)
+    try:
+        df = persisted_index.match_fts_table(spark, fts_path, q)
+        assert df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, q
+    qe = df._jdf.queryExecution()
+    assert "Exchange" not in qe.executedPlan().toString(), q
+    assert "Join" not in qe.optimizedPlan().toString(), q
 
 
 def test_quality_filter_token_walk_not_cloned_into_filter(spark, corpus):
