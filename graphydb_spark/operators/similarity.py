@@ -50,7 +50,7 @@ def cosine_sql(a: str, b: str) -> str:
     dot = (f"aggregate(zip_with({a}, {b}, (x, y) -> "
            f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
            f"(acc, v) -> acc + v)")
-    return f"{dot} / ({norm(a)} * {norm(b)})"
+    return f"try_divide({dot}, {norm(a)} * {norm(b)})"
 
 
 def dot_expr(a: str | F.Column, b: str | F.Column) -> F.Column:
@@ -71,7 +71,12 @@ def norm_expr(a: str | F.Column) -> F.Column:
 
 
 def cosine_expr(a: str | F.Column, b: str | F.Column) -> F.Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
+    """``dot / (|a|·|b|)``, NULL when either vector has zero norm, as
+    in the Arrow kernels, whose NaN reaches Spark as NULL.
+    ``try_divide`` makes the zero divisor NULL instead of an ANSI
+    ``DIVIDE_BY_ZERO`` abort, in the one plan node a plain divide
+    takes (``NULLIF`` would add a common-subexpression projection)."""
+    return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
 
 
 def cosine_arrow(a_col: str, b_col: str) -> F.Column:
@@ -494,6 +499,38 @@ def pq_index(emb: DataFrame, m: int = 4, k: int = 8, iters: int = 2,
     return pq_encode(emb, books, id_col=id_col, vec_col=vec_col), books
 
 
+def _adc_table(qvec: list[float],
+               books: list[list[list[float]]]) -> list[list[float]]:
+    """The ADC lookup table of one query vector (a residual, under
+    IVF-PQ) — m rows of pq_k squared distances between its subspace
+    slice and each codebook centroid, folded sequentially per
+    dimension.  This exact fold order is load-bearing: the batch
+    kernels' vectorized twin (persisted_index._scorer) and the DuckDB
+    oracle replays reproduce it bit-for-bit."""
+    sub = len(books[0][0])
+    tables = []
+    for s, book in enumerate(books):
+        qs = qvec[s * sub:(s + 1) * sub]
+        row = []
+        for cent in book:
+            acc = 0.0
+            for a, b in zip(cent, qs):
+                d = a - float(b)
+                acc = acc + d * d
+            row.append(acc)
+        tables.append(row)
+    return tables
+
+
+def _adc_sum(tables: F.Column) -> F.Column:
+    """A row's approximate distance: its ``codes`` looked up in the
+    m×pq_k ``tables`` and summed left to right in subspace order."""
+    return F.aggregate(
+        F.zip_with(tables, F.col("codes"),
+                   lambda t, code: F.element_at(t, code + F.lit(1))),
+        F.lit(0.0), lambda a, v: a + v)
+
+
 def pq_topk(codes: DataFrame, books: list[list[list[float]]],
             query_vec: list[float], k: int = 10,
             id_col: str = "vec_id") -> DataFrame:
@@ -506,25 +543,9 @@ def pq_topk(codes: DataFrame, books: list[list[list[float]]],
     Deterministic: table entries and the per-row sum are sequential
     left-to-right double folds (the same fold the engine's other vector
     ops and their SQL oracles share); ties break on id."""
-    m = len(books)
-    sub = len(books[0][0])
-    tables = []
-    for s in range(m):
-        qs = query_vec[s * sub:(s + 1) * sub]
-        row = []
-        for cent in books[s]:
-            acc = 0.0
-            for a, b in zip(cent, qs):
-                d = a - float(b)
-                acc = acc + d * d
-            row.append(acc)
-        tables.append(row)
-    tab_lit = F.lit([[float(d) for d in t] for t in tables])
-    dist = F.aggregate(
-        F.zip_with(tab_lit, F.col("codes"),
-                   lambda t, c: F.element_at(t, c + F.lit(1))),
-        F.lit(0.0), lambda a, v: a + v)
-    return (codes.withColumn("adc_dist", dist)
+    tab_lit = F.lit([[float(d) for d in t]
+                     for t in _adc_table(query_vec, books)])
+    return (codes.withColumn("adc_dist", _adc_sum(tab_lit))
             .select(id_col, "adc_dist")
             .orderBy(F.col("adc_dist").asc(), F.col(id_col))
             .limit(k))

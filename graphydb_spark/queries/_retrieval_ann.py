@@ -845,7 +845,7 @@ def q_rerank_shuffle_probe(spark, sf_dir):
     query vectors with rerank=200,001 make k·α = 2,000,010 exceed
     MAX_RERANK_PAIRS, so the batch serves in 1-query chunks and each
     chunk's candidate pairs SHUFFLE-join the raw refine column instead
-    of broadcasting (persisted_index._ivfpq_batch_chunk's fallback
+    of broadcasting (persisted_index._batch_chunk's fallback
     branch).  All cells probed + k·α ≥ corpus keeps the exact-
     equivalence premise: each query's re-ranked top-10 is EXACTLY its
     brute-force L2 top-10, which the oracle states per qid (the

@@ -13,11 +13,15 @@ order-insensitive canonical values — and writes REPLAY_r{N}.json:
      "queries": {name: {"rows": n, "hash": md5-of-normalized-rows,
                         "match": true, "oracle": "full"}}}
 
-Run: python scripts/replay_all.py [round_tag] [sf_dir]
+Run: python scripts/replay_all.py [round_tag] [sf_dir] [--only a,b,...]
+``--only`` replays just the named registry entries and marks the
+artifact ``"subset": true`` — for hash-checking the entries a change
+touches against the last full artifact without the full run.
 Exit code 1 if any query mismatches.
 """
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import math
@@ -53,8 +57,13 @@ def normalize(rows, cols):
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r06"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser()
+    ap.add_argument("tag", nargs="?", default="r06")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", default=None,
+                    help="comma-separated registry names to replay")
+    args = ap.parse_args()
+    tag, sf_dir = args.tag, args.sf_dir
 
     import __spark_entry__ as entrymod
     from graphydb_spark import get_spark
@@ -67,6 +76,12 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    if args.only is not None:
+        names = [n for n in args.only.split(",") if n]
+        unknown = sorted(set(names) - set(queries))
+        if unknown:
+            sys.exit(f"unknown registry names: {', '.join(unknown)}")
+        queries = {n: queries[n] for n in names}
     out, failures = {}, []
     t0 = time.time()
     for i, name in enumerate(sorted(queries)):
@@ -103,6 +118,7 @@ def main():
         "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "git_head": head,
         "n_queries": len(queries),
+        "subset": args.only is not None,
         "n_match": sum(1 for v in out.values() if v["match"]),
         "n_full_oracle": sum(1 for v in out.values()
                              if v["oracle"] == "full"),

@@ -1651,6 +1651,47 @@ def test_ivfpq_batch_distributed_equals_chunked(spark, tmp_path,
             spark, p, qs, k=4, nprobe=2, rerank=rk,
             strategy="distributed").collect()))
         assert got == want, f"rerank={rk}"
+        # the single probe serves the same rows, in rn order
+        for i in (0, 5, 10):
+            single = PI.probe_ivfpq_table(
+                spark, p, [float(i), 1.0, -1.0, 0.5], k=4, nprobe=2,
+                rerank=rk).collect()
+            assert [tuple(r) for r in single] == [
+                (v, d) for _, v, d in sorted(
+                    (rn, v, d) for q, v, d, rn in want if q == f"q{i}")
+            ], f"q{i} rerank={rk}"
+
+
+def test_zero_norm_cosine_is_null_on_every_ivf_path(spark, tmp_path):
+    """A zero-norm vector has no cosine.  The single probe's SQL
+    divide must yield NULL (a plain divide aborts the probe with
+    DIVIDE_BY_ZERO under ANSI) as the batch kernels' NaN reaches Spark
+    as NULL, ranked last — so an index holding one zero row, probed with a
+    normal query and a zero query, serves the same rows on the single,
+    chunked and distributed paths, both with and without the top-k
+    prune."""
+    import graphydb_spark.operators.persisted_index as PI
+    rows = [(i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(4)])
+            for i in range(29)] + [(29, [0.0] * 4)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    p = str(tmp_path / "ivf_zero")
+    build_ivf_table(emb, p, k=2, iters=2)
+    qs = [("q0", [1.0, -2.0, 0.5, 3.0]), ("qz", [0.0] * 4)]
+    queries = spark.createDataFrame(qs, "qid string, qvec array<double>")
+    for k in (12, 30):
+        single = sorted(
+            (qid, r.vec_id, r.cosine, rn) for qid, vec in qs
+            for rn, r in enumerate(
+                probe_ivf_table(spark, p, vec, k=k, nprobe=2).collect(), 1))
+        assert [c for q, _, c, _ in single if q == "qz"] == [None] * k
+        for strategy in ("chunked", "distributed"):
+            got = sorted(map(tuple, PI.probe_ivf_table_batch(
+                spark, p, queries, k=k, nprobe=2,
+                strategy=strategy).collect()))
+            assert got == single, (k, strategy)
+    # at k=30 the zero row is the normal query's last
+    assert [(v, c) for q, v, c, rn in single
+            if q == "q0" and rn == 30] == [(29, None)]
 
 
 def test_batch_probe_auto_routes_distributed(spark, tmp_path,

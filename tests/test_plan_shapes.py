@@ -415,3 +415,8 @@ def test_ivfpq_refine_column_is_scan_pruned(spark, tmp_path):
     for schema in re.findall(r"ReadSchema: (\S+)", pr):
         assert "codes" not in schema, schema
         assert "embedding" in schema, schema
+    # each stage reads its nprobe=3 cells as ONE pruned scan — no
+    # per-cell read unioned back together
+    for plan in (pa, pr):
+        assert plan.count("FileScan") == 1, plan
+        assert "Union" not in plan, plan
